@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -21,16 +23,18 @@ import org.apache.spark.sql.SparkSession
   *    running the heavy family last also moves it past any
   *    round-boundary load that overlaps the start of the bench;
   *  - per-query telemetry (wall, process-CPU delta, GC-ms delta, system
-  *    load) goes to stderr and to bench_telemetry.json so a recorded
-  *    run carries the evidence to distinguish engine cost from box
+  *    load, Spark jobs) goes to bench_telemetry.json (and, all but the
+  *    job count, to stderr as each gate finishes) so a recorded run
+  *    carries the evidence to distinguish engine cost from box
   *    contention: contention shows as wall >> cpu/threads with flat GC;
-  *  - min-of-N retake (default on, SPARK_GRAFT_BENCH_RETAKE=k to force
-  *    a fixed pool, 0 to disable): the ≥1 s gates whose wall exceeds
-  *    cpu/cores by both 0.4 s and 30% re-run after the sweep under an
-  *    untimed wall budget (evidence-scaled pool, r16 — a fixed k=6
-  *    could not cover a loaded evening's ~40 inflated gates) and the
-  *    min wall is recorded — both takes stamped in bench_telemetry —
-  *    so round-boundary load cannot inflate the official artifact.
+  *    the job count is the per-job floor a sub-second gate is really
+  *    measuring;
+  *  - min-of-N retake: the ≥1 s gates whose wall exceeds cpu/cores by
+  *    both 0.4 s and 30% re-run after the sweep under an untimed wall
+  *    budget (evidence-scaled pool, r16 — a fixed k=6 could not cover a
+  *    loaded evening's ~40 inflated gates) and the min wall is recorded
+  *    — both takes stamped in bench_telemetry — so round-boundary load
+  *    cannot inflate the official artifact.
   */
 object Bench {
   private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -46,40 +50,25 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // run-condition envelope, emitted on the metric line so the
-    // OFFICIAL artifact carries its own contamination evidence (three
-    // rounds running, the recorded denominator and calm re-runs have
-    // diverged whenever the box was loaded at bench start — the
-    // per-query detail stays in bench_telemetry.json)
+    val cpus = GraftSession.cpus
+    // run-condition envelope (stderr + bench_telemetry.json): three
+    // rounds running, the recorded denominator and calm re-runs diverged
+    // whenever the box was loaded at bench start
     val loadStart = osBean.getSystemLoadAverage
     val gcStart = gcMs
     val cpuStart = cpuTimeNs
+    // submit time (ms) of every Spark job in every session; after the
+    // sweep each job is charged to the gate whose timed window holds it
+    val jobTimes = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
+    val listened = scala.collection.mutable.Set.empty[SparkContext]
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // split-per-core scan normalization for single-file-per-table
-        // inputs; clamps to the stock 128 MB on real many-file dirs
-        .config("spark.sql.files.maxPartitionBytes",
-          Tables.autoSplitBytes(sfDir, cpus.toInt))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        // sort-based shuffle writer even at small reduce-partition
-        // counts (r16): the bypass-merge writer opens one file PER
-        // REDUCE PARTITION per map task (M·R creates per exchange) and
-        // this sandbox's filesystem pays ~ms-class metadata ops —
-        // thread dumps showed executor threads queued in
-        // DiskBlockObjectWriter.initialize (q_pagerank measured
-        // 4.4 → 2.4 s warm). At production shuffle-partition counts
-        // (> 200) the bypass writer is disabled regardless, so this is
-        // a no-op at scale; SPARK_GRAFT_BYPASS restores the stock 200.
-        .config("spark.shuffle.sort.bypassMergeThreshold",
-          sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1"))
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = GraftSession.build(sfDir, cpus)
+      // getOrCreate hands back a still-running session: listen once
+      if (listened.add(s.sparkContext))
+        s.sparkContext.addSparkListener(new SparkListener {
+          override def onJobStart(j: SparkListenerJobStart): Unit =
+            jobTimes.add(j.time)
+        })
       s
     }
 
@@ -210,7 +199,10 @@ object Bench {
       if (p.isDirectory) Some(p.toString) else None
     }
 
-    val telemetry = new scala.collection.mutable.ArrayBuffer[String]
+    // per take: the telemetry line's fields (all but "jobs", which is
+    // only known once the listener queues drain) and its timed window
+    // in epoch ms, the clock Spark stamps job submits with
+    val telemetry = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]
     // structured (name, wall, processCpuSeconds) per take — feeds the
     // retake selector below without re-parsing the JSON lines
     val teleData =
@@ -247,6 +239,7 @@ object Bench {
           System.err.println(s"[bench] WARN: persisted RDDs survived the " +
             s"barrier before $name: ${spark.sparkContext.getPersistentRDDs.keys}")
         if (alwaysGc || hadRdds) System.gc()
+        val ms0 = System.currentTimeMillis()
         val (cpu0, gc0, t0) = (cpuTimeNs, gcMs, System.nanoTime())
         // a broken query must be visible in the bench output (-1 marker),
         // never recorded as a suspiciously fast wall time
@@ -261,19 +254,20 @@ object Bench {
           }
         val (wall, cpuS, gcD) = ((System.nanoTime() - t0) / 1e9,
           (cpuTimeNs - cpu0) / 1e9, gcMs - gc0)
+        val ms1 = System.currentTimeMillis()
         // Locale.ROOT, like the metric line: the f-interpolator follows
         // the default locale, and a comma decimal separator would make
         // bench_telemetry.json invalid JSON
         // retake lines are stamped "take":2 so the recorded artifact
         // carries BOTH takes (the first keeps the plain shape)
         val tk = if (take > 1) s""","take":$take""" else ""
-        val line = String.format(java.util.Locale.ROOT,
-          """{"q":"%s","wall":%.2f,"cpu":%.2f,"gc_ms":%d,"load":%.1f%s}""",
+        val fields = String.format(java.util.Locale.ROOT,
+          """"q":"%s","wall":%.2f,"cpu":%.2f,"gc_ms":%d,"load":%.1f%s""",
           name, Double.box(wall), Double.box(cpuS), Long.box(gcD),
           Double.box(osBean.getSystemLoadAverage), tk)
-        telemetry += line
+        telemetry += ((fields, ms0, ms1))
         teleData += ((name, wall, cpuS))
-        System.err.println(s"[bench-telemetry] $line")
+        System.err.println(s"[bench-telemetry] {$fields}")
         res
       }
 
@@ -347,28 +341,9 @@ object Bench {
     // wall. A calm box produces few candidates (retakes stay ~the old
     // k=6 cost); a stolen-from box retakes everything the evidence
     // implicates. Both takes ride in bench_telemetry (the retake
-    // stamped "take":2). SPARK_GRAFT_BENCH_RETAKE=k forces a fixed
-    // worst-k pool; 0 disables.
-    val retakeK = sys.env.get("SPARK_GRAFT_BENCH_RETAKE") match {
-      case None => -1 // auto: evidence-scaled pool
-      case Some(v) if v.toIntOption.exists(_ < 0) =>
-        // pre-r16, any k <= 0 disabled retakes; keep explicit negatives
-        // meaning "disabled" so an operator's old setting still does
-        // what it did (auto mode is the unset default, not -1)
-        System.err.println(s"[bench] SPARK_GRAFT_BENCH_RETAKE='$v' < 0 — " +
-          "treating as 0 (retakes disabled); unset the var for auto mode")
-        0
-      case Some(v) => v.toIntOption.getOrElse {
-        // an unparsable value ("off", "false") is someone trying to
-        // DISABLE retakes — honor the intent loudly rather than
-        // silently coercing to the default
-        System.err.println(s"[bench] SPARK_GRAFT_BENCH_RETAKE='$v' is not " +
-          "an integer — treating as 0 (retakes disabled); use 0 explicitly")
-        0
-      }
-    }
+    // stamped "take":2).
     val results =
-      if (retakeK == 0 || results0.isEmpty) results0
+      if (results0.isEmpty) results0
       else {
         val threads = cpus.toDouble
         val firstCpu = teleData.groupBy(_._1).view
@@ -380,17 +355,13 @@ object Bench {
           .map { case (n, w) =>
             (n, w, w - firstCpu.getOrElse(n, 0.0) / threads) }
           .sortBy(-_._3)
-        val worst =
-          if (retakeK > 0) excess.take(retakeK).map(_._1).toSet
-          else {
-            val budget = math.max(20.0, 0.2 * results0.map(_._2).sum)
-            var spent = 0.0
-            excess.iterator
-              .filter { case (_, w, e) => e >= 0.4 && e >= 0.3 * w }
-              .takeWhile { case (_, w, _) =>
-                val ok = spent < budget; spent += w; ok }
-              .map(_._1).toSet
-          }
+        val budget = math.max(20.0, 0.2 * results0.map(_._2).sum)
+        var spent = 0.0
+        val worst = excess.iterator
+          .filter { case (_, w, e) => e >= 0.4 && e >= 0.3 * w }
+          .takeWhile { case (_, w, _) =>
+            val ok = spent < budget; spent += w; ok }
+          .map(_._1).toSet
         System.err.println(s"[bench] retaking ${worst.size} gates: " +
           worst.toSeq.sorted.mkString(", "))
         val toRetake = selected.filter(q => worst.contains(q._1))
@@ -418,101 +389,98 @@ object Bench {
         }
       }
 
-    // the telemetry file rides along in the repo so a driver-recorded run
-    // leaves per-query evidence behind (stdout keeps only a 2000-char tail)
-    try {
-      val w = new java.io.PrintWriter("bench_telemetry.json", "UTF-8")
-      w.println(telemetry.mkString("[\n", ",\n", "\n]"))
-      w.close()
-    } catch { case e: Throwable => System.err.println(s"telemetry: $e") }
-
-    // ONE compact JSON line: the driver keeps only the last 2000 chars of
-    // output and parses the metric line out of that tail — full-precision
-    // doubles over ~70 queries blow past it (r01/r03 both "parsed": null).
-    // 2-decimal values + basename sf + errors-only-when-failing keep the
-    // line (plus sbt's trailing "[success]" line) inside the window.
-    // Locale.ROOT: the default-locale format would emit a comma decimal
-    // separator on e.g. de_DE JVMs — invalid JSON, the very parse
-    // failure this line exists to avoid
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-        .stripSuffix("0").stripSuffix(".")
-    // per-query values as 1-decimal SECONDS under "queries" — the
-    // documented contract shape ({"metric","value","unit","queries","sf"}).
-    // r16 verdict: 16 rounds of BENCH_r*.json carried "parsed": null
-    // because the per-query map rode under "ds" in deciseconds; the
-    // driver's parser accepts only the documented shape. Seconds cost
-    // 1-2 chars more per entry than deciseconds, so ~10 of the fastest
-    // gates move into the aggregate floor bucket (the overflow loop
-    // below) — their full-precision values still ride in
-    // bench_telemetry.json.
-    def fmtQ(v: Double): String = fmt(v)
-    // sf parsed from the data dir basename ("sf0.1" -> 0.1) per the
-    // contract; non-numeric suffixes (scaled fixtures) fall back to 0
-    val sfStr = {
-      val base = new java.io.File(sfDir).getName.stripPrefix("sf")
-      if (base.nonEmpty && base.matches("""\d+(\.\d+)?""")) base else "0"
-    }
-    val failed = results.filter(_._2 < 0).map(_._1)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val errs =
-      if (failed.isEmpty) ""
-      else failed.map("\"" + _ + "\"").mkString(""","errors":[""", ",", "]")
-    def render(es: Seq[(String, Double)], floorN: Int, floorDs: Long): String = {
-      val qs = es.map { case (k, v) => "\"" + k + "\":" + fmtQ(v) }
-        .mkString("{", ",", "}")
-      // bucketed floor queries keep their AGGREGATE evidence on the
-      // line (count + summed deciseconds) — better than the former
-      // silent "omitted" count; per-query values always ride in
-      // bench_telemetry.json
-      val fl = if (floorN > 0) s""","fl":{"n":$floorN,"ds":$floorDs}""" else ""
-      // ld0/ld1 = 1-min load average at start/end, gc = total GC ms
-      // over the run, cpu = process-CPU seconds: a run whose wall is
-      // load-inflated shows ld0 >> cores-in-use or wall >> cpu/threads
-      // with flat gc — readable off the artifact, no telemetry file
-      // needed
-      val env = String.format(java.util.Locale.ROOT,
-        ""","env":{"ld0":%.1f,"ld1":%.1f,"gc":%d,"cpu":%d}""",
-        Double.box(loadStart), Double.box(osBean.getSystemLoadAverage),
-        Long.box(gcMs - gcStart),
-        Long.box((cpuTimeNs - cpuStart) / 1000000000L))
-      // documented one-line shape, contract keys first ("metric",
-      // "value", "unit", "queries", "sf"), extras ("errors", "fl",
-      // "env") after — a JSON parser reading the contract keys ignores
-      // them. build.sbt suppresses sbt's trailing [success] line so
-      // this line ends the 2000-char driver tail.
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""queries":$qs,"sf":$sfStr$errs$fl$env}"""
-    }
-    // self-limiting breakdown: failed queries are already named in the
-    // errors array, so they don't repeat in the timings map; if the
-    // line would overflow the budget, move the FASTEST queries (they
-    // sit at the per-query overhead floor and carry no signal) into
-    // the aggregate floor bucket until it fits
-    // budget: 2000-char driver tail - "[info] " prefix - newline
-    // ([success] is suppressed via build.sbt, and the metric line prints
-    // AFTER spark.stop() below, so nothing can displace it)
-    var entries = results.filter(_._2 >= 0).sortBy(_._1)
-    var floorN = 0
-    var floorDs = 0L
-    while (render(entries, floorN, floorDs).length > 1990 && entries.nonEmpty) {
-      val drop = entries.minBy(_._2)
-      entries = entries.filterNot(_._1 == drop._1)
-      floorN += 1
-      floorDs += math.round(drop._2 * 10)
-    }
     // nothing may print AFTER the metric line: silence logging, stop the
     // session (its shutdown chatter lands BEFORE the line this way), and
-    // make the metric line the process's final output
+    // make the metric line the process's final output. Stopping also
+    // drains the context's listener queue, so every job submit is in
+    // `jobTimes` from here on.
     val active = SparkSession.getActiveSession
     // setLogLevel/stop may throw on an already-stopped context (the solo
     // sessions stop themselves) or a shutdown race (noop-write executor
     // teardown); the metric line must still print or the whole run's
-    // result is lost to the driver
+    // result is lost
     try {
       active.foreach(_.sparkContext.setLogLevel("OFF"))
       active.foreach(_.stop())
     } catch { case e: Throwable => System.err.println(s"spark.stop: $e") }
-    println(render(entries, floorN, floorDs))
+
+    val (line, foldedN, foldedDs) = metricLine(results, sfDir)
+    val submits = jobTimes.toArray(Array.empty[java.lang.Long]).map(_.longValue)
+    val gates = telemetry.map { case (fields, ms0, ms1) =>
+      s"""{$fields,"jobs":${submits.count(t => t >= ms0 && t <= ms1)}}""" }
+    // run-level evidence kept off the metric line: fl = count and summed
+    // deciseconds of the gates folded off it, env = 1-min load average
+    // at start/end, total GC ms and process-CPU seconds (a load-inflated
+    // run shows ld0 >> cores-in-use or wall >> cpu/threads with flat
+    // gc), errors = failed gates
+    val run = String.format(java.util.Locale.ROOT,
+      """{"run":{"fl":{"n":%d,"ds":%d},""" +
+        """"env":{"ld0":%.1f,"ld1":%.1f,"gc":%d,"cpu":%d},"errors":[%s]}}""",
+      Int.box(foldedN), Long.box(foldedDs),
+      Double.box(loadStart), Double.box(osBean.getSystemLoadAverage),
+      Long.box(gcMs - gcStart), Long.box((cpuTimeNs - cpuStart) / 1000000000L),
+      results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString(","))
+    System.err.println(s"[bench] $run")
+    // the telemetry file rides along in the repo so a driver-recorded run
+    // leaves per-query evidence behind (stdout keeps only a 2000-char tail)
+    try {
+      val w = new java.io.PrintWriter("bench_telemetry.json", "UTF-8")
+      w.println((gates :+ run).mkString("[\n", ",\n", "\n]"))
+      w.close()
+    } catch { case e: Throwable => System.err.println(s"telemetry: $e") }
+    println(line)
+  }
+
+  /** Most chars the metric line may take: it is parsed out of the last
+    * 2000 chars of output, trailing newline included. */
+  private val LineBudget = 1999
+
+  // a JSON number after "sf" (no leading zeros), e.g. sf0.1, sf10
+  private val SfName = """sf((?:0|[1-9]\d*)(?:\.\d+)?)""".r
+
+  /** The scale factor of an `sf<number>` data directory, as written. */
+  private[graft] def sfOf(sfDir: String): Option[String] =
+    new java.io.File(sfDir).getName match {
+      case SfName(sf) => Some(sf)
+      case _ => None
+    }
+
+  /** The metric line, with the contract keys only:
+    * `{"metric","value","unit","queries"[,"sf"]}`. `results`
+    * holds (gate, seconds), -1 for a failed gate. "value" sums the
+    * gates that ran; failed gates stay off "queries", and when the
+    * line would pass `LineBudget` the FASTEST gates (they sit at the
+    * per-query overhead floor and carry no signal) fold off it too.
+    * "sf" is left out when the directory name does not state one.
+    * Returns the line plus the folded gates' count and summed
+    * deciseconds.
+    */
+  private[graft] def metricLine(results: Seq[(String, Double)],
+      sfDir: String): (String, Int, Long) = {
+    // 1-decimal SECONDS, the documented contract unit. Locale.ROOT: the
+    // default-locale format would emit a comma decimal separator on
+    // e.g. de_DE JVMs — invalid JSON, the very parse failure this line
+    // exists to avoid
+    def fmt(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+        .stripSuffix("0").stripSuffix(".")
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val sf = sfOf(sfDir).fold("")(v => s""","sf":$v""")
+    def render(es: Seq[(String, Double)]): String = {
+      val qs = es.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+        s""""queries":$qs$sf}"""
+    }
+    var entries = results.filter(_._2 >= 0).sortBy(_._1)
+    var foldedN = 0
+    var foldedDs = 0L
+    while (render(entries).length > LineBudget && entries.nonEmpty) {
+      val drop = entries.minBy(_._2)
+      entries = entries.filterNot(_._1 == drop._1)
+      foldedN += 1
+      foldedDs += math.round(drop._2 * 10)
+    }
+    (render(entries), foldedN, foldedDs)
   }
 }

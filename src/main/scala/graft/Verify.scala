@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split-per-core scan normalization (see Tables.autoSplitBytes)
-      .config("spark.sql.files.maxPartitionBytes",
-        Tables.autoSplitBytes(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // graft optimizer rules (row_number≤k → bounded-heap top-k): the
-      // gates run THROUGH the rewrites, so the DuckDB oracle checks them
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sfDir, GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // dev loop (same contract as Bench): SPARK_GRAFT_ONLY=a,b,c restricts
     // the QUERY DUMP to named queries; oracle_sql.json is always written

@@ -902,11 +902,7 @@ object DedupQueries {
           struct(col("ib").as("src"), col("ia").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .persist())
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      println(s"[cc] build t=${System.nanoTime() / 1e9} edges=$edgeCount parts=$contractParts")
     undOpt.foreach(_.count())
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      println(s"[cc] edges t=${System.nanoTime() / 1e9}")
     // iterate ONLY over edge-incident vertices: a vertex with no edges
     // can never change its label, so the loop's tables are sized by the
     // candidate graph, not the corpus. On a 100 TB corpus most documents
@@ -959,8 +955,6 @@ object DedupQueries {
     // releasing it before truncate(init) materializes would re-run the
     // whole repartition + union-find contraction a second time
     p0.unpersist()
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      println(s"[cc] init t=${System.nanoTime() / 1e9}")
     var labels = mat
     // delta iteration: a label can only improve when a NEIGHBOR'S label
     // improved last round, so each round propagates from the changed
@@ -1002,8 +996,6 @@ object DedupQueries {
       val (next, nextIds) = truncateTracked(
         cur.withColumnRenamed("p", "cluster"))
       changed = next.filter(col("chg")).count()
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        println(s"[cc] iter=$iter changed=$changed t=${System.nanoTime() / 1e9}")
       release(matIds)
       mat = next
       matIds = nextIds
@@ -1102,7 +1094,7 @@ object DedupQueries {
     * this form's 3.9-4.2 s at sf0.1 — the object-hash collect_list
     * aggregate, the 80 k-element array materializations and Generate's
     * per-element copy cost more than the join's extra df²/2 codegen
-    * rows (consistent with the r6 Profile finding, 20-23 s for the
+    * rows (consistent with the r6 finding in BASELINE.md, 20-23 s for the
     * first-cut grouped form). The join formulation stays.
     */
   private def pairCounts(kept: DataFrame): (DataFrame, DataFrame) = {

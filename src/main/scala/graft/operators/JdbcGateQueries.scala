@@ -42,6 +42,11 @@ object JdbcGateQueries {
       ()
     } catch { case _: java.sql.SQLException => () }
 
+  // seed writers and JDBC batch size: the r17 sweep found these optimal
+  // (larger batches trip Derby's 5000-row lock escalation)
+  private val SeedParts = 32
+  private val JdbcBatch = 1000
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S3: orders seeded into a Derby "change table" keyed by SCN, then
     // read back through the graft-jdbc-poll micro-batch source (schema
@@ -56,17 +61,10 @@ object JdbcGateQueries {
           |  CUSTKEY BIGINT NOT NULL,
           |  PRICE NUMERIC(12,2) NOT NULL)""".stripMargin)
       conn.close()
-      // sweep knobs (r17 — the fetch/batch sweep found the defaults
-      // optimal; larger batches trip Derby's 5000-row lock escalation):
-      // non-positive or unparsable values fall back to the defaults
-      val seedParts = sys.env.get("GRAFT_JDBC_SEEDPARTS")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(32)
-      val seedBatch = sys.env.get("GRAFT_JDBC_BATCH")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1000)
       orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice").cast("decimal(12,2)").as("price"))
-        .coalesce(seedParts)
+        .coalesce(SeedParts)
         .foreachPartition { (rows: Iterator[Row]) =>
           if (rows.nonEmpty) {
             val c = DriverManager.getConnection(url)
@@ -79,15 +77,13 @@ object JdbcGateQueries {
                 ps.setLong(2, r.getLong(1))
                 ps.setBigDecimal(3, r.getDecimal(2))
                 ps.addBatch(); n += 1
-                if (n % seedBatch == 0) ps.executeBatch()
+                if (n % JdbcBatch == 0) ps.executeBatch()
               }
               ps.executeBatch()
               c.commit()
             } finally { ps.close(); c.close() }
           }
         }
-      if (sys.env.contains("GRAFT_JDBC_TRACE"))
-        System.err.println(s"[s3] seeded t=${System.nanoTime / 1e9}")
       val outDir = Files.createTempDirectory("s3_poll_out").toFile.getAbsolutePath
       val q = s.readStream.format("graft-jdbc-poll")
         .option("url", url)
@@ -112,8 +108,6 @@ object JdbcGateQueries {
         throw new IllegalStateException(
           "s3_jdbc_poll: AvailableNow drain did not finish within 300s")
       }
-      if (sys.env.contains("GRAFT_JDBC_TRACE"))
-        System.err.println(s"[s3] drained t=${System.nanoTime / 1e9}")
       // the stream has drained to parquet; the Derby copy of orders is
       // dead weight from here — release its heap
       dropDerby(url)
@@ -133,19 +127,13 @@ object JdbcGateQueries {
         col("c_custkey").as("ID"),
         col("c_name").as("NAME"),
         col("c_acctbal").cast("decimal(12,2)").cast("string").as("ACCTBAL"))
-      val trace = sys.env.contains("GRAFT_JDBC_TRACE")
-      def tr(l: String): Unit =
-        if (trace) System.err.println(s"[k34] $l t=${System.nanoTime / 1e9}")
       val sink = JdbcUpsertSink(url, table, keyCols = Seq("ID"),
         dialect = DerbyDialect,
-        batchSize = sys.env.get("GRAFT_JDBC_BATCH")
-          .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1000))
-      tr("start")
+        batchSize = JdbcBatch)
       sink.writeBatch(base
         .withColumn("op", lit(graft.cdc.Ops.Insert))
         .withColumn("commitScn", col("ID"))
         .withColumn("scn", col("ID")))
-      tr("base upserted")
       val partial = PartialUpsertSink(url, table, keyCols = Seq("ID"))
       partial.writeBatch(base
         .filter(col("ID") % 3 === 0)
@@ -153,12 +141,10 @@ object JdbcGateQueries {
           map(lit("ACCTBAL"),
             (col("ACCTBAL").cast("decimal(12,2)") + 100)
               .cast("decimal(12,2)").cast("string")).as("vals")))
-      tr("partial updates")
       partial.writeBatch(base
         .filter(col("ID") % 7 === 0)
         .select(col("ID"), lit("d").as("op"),
           map().cast("map<string,string>").as("vals")))
-      tr("deletes")
       // materialize the applied table (eager localCheckpoint truncates
       // the lineage off Derby) so the database — a full customer copy on
       // the heap — can be dropped HERE instead of leaking per invocation.
@@ -171,7 +157,6 @@ object JdbcGateQueries {
         .select(col("ID").cast("long").as("id"), col("NAME").as("name"),
           col("ACCTBAL").cast("double").as("acctbal"))
         .localCheckpoint(true)
-      tr("read back")
       dropDerby(url)
       out
     })

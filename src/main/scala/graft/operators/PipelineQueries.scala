@@ -59,65 +59,60 @@ object PipelineQueries {
       // driver threads so the second chain's tasks BACK-FILL the
       // executor slots the first chain's job-floor tail leaves idle
       // (guide §2.6: overlap independent jobs). Both chains are
-      // AQE-job-floor-bound at gate scale (ActionAudit r17: 56 jobs ≈
-      // the wall at ~0.15 s/job, CPU 30 s over a 6.8 s wall = 4 of 32
-      // cores busy), so concurrency shortens the critical path without
+      // AQE-job-floor-bound at gate scale (r17: 56 jobs ≈ the wall at
+      // ~0.15 s/job, CPU 30 s over a 6.8 s wall = 4 of 32 cores busy), so concurrency shortens the critical path without
       // adding work; at 100 TB the same overlap hides one chain's
       // shuffle-latency tails inside the other's. Determinism is
       // untouched: both chains end EAGER (curate's localCheckpoint,
       // minHashStarCandidates' forced count + the CC loop's
       // checkpoints), the join runs strictly after both complete, and
       // job descriptions are thread-local so the UI stays attributable.
+      // Each step clears its description when it ends: the pool threads
+      // outlive the gate, and later jobs on them would carry it.
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
-      def curateChain() = {
-        s.sparkContext.setJobDescription("pipe_full: curate")
+      def described[T](what: String)(body: => T): T =
+        try {
+          s.sparkContext.setJobDescription(s"pipe_full: $what")
+          body
+        } finally s.sparkContext.setJobDescription(null)
+      val cF = Future(described("curate") {
         curate(s, dir, materialize = true).select(col("doc_id"))
-      }
-      def clusterChain() = {
-        s.sparkContext.setJobDescription("pipe_full: near-dup clustering")
+      })
+      val kF = Future(described("near-dup clustering") {
         val pairs = DedupQueries.minHashStarCandidates(
           DedupQueries.docShingleHashes(s, dir))
         val vertices = documents(s, dir).select(col("doc_id"))
         (DedupQueries.connectedComponents(vertices, pairs), pairs)
+      })
+      // await BOTH before surfacing any failure: returning while the
+      // sibling chain still runs would leak its jobs and persists
+      // into the NEXT gate's timed window (and `pairs` would stay
+      // cached with nobody to release it)
+      val cT = scala.util.Try(Await.result(cF, Duration.Inf))
+      val kT = scala.util.Try(Await.result(kF, Duration.Inf))
+      val (curated, (clusters, pairs)) = (cT, kT) match {
+        case (scala.util.Success(c), scala.util.Success(k)) => (c, k)
+        case _ =>
+          kT.foreach { case (_, p) => p.unpersist(blocking = false) }
+          val primary = cT.failed.getOrElse(kT.failed.get)
+          kT.failed.foreach(e => if (e ne primary) primary.addSuppressed(e))
+          throw primary
       }
-      // GRAFT_PIPE_SEQ=1 restores the sequential submission (A/B knob;
-      // results are identical either way)
-      val seq = sys.env.get("GRAFT_PIPE_SEQ").exists(Set("1", "true"))
-      val (curated, (clusters, pairs)) =
-        if (seq) { val c = curateChain(); (c, clusterChain()) }
-        else {
-          val cF = Future(curateChain())
-          val kF = Future(clusterChain())
-          // await BOTH before surfacing any failure: returning while the
-          // sibling chain still runs would leak its jobs and persists
-          // into the NEXT gate's timed window (and `pairs` would stay
-          // cached with nobody to release it)
-          val cT = scala.util.Try(Await.result(cF, Duration.Inf))
-          val kT = scala.util.Try(Await.result(kF, Duration.Inf))
-          (cT, kT) match {
-            case (scala.util.Success(c), scala.util.Success(k)) => (c, k)
-            case _ =>
-              kT.foreach { case (_, p) => p.unpersist(blocking = false) }
-              val primary = cT.failed.getOrElse(kT.failed.get)
-              kT.failed.foreach(e => if (e ne primary) primary.addSuppressed(e))
-              throw primary
-          }
-        }
-      s.sparkContext.setJobDescription("pipe_full: manifest join")
-      val surv = curated.join(clusters, "doc_id")
-      val lbl = surv.groupBy(col("cluster"))
-        .agg(min(col("doc_id")).as("lbl"))
-      val out = surv.join(lbl, "cluster")
-        .withColumn("split",
-          when(expr("pmod((lbl % 2147483648) * 2654435761, 4294967296) % 100")
-            < 90, lit("train")).otherwise(lit("test")))
-        .select(col("doc_id"), col("lbl").as("cluster"), col("split"))
-      val res = out.localCheckpoint(true)
-      pairs.unpersist(blocking = false)
-      s.sparkContext.setJobDescription(null)
-      res
+      described("manifest join") {
+        val surv = curated.join(clusters, "doc_id")
+        val lbl = surv.groupBy(col("cluster"))
+          .agg(min(col("doc_id")).as("lbl"))
+        val out = surv.join(lbl, "cluster")
+          .withColumn("split",
+            when(expr("pmod((lbl % 2147483648) * 2654435761, 4294967296) % 100")
+              < 90, lit("train")).otherwise(lit("test")))
+          .select(col("doc_id"), col("lbl").as("cluster"), col("split"))
+        val res = out.localCheckpoint(true)
+        pairs.unpersist(blocking = false)
+        res
+      }
     }),
 
     // INCREMENTAL curation (r10): curate an arriving DELTA batch

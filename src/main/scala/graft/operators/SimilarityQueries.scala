@@ -747,7 +747,7 @@ object SimilarityQueries {
     // qCount only picks the broadcast-vs-shuffle serve strategy, so an
     // upper estimate is safe, and it spares the serve the eager
     // count() of the query lineage its scaladoc warns about (sibling
-    // call sites — ann_incr, Profile, the precoded serves — all pass it)
+    // call sites — ann_incr and the precoded serves — all pass it)
     ivfPqSearch(index, e, codesSrc,
       e.filter(col("vec_id") % 50 === 0),
       scaledNprobe(scaledCellCount(n), n), knownCodes = Some(n),
@@ -780,17 +780,11 @@ object SimilarityQueries {
     ivfPqSearch(index, corpus, codesSrc, delta, nprobe)
   }
 
-  private[graft] def pqAdc(s: SparkSession, dir: String, M: Int,
-      trace: Option[String => Unit] = None): DataFrame = {
+  private[graft] def pqAdc(s: SparkSession, dir: String, M: Int): DataFrame = {
     import graft.functions.VectorNative.{pq_encode_native, pq_lut_native}
-    val tr0 = System.nanoTime()
-    def tr(l: String): Unit =
-      trace.foreach(f => f(f"$l t=${(System.nanoTime() - tr0) / 1e9}%6.2f"))
     val e = quantized(s, dir)
     val (cents0, sub) = seedCodebook(e, M)
-    tr("seeds")
     val cents1 = lloydStep(s, e, cents0, sub)
-    tr("train")
     // query LUT frame: shuffle-free map projection (qid, qn2, lut) —
     // materialized BEFORE broadcast (plan lesson 1, see scaladoc)
     val qs1 = e.filter(col("vec_id") % 50 === 0)

@@ -72,10 +72,19 @@ object RedoLogSource {
     graft.util.Wildcards.matcher(patterns)
 
   private[sources] def toRow(r: RedoRecord): InternalRow = {
-    def mapData(m: Map[String, String]) = new ArrayBasedMapData(
-      new GenericArrayData(m.keys.map(UTF8String.fromString).toArray[Any]),
-      new GenericArrayData(m.values.map(v =>
-        if (v == null) null else UTF8String.fromString(v)).toArray[Any]))
+    // keys and values filled in ONE pass over the map, so column i's
+    // name and value always land at index i
+    def mapData(m: Map[String, String]) = {
+      val keys = new Array[Any](m.size)
+      val values = new Array[Any](m.size)
+      var i = 0
+      m.foreach { case (k, v) =>
+        keys(i) = UTF8String.fromString(k)
+        values(i) = if (v == null) null else UTF8String.fromString(v)
+        i += 1
+      }
+      new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
+    }
     val multi: ArrayData = new GenericArrayData(
       r.multiRows.map(mapData).toArray[Any])
     InternalRow(r.scn, r.ssn, UTF8String.fromString(r.xid), r.op,

@@ -256,17 +256,25 @@ class RedoSourceSpec extends AnyFunSuite {
 
   private def writeLogs(dir: File): Seq[RedoRecord] = {
     def rr(scn: Long, xid: String, op: Int, table: String,
-        after: Map[String, String]): RedoRecord =
+        after: Map[String, String], before: Map[String, String] = Map.empty,
+        multi: Seq[Map[String, String]] = Nil): RedoRecord =
       RedoRecord(scn, 0, xid, op, table, scn.toString, rollback = false,
-        scn, Map.empty, after)
+        scn, before, after, multi)
+    // row images wider than 4 columns are hash maps, whose key and value
+    // iteration orders only agree when both come from one pass — these
+    // pin every column's name to its own value through the scan
+    def wide(n: Int, tag: String): Map[String, String] =
+      (1 to n).map(i => s"C$i" -> s"$tag$i").toMap
     val f1 = Seq(
       rr(1, "a", Ops.Insert, "S.T1", Map("v" -> "1")),
-      rr(2, "a", Ops.Update, "S.T2", Map("v" -> "2")),
-      rr(3, "a", Ops.Commit, "", Map.empty))
+      rr(2, "a", Ops.Update, "S.T2", wide(6, "new"), before = wide(5, "old")),
+      rr(3, "a", Ops.MultiInsert, "S.T2", Map.empty,
+        multi = Seq(wide(5, "m1_"), wide(7, "m2_"))),
+      rr(4, "a", Ops.Commit, "", Map.empty))
     val f2 = Seq(
-      rr(4, "b", Ops.Insert, "S.T1", Map("v" -> "3")),
-      rr(5, "b", Ops.Delete, "S.T1", Map.empty),
-      rr(6, "b", Ops.Commit, "", Map.empty))
+      rr(5, "b", Ops.Insert, "S.T1", Map("v" -> "3")),
+      rr(6, "b", Ops.Delete, "S.T1", Map.empty),
+      rr(7, "b", Ops.Commit, "", Map.empty))
     Seq((1, f1), (2, f2)).foreach { case (seq, recs) =>
       val w = new RedoLogWriter(new File(dir, s"log_$seq.grl"), 1024, seq = seq)
       recs.foreach(w.append)
@@ -296,7 +304,7 @@ class RedoSourceSpec extends AnyFunSuite {
 
     val wild = spark.read.format("graft-redo")
       .option("tables", "s.%").load(dir.getAbsolutePath).as[RedoRecord].collect()
-    assert(wild.count(_.table.nonEmpty) === 4)
+    assert(wild.count(_.table.nonEmpty) === 5)
 
     val insertsOnly = spark.read.format("graft-redo")
       .option("ops", Ops.Insert.toString).load(dir.getAbsolutePath)

@@ -3,9 +3,10 @@
 join/window/SCD2 sweeps: N deterministically key-shifted copies of the
 sf0.1 orders + lineitem (N=10 -> 1.5 M orders / 6 M lineitems,
 N=100 -> 15 M / 60 M), the other tables copied verbatim, written to
-/tmp/graft_rel{N}x_dir so `SPARK_GRAFT_SF_DIR=... tools/run.sh Profile
-q3_join_topk ...` reproduces the scaled point against a COMPLETE table
-dir (the oracle side registers every table).
+/tmp/graft_rel{N}x_dir so `SPARK_GRAFT_SF_DIR=/tmp/graft_rel10x_dir
+SPARK_GRAFT_ONLY=q3_join_topk,... tools/run.sh Bench` reproduces the
+scaled point against a COMPLETE table dir (the oracle side registers
+every table).
 
 Usage: gen_rel10x.py [factor]      (default 10)
 
