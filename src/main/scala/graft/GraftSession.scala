@@ -20,6 +20,24 @@ object GraftSession {
   /** This process's core count, read from the environment once. */
   lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
+  /** Gates a `SPARK_GRAFT_ONLY` value (`a,b,c`) restricts a run to:
+    * unset means every gate; a name that is not one of `gates` is
+    * rejected, so a typo cannot silently run nothing.
+    */
+  def parseOnly(raw: Option[String], gates: Set[String]): Option[Set[String]] =
+    raw.map { v =>
+      val names = v.split(",", -1).toSet
+      val unknown = names -- gates
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"SPARK_GRAFT_ONLY='$v' names no gate: " +
+          unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+      names
+    }
+
+  /** This process's `SPARK_GRAFT_ONLY` restriction over every gate. */
+  def only: Option[Set[String]] = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"),
+    SparkEntry.gates.map(_.name).toSet)
+
   def build(sfDir: String, cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -2,35 +2,16 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
-object SparkEntry {
+object SparkEntry extends GateFamily {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ CodecQueries.queries ++ CdcQueries.queries ++
-      TextQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ MultimodalQueries.queries ++
-      SourceQueries.queries ++ LoadQueries.queries ++ JdbcGateQueries.queries ++
-      TemporalQueries.queries ++ SamplingQueries.queries ++ SkewJoin.queries ++
-      SnapshotDiff.queries ++ BloomJoin.queries ++ ZOrderLayout.queries ++
-      IncrementalAgg.queries ++ SubqueryQueries.queries ++
-      PipelineQueries.queries ++ RetrievalQueries.queries ++
-      PrefixSum.queries ++ TokenizerQueries.queries ++ ShardQueries.queries ++
-      GraphQueries.queries
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracleSql ++ CodecQueries.oracleSql ++ CdcQueries.oracleSql ++
-      TextQueries.oracleSql ++ DedupQueries.oracleSql ++
-      SimilarityQueries.oracleSql ++ MultimodalQueries.oracleSql ++
-      SourceQueries.oracleSql ++ LoadQueries.oracleSql ++ JdbcGateQueries.oracleSql ++
-      TemporalQueries.oracleSql ++ SamplingQueries.oracleSql ++ SkewJoin.oracleSql ++
-      SnapshotDiff.oracleSql ++ BloomJoin.oracleSql ++ ZOrderLayout.oracleSql ++
-      IncrementalAgg.oracleSql ++ SubqueryQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ RetrievalQueries.oracleSql ++
-      PrefixSum.oracleSql ++ TokenizerQueries.oracleSql ++ ShardQueries.oracleSql ++
-      GraphQueries.oracleSql
+  /** Every gate: one per implemented operator from SURVEY.md §2. */
+  def gates: Seq[Gate] = Seq(RelationalQueries, CodecQueries, CdcQueries,
+    TextQueries, DedupQueries, SimilarityQueries, MultimodalQueries,
+    SourceQueries, LoadQueries, JdbcGateQueries, TemporalQueries,
+    SamplingQueries, SkewJoin, SnapshotDiff, BloomJoin, ZOrderLayout,
+    IncrementalAgg, SubqueryQueries, PipelineQueries, RetrievalQueries,
+    PrefixSum, TokenizerQueries, ShardQueries, GraphQueries).flatMap(_.gates)
 }

@@ -1,28 +1,25 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's query result → parquet,
+  * plus every gate's oracle for this dataset → oracle_sql.json, for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.build(sfDir, GraftSession.cpus)
-    new java.io.File(outDir).mkdirs()
     // dev loop (same contract as Bench): SPARK_GRAFT_ONLY=a,b,c restricts
     // the QUERY DUMP to named queries; oracle_sql.json is always written
     // in full — check.py iterates outDir subdirectories, so a filtered
     // re-run into a dir holding older full dumps must not downgrade the
     // untouched gates to unchecked rows-only results
-    // pin the stored-artifact oracle paths to THIS dataset before any
-    // query (or none, on a filtered run) gets a chance to — the oracle
-    // dump below always rewrites oracle_sql.json in full
-    graft.operators.PipelineQueries.oracleDatasetDir = sfDir
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val only = GraftSession.only
+    val gates = SparkEntry.gates
+    val spark = GraftSession.build(sfDir, GraftSession.cpus)
+    new java.io.File(outDir).mkdirs()
+    gates.filter(g => only.forall(_.contains(g.name))).foreach { g =>
+      try g.query(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
       }
       // reclaim per-query materializations (same hygiene as Bench)
       spark.sharedState.cacheManager.clearCache()
@@ -41,8 +38,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(g => s"${q(g.name)}: ${q(g.oracle(sfDir))}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -34,6 +34,10 @@ object Ops {
     * never emitted itself, stamped onto every emitted change (P7)
     */
   val Audit = 20
+  /** The codes a data record carries (control and audit records pass
+    * every op filter, so a filter names only these). */
+  val data: Set[Int] = Set(Insert, Delete, Update, Ddl, MultiInsert,
+    MultiDelete, DirectLoad, LobChunk)
 
   def name(op: Int): String = op match {
     case Insert => "INSERT"

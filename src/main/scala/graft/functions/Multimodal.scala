@@ -527,7 +527,7 @@ object Multimodal {
     * measured ~4-30× its steady-state CPU. One driver-thread loop over
     * `n` clips (encode → frame count → decode every 3rd frame → pixel
     * read) exercises exactly the gate kernels; callers run it untimed
-    * (Bench warmup). Returns a checksum so the work cannot be
+    * (the mm gates' prepare). Returns a checksum so the work cannot be
     * dead-code-eliminated.
     */
   def warmGifCodec(n: Int): Long = {

@@ -17,7 +17,7 @@ import graft.functions.BloomFilterOps._
   * of bitset — the common "selective dimension, huge fact" shape. The
   * broadcast is the filter, not the dim.
   */
-object BloomJoin {
+object BloomJoin extends GateFamily {
 
   /** Fact rows surviving the bloom probe of `dim`'s key set.
     *
@@ -44,13 +44,13 @@ object BloomJoin {
         GraftSqlBridge.expression(factKey))))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Selective dim (one order-date week) against the full lineitem
     // fact. merge hint on the exact join: at test scale the optimizer
     // would broadcast the dim and the bloom would demonstrate nothing —
     // the production shape this models is a shuffle join whose fact side
     // the bloom has already thinned.
-    "q_bloom_join" -> ((s, dir) => {
+    Gate("q_bloom_join", (s, dir) => {
       val D = org.apache.spark.sql.types.DataTypes.createDecimalType(18, 2)
       val o = orders(s, dir)
         .filter(col("o_orderdate") >= lit("1997-03-01").cast("timestamp_ntz") &&
@@ -63,18 +63,14 @@ object BloomJoin {
         .join(o.hint("merge"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"), sum(col("qty_c")).as("sum_qty_c"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // the bloom is invisible to results — the oracle is the plain join
-    "q_bloom_join" ->
+    }, _ =>
+      // the bloom is invisible to results — the oracle is the plain join
       """SELECT o_orderpriority, COUNT(*) AS n_items,
         |       CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT))
         |            AS BIGINT) AS sum_qty_c
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderdate >= TIMESTAMP '1997-03-01'
         |  AND o_orderdate < TIMESTAMP '1997-03-08'
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -13,16 +13,16 @@ import graft.functions.OracleFunctions._
   * proves encode∘decode = id over the whole column domain in the data,
   * executed distributed (no driver loop), inside WholeStageCodegen.
   */
-object CodecQueries {
+object CodecQueries extends GateFamily {
 
   // codec gates are map-only per-row decode work — normalize input
   // parallelism so the decode runs on every core, not one row group
   private def li(s: SparkSession, d: String) = tablePar(s, d, "lineitem")
   private def ord(s: SparkSession, d: String) = tablePar(s, d, "orders")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // F1: NUMBER ⇄ DECIMAL roundtrip over every distinct price in lineitem
-    "f1_oranum_dec" -> ((s, dir) => {
+    Gate("f1_oranum_dec", (s, dir) => {
       li(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").cast(DecimalType(18, 2)).as("p"))
@@ -32,20 +32,24 @@ object CodecQueries {
           // Decimal objects (Spark parquet) against float64 (DuckDB)
           oranumber_to_decimal(oranumber_from_decimal(col("p")), 18, 2)
             .cast("double").as("price_rt"))
-    }),
+    }, _ =>
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price_rt
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // F1: NUMBER ⇄ BIGINT roundtrip (integral path, codegen'd static calls)
-    "f1_oranum_long" -> ((s, dir) => {
+    Gate("f1_oranum_long", (s, dir) => {
       ord(s, dir)
         .select(col("o_orderkey"),
           oranumber_to_long(oranumber_from_long(col("o_custkey"))).as("custkey_rt"))
-    }),
+    }, _ =>
+      "SELECT o_orderkey, o_custkey AS custkey_rt FROM orders ORDER BY o_orderkey"),
     // F1 variant: per-column NUMBER type-map overrides (ref
     // `OraCdcNumberMapTest.java`, `a2.map.number.*`). Each part key
     // synthesizes a NUMBER column (name, precision, scale); the REAL
     // dictionary resolution — exact-beats-pattern override lookup, then
     // the precision split — runs distributed on executors, and the
     // oracle restates the decision table in SQL.
-    "f1_number_map" -> ((s, dir) => {
+    Gate("f1_number_map", (s, dir) => {
       import s.implicits._
       import graft.sources.DictionaryReader
       part(s, dir).select(col("p_partkey").cast("long")).as[Long]
@@ -64,15 +68,30 @@ object CodecQueries {
           (k, colName, t.simpleString)
         }
         .toDF("p_partkey", "col_name", "mapped_type")
-    }),
+    }, _ =>
+      """SELECT p_partkey,
+        |  'COL_' || (p_partkey % 10) AS col_name,
+        |  CASE
+        |    WHEN p_partkey % 10 = 3 THEN 'smallint'
+        |    WHEN p_partkey % 10 = 7 THEN 'bigint'
+        |    WHEN p_partkey % 10 = 1 THEN 'decimal(38,2)'
+        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 3 THEN 'tinyint'
+        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 5 THEN 'smallint'
+        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 10 THEN 'int'
+        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 19 THEN 'bigint'
+        |    ELSE 'decimal(' || GREATEST(p_partkey % 38 + 1, p_partkey % 3)
+        |         || ',' || (p_partkey % 3) || ')'
+        |  END AS mapped_type
+        |FROM part ORDER BY p_partkey""".stripMargin),
     // F3: 11-byte Oracle TIMESTAMP ⇄ TimestampType roundtrip
-    "f3_oradate" -> ((s, dir) => {
+    Gate("f3_oradate", (s, dir) => {
       ord(s, dir)
         .select(col("o_orderkey"),
           oradate_to_timestamp(oratimestamp_from_micros(col("o_orderdate"))).as("odate_rt"))
-    }),
+    }, _ =>
+      "SELECT o_orderkey, o_orderdate AS odate_rt FROM orders ORDER BY o_orderkey"),
     // F7: ROWID 18-char form built from row coordinates, then split back
-    "f7_rowid" -> ((s, dir) => {
+    Gate("f7_rowid", (s, dir) => {
       val r = li(s, dir).select(
         col("l_orderkey"), col("l_linenumber"),
         orarowid(col("l_partkey"),
@@ -85,21 +104,32 @@ object CodecQueries {
           orarowid_fileno(col("rid")).as("fno_rt"),
           orarowid_blockno(col("rid")).as("blk_rt"),
           orarowid_rowno(col("rid")).as("row_rt"))
-    }),
+    }, _ =>
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(18 AS INTEGER) AS rid_len,
+        |       l_partkey AS obj_rt,
+        |       CAST(l_linenumber AS BIGINT) AS fno_rt,
+        |       l_suppkey AS blk_rt,
+        |       l_orderkey % 1024 AS row_rt
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // F2: BINARY_DOUBLE ⇄ double roundtrip (sign-bit-flip IEEE form)
-    "f2_bin_double" -> ((s, dir) => {
+    Gate("f2_bin_double", (s, dir) => {
       li(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           orabinarydouble_decode(orabinarydouble_encode(col("l_extendedprice")))
             .as("price_rt"),
           orabinaryfloat_decode(orabinaryfloat_encode(
             col("l_discount").cast("float"))).as("disc_rt"))
-    }),
+    }, _ =>
+      """SELECT l_orderkey, l_linenumber,
+        |       l_extendedprice AS price_rt,
+        |       CAST(l_discount AS FLOAT) AS disc_rt
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // F10: VECTOR wire format ⇄ array<float> roundtrip over embeddings.
     // Element-wise comparison via posexplode: an array-typed output
     // column crashes the driver's pandas hasher (unhashable ndarray),
     // and exploding checks every element positionally anyway.
-    "f10_vector" -> ((s, dir) => {
+    Gate("f10_vector", (s, dir) => {
       embeddings(s, dir)
         .select(col("vec_id"),
           oravector_decode(oravector_encode(col("embedding"))).as("emb_rt"),
@@ -108,11 +138,16 @@ object CodecQueries {
           posexplode(col("emb_rt")).as(Seq("pos", "v")))
         .select(col("vec_id"), col("pos").cast("long").as("pos"),
           col("v").cast("double").as("v"), col("wire_len"))
-    }),
+    }, _ =>
+      """SELECT vec_id,
+        |       CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
+        |       CAST(UNNEST(embedding) AS DOUBLE) AS v,
+        |       CAST(6 + 4 * len(embedding) AS BIGINT) AS wire_len
+        |FROM embeddings ORDER BY vec_id, pos""".stripMargin),
     // M1+M2: pattern-based SMT field converters — NUMBER / INTERVAL
     // byte columns matching %-patterns decode to typed columns, other
     // columns pass through untouched.
-    "m1_m2_convert" -> ((s, dir) => {
+    Gate("m1_m2_convert", (s, dir) => {
       val encoded = li(s, dir).select(
         col("l_orderkey"), col("l_linenumber"),
         oranumber_from_decimal(col("l_extendedprice").cast(DecimalType(18, 2)))
@@ -129,10 +164,15 @@ object CodecQueries {
         Seq("iv_ship"), "ds")
       converted
         .withColumn("num_price", col("num_price").cast("double"))
-    }),
+    }, _ =>
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS num_price,
+        |       CAST(l_quantity * 60000000 AS BIGINT) AS iv_ship,
+        |       CAST(l_linenumber * 7 AS INT) AS iv_age_ym
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // F4: TIMESTAMP WITH TIME ZONE — 13-byte wire form roundtrips the
     // UTC instant and a per-row fixed zone offset independently.
-    "f4_tstz" -> ((s, dir) => {
+    Gate("f4_tstz", (s, dir) => {
       val e = events(s, dir).select(col("event_id"),
         graft.Tables.tsMicros.as("micros"),
         ((col("user_id") % 25 - 12) * 60).cast("int").as("off"))
@@ -141,14 +181,19 @@ object CodecQueries {
           oratstz_micros(col("wire")).as("micros_rt"),
           oratstz_offset_minutes(col("wire")).as("off_rt"),
           length(col("wire")).as("wire_len"))
-    }),
+    }, _ =>
+      """SELECT event_id,
+        |       epoch_ns(ts) // 1000 AS micros_rt,
+        |       CAST((user_id % 25 - 12) * 60 AS INT) AS off_rt,
+        |       13 AS wire_len
+        |FROM events ORDER BY event_id""".stripMargin),
     // F9: OSON binary JSON — per-document JSON text (nested object +
     // array + string/number scalars) encodes to an OSON image and
     // decodes back to the identical text. Keys are written in OSON's
     // canonical (fieldHash, name) dictionary order — lang < meta <
     // words < id and n < src — so decode∘encode is the identity on the
     // text and DuckDB can state the expected value directly.
-    "f9_oson" -> ((s, dir) => {
+    Gate("f9_oson", (s, dir) => {
       val w = split(col("text"), " ")
       val json = concat(
         lit("{\"lang\":\""), col("lang"),
@@ -162,13 +207,22 @@ object CodecQueries {
         .select(col("doc_id"), json.as("j"))
         .select(col("doc_id"),
           oson_decode(oson_encode(col("j"))).as("json_rt"))
-    }),
+    }, _ =>
+      """SELECT doc_id,
+        |       '{"lang":"' || lang ||
+        |       '","meta":{"n":' || CAST(n_chars AS VARCHAR) ||
+        |       ',"src":"' || source ||
+        |       '"},"words":["' || string_split(text, ' ')[1] ||
+        |       '","' || string_split(text, ' ')[2] ||
+        |       '","' || string_split(text, ' ')[3] ||
+        |       '"],"id":' || CAST(doc_id AS VARCHAR) || '}' AS json_rt
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // F8: XMLTYPE text envelope — one XML document per row, decoded
     // from the three wire carriers the codec distinguishes: CLOB
     // (UTF-16 with BOM), BLOB UTF-8, and BOM-less UTF-16LE (detected
     // by the Appendix-F '<?' byte pattern). All three must decode to
     // the identical text.
-    "f8_xml" -> ((s, dir) => {
+    Gate("f8_xml", (s, dir) => {
       val xml = concat(
         lit("<?xml version=\"1.0\"?><doc id=\""), col("doc_id").cast("string"),
         lit("\" lang=\""), col("lang"),
@@ -180,13 +234,21 @@ object CodecQueries {
           oraxml_clob_decode(encode(col("x"), "UTF-16")).as("xml_clob"),
           oraxml_blob_decode(encode(col("x"), "UTF-8")).as("xml_utf8"),
           oraxml_blob_decode(encode(col("x"), "UTF-16LE")).as("xml_u16le"))
-    }),
+    }, _ =>
+      """SELECT doc_id, x AS xml_clob, x AS xml_utf8, x AS xml_u16le FROM (
+        |  SELECT doc_id,
+        |         '<?xml version="1.0"?><doc id="' || CAST(doc_id AS VARCHAR) ||
+        |         '" lang="' || lang || '"><src>' || source ||
+        |         '</src><w>' || string_split(text, ' ')[1] ||
+        |         '</w></doc>' AS x
+        |  FROM documents)
+        |ORDER BY doc_id""".stripMargin),
     // F11: TDE column encryption — every document text encrypted and
     // decrypted inside one plan under a synthetic data key, across the
     // two main regimes: AES-256 + SHA-1 MAC + salt (the common column
     // config) and AES-128, no MAC, zero IV. Identity on the full text
     // domain proves layout, padding, MAC framing and IV recovery.
-    "f11_tde" -> ((s, dir) => {
+    Gate("f11_tde", (s, dir) => {
       val key = Array.tabulate[Byte](0x10 + 32)(i => (i * 7 + 3).toByte)
       val txt = to_binary(col("text"), lit("utf-8"))
       documents(s, dir).select(col("doc_id"),
@@ -194,11 +256,13 @@ object CodecQueries {
             key, 4, 1, salted = true).cast("string").as("aes256_rt"),
           tde_decrypt(tde_encrypt(txt, key, 2, 2, salted = false),
             key, 2, 2, salted = false).cast("string").as("aes128_rt"))
-    }),
+    }, _ =>
+      """SELECT doc_id, text AS aes256_rt, text AS aes128_rt
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // F6+F14: Oracle charset-name codec + GZIP LOB utility — text
     // roundtrips through a single-byte Oracle charset (WE8ISO8859P1)
     // and through gzip-compressed AL32UTF8 bytes inside one plan.
-    "f6_f14_gzip" -> ((s, dir) => {
+    Gate("f6_f14_gzip", (s, dir) => {
       documents(s, dir).select(col("doc_id"),
           oracharset_decode(
             oracharset_encode(col("text"), "WE8ISO8859P1"),
@@ -207,11 +271,13 @@ object CodecQueries {
             gzip_decompress(gzip_compress(
               oracharset_encode(col("text"), "AL32UTF8"))),
             "AL32UTF8").as("gz_rt"))
-    }),
+    }, _ =>
+      """SELECT doc_id, text AS latin_rt, text AS gz_rt
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // F12: LOB locator — inline payload round-trips; every 10th doc is
     // out-of-row (locator carries only the LobId, data resolves to NULL
     // until the T8 assembler supplies it)
-    "f12_lob_loc" -> ((s, dir) => {
+    Gate("f12_lob_loc", (s, dir) => {
       val d = documents(s, dir).withColumn("loc",
         when(col("doc_id") % 10 === 0, lob_out_of_row(col("doc_id")))
           .otherwise(lob_inline(to_binary(col("text"), lit("utf-8")))))
@@ -219,94 +285,11 @@ object CodecQueries {
           lob_is_inline(col("loc")).as("is_inline"),
           lob_inline_data(col("loc")).cast("string").as("text_rt"),
           lob_id(col("loc")).as("lob_id"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "f1_oranum_dec" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price_rt
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "f1_oranum_long" ->
-      "SELECT o_orderkey, o_custkey AS custkey_rt FROM orders ORDER BY o_orderkey",
-    "f1_number_map" ->
-      """SELECT p_partkey,
-        |  'COL_' || (p_partkey % 10) AS col_name,
-        |  CASE
-        |    WHEN p_partkey % 10 = 3 THEN 'smallint'
-        |    WHEN p_partkey % 10 = 7 THEN 'bigint'
-        |    WHEN p_partkey % 10 = 1 THEN 'decimal(38,2)'
-        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 3 THEN 'tinyint'
-        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 5 THEN 'smallint'
-        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 10 THEN 'int'
-        |    WHEN p_partkey % 3 = 0 AND p_partkey % 38 + 1 < 19 THEN 'bigint'
-        |    ELSE 'decimal(' || GREATEST(p_partkey % 38 + 1, p_partkey % 3)
-        |         || ',' || (p_partkey % 3) || ')'
-        |  END AS mapped_type
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "f3_oradate" ->
-      "SELECT o_orderkey, o_orderdate AS odate_rt FROM orders ORDER BY o_orderkey",
-    "f7_rowid" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(18 AS INTEGER) AS rid_len,
-        |       l_partkey AS obj_rt,
-        |       CAST(l_linenumber AS BIGINT) AS fno_rt,
-        |       l_suppkey AS blk_rt,
-        |       l_orderkey % 1024 AS row_rt
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "f2_bin_double" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       l_extendedprice AS price_rt,
-        |       CAST(l_discount AS FLOAT) AS disc_rt
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "f10_vector" ->
-      """SELECT vec_id,
-        |       CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
-        |       CAST(UNNEST(embedding) AS DOUBLE) AS v,
-        |       CAST(6 + 4 * len(embedding) AS BIGINT) AS wire_len
-        |FROM embeddings ORDER BY vec_id, pos""".stripMargin,
-    "m1_m2_convert" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS num_price,
-        |       CAST(l_quantity * 60000000 AS BIGINT) AS iv_ship,
-        |       CAST(l_linenumber * 7 AS INT) AS iv_age_ym
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "f4_tstz" ->
-      """SELECT event_id,
-        |       epoch_ns(ts) // 1000 AS micros_rt,
-        |       CAST((user_id % 25 - 12) * 60 AS INT) AS off_rt,
-        |       13 AS wire_len
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f6_f14_gzip" ->
-      """SELECT doc_id, text AS latin_rt, text AS gz_rt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f8_xml" ->
-      """SELECT doc_id, x AS xml_clob, x AS xml_utf8, x AS xml_u16le FROM (
-        |  SELECT doc_id,
-        |         '<?xml version="1.0"?><doc id="' || CAST(doc_id AS VARCHAR) ||
-        |         '" lang="' || lang || '"><src>' || source ||
-        |         '</src><w>' || string_split(text, ' ')[1] ||
-        |         '</w></doc>' AS x
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "f9_oson" ->
-      """SELECT doc_id,
-        |       '{"lang":"' || lang ||
-        |       '","meta":{"n":' || CAST(n_chars AS VARCHAR) ||
-        |       ',"src":"' || source ||
-        |       '"},"words":["' || string_split(text, ' ')[1] ||
-        |       '","' || string_split(text, ' ')[2] ||
-        |       '","' || string_split(text, ' ')[3] ||
-        |       '"],"id":' || CAST(doc_id AS VARCHAR) || '}' AS json_rt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f11_tde" ->
-      """SELECT doc_id, text AS aes256_rt, text AS aes128_rt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f12_lob_loc" ->
+    }, _ =>
       """SELECT doc_id,
         |       doc_id % 10 <> 0 AS is_inline,
         |       CASE WHEN doc_id % 10 = 0 THEN NULL ELSE text END AS text_rt,
         |       CASE WHEN doc_id % 10 = 0 THEN doc_id ELSE NULL END AS lob_id
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
 }

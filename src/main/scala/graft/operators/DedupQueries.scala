@@ -22,7 +22,7 @@ import graft.functions.VectorFunctions._
   *  - every hash is an explicit arithmetic fold — reproducible across
   *    engines and partitionings, unlike engine-private hash functions.
   */
-object DedupQueries {
+object DedupQueries extends GateFamily {
 
   /** PRODUCTION MinHash candidate API — star edges, not pairwise.
     *
@@ -519,13 +519,16 @@ object DedupQueries {
     out
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Exact dedup by content digest (hash-groupBy).
-    "dedup_exact" -> ((s, dir) => {
+    Gate("dedup_exact", (s, dir) => {
       documents(s, dir)
         .groupBy(md5(to_binary(col("text"), lit("utf-8"))).as("digest"))
         .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
-    }),
+    }, _ =>
+      """SELECT md5(text) AS digest, MIN(doc_id) AS canonical_id,
+        |       COUNT(*) AS n_copies
+        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin),
 
     // Entity-resolution-style FUZZY matching (§2.69): sorted-
     // neighborhood candidate generation (Hernández & Stolfo, SIGMOD'95
@@ -555,7 +558,7 @@ object DedupQueries {
     // join below is unchanged and the ranks are bit-identical
     // (FuzzySnmSpec proves ≡ the windowed form on adversarial
     // layouts).
-    "dedup_fuzzy" -> ((s, dir) => {
+    Gate("dedup_fuzzy", (s, dir) => {
       val W = 10L
       // byte≡char levenshtein equivalence (the verify kernel is byte-
       // semantics, the oracle's levenshtein is char-semantics) holds
@@ -584,14 +587,25 @@ object DedupQueries {
           graft.functions.TextHashExpressions
             .lev_banded(col("ka"), col("kb"), 10).as("dist"))
         .filter(col("dist") >= 0)
-    }),
+    }, _ =>
+      """WITH d AS (
+        |  SELECT doc_id, lang, substr(text, 1, 64) AS k,
+        |         ROW_NUMBER() OVER (PARTITION BY lang
+        |           ORDER BY substr(text, 1, 64), doc_id) AS rn
+        |  FROM documents)
+        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |       CAST(levenshtein(a.k, b.k) AS INT) AS dist
+        |FROM d a JOIN d b
+        |  ON a.lang = b.lang AND b.rn > a.rn AND b.rn <= a.rn + 10
+        |WHERE levenshtein(a.k, b.k) <= 10
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // MinHash (8 hashes) + LSH (4 bands × 2) candidate pairs — the
     // textbook PAIRWISE shape, kept because the oracle states exactly
     // this definition. Θ(Σ|bucket|²) output: conformance/diagnostic
     // only — production candidate generation goes through
     // [[minHashStarCandidates]] (membership-sized star edges).
-    "dedup_mh_lsh" -> ((s, dir) => {
+    Gate("dedup_mh_lsh", (s, dir) => {
       // same persist-before-filter discipline as dedup_jac_lsh below:
       // one parallel shingle pass feeds both band self-join sides. r8:
       // the frame returns LAZY — the caller's write is the ONE
@@ -601,7 +615,14 @@ object DedupQueries {
       // Bench/Verify per-query barrier unpersists it).
       val hashes = docShingleHashes(s, dir).persist()
       lshCandidatePairs(hashes.filter(size(col("hs")) > 0))
-    }),
+    }, _ =>
+      (shinglesCte +
+      ", " + sigBandsCte + """
+        |SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
+        |FROM bands a JOIN bands b
+        |  ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
+        |     AND a.doc_id < b.doc_id
+        |ORDER BY ia, ib""".stripMargin)),
 
     // PRODUCTION-SHAPE exact Jaccard: verification restricted to the
     // MinHash-LSH candidate pairs — the path a 100 TB dedup sweep runs
@@ -614,7 +635,7 @@ object DedupQueries {
     // bounded false-negative rate, which the band/row parameters tune.
     // Measured (same code, 3× corpus): all-pairs jaccard 3.9 s → 27.3 s
     // (quadratic pair space), this gate stays near-flat.
-    "dedup_jac_lsh" -> ((s, dir) => {
+    Gate("dedup_jac_lsh", (s, dir) => {
       // ONE shingle pass feeds all four consumers (two band self-join
       // sides, two verify-set sides): the hashes frame (doc_id +
       // array<long>, corpus-bounded) is persisted for the query's
@@ -636,7 +657,31 @@ object DedupQueries {
       // first touch; the cache is reclaimed by the Bench/Verify
       // per-query barrier (the r7 eager checkpoint double-materialized)
       jaccardOnCandidates(hashes.filter(size(col("hs")) > 0))
-    }),
+    }, _ =>
+      // exact Jaccard on LSH candidates: same minhash/band CTE as
+      // dedup_mh_lsh, then exact set intersection per candidate pair
+      (shinglesCte +
+      ", " + sigBandsCte + """,
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
+        |  FROM bands a JOIN bands b
+        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
+        |       AND a.doc_id < b.doc_id),
+        |hd AS (SELECT DISTINCT doc_id, h FROM h),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT c.ia, c.ib, COUNT(*) AS m
+        |  FROM cand c
+        |  JOIN hd a ON a.doc_id = c.ia
+        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
+        |  GROUP BY 1, 2)
+        |SELECT i.ia, i.ib, i.m,
+        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
+        |FROM inter i
+        |JOIN sizes na ON na.doc_id = i.ia
+        |JOIN sizes nb ON nb.doc_id = i.ib
+        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
+        |ORDER BY ia, ib""".stripMargin)),
 
     // The duplicate-density GUARD as a gate: same LSH-verified exact
     // Jaccard, but band buckets larger than 8 members are excluded
@@ -647,21 +692,60 @@ object DedupQueries {
     // session-4 100× corpus (100-way families) thrashed the uncapped
     // pairwise stage and completes in 13.4 s capped, with oversized
     // buckets routed to the star/cluster path.
-    "dedup_cap" -> ((s, dir) => {
+    Gate("dedup_cap", (s, dir) => {
       val hashes = docShingleHashes(s, dir).persist()
       val out = jaccardOnCandidates(hashes.filter(size(col("hs")) > 0),
           maxBucket = Some(8))
         .localCheckpoint(true)
       hashes.unpersist(blocking = false)
       out
-    }),
+    }, _ =>
+      // the duplicate-density guard: identical pipeline, candidate join
+      // restricted to band buckets of <= 8 members
+      (shinglesCte +
+      ", " + sigBandsCte + """,
+        |ok AS (
+        |  SELECT band, h1, h2 FROM bands GROUP BY 1, 2, 3
+        |  HAVING COUNT(*) <= 8),
+        |okb AS (SELECT b.* FROM bands b JOIN ok USING (band, h1, h2)),
+        |big AS (
+        |  SELECT band, h1, h2 FROM bands GROUP BY 1, 2, 3
+        |  HAVING COUNT(*) > 8),
+        |bigb AS (SELECT b.* FROM bands b JOIN big USING (band, h1, h2)),
+        |reps AS (
+        |  SELECT band, h1, h2, MIN(doc_id) AS rep FROM bigb GROUP BY 1, 2, 3),
+        |stars AS (
+        |  SELECT r.rep AS ia, b.doc_id AS ib FROM bigb b
+        |  JOIN reps r USING (band, h1, h2) WHERE b.doc_id <> r.rep),
+        |cand AS (
+        |  SELECT DISTINCT ia, ib FROM (
+        |    SELECT a.doc_id AS ia, b.doc_id AS ib
+        |    FROM okb a JOIN okb b
+        |      ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
+        |         AND a.doc_id < b.doc_id
+        |    UNION ALL SELECT ia, ib FROM stars)),
+        |hd AS (SELECT DISTINCT doc_id, h FROM h),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT c.ia, c.ib, COUNT(*) AS m
+        |  FROM cand c
+        |  JOIN hd a ON a.doc_id = c.ia
+        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
+        |  GROUP BY 1, 2)
+        |SELECT i.ia, i.ib, i.m,
+        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
+        |FROM inter i
+        |JOIN sizes na ON na.doc_id = i.ia
+        |JOIN sizes nb ON nb.doc_id = i.ib
+        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
+        |ORDER BY ia, ib""".stripMargin)),
 
     // Incremental delta-vs-corpus near-dedup (see incrementalNearDups):
     // even doc_ids stand in for the existing corpus, odd for the newly
     // arrived batch. ONE shingle pass feeds both sides' band builds and
     // verify sets (persist/force/release discipline as above); in
     // production the corpus side reads a persisted band index instead.
-    "dedup_incr" -> ((s, dir) => {
+    Gate("dedup_incr", (s, dir) => {
       val hashes = docShingleHashes(s, dir).persist()
       val nonEmpty = hashes.filter(size(col("hs")) > 0)
       val out = incrementalNearDups(
@@ -670,17 +754,81 @@ object DedupQueries {
         .localCheckpoint(true)
       hashes.unpersist(blocking = false)
       out
-    }),
+    }, _ =>
+      // incremental probe: same minhash/band CTEs, candidate join
+      // restricted to (even corpus, odd delta) pairs, exact-Jaccard verify
+      (shinglesCte +
+      ", " + sigBandsCte + """,
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
+        |  FROM bands a JOIN bands b
+        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
+        |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1),
+        |hd AS (SELECT DISTINCT doc_id, h FROM h),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT c.ia, c.ib, COUNT(*) AS m
+        |  FROM cand c
+        |  JOIN hd a ON a.doc_id = c.ia
+        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
+        |  GROUP BY 1, 2)
+        |SELECT i.ia, i.ib, i.m,
+        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
+        |FROM inter i
+        |JOIN sizes na ON na.doc_id = i.ia
+        |JOIN sizes nb ON nb.doc_id = i.ib
+        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
+        |ORDER BY ia, ib""".stripMargin)),
 
     // n-gram Jaccard with the production stop-shingle cap (df ≤ 8% of
     // the corpus). Shuffle join keyed by shingle hash; the cap bounds
     // the per-shingle join fan-out.
-    "dedup_ngram" -> ((s, dir) =>
-      ngramJaccard(s, dir, maxDfFrac = Some(0.08))),
+    Gate("dedup_ngram", (s, dir) =>
+      ngramJaccard(s, dir, maxDfFrac = Some(0.08)), _ =>
+      (shinglesCte +
+      """, hd0 AS (SELECT DISTINCT doc_id, h FROM h),
+        |stop AS (
+        |  SELECT h FROM hd0 GROUP BY h
+        |  HAVING COUNT(*) > CEIL(0.08 * (SELECT COUNT(*) FROM documents))),
+        |hd AS (SELECT * FROM hd0 WHERE h NOT IN (SELECT h FROM stop)),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS m
+        |  FROM hd a JOIN hd b ON a.h = b.h AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT ia, ib, m,
+        |       CAST(m AS DOUBLE) / CAST(na.n + nb.n - m AS DOUBLE) AS jac
+        |FROM inter
+        |JOIN sizes na ON na.doc_id = ia
+        |JOIN sizes nb ON nb.doc_id = ib
+        |WHERE CAST(m AS DOUBLE) / CAST(na.n + nb.n - m AS DOUBLE) >= 0.10
+        |ORDER BY ia, ib""".stripMargin)),
 
     // Directed containment pairs over the same capped postings list.
-    "dedup_contain" -> ((s, dir) =>
-      containment(s, dir, maxDfFrac = Some(0.08))),
+    Gate("dedup_contain", (s, dir) =>
+      containment(s, dir, maxDfFrac = Some(0.08)), _ =>
+      (shinglesCte +
+      """, hd0 AS (SELECT DISTINCT doc_id, h FROM h),
+        |stop AS (
+        |  SELECT h FROM hd0 GROUP BY h
+        |  HAVING COUNT(*) > CEIL(0.08 * (SELECT COUNT(*) FROM documents))),
+        |hd AS (SELECT * FROM hd0 WHERE h NOT IN (SELECT h FROM stop)),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS m
+        |  FROM hd a JOIN hd b ON a.h = b.h AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2),
+        |directed AS (
+        |  SELECT i.ia AS contained, i.ib AS container, i.m, na.n AS n_contained
+        |  FROM inter i JOIN sizes na ON na.doc_id = i.ia
+        |  UNION ALL
+        |  SELECT i.ib, i.ia, i.m, nb.n
+        |  FROM inter i JOIN sizes nb ON nb.doc_id = i.ib)
+        |SELECT contained, container, m, n_contained,
+        |       CAST(m AS DOUBLE) / CAST(n_contained AS DOUBLE) AS cont
+        |FROM directed
+        |WHERE CAST(m AS DOUBLE) / CAST(n_contained AS DOUBLE) >= 0.5
+        |ORDER BY contained, container""".stripMargin)),
 
     // Candidate graph → duplicate CLUSTERS via min-label propagation
     // (connected components), then each document mapped to its cluster
@@ -697,7 +845,7 @@ object DedupQueries {
     // band-self-join + distinct build entirely (one groupBy + one join
     // replace it). Components, and therefore min-label clusters, are
     // identical to the pairwise formulation the DuckDB oracle states.
-    "dedup_clusters" -> ((s, dir) => {
+    Gate("dedup_clusters", (s, dir) => {
       val pairs = minHashStarCandidates(docShingleHashes(s, dir))
       val vertices = documents(s, dir).select(col("doc_id"))
       // connectedComponents truncates lineage internally (checkpointed
@@ -706,7 +854,9 @@ object DedupQueries {
       val out = connectedComponents(vertices, pairs)
       pairs.unpersist(blocking = false)
       out
-    }),
+    }, _ =>
+      (clustersRecursiveCte +
+      """SELECT doc_id, cluster FROM clusters ORDER BY doc_id""".stripMargin)),
 
     // LEAKAGE-SAFE train/test split (r9) — the composition every
     // training-data pipeline runs after near-dedup: hash-split the
@@ -722,7 +872,7 @@ object DedupQueries {
     // the product stays int64-exact at 100 TB id ranges) mod 100
     // against the 90% threshold. Zero additional shuffles on top of
     // the clustering; at 100 TB the split column is free.
-    "pipe_split" -> ((s, dir) => {
+    Gate("pipe_split", (s, dir) => {
       val pairs = minHashStarCandidates(docShingleHashes(s, dir))
       val vertices = documents(s, dir).select(col("doc_id"))
       val out = connectedComponents(vertices, pairs)
@@ -731,7 +881,15 @@ object DedupQueries {
             < 90, lit("train")).otherwise(lit("test")))
       pairs.unpersist(blocking = false)
       out
-    }),
+    }, _ =>
+      // the dedup_clusters chain + the q_strat Knuth hash on the CLUSTER
+      // label (shared CTE, so the two gates can never state different
+      // clusterings)
+      (clustersRecursiveCte +
+      """SELECT doc_id, cluster,
+        |       CASE WHEN ((cluster % 2147483648) * 2654435761) % 4294967296 % 100 < 90
+        |            THEN 'train' ELSE 'test' END AS split
+        |FROM clusters ORDER BY doc_id""".stripMargin)),
 
     // Per-document 16-bit SimHash (near-dup docs collide). Token-less
     // documents are dropped — the oracle's per-token GROUP BY never
@@ -740,13 +898,34 @@ object DedupQueries {
     // equivalent — Spark's trim strips only spaces, so a tab/newline-
     // only document would pass it, hash an empty vote array to sh16=0
     // and desynchronize the row count from the oracle.
-    "dedup_simhash" -> ((s, dir) => {
+    Gate("dedup_simhash", (s, dir) => {
       documents(s, dir)
         .filter(graft.functions.TextHashExpressions
           .ws_token_count(col("text")) > 0)
         .select(col("doc_id"),
           simHash16(transform(tokens(col("text")), t => stringHash(t))).as("sh16"))
-    }),
+    }, _ =>
+      (
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
+        |  FROM documents),
+        |th AS (
+        |  SELECT doc_id,
+        |         list_reduce(list_transform(string_split(t, ''), c -> CAST(ord(c) AS BIGINT)),
+        |                     (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |  FROM (SELECT doc_id, UNNEST(tk) AS t FROM toks)),
+        |votes AS (
+        |  SELECT doc_id,
+        |""".stripMargin +
+      (0 until 16).map(j =>
+        s"    SUM(CASE WHEN (h >> $j) % 2 = 1 THEN 1 ELSE -1 END) AS v$j")
+        .mkString(",\n") +
+      "\n  FROM th GROUP BY doc_id)\nSELECT doc_id,\nCAST(\n" +
+      (0 until 16).map(j =>
+        s"  (CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
+        .mkString(" +\n") +
+      " AS BIGINT) AS sh16\nFROM votes ORDER BY doc_id")),
 
     // SimHash HAMMING-NEIGHBOR dedup — the Manku-Das-Sarma WWW'07
     // web-crawl design: 60-bit SimHash per document, candidate pairs
@@ -759,7 +938,41 @@ object DedupQueries {
     // few bits. Same scale shape as dedup_mh_lsh: band-keyed shuffle,
     // pair space bounded by collisions; the bucket-cap/star guard
     // applies unchanged on duplicate-dense corpora.
-    "dedup_sh_ham" -> ((s, dir) => simhashHamming(s, dir, maxBucket = None)),
+    Gate("dedup_sh_ham", (s, dir) => simhashHamming(s, dir, maxBucket = None), _ =>
+      // 60-bit SimHash + 4x15-bit band candidates + XOR popcount verify,
+      // generated like the dedup_simhash oracle (60 vote columns)
+      (
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
+        |  FROM documents),
+        |th AS (
+        |  SELECT doc_id,
+        |         list_reduce(list_transform(string_split(t, ''), c -> CAST(ord(c) AS BIGINT)),
+        |                     (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |  FROM (SELECT doc_id, UNNEST(tk) AS t FROM toks)),
+        |votes AS (
+        |  SELECT doc_id,
+        |""".stripMargin +
+      (0 until 60).map(j =>
+        s"    SUM(CASE WHEN ((h * ${2 * j + 3} + ${17 * j + 11}) % 1000000007) % 2 = 1" +
+          s" THEN 1 ELSE -1 END) AS v$j")
+        .mkString(",\n") +
+      "\n  FROM th GROUP BY doc_id),\nsh AS (SELECT doc_id,\nCAST(\n" +
+      (0 until 60).map(j =>
+        s"  (CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
+        .mkString(" +\n") +
+      """ AS BIGINT) AS sh
+        |FROM votes),
+        |bands AS (
+        |  SELECT doc_id, sh, b, (sh >> (15 * b)) & 32767 AS k
+        |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, 4)) AS b))
+        |SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib,
+        |       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS ham
+        |FROM bands a JOIN bands b
+        |  ON a.b = b.b AND a.k = b.k AND a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3
+        |ORDER BY ia, ib""".stripMargin)),
 
     // WINNOW-FINGERPRINT near-dedup (r9) — the text_winnow scaladoc's
     // claim made real: the MOSS winnowing fingerprints (min 3-gram hash
@@ -775,7 +988,7 @@ object DedupQueries {
     // a consistent estimator of full-set overlap on shared spans. At
     // 100 TB this is the knob between "dedup cost tracks corpus size"
     // and "dedup cost tracks corpus size × shingle density".
-    "dedup_winnow" -> ((s, dir) => {
+    Gate("dedup_winnow", (s, dir) => {
       import graft.functions.TextHashExpressions.winnow
       // same persist-before-filter discipline as dedup_jac_lsh: one
       // parallel tokenize→3-gram→winnow pass feeds all four consumers;
@@ -786,7 +999,50 @@ object DedupQueries {
         .select(col("doc_id"), winnow(col("g"), 4).as("hs"))
         .persist()
       jaccardOnCandidates(hashes)
-    }),
+    }, _ =>
+      // winnowed fingerprints substituted for full shingle sets in the
+      // SAME band/verify chain as dedup_jac_lsh: 3-gram hashes → min per
+      // 4-window → distinct fingerprints, then minhash/bands/exact
+      // intersect over the fingerprint sets
+      ("""WITH toks AS (
+        |  SELECT doc_id,
+        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
+        |  FROM documents),
+        |g0 AS (
+        |  SELECT doc_id,
+        |         list_transform(range(1, len(tk) - 1), i ->
+        |           list_reduce(list_transform(
+        |               string_split(tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2], ''),
+        |               c -> CAST(ord(c) AS BIGINT)),
+        |             (a, b) -> (a * 31 + b) % 1000000007)) AS g
+        |  FROM toks),
+        |f AS (
+        |  SELECT doc_id,
+        |         list_distinct(list_transform(range(1, len(g) - 2), i ->
+        |           list_min(g[i : i + 3]))) AS fp
+        |  FROM g0 WHERE len(g) >= 4),
+        |h AS (SELECT doc_id, UNNEST(fp) AS h FROM f),
+        |""" + sigBandsCte + """,
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
+        |  FROM bands a JOIN bands b
+        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
+        |       AND a.doc_id < b.doc_id),
+        |hd AS (SELECT DISTINCT doc_id, h FROM h),
+        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+        |inter AS (
+        |  SELECT c.ia, c.ib, COUNT(*) AS m
+        |  FROM cand c
+        |  JOIN hd a ON a.doc_id = c.ia
+        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
+        |  GROUP BY 1, 2)
+        |SELECT i.ia, i.ib, i.m,
+        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
+        |FROM inter i
+        |JOIN sizes na ON na.doc_id = i.ia
+        |JOIN sizes nb ON nb.doc_id = i.ib
+        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
+        |ORDER BY ia, ib""").stripMargin),
 
     // Embedding-cosine near-dup blocked by random-hyperplane LSH bucket
     // (exact quantized dot within block). The block key is the LSH
@@ -795,12 +1051,40 @@ object DedupQueries {
     // per-block pair space stays bounded as the corpus grows (a label/
     // category key would grow blocks linearly with data and the pair
     // space quadratically).
-    "dedup_emb_cos" -> ((s, dir) => {
+    Gate("dedup_emb_cos", (s, dir) => {
       SimilarityQueries.lshBucketedPairs(embeddings(s, dir), "vec_id",
           planes = 6)
         .filter(col("ia") < col("ib") && col("cos") > 0.35)
         .select(col("bucket"), col("ia"), col("ib"), col("dot"), col("cos"))
-    })
+    }, _ =>
+      """WITH v AS (
+        |  SELECT vec_id,
+        |         list_transform(embedding,
+        |           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
+        |  FROM embeddings),
+        |n AS (SELECT vec_id, q,
+        |             CAST(list_dot_product(q, q) AS BIGINT) AS n2 FROM v),
+        |dots AS (
+        |  SELECT vec_id, p,
+        |         SUM(x * (((p * 131 + (i - 1) * 7919 + 17) % 1000) - 500)) AS dp
+        |  FROM (SELECT vec_id, UNNEST(q) AS x,
+        |               generate_subscripts(q, 1) AS i FROM v)
+        |  CROSS JOIN (SELECT UNNEST(range(0, 6)) AS p)
+        |  GROUP BY vec_id, p),
+        |buckets AS (
+        |  SELECT n.vec_id, n.q, n.n2,
+        |         (SELECT CAST(SUM(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT)
+        |          FROM dots d WHERE d.vec_id = n.vec_id) AS bucket
+        |  FROM n)
+        |SELECT bucket, ia, ib, dot, cos FROM (
+        |  SELECT a.bucket, a.vec_id AS ia, b.vec_id AS ib,
+        |         CAST(list_dot_product(a.q, b.q) AS BIGINT) AS dot,
+        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
+        |  FROM buckets a JOIN buckets b
+        |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+        |WHERE cos > 0.35
+        |ORDER BY ia, ib""".stripMargin)
   )
 
   /** Min-label propagation connected components: every vertex starts as
@@ -1234,296 +1518,4 @@ object DedupQueries {
         |  SELECT node AS doc_id, MIN(via) AS cluster
         |  FROM reach GROUP BY node)
         |""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_exact" ->
-      """SELECT md5(text) AS digest, MIN(doc_id) AS canonical_id,
-        |       COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin,
-    "dedup_fuzzy" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang, substr(text, 1, 64) AS k,
-        |         ROW_NUMBER() OVER (PARTITION BY lang
-        |           ORDER BY substr(text, 1, 64), doc_id) AS rn
-        |  FROM documents)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |       CAST(levenshtein(a.k, b.k) AS INT) AS dist
-        |FROM d a JOIN d b
-        |  ON a.lang = b.lang AND b.rn > a.rn AND b.rn <= a.rn + 10
-        |WHERE levenshtein(a.k, b.k) <= 10
-        |ORDER BY a_id, b_id""".stripMargin,
-    "dedup_mh_lsh" -> (shinglesCte +
-      ", " + sigBandsCte + """
-        |SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-        |FROM bands a JOIN bands b
-        |  ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |     AND a.doc_id < b.doc_id
-        |ORDER BY ia, ib""".stripMargin),
-    // exact Jaccard on LSH candidates: same minhash/band CTE as
-    // dedup_mh_lsh, then exact set intersection per candidate pair
-    "dedup_jac_lsh" -> (shinglesCte +
-      ", " + sigBandsCte + """,
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |       AND a.doc_id < b.doc_id),
-        |hd AS (SELECT DISTINCT doc_id, h FROM h),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.ia, c.ib, COUNT(*) AS m
-        |  FROM cand c
-        |  JOIN hd a ON a.doc_id = c.ia
-        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
-        |  GROUP BY 1, 2)
-        |SELECT i.ia, i.ib, i.m,
-        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
-        |FROM inter i
-        |JOIN sizes na ON na.doc_id = i.ia
-        |JOIN sizes nb ON nb.doc_id = i.ib
-        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
-        |ORDER BY ia, ib""".stripMargin),
-    // winnowed fingerprints substituted for full shingle sets in the
-    // SAME band/verify chain as dedup_jac_lsh: 3-gram hashes → min per
-    // 4-window → distinct fingerprints, then minhash/bands/exact
-    // intersect over the fingerprint sets
-    "dedup_winnow" ->
-      ("""WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |g0 AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, len(tk) - 1), i ->
-        |           list_reduce(list_transform(
-        |               string_split(tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2], ''),
-        |               c -> CAST(ord(c) AS BIGINT)),
-        |             (a, b) -> (a * 31 + b) % 1000000007)) AS g
-        |  FROM toks),
-        |f AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(range(1, len(g) - 2), i ->
-        |           list_min(g[i : i + 3]))) AS fp
-        |  FROM g0 WHERE len(g) >= 4),
-        |h AS (SELECT doc_id, UNNEST(fp) AS h FROM f),
-        |""" + sigBandsCte + """,
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |       AND a.doc_id < b.doc_id),
-        |hd AS (SELECT DISTINCT doc_id, h FROM h),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.ia, c.ib, COUNT(*) AS m
-        |  FROM cand c
-        |  JOIN hd a ON a.doc_id = c.ia
-        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
-        |  GROUP BY 1, 2)
-        |SELECT i.ia, i.ib, i.m,
-        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
-        |FROM inter i
-        |JOIN sizes na ON na.doc_id = i.ia
-        |JOIN sizes nb ON nb.doc_id = i.ib
-        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
-        |ORDER BY ia, ib""").stripMargin,
-    // the duplicate-density guard: identical pipeline, candidate join
-    // restricted to band buckets of <= 8 members
-    "dedup_cap" -> (shinglesCte +
-      ", " + sigBandsCte + """,
-        |ok AS (
-        |  SELECT band, h1, h2 FROM bands GROUP BY 1, 2, 3
-        |  HAVING COUNT(*) <= 8),
-        |okb AS (SELECT b.* FROM bands b JOIN ok USING (band, h1, h2)),
-        |big AS (
-        |  SELECT band, h1, h2 FROM bands GROUP BY 1, 2, 3
-        |  HAVING COUNT(*) > 8),
-        |bigb AS (SELECT b.* FROM bands b JOIN big USING (band, h1, h2)),
-        |reps AS (
-        |  SELECT band, h1, h2, MIN(doc_id) AS rep FROM bigb GROUP BY 1, 2, 3),
-        |stars AS (
-        |  SELECT r.rep AS ia, b.doc_id AS ib FROM bigb b
-        |  JOIN reps r USING (band, h1, h2) WHERE b.doc_id <> r.rep),
-        |cand AS (
-        |  SELECT DISTINCT ia, ib FROM (
-        |    SELECT a.doc_id AS ia, b.doc_id AS ib
-        |    FROM okb a JOIN okb b
-        |      ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |         AND a.doc_id < b.doc_id
-        |    UNION ALL SELECT ia, ib FROM stars)),
-        |hd AS (SELECT DISTINCT doc_id, h FROM h),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.ia, c.ib, COUNT(*) AS m
-        |  FROM cand c
-        |  JOIN hd a ON a.doc_id = c.ia
-        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
-        |  GROUP BY 1, 2)
-        |SELECT i.ia, i.ib, i.m,
-        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
-        |FROM inter i
-        |JOIN sizes na ON na.doc_id = i.ia
-        |JOIN sizes nb ON nb.doc_id = i.ib
-        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
-        |ORDER BY ia, ib""".stripMargin),
-    // incremental probe: same minhash/band CTEs, candidate join
-    // restricted to (even corpus, odd delta) pairs, exact-Jaccard verify
-    "dedup_incr" -> (shinglesCte +
-      ", " + sigBandsCte + """,
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1),
-        |hd AS (SELECT DISTINCT doc_id, h FROM h),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.ia, c.ib, COUNT(*) AS m
-        |  FROM cand c
-        |  JOIN hd a ON a.doc_id = c.ia
-        |  JOIN hd b ON b.doc_id = c.ib AND b.h = a.h
-        |  GROUP BY 1, 2)
-        |SELECT i.ia, i.ib, i.m,
-        |       CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) AS jac
-        |FROM inter i
-        |JOIN sizes na ON na.doc_id = i.ia
-        |JOIN sizes nb ON nb.doc_id = i.ib
-        |WHERE CAST(i.m AS DOUBLE) / CAST(na.n + nb.n - i.m AS DOUBLE) >= 0.5
-        |ORDER BY ia, ib""".stripMargin),
-    "dedup_ngram" -> (shinglesCte +
-      """, hd0 AS (SELECT DISTINCT doc_id, h FROM h),
-        |stop AS (
-        |  SELECT h FROM hd0 GROUP BY h
-        |  HAVING COUNT(*) > CEIL(0.08 * (SELECT COUNT(*) FROM documents))),
-        |hd AS (SELECT * FROM hd0 WHERE h NOT IN (SELECT h FROM stop)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS m
-        |  FROM hd a JOIN hd b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT ia, ib, m,
-        |       CAST(m AS DOUBLE) / CAST(na.n + nb.n - m AS DOUBLE) AS jac
-        |FROM inter
-        |JOIN sizes na ON na.doc_id = ia
-        |JOIN sizes nb ON nb.doc_id = ib
-        |WHERE CAST(m AS DOUBLE) / CAST(na.n + nb.n - m AS DOUBLE) >= 0.10
-        |ORDER BY ia, ib""".stripMargin),
-    "dedup_contain" -> (shinglesCte +
-      """, hd0 AS (SELECT DISTINCT doc_id, h FROM h),
-        |stop AS (
-        |  SELECT h FROM hd0 GROUP BY h
-        |  HAVING COUNT(*) > CEIL(0.08 * (SELECT COUNT(*) FROM documents))),
-        |hd AS (SELECT * FROM hd0 WHERE h NOT IN (SELECT h FROM stop)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS m
-        |  FROM hd a JOIN hd b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |directed AS (
-        |  SELECT i.ia AS contained, i.ib AS container, i.m, na.n AS n_contained
-        |  FROM inter i JOIN sizes na ON na.doc_id = i.ia
-        |  UNION ALL
-        |  SELECT i.ib, i.ia, i.m, nb.n
-        |  FROM inter i JOIN sizes nb ON nb.doc_id = i.ib)
-        |SELECT contained, container, m, n_contained,
-        |       CAST(m AS DOUBLE) / CAST(n_contained AS DOUBLE) AS cont
-        |FROM directed
-        |WHERE CAST(m AS DOUBLE) / CAST(n_contained AS DOUBLE) >= 0.5
-        |ORDER BY contained, container""".stripMargin),
-    "dedup_clusters" -> (clustersRecursiveCte +
-      """SELECT doc_id, cluster FROM clusters ORDER BY doc_id""".stripMargin),
-
-    // the dedup_clusters chain + the q_strat Knuth hash on the CLUSTER
-    // label (shared CTE, so the two gates can never state different
-    // clusterings)
-    "pipe_split" -> (clustersRecursiveCte +
-      """SELECT doc_id, cluster,
-        |       CASE WHEN ((cluster % 2147483648) * 2654435761) % 4294967296 % 100 < 90
-        |            THEN 'train' ELSE 'test' END AS split
-        |FROM clusters ORDER BY doc_id""".stripMargin),
-    // 60-bit SimHash + 4x15-bit band candidates + XOR popcount verify,
-    // generated like the dedup_simhash oracle (60 vote columns)
-    "dedup_sh_ham" -> (
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_reduce(list_transform(string_split(t, ''), c -> CAST(ord(c) AS BIGINT)),
-        |                     (a, b) -> (a * 31 + b) % 1000000007) AS h
-        |  FROM (SELECT doc_id, UNNEST(tk) AS t FROM toks)),
-        |votes AS (
-        |  SELECT doc_id,
-        |""".stripMargin +
-      (0 until 60).map(j =>
-        s"    SUM(CASE WHEN ((h * ${2 * j + 3} + ${17 * j + 11}) % 1000000007) % 2 = 1" +
-          s" THEN 1 ELSE -1 END) AS v$j")
-        .mkString(",\n") +
-      "\n  FROM th GROUP BY doc_id),\nsh AS (SELECT doc_id,\nCAST(\n" +
-      (0 until 60).map(j =>
-        s"  (CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
-        .mkString(" +\n") +
-      """ AS BIGINT) AS sh
-        |FROM votes),
-        |bands AS (
-        |  SELECT doc_id, sh, b, (sh >> (15 * b)) & 32767 AS k
-        |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, 4)) AS b))
-        |SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib,
-        |       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS ham
-        |FROM bands a JOIN bands b
-        |  ON a.b = b.b AND a.k = b.k AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3
-        |ORDER BY ia, ib""".stripMargin),
-    "dedup_simhash" -> (
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_reduce(list_transform(string_split(t, ''), c -> CAST(ord(c) AS BIGINT)),
-        |                     (a, b) -> (a * 31 + b) % 1000000007) AS h
-        |  FROM (SELECT doc_id, UNNEST(tk) AS t FROM toks)),
-        |votes AS (
-        |  SELECT doc_id,
-        |""".stripMargin +
-      (0 until 16).map(j =>
-        s"    SUM(CASE WHEN (h >> $j) % 2 = 1 THEN 1 ELSE -1 END) AS v$j")
-        .mkString(",\n") +
-      "\n  FROM th GROUP BY doc_id)\nSELECT doc_id,\nCAST(\n" +
-      (0 until 16).map(j =>
-        s"  (CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
-        .mkString(" +\n") +
-      " AS BIGINT) AS sh16\nFROM votes ORDER BY doc_id"),
-    "dedup_emb_cos" ->
-      """WITH v AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding,
-        |           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, q,
-        |             CAST(list_dot_product(q, q) AS BIGINT) AS n2 FROM v),
-        |dots AS (
-        |  SELECT vec_id, p,
-        |         SUM(x * (((p * 131 + (i - 1) * 7919 + 17) % 1000) - 500)) AS dp
-        |  FROM (SELECT vec_id, UNNEST(q) AS x,
-        |               generate_subscripts(q, 1) AS i FROM v)
-        |  CROSS JOIN (SELECT UNNEST(range(0, 6)) AS p)
-        |  GROUP BY vec_id, p),
-        |buckets AS (
-        |  SELECT n.vec_id, n.q, n.n2,
-        |         (SELECT CAST(SUM(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT)
-        |          FROM dots d WHERE d.vec_id = n.vec_id) AS bucket
-        |  FROM n)
-        |SELECT bucket, ia, ib, dot, cos FROM (
-        |  SELECT a.bucket, a.vec_id AS ia, b.vec_id AS ib,
-        |         CAST(list_dot_product(a.q, b.q) AS BIGINT) AS dot,
-        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-        |  FROM buckets a JOIN buckets b
-        |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-        |WHERE cos > 0.35
-        |ORDER BY ia, ib""".stripMargin
-  )
 }

@@ -38,7 +38,7 @@ import graft.Tables._
   *    (total graph mass is conserved at ~nodes × 10^6, so this holds to
   *    ~10^11-node graphs — beyond that, widen to DECIMAL(38)).
   */
-object GraphQueries {
+object GraphQueries extends GateFamily {
 
   /** Damped integer-exact PageRank over a pre-partitioned edge list.
     * `edges` must be (src, dst) with every node present as a source
@@ -88,7 +88,7 @@ object GraphQueries {
     ranks
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Interaction-graph centrality: users and items (the event's
     // props.k) form a bipartite graph, symmetrized so every node has
     // out-degree ≥ 1 (no dangling mass), item nodes offset to their own
@@ -101,7 +101,7 @@ object GraphQueries {
     // an id-space violation BOTH engines applied, so the differential
     // gate could never see it. 2^40 is above any fixture or production
     // user id while keeping rank arithmetic far from int64 range.
-    "q_pagerank" -> ((s, dir) => {
+    Gate("q_pagerank", (s, dir) => {
       val itemOffset = 1L << 40
       val pairs = events(s, dir)
         .select(col("user_id").as("u"),
@@ -118,10 +118,10 @@ object GraphQueries {
         val out = pageRank(edges, iters = 5).localCheckpoint(true)
         out
       } finally edges.unpersist(blocking = false)
-    })
+    }, _ => pagerankOracle)
   )
 
-  def oracleSql: Map[String, String] = {
+  private def pagerankOracle: String = {
     val iter = (1 to 5).map { i =>
       s"""r$i AS (
          |  SELECT e.dst AS node,
@@ -131,20 +131,17 @@ object GraphQueries {
          |  JOIN edges e ON e.src = r.node
          |  GROUP BY 1)""".stripMargin
     }.mkString(",\n")
-    Map(
-      "q_pagerank" ->
-        s"""WITH pairs AS (
-           |  SELECT DISTINCT user_id AS u,
-           |         CAST(props::JSON->>'k' AS BIGINT) AS k
-           |  FROM events WHERE props::JSON->>'k' IS NOT NULL),
-           |edges AS (
-           |  SELECT u AS src, 1099511627776 + k AS dst FROM pairs
-           |  UNION ALL
-           |  SELECT 1099511627776 + k AS src, u AS dst FROM pairs),
-           |deg AS (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY 1),
-           |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM deg),
-           |$iter
-           |SELECT node, r FROM r5 ORDER BY node""".stripMargin
-    )
+    s"""WITH pairs AS (
+      |  SELECT DISTINCT user_id AS u,
+      |         CAST(props::JSON->>'k' AS BIGINT) AS k
+      |  FROM events WHERE props::JSON->>'k' IS NOT NULL),
+      |edges AS (
+      |  SELECT u AS src, 1099511627776 + k AS dst FROM pairs
+      |  UNION ALL
+      |  SELECT 1099511627776 + k AS src, u AS dst FROM pairs),
+      |deg AS (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY 1),
+      |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM deg),
+      |$iter
+      |SELECT node, r FROM r5 ORDER BY node""".stripMargin
   }
 }

@@ -20,7 +20,7 @@ import graft.Tables._
   * stored per-group structure instead; sums/counts are exactly the
   * shapes a CDC-maintained materialized view keeps hot.
   */
-object IncrementalAgg {
+object IncrementalAgg extends GateFamily {
 
   /** Apply `delta` to `base`.
     *
@@ -55,7 +55,7 @@ object IncrementalAgg {
 
   private val CUTOFF = "1997-01-01"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Maintained per-customer order rollup: the base aggregate covers
     // orders before the cutoff; the changelog then inserts every later
     // order ('c'), deletes base orders with key%17==0 ('d'), and
@@ -64,7 +64,7 @@ object IncrementalAgg {
     // a direct aggregate of the post-change order set — so the gate
     // proves maintenance ≡ recomputation, not that two copies of the
     // same algebra agree.
-    "q_incr_agg" -> ((s, dir) => {
+    Gate("q_incr_agg", (s, dir) => {
       val cutoff = lit(CUTOFF).cast("timestamp_ntz")
       val o = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
         col("o_orderdate"),
@@ -85,7 +85,24 @@ object IncrementalAgg {
           col("cents").as("before"), (col("cents") + 100).as("after"))
       maintain(base, inserts.unionByName(deletes).unionByName(updates),
         "o_custkey")
-    }),
+    }, _ =>
+      s"""WITH o AS (
+         |  SELECT o_orderkey, o_custkey, o_orderdate,
+         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+         |           AS cents
+         |  FROM orders),
+         |post AS (
+         |  SELECT o_custkey,
+         |         cents + CASE WHEN o_orderkey % 19 = 0 THEN 100 ELSE 0 END
+         |           AS cents
+         |  FROM o WHERE o_orderdate < TIMESTAMP '$CUTOFF'
+         |    AND o_orderkey % 17 <> 0
+         |  UNION ALL
+         |  SELECT o_custkey, cents FROM o
+         |  WHERE o_orderdate >= TIMESTAMP '$CUTOFF')
+         |SELECT o_custkey, COUNT(*) AS n,
+         |       CAST(SUM(cents) AS BIGINT) AS total
+         |FROM post GROUP BY 1 ORDER BY o_custkey""".stripMargin),
 
     // Incremental maintenance of an AGGREGATE-OVER-JOIN view — the
     // textbook IVM case one step up from q_incr_agg: the materialized
@@ -97,7 +114,7 @@ object IncrementalAgg {
     // full-outer merge as q_incr_agg. The oracle recomputes the
     // post-change join from scratch, so the gate proves
     // maintenance ≡ recomputation across the join.
-    "q_incr_join" -> ((s, dir) => {
+    Gate("q_incr_join", (s, dir) => {
       val cutoff = lit(CUTOFF).cast("timestamp_ntz")
       val o = orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"))
       val l = lineitem(s, dir).select(col("l_orderkey"), col("l_shipdate"),
@@ -120,7 +137,22 @@ object IncrementalAgg {
         .select(col("o_orderpriority"), lit("d").as("op"),
           col("cents").as("before"), lit(null).cast("long").as("after"))
       maintain(base, inserts.unionByName(deletes), "o_orderpriority")
-    }),
+    }, _ =>
+      s"""WITH l AS (
+         |  SELECT l_orderkey, l_shipdate,
+         |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+         |           AS cents
+         |  FROM lineitem),
+         |post AS (
+         |  SELECT l_orderkey, cents FROM l
+         |  WHERE l_shipdate < TIMESTAMP '$CUTOFF' AND l_orderkey % 13 <> 0
+         |  UNION ALL
+         |  SELECT l_orderkey, cents FROM l
+         |  WHERE l_shipdate >= TIMESTAMP '$CUTOFF')
+         |SELECT o.o_orderpriority, COUNT(*) AS n,
+         |       CAST(SUM(p.cents) AS BIGINT) AS total
+         |FROM post p JOIN orders o ON o.o_orderkey = p.l_orderkey
+         |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin),
 
     // Incremental SCD2 maintenance — applying a change batch to a
     // slowly-changing dimension WITHOUT rebuilding it: the pure delta
@@ -135,7 +167,10 @@ object IncrementalAgg {
     // the q_scd2_vers window — the gate proves apply ≡ rebuild.
     // Assumes in-order arrival (batch changes post-date the current
     // rows), the CDC commit-order guarantee T3 provides upstream.
-    "q_scd2_apply" -> ((s, dir) => scd2Apply(s, dir, CUTOFF))
+    Gate("q_scd2_apply", (s, dir) => scd2Apply(s, dir, CUTOFF), _ =>
+      // the oracle is the from-scratch rebuild over the FULL history —
+      // byte-equality proves the delta apply reproduces it exactly
+      CdcQueries.scd2Oracle)
   )
 
   /** The q_scd2_apply plan with the batch boundary as a parameter —
@@ -200,55 +235,4 @@ object IncrementalAgg {
       .unionByName(untouchedCurrent.select(cols: _*))
       .unionByName(deltaV.select(cols: _*))
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_incr_agg" ->
-      s"""WITH o AS (
-         |  SELECT o_orderkey, o_custkey, o_orderdate,
-         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |           AS cents
-         |  FROM orders),
-         |post AS (
-         |  SELECT o_custkey,
-         |         cents + CASE WHEN o_orderkey % 19 = 0 THEN 100 ELSE 0 END
-         |           AS cents
-         |  FROM o WHERE o_orderdate < TIMESTAMP '$CUTOFF'
-         |    AND o_orderkey % 17 <> 0
-         |  UNION ALL
-         |  SELECT o_custkey, cents FROM o
-         |  WHERE o_orderdate >= TIMESTAMP '$CUTOFF')
-         |SELECT o_custkey, COUNT(*) AS n,
-         |       CAST(SUM(cents) AS BIGINT) AS total
-         |FROM post GROUP BY 1 ORDER BY o_custkey""".stripMargin,
-    "q_incr_join" ->
-      s"""WITH l AS (
-         |  SELECT l_orderkey, l_shipdate,
-         |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |           AS cents
-         |  FROM lineitem),
-         |post AS (
-         |  SELECT l_orderkey, cents FROM l
-         |  WHERE l_shipdate < TIMESTAMP '$CUTOFF' AND l_orderkey % 13 <> 0
-         |  UNION ALL
-         |  SELECT l_orderkey, cents FROM l
-         |  WHERE l_shipdate >= TIMESTAMP '$CUTOFF')
-         |SELECT o.o_orderpriority, COUNT(*) AS n,
-         |       CAST(SUM(p.cents) AS BIGINT) AS total
-         |FROM post p JOIN orders o ON o.o_orderkey = p.l_orderkey
-         |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    // the oracle is the from-scratch rebuild over the FULL history —
-    // byte-equality proves the delta apply reproduces it exactly
-    "q_scd2_apply" ->
-      """SELECT o_orderkey % 997 AS k, o_orderkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-        |  o_orderdate AS valid_from,
-        |  LEAD(o_orderdate) OVER (
-        |    PARTITION BY o_orderkey % 997
-        |    ORDER BY o_orderdate, o_orderkey) AS valid_to,
-        |  LEAD(o_orderdate) OVER (
-        |    PARTITION BY o_orderkey % 997
-        |    ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current
-        |FROM orders
-        |ORDER BY k, valid_from, o_orderkey""".stripMargin
-  )
 }

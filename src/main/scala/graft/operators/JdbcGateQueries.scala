@@ -24,7 +24,7 @@ import graft.sinks.{DerbyDialect, JdbcUpsertSink, PartialUpsertSink}
   * share the driver JVM (the same caveat as `SourceQueries
   * .writeRedoLogs`; on a real cluster point `url` at a server).
   */
-object JdbcGateQueries {
+object JdbcGateQueries extends GateFamily {
 
   // fresh database per invocation: gates may run repeatedly in one JVM
   // (bench warmup) and must not see prior state
@@ -47,12 +47,12 @@ object JdbcGateQueries {
   private val SeedParts = 32
   private val JdbcBatch = 1000
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // S3: orders seeded into a Derby "change table" keyed by SCN, then
     // read back through the graft-jdbc-poll micro-batch source (schema
     // inferred via the S9 dictionary reader, windows split across 8
     // partitions) into parquet, one batch at a time.
-    "s3_jdbc_poll" -> ((s, dir) => {
+    Gate("s3_jdbc_poll", (s, dir) => {
       val url = s"jdbc:derby:memory:s3gate${dbSeq.incrementAndGet()};create=true"
       val conn = DriverManager.getConnection(url)
       conn.createStatement().execute(
@@ -114,13 +114,16 @@ object JdbcGateQueries {
       s.read.parquet(outDir)
         .select(col("SCN").as("o_orderkey"), col("CUSTKEY").as("custkey"),
           col("PRICE").cast("double").as("price"))
-    }),
+    }, _ =>
+      """SELECT o_orderkey, o_custkey AS custkey,
+        |       CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS price
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // K3+K4: customers upserted into an auto-created Derby table (K3
     // DDL from the Spark schema), then a wrapped-data partial-update
     // pass touches ONLY the account balance of every 3rd customer and
     // deletes every 7th (K4 semantics: absent columns untouched).
-    "k3_k4_apply" -> ((s, dir) => {
+    Gate("k3_k4_apply", (s, dir) => {
       val url = s"jdbc:derby:memory:k34gate${dbSeq.incrementAndGet()};create=true"
       val table = "CUST_TGT"
       val base = customer(s, dir).select(
@@ -159,21 +162,13 @@ object JdbcGateQueries {
         .localCheckpoint(true)
       dropDerby(url)
       out
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "s3_jdbc_poll" ->
-      """SELECT o_orderkey, o_custkey AS custkey,
-        |       CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "k3_k4_apply" ->
+    }, _ =>
       """SELECT c_custkey AS id, c_name AS name,
         |       CAST(CASE WHEN c_custkey % 3 = 0
         |                 THEN CAST(c_acctbal AS DECIMAL(12,2)) + 100
         |                 ELSE CAST(c_acctbal AS DECIMAL(12,2)) END AS DOUBLE) AS acctbal
         |FROM customer
         |WHERE c_custkey % 7 <> 0
-        |ORDER BY id""".stripMargin
+        |ORDER BY id""".stripMargin)
   )
 }

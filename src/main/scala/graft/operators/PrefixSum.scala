@@ -33,7 +33,7 @@ import graft.functions.TextFunctions._
   * tokenized documents in id order, cut into fixed-length training
   * blocks; each document's block span falls out of its exclusive prefix.
   */
-object PrefixSum {
+object PrefixSum extends GateFamily {
 
   /** Adds `out` = exclusive running total of `valueCol` over the global
     * `(orderCol, tieCols…)` ascending order. The combined order key must
@@ -136,13 +136,13 @@ object PrefixSum {
     }
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Sequence packing — the final training-prep step: all tokenized
     // docs concatenated in doc_id order and cut into 1024-token blocks;
     // each doc reports the block range it lands in. The distributed
     // exclusive scan above replaces the single-partition window the SQL
     // formulation implies.
-    "text_pack" -> ((s, dir) => {
+    Gate("text_pack", (s, dir) => {
       val toks = documents(s, dir)
         .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tok"))
         .filter(col("n_tok") > 0)
@@ -150,11 +150,7 @@ object PrefixSum {
         .withColumn("blk0", expr("cum_before div 1024"))
         .withColumn("blk1", expr("(cum_before + n_tok - 1) div 1024"))
         .withColumn("n_blocks", col("blk1") - col("blk0") + 1)
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_pack" ->
+    }, _ =>
       """WITH toks AS (
         |  SELECT doc_id,
         |         CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'),
@@ -172,6 +168,6 @@ object PrefixSum {
         |       CAST((cum_before + n_tok - 1) // 1024 AS BIGINT) AS blk1,
         |       CAST((cum_before + n_tok - 1) // 1024
         |            - cum_before // 1024 + 1 AS BIGINT) AS n_blocks
-        |FROM c ORDER BY doc_id""".stripMargin
+        |FROM c ORDER BY doc_id""".stripMargin)
   )
 }

@@ -32,7 +32,7 @@ import graft.Tables._
   *  - every query ends in a bounded result (agg or top-k), never an
   *    unbounded global sort of the fact table.
   */
-object RelationalQueries {
+object RelationalQueries extends GateFamily {
   private val D = DecimalType(18, 2)
   private def dec(c: Column) = c.cast(D)
   private def ts(s: String) = lit(s).cast("timestamp_ntz")
@@ -162,9 +162,43 @@ object RelationalQueries {
         count(lit(1)).as("n_items"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** q3_join_topk and q3_bucketed: the plain join over the raw tables.
+    * The bucketed gates run the SAME queries over the bucketed layout
+    * and their oracles read the RAW parquet — each green hash is an
+    * end-to-end proof that the co-bucketed artifact serves the same
+    * rows as a fresh scan (layout ≡ data). */
+  private def q3Oracle: String =
+    """SELECT l_orderkey, o_orderdate, o_orderpriority,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+      |FROM lineitem
+      |JOIN orders ON l_orderkey = o_orderkey
+      |JOIN customer ON o_custkey = c_custkey
+      |WHERE c_mktsegment = 'BUILDING'
+      |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+      |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+      |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+      |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin
+
+  /** q5_star_join and q5_bucketed: the plain star join over the raw tables. */
+  private def q5Oracle: String =
+    """SELECT n_name,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
+      |  COUNT(*) AS n_items
+      |FROM lineitem
+      |JOIN orders ON l_orderkey = o_orderkey
+      |JOIN supplier ON l_suppkey = s_suppkey
+      |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
+      |JOIN nation ON s_nationkey = n_nationkey
+      |JOIN region ON n_regionkey = r_regionkey
+      |WHERE r_name = 'ASIA'
+      |  AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+      |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+      |GROUP BY n_name
+      |ORDER BY revenue DESC, n_name""".stripMargin
+
+  def gates: Seq[Gate] = Seq(
     // Single-scan aggregation with map-side partial agg (TPC-H Q1 style).
-    "q1_agg" -> ((s, dir) => {
+    Gate("q1_agg", (s, dir) => {
       lineitem(s, dir)
         .filter(col("l_shipdate") <= ts("1998-09-02"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -174,7 +208,16 @@ object RelationalQueries {
           sum(dec(col("l_extendedprice")) * (lit(1).cast(D) - dec(col("l_discount"))))
             .cast("double").as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-    }),
+    }, _ =>
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |  COUNT(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // Fact-fact shuffle join + dim join + top-k (TPC-H Q3 style).
     // customer is NOT broadcast-hinted: it grows linearly with scale
@@ -183,8 +226,8 @@ object RelationalQueries {
     // broadcast while it fits the threshold, shuffle join beyond.
     // Only genuinely bounded dims (nation: 25 rows, region: 5) earn a
     // static hint (see q5). PlanAuditSpec asserts both directions.
-    "q3_join_topk" -> ((s, dir) =>
-      q3Body(orders(s, dir), lineitem(s, dir), customer(s, dir))),
+    Gate("q3_join_topk", (s, dir) =>
+      q3Body(orders(s, dir), lineitem(s, dir), customer(s, dir)), _ => q3Oracle),
 
     // q3 over the BUCKETED lakehouse layout ([[BucketedLayout]]):
     // identical query, identical oracle — the orderkey fact-fact join
@@ -192,10 +235,12 @@ object RelationalQueries {
     // co-bucketed once at ingest (PlanAuditSpec asserts the plan).
     // This is the storage answer to the one cost the 100× receipts
     // still paid on every run.
-    "q3_bucketed" -> ((s, dir) => {
+    Gate("q3_bucketed", (s, dir) => {
       val (o, l) = BucketedLayout.star(s, dir)
       q3Body(o, l, customer(s, dir), factFirst = true)
-    }),
+    }, _ => q3Oracle,
+      // the star layout is written once at ingest, not per query
+      prepare = BucketedLayout.ensureStarLayout(_, _)),
 
     // Star join + group-by (TPC-H Q5 style). Broadcast hints ONLY on the
     // bounded dims — nation (25 rows) and region (5 rows) are constant
@@ -203,15 +248,17 @@ object RelationalQueries {
     // SF, so they get no hint: AQE broadcasts them while their runtime
     // size fits autoBroadcastJoinThreshold and falls back to a shuffle
     // join at 100× where a forced broadcast would OOM the driver.
-    "q5_star_join" -> ((s, dir) =>
-      q5Body(s, dir, orders(s, dir), lineitem(s, dir))),
+    Gate("q5_star_join", (s, dir) =>
+      q5Body(s, dir, orders(s, dir), lineitem(s, dir)), _ => q5Oracle),
 
     // q5 over the bucketed layout — the q3_bucketed rationale; the
     // orderkey exchange disappears, the dim joins stay broadcast.
-    "q5_bucketed" -> ((s, dir) => {
+    Gate("q5_bucketed", (s, dir) => {
       val (o, l) = BucketedLayout.star(s, dir)
       q5Body(s, dir, o, l, factFirst = true)
-    }),
+    }, _ => q5Oracle,
+      // the star layout is written once at ingest, not per query
+      prepare = BucketedLayout.ensureStarLayout(_, _)),
 
     // Point-lookup SERVING over the bucketed layout (§2.59): an
     // equality/IN predicate on the bucket column prunes the scan to
@@ -223,7 +270,7 @@ object RelationalQueries {
     // buckets' files of EACH fact — scan cost scales with the
     // key-list, not the 100 TB table (and inside each bucket, parquet
     // row-group min/max on the sorted key prunes further).
-    "q_bucket_prune" -> ((s, dir) => {
+    Gate("q_bucket_prune", (s, dir) => {
       val (o, l) = BucketedLayout.star(s, dir)
       val keys = Seq(1L, 7L, 33L, 250L, 999L)
       o.filter(col("o_orderkey").isInCollection(keys))
@@ -231,10 +278,18 @@ object RelationalQueries {
         .groupBy(col("o_orderkey"), col("o_totalprice"))
         .agg(count(lit(1)).as("n_items"),
           sum(dec(col("l_quantity"))).cast("double").as("qty"))
-    }),
+    }, _ =>
+      """SELECT o_orderkey, o_totalprice, COUNT(*) AS n_items,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE o_orderkey IN (1, 7, 33, 250, 999)
+        |GROUP BY o_orderkey, o_totalprice
+        |ORDER BY o_orderkey""".stripMargin,
+      // the star layout is written once at ingest, not per query
+      prepare = BucketedLayout.ensureStarLayout(_, _)),
 
     // Window functions: rank + lag + running sum per partition.
-    "q_window_rank" -> ((s, dir) => {
+    Gate("q_window_rank", (s, dir) => {
       val byCust = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       orders(s, dir)
@@ -245,14 +300,23 @@ object RelationalQueries {
         .filter(col("rk") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rk"),
           col("prev_price"), col("run_cnt"))
-    }),
+    }, _ =>
+      """SELECT o_custkey, o_orderkey, rk, prev_price, run_cnt FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    RANK() OVER w AS rk,
+        |    LAG(o_totalprice, 1) OVER w AS prev_price,
+        |    COUNT(*) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_cnt
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey))
+        |WHERE rk <= 3
+        |ORDER BY o_custkey, rk, o_orderkey""".stripMargin),
 
     // Top-n per group written the NAIVE way — row_number window + filter.
     // With GraftExtensions installed (Verify/Bench do), TopKRewrite
     // replaces the full per-group shuffle+sort with the bounded-heap
     // aggregate; this gate proves the rewritten plan still matches the
     // oracle's window semantics exactly (ties broken by the full ORDER BY).
-    "q_topn_group" -> ((s, dir) => {
+    Gate("q_topn_group", (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       orders(s, dir)
@@ -260,10 +324,17 @@ object RelationalQueries {
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
           col("rn").cast("long").as("rn"))
-    }),
+    }, _ =>
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        |  FROM orders)
+        |WHERE rn <= 3
+        |ORDER BY o_custkey, rn""".stripMargin),
 
     // Set operations: UNION / INTERSECT / EXCEPT keep distinct semantics.
-    "q_setops" -> ((s, dir) => {
+    Gate("q_setops", (s, dir) => {
       val o = orders(s, dir)
       val highValue = o.filter(col("o_totalprice") > 300000).select(col("o_custkey"))
       val urgent = o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
@@ -271,10 +342,16 @@ object RelationalQueries {
       highValue.intersect(urgent).except(open)
         .union(highValue.limit(0)) // keep plan shape: union is exercised
         .distinct()
-    }),
+    }, _ =>
+      """(SELECT o_custkey FROM orders WHERE o_totalprice > 300000
+        | INTERSECT
+        | SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
+        |EXCEPT
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
+        |ORDER BY o_custkey""".stripMargin),
 
     // ROLLUP grouping sets with grouping() disambiguation.
-    "q_rollup" -> ((s, dir) => {
+    Gate("q_rollup", (s, dir) => {
       orders(s, dir)
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
@@ -286,10 +363,19 @@ object RelationalQueries {
         .select(coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
           coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
           col("n"), col("total"), col("g_status"), col("g_prio"))
-    }),
+    }, _ =>
+      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
+        |  COALESCE(o_orderpriority, '(all)') AS priority,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+        |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
+        |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
+        |FROM orders
+        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+        |ORDER BY g_status, g_prio, status, priority""".stripMargin),
 
     // Full CUBE over two keys (all four grouping combinations).
-    "q_cube" -> ((s, dir) => {
+    Gate("q_cube", (s, dir) => {
       orders(s, dir)
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
@@ -299,10 +385,19 @@ object RelationalQueries {
         .select(coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
           coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
           col("n"), col("total"), col("g_status"), col("g_prio"))
-    }),
+    }, _ =>
+      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
+        |  COALESCE(o_orderpriority, '(all)') AS priority,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+        |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
+        |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
+        |FROM orders
+        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY g_status, g_prio, status, priority""".stripMargin),
 
     // Explicit GROUPING SETS (disjoint key sets, not a rollup prefix).
-    "q_gsets" -> ((s, dir) => {
+    Gate("q_gsets", (s, dir) => {
       val ev = events(s, dir)
       ev.createOrReplaceTempView("ev_gs")
       ev.sparkSession.sql(
@@ -313,12 +408,19 @@ object RelationalQueries {
           |FROM ev_gs
           |GROUP BY GROUPING SETS ((event_type), (user_id % 7), ())
           |ORDER BY etype, ubucket""".stripMargin)
-    }),
+    }, _ =>
+      """SELECT COALESCE(event_type, '(all)') AS etype,
+        |  COALESCE(CAST(user_id % 7 AS BIGINT), -1) AS ubucket,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events
+        |GROUP BY GROUPING SETS ((event_type), (user_id % 7), ())
+        |ORDER BY etype, ubucket""".stripMargin),
 
     // Event-time window aggregation — the batch shape of the streaming
     // `withWatermark + window()` path (identical grouping semantics; in
     // streaming the watermark only bounds state retention).
-    "q_timewin" -> ((s, dir) => {
+    Gate("q_timewin", (s, dir) => {
       events(s, dir)
         .withColumn("t", timestamp_micros(graft.Tables.tsMicros))
         .groupBy(window(col("t"), "1 hour"), col("event_type"))
@@ -330,15 +432,29 @@ object RelationalQueries {
         .select(col("window.start").cast("timestamp_ntz").as("wstart"),
           col("window.end").cast("timestamp_ntz").as("wend"),
           col("event_type"), col("n"), col("total"))
-    }),
+    }, _ =>
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS wstart,
+        |  CAST(date_trunc('hour', ts) + INTERVAL 1 HOUR AS TIMESTAMP) AS wend,
+        |  event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events
+        |GROUP BY 1, 2, 3 ORDER BY wstart, event_type""".stripMargin),
 
     // PIVOT: status × priority matrix via groupBy().pivot().
-    "q_pivot" -> ((s, dir) => pivotWide(s, dir)),
+    Gate("q_pivot", (s, dir) => pivotWide(s, dir), _ =>
+      """SELECT o_orderstatus AS status,
+        |  COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS p1,
+        |  COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS p2,
+        |  COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS p3,
+        |  COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS p4,
+        |  COUNT(*) FILTER (o_orderpriority = '5-LOW') AS p5
+        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin),
 
     // Window-function battery beyond rank: lag/lead with defaults,
     // ntile, cume_dist, and a running sum — one shuffle on the
     // partition key, every function sharing the same window frame.
-    "q_winfuncs" -> ((s, dir) => {
+    Gate("q_winfuncs", (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -354,11 +470,24 @@ object RelationalQueries {
         .select(col("o_custkey"), col("o_orderkey"), col("prev_key"),
           col("next_key"), col("quartile"), col("cume"),
           col("running_cents"))
-    }),
+    }, _ =>
+      """SELECT o_custkey, o_orderkey,
+        |  COALESCE(LAG(o_orderkey) OVER w, -1) AS prev_key,
+        |  COALESCE(LEAD(o_orderkey) OVER w, -1) AS next_key,
+        |  CAST(NTILE(4) OVER w AS INT) AS quartile,
+        |  CUME_DIST() OVER w AS cume,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+        |       OVER (PARTITION BY o_custkey
+        |             ORDER BY o_orderdate, o_orderkey
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |       AS BIGINT) AS running_cents
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // NULL semantics: null-safe equality, NULLIF/COALESCE, and
     // null-aware aggregation (COUNT skips nulls, COUNT(*) does not).
-    "q_nulls" -> ((s, dir) => {
+    Gate("q_nulls", (s, dir) => {
       val withNulls = orders(s, dir).select(col("o_orderkey"),
         col("o_custkey"),
         // keys %7==0 get a null priority; %3==0 a null status
@@ -374,22 +503,48 @@ object RelationalQueries {
           // null (priority and status strings never coincide)
           sum((col("pri") <=> col("st")).cast("long")).as("n_both_null"),
           sum(when(col("st").isNull, 1L).otherwise(0L)).as("n_null_status"))
-    }),
+    }, _ =>
+      """WITH n AS (
+        |  SELECT o_orderkey,
+        |    NULLIF(o_orderpriority, CASE WHEN o_orderkey % 7 = 0
+        |                                 THEN o_orderpriority END) AS pri,
+        |    NULLIF(o_orderstatus, CASE WHEN o_orderkey % 3 = 0
+        |                               THEN o_orderstatus END) AS st
+        |  FROM orders)
+        |SELECT COALESCE(pri, '<none>') AS pri_group,
+        |  COUNT(*) AS n_all,
+        |  COUNT(st) AS n_status,
+        |  CAST(SUM(CASE WHEN pri IS NOT DISTINCT FROM st THEN 1 ELSE 0 END)
+        |       AS BIGINT) AS n_both_null,
+        |  CAST(SUM(CASE WHEN st IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_null_status
+        |FROM n GROUP BY 1 ORDER BY pri_group""".stripMargin),
 
     // UNPIVOT (melt): the wide status × priority matrix back to long
     // form — map-only over the pivoted aggregate (ids stay, value
     // columns explode to (name, value) rows). Shares pivotWide with
     // q_pivot so the two stay exact inverses.
-    "q_unpivot" -> ((s, dir) =>
+    Gate("q_unpivot", (s, dir) =>
       pivotWide(s, dir).unpivot(Array(col("status")),
           Array(col("p1"), col("p2"), col("p3"), col("p4"), col("p5")),
-          "priority", "n")),
+          "priority", "n"), _ =>
+      """WITH m AS (
+        |  SELECT o_orderstatus AS status, o_orderpriority AS pr
+        |  FROM orders)
+        |SELECT s.status, p.priority,
+        |       CAST((SELECT COUNT(*) FROM m
+        |             WHERE m.status = s.status AND m.pr = p.pr) AS BIGINT) AS n
+        |FROM (SELECT DISTINCT status FROM m) s
+        |CROSS JOIN (VALUES ('p1', '1-URGENT'), ('p2', '2-HIGH'),
+        |                   ('p3', '3-MEDIUM'), ('p4', '4-NOT SPECIFIED'),
+        |                   ('p5', '5-LOW')) AS p(priority, pr)
+        |ORDER BY s.status, p.priority""".stripMargin),
 
     // HLL approximate distinct at 5% rsd vs exact (the 100 TB cardinality
     // path): the estimate must land within the documented error envelope,
     // asserted INSIDE the query so the oracle stays exact and
     // engine-independent.
-    "q_approx_nd" -> ((s, dir) => {
+    Gate("q_approx_nd", (s, dir) => {
       lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(approx_count_distinct(col("l_orderkey"), rsd = 0.05).as("approx"),
@@ -398,10 +553,13 @@ object RelationalQueries {
           (abs(col("approx") - col("exact")).cast("double") /
             col("exact").cast("double") <= 0.15).as("within_3rsd"),
           col("exact"))
-    }),
+    }, _ =>
+      """SELECT l_returnflag, TRUE AS within_3rsd,
+        |       COUNT(DISTINCT l_orderkey) AS exact
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // Semi + anti joins (EXISTS / NOT EXISTS).
-    "q_semi_anti" -> ((s, dir) => {
+    Gate("q_semi_anti", (s, dir) => {
       val c = customer(s, dir)
       val bigOrders = orders(s, dir).filter(col("o_totalprice") > 250000)
       val withBig = c.join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
@@ -410,7 +568,14 @@ object RelationalQueries {
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), lit("no_orders").as("cls"))
       withBig.unionByName(withoutAny)
-    }),
+    }, _ =>
+      """SELECT c_custkey, 'has_big' AS cls FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |              WHERE o_custkey = c_custkey AND o_totalprice > 250000)
+        |UNION ALL
+        |SELECT c_custkey, 'no_orders' AS cls FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY cls, c_custkey""".stripMargin),
 
     // Exact distinct + conditional aggregation (pivot-style CASE sums).
     // TWO count-distincts on different keys + conditional sums. Written
@@ -420,7 +585,7 @@ object RelationalQueries {
     // split branch is a plain two-phase hash aggregate over only its own
     // 2-3 columns — at 100 TB the Expand's 3x shuffle dwarfs the cost of
     // two extra column-pruned scans. The joins are 3-row broadcasts.
-    "q_distcase" -> ((s, dir) => {
+    Gate("q_distcase", (s, dir) => {
       val li = lineitem(s, dir)
       val sums = li
         .groupBy(col("l_returnflag"))
@@ -436,256 +601,53 @@ object RelationalQueries {
       sums.join(nOrders, "l_returnflag").join(nPartSupp, "l_returnflag")
         .select(col("l_returnflag"), col("n_orders"), col("n_part_supp"),
           col("qty_f"), col("qty_o"))
-    }),
+    }, _ =>
+      """SELECT l_returnflag,
+        |  COUNT(DISTINCT l_orderkey) AS n_orders,
+        |  COUNT(DISTINCT (l_partkey, l_suppkey)) AS n_part_supp,
+        |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
+        |  CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // HAVING + join-free correlated-style predicate via self-aggregation.
-    "q_having" -> ((s, dir) => {
+    Gate("q_having", (s, dir) => {
       orders(s, dir)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           sum(dec(col("o_totalprice"))).cast("double").as("spend"))
         .filter(col("n_orders") >= 15)
-    }),
+    }, _ =>
+      """SELECT o_custkey, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
+        |FROM orders GROUP BY o_custkey
+        |HAVING COUNT(*) >= 15 ORDER BY o_custkey""".stripMargin),
 
     // Global top-k with deterministic tie-break (ORDER BY + LIMIT).
-    "q_topk" -> ((s, dir) => {
+    Gate("q_topk", (s, dir) => {
       lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").as("price"))
         .orderBy(col("price").desc, col("l_orderkey"), col("l_linenumber"))
         .limit(25)
-    }),
+    }, _ =>
+      """SELECT l_orderkey, l_linenumber,
+        |  l_extendedprice AS price
+        |FROM lineitem
+        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 25""".stripMargin),
 
     // String predicates: LIKE / IN / BETWEEN pushed to the scan.
-    "q_string_pred" -> ((s, dir) => {
+    Gate("q_string_pred", (s, dir) => {
       part(s, dir)
         .filter(col("p_type").like("%AR%") &&
           col("p_brand").isin("Brand#12", "Brand#24", "Brand#10") &&
           col("p_size").between(5, 40))
         .select(col("p_partkey"), col("p_name"), col("p_brand"),
           col("p_type"), col("p_size"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_join_topk" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_star_join" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    // the bucketed gates run the SAME queries over the bucketed layout;
-    // the oracle reads the RAW parquet — each green hash is an
-    // end-to-end proof that the co-bucketed artifact serves the same
-    // rows as a fresh scan (layout ≡ data)
-    "q3_bucketed" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_bucketed" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_bucket_prune" ->
-      """SELECT o_orderkey, o_totalprice, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE o_orderkey IN (1, 7, 33, 250, 999)
-        |GROUP BY o_orderkey, o_totalprice
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_topn_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, rk, prev_price, run_cnt FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    RANK() OVER w AS rk,
-        |    LAG(o_totalprice, 1) OVER w AS prev_price,
-        |    COUNT(*) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_cnt
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey))
-        |WHERE rk <= 3
-        |ORDER BY o_custkey, rk, o_orderkey""".stripMargin,
-    "q_setops" ->
-      """(SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-        | INTERSECT
-        | SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |ORDER BY o_custkey""".stripMargin,
-    "q_rollup" ->
-      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
-        |  COALESCE(o_orderpriority, '(all)') AS priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
-        |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_prio, status, priority""".stripMargin,
-    "q_cube" ->
-      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
-        |  COALESCE(o_orderpriority, '(all)') AS priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
-        |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_prio, status, priority""".stripMargin,
-    "q_gsets" ->
-      """SELECT COALESCE(event_type, '(all)') AS etype,
-        |  COALESCE(CAST(user_id % 7 AS BIGINT), -1) AS ubucket,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY GROUPING SETS ((event_type), (user_id % 7), ())
-        |ORDER BY etype, ubucket""".stripMargin,
-    "q_timewin" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS wstart,
-        |  CAST(date_trunc('hour', ts) + INTERVAL 1 HOUR AS TIMESTAMP) AS wend,
-        |  event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY 1, 2, 3 ORDER BY wstart, event_type""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderstatus AS status,
-        |  COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS p1,
-        |  COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS p2,
-        |  COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS p3,
-        |  COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS p4,
-        |  COUNT(*) FILTER (o_orderpriority = '5-LOW') AS p5
-        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-    "q_winfuncs" ->
-      """SELECT o_custkey, o_orderkey,
-        |  COALESCE(LAG(o_orderkey) OVER w, -1) AS prev_key,
-        |  COALESCE(LEAD(o_orderkey) OVER w, -1) AS next_key,
-        |  CAST(NTILE(4) OVER w AS INT) AS quartile,
-        |  CUME_DIST() OVER w AS cume,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |       OVER (PARTITION BY o_custkey
-        |             ORDER BY o_orderdate, o_orderkey
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |       AS BIGINT) AS running_cents
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_nulls" ->
-      """WITH n AS (
-        |  SELECT o_orderkey,
-        |    NULLIF(o_orderpriority, CASE WHEN o_orderkey % 7 = 0
-        |                                 THEN o_orderpriority END) AS pri,
-        |    NULLIF(o_orderstatus, CASE WHEN o_orderkey % 3 = 0
-        |                               THEN o_orderstatus END) AS st
-        |  FROM orders)
-        |SELECT COALESCE(pri, '<none>') AS pri_group,
-        |  COUNT(*) AS n_all,
-        |  COUNT(st) AS n_status,
-        |  CAST(SUM(CASE WHEN pri IS NOT DISTINCT FROM st THEN 1 ELSE 0 END)
-        |       AS BIGINT) AS n_both_null,
-        |  CAST(SUM(CASE WHEN st IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_null_status
-        |FROM n GROUP BY 1 ORDER BY pri_group""".stripMargin,
-    "q_unpivot" ->
-      """WITH m AS (
-        |  SELECT o_orderstatus AS status, o_orderpriority AS pr
-        |  FROM orders)
-        |SELECT s.status, p.priority,
-        |       CAST((SELECT COUNT(*) FROM m
-        |             WHERE m.status = s.status AND m.pr = p.pr) AS BIGINT) AS n
-        |FROM (SELECT DISTINCT status FROM m) s
-        |CROSS JOIN (VALUES ('p1', '1-URGENT'), ('p2', '2-HIGH'),
-        |                   ('p3', '3-MEDIUM'), ('p4', '4-NOT SPECIFIED'),
-        |                   ('p5', '5-LOW')) AS p(priority, pr)
-        |ORDER BY s.status, p.priority""".stripMargin,
-    "q_approx_nd" ->
-      """SELECT l_returnflag, TRUE AS within_3rsd,
-        |       COUNT(DISTINCT l_orderkey) AS exact
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_semi_anti" ->
-      """SELECT c_custkey, 'has_big' AS cls FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-        |UNION ALL
-        |SELECT c_custkey, 'no_orders' AS cls FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY cls, c_custkey""".stripMargin,
-    "q_distcase" ->
-      """SELECT l_returnflag,
-        |  COUNT(DISTINCT l_orderkey) AS n_orders,
-        |  COUNT(DISTINCT (l_partkey, l_suppkey)) AS n_part_supp,
-        |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
-        |  CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_having" ->
-      """SELECT o_custkey, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        |FROM orders GROUP BY o_custkey
-        |HAVING COUNT(*) >= 15 ORDER BY o_custkey""".stripMargin,
-    "q_topk" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice AS price
-        |FROM lineitem
-        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 25""".stripMargin,
-    "q_string_pred" ->
+    }, _ =>
       """SELECT p_partkey, p_name, p_brand, p_type, p_size FROM part
         |WHERE p_type LIKE '%AR%'
         |  AND p_brand IN ('Brand#12', 'Brand#24', 'Brand#10')
         |  AND p_size BETWEEN 5 AND 40
-        |ORDER BY p_partkey""".stripMargin
+        |ORDER BY p_partkey""".stripMargin)
   )
 }

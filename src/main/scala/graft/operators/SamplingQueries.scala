@@ -22,7 +22,7 @@ import graft.Tables._
   *    mergeable partials) is the production path, and the gate proves
   *    the two agree within tolerance on real data.
   */
-object SamplingQueries {
+object SamplingQueries extends GateFamily {
 
   // Knuth multiplicative hash on doc_id → a stable per-row value both
   // engines compute identically; mod 100 gives a percentile in [0,100).
@@ -34,15 +34,20 @@ object SamplingQueries {
   private val pctHash = "pmod((doc_id % 2147483648) * 2654435761, 4294967296)"
   private val pctExpr = s"$pctHash % 100"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Language rebalancing: downsample the dominant language (en → 10%)
     // and keep 30% of everything else.
-    "q_strat" -> ((s, dir) => {
+    Gate("q_strat", (s, dir) => {
       documents(s, dir)
         .withColumn("pct", expr(pctExpr))
         .filter(col("pct") < when(col("lang") === "en", 10).otherwise(30))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    }),
+    }, _ =>
+      """SELECT doc_id, lang, source, n_chars
+        |FROM documents
+        |WHERE ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 4294967296) % 4294967296) % 100
+        |      < CASE WHEN lang = 'en' THEN 10 ELSE 30 END
+        |ORDER BY doc_id""".stripMargin),
 
     // Reservoir-style k-per-stratum sample, deterministically: rank each
     // document inside its (lang, source) stratum by the same arithmetic
@@ -52,7 +57,7 @@ object SamplingQueries {
     // aggregate, so each stratum shuffles at most k rows per partition —
     // on a 100 TB corpus the shuffle carries ~k·strata·partitions rows,
     // not the corpus.
-    "q_sample_k" -> ((s, dir) => {
+    Gate("q_sample_k", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("lang"), col("source"))
         .orderBy(expr(pctHash), col("doc_id"))
@@ -60,7 +65,15 @@ object SamplingQueries {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 5)
         .select(col("lang"), col("source"), col("doc_id"), col("rn"))
-    }),
+    }, _ =>
+      """SELECT lang, source, doc_id, CAST(rn AS INT) AS rn FROM (
+        |  SELECT lang, source, doc_id,
+        |         ROW_NUMBER() OVER (
+        |           PARTITION BY lang, source
+        |           ORDER BY ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 4294967296) % 4294967296),
+        |                    doc_id) AS rn
+        |  FROM documents)
+        |WHERE rn <= 5 ORDER BY lang, source, rn""".stripMargin),
 
     // Domain mixing under a token budget — the "sampling weights" step
     // of corpus assembly (e.g. upweight curated sources, downweight raw
@@ -71,7 +84,7 @@ object SamplingQueries {
     // engines agree bit-for-bit. 100 TB shape: two scans (token count +
     // filtered aggregate) with one vocabulary-of-sources-sized aggregate
     // broadcast between them — the keep decision itself is map-only.
-    "q_domain_mix" -> ((s, dir) => {
+    Gate("q_domain_mix", (s, dir) => {
       val toks = documents(s, dir)
         .select(col("doc_id"), col("source"),
           graft.functions.TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
@@ -100,73 +113,7 @@ object SamplingQueries {
         .filter(expr(s"$pctHash % 1000000") < col("rate_u"))
         .groupBy(col("source"), col("w"), col("src_tok"), col("rate_u"))
         .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_kept"))
-    }),
-
-    // WEIGHTED priority sampling (§2.64) — the Duffield-Lund-Thorup
-    // (JACM 2007) priority-sample shape: each row draws a deterministic
-    // pseudo-uniform u (the same Knuth hash as q_strat, on o_orderkey)
-    // and gets priority u/w, and the k SMALLEST priorities per stratum
-    // form a sample whose inclusion odds scale with the row's weight —
-    // the "sample heavy rows preferentially, reproducibly" primitive a
-    // curation pipeline uses for weight-aware corpus audits (weight =
-    // order value here; token count or quality score in a document
-    // corpus). The division is INTEGER micro-units (u·10^6 div w, exact
-    // in int64 up to u < 2^32 · w ≥ 1) so ranks are engine-exact, and
-    // the per-stratum top-k runs THROUGH the TopKRewrite bounded heap:
-    // ≤ k rows per stratum per partition reach the shuffle, never the
-    // table — the q_sample_k scale shape with weights.
-    "q_wsample" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val u = "pmod((o_orderkey % 2147483648) * 2654435761, 4294967296)"
-      val o = orders(s, dir)
-        .withColumn("w",
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-        // non-positive weight = excluded from the sample frame, stated
-        // in BOTH engines (Spark div-by-zero NULL vs DuckDB error)
-        .filter(col("w") > 0)
-        .withColumn("prio", expr(s"$u * 1000000 div w"))
-      val win = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("prio"), col("o_orderkey"))
-      o.withColumn("rn", row_number().over(win))
-        .filter(col("rn") <= 8)
-        .select(col("o_orderpriority"), col("rn"), col("o_orderkey"),
-          col("prio"))
-    }),
-
-    // Per-language length distribution: exact quartiles of n_chars
-    // (oracle-checked) + proof the mergeable approx sketch lands within
-    // 5% of exact on the same data.
-    "q_quantiles" -> ((s, dir) => {
-      documents(s, dir)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"),
-          round(expr("percentile(n_chars, 0.25)"), 4).as("q25"),
-          round(expr("percentile(n_chars, 0.5)"), 4).as("q50"),
-          round(expr("percentile(n_chars, 0.75)"), 4).as("q75"),
-          expr("approx_percentile(n_chars, 0.5)").as("approx_q50"))
-        .select(col("lang"), col("n"), col("q25"), col("q50"), col("q75"),
-          (abs(col("approx_q50") - col("q50")) <= col("q50") * 0.05)
-            .as("approx_ok"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_strat" ->
-      """SELECT doc_id, lang, source, n_chars
-        |FROM documents
-        |WHERE ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 4294967296) % 4294967296) % 100
-        |      < CASE WHEN lang = 'en' THEN 10 ELSE 30 END
-        |ORDER BY doc_id""".stripMargin,
-    "q_sample_k" ->
-      """SELECT lang, source, doc_id, CAST(rn AS INT) AS rn FROM (
-        |  SELECT lang, source, doc_id,
-        |         ROW_NUMBER() OVER (
-        |           PARTITION BY lang, source
-        |           ORDER BY ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 4294967296) % 4294967296),
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 5 ORDER BY lang, source, rn""".stripMargin,
-    "q_domain_mix" ->
+    }, _ =>
       """WITH toks AS (
         |  SELECT doc_id, source,
         |         CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'),
@@ -189,8 +136,38 @@ object SamplingQueries {
         |FROM toks t JOIN rates r USING (source)
         |WHERE ((((t.doc_id % 2147483648) * 2654435761) % 4294967296 + 4294967296) % 4294967296) % 1000000
         |      < r.rate_u
-        |GROUP BY 1, 2, 3, 4 ORDER BY 1""".stripMargin,
-    "q_wsample" ->
+        |GROUP BY 1, 2, 3, 4 ORDER BY 1""".stripMargin),
+
+    // WEIGHTED priority sampling (§2.64) — the Duffield-Lund-Thorup
+    // (JACM 2007) priority-sample shape: each row draws a deterministic
+    // pseudo-uniform u (the same Knuth hash as q_strat, on o_orderkey)
+    // and gets priority u/w, and the k SMALLEST priorities per stratum
+    // form a sample whose inclusion odds scale with the row's weight —
+    // the "sample heavy rows preferentially, reproducibly" primitive a
+    // curation pipeline uses for weight-aware corpus audits (weight =
+    // order value here; token count or quality score in a document
+    // corpus). The division is INTEGER micro-units (u·10^6 div w, exact
+    // in int64 up to u < 2^32 · w ≥ 1) so ranks are engine-exact, and
+    // the per-stratum top-k runs THROUGH the TopKRewrite bounded heap:
+    // ≤ k rows per stratum per partition reach the shuffle, never the
+    // table — the q_sample_k scale shape with weights.
+    Gate("q_wsample", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val u = "pmod((o_orderkey % 2147483648) * 2654435761, 4294967296)"
+      val o = orders(s, dir)
+        .withColumn("w",
+          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
+        // non-positive weight = excluded from the sample frame, stated
+        // in BOTH engines (Spark div-by-zero NULL vs DuckDB error)
+        .filter(col("w") > 0)
+        .withColumn("prio", expr(s"$u * 1000000 div w"))
+      val win = Window.partitionBy(col("o_orderpriority"))
+        .orderBy(col("prio"), col("o_orderkey"))
+      o.withColumn("rn", row_number().over(win))
+        .filter(col("rn") <= 8)
+        .select(col("o_orderpriority"), col("rn"), col("o_orderkey"),
+          col("prio"))
+    }, _ =>
       """SELECT o_orderpriority, CAST(rn AS INT) AS rn, o_orderkey, prio
         |FROM (
         |  SELECT o_orderpriority, o_orderkey, prio,
@@ -204,13 +181,28 @@ object SamplingQueries {
         |        AS prio
         |    FROM orders
         |    WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) > 0))
-        |WHERE rn <= 8 ORDER BY o_orderpriority, rn""".stripMargin,
-    "q_quantiles" ->
+        |WHERE rn <= 8 ORDER BY o_orderpriority, rn""".stripMargin),
+
+    // Per-language length distribution: exact quartiles of n_chars
+    // (oracle-checked) + proof the mergeable approx sketch lands within
+    // 5% of exact on the same data.
+    Gate("q_quantiles", (s, dir) => {
+      documents(s, dir)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"),
+          round(expr("percentile(n_chars, 0.25)"), 4).as("q25"),
+          round(expr("percentile(n_chars, 0.5)"), 4).as("q50"),
+          round(expr("percentile(n_chars, 0.75)"), 4).as("q75"),
+          expr("approx_percentile(n_chars, 0.5)").as("approx_q50"))
+        .select(col("lang"), col("n"), col("q25"), col("q50"), col("q75"),
+          (abs(col("approx_q50") - col("q50")) <= col("q50") * 0.05)
+            .as("approx_ok"))
+    }, _ =>
       """SELECT lang, COUNT(*) AS n,
         |  ROUND(quantile_cont(n_chars, 0.25), 4) AS q25,
         |  ROUND(quantile_cont(n_chars, 0.5), 4) AS q50,
         |  ROUND(quantile_cont(n_chars, 0.75), 4) AS q75,
         |  TRUE AS approx_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)
   )
 }

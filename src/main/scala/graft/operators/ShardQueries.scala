@@ -45,7 +45,7 @@ import graft.functions.TextFunctions._
   * shard with rows in permuted order, so a trainer streams each shard
   * sequentially.
   */
-object ShardQueries {
+object ShardQueries extends GateFamily {
 
   /** Shards per epoch. 32 here (= test parallelism); a 100 TB corpus
     * uses O(corpus_tokens / shard_budget) — the rule is unchanged. */
@@ -98,21 +98,17 @@ object ShardQueries {
       .write.partitionBy("shard").mode("overwrite").parquet(out)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Doc-level assignment — the oracle restates the permutation, the
     // window-form prefix and the shard rule; a hash match proves the
     // distributed scan ≡ the single-window semantics end-to-end.
-    "pipe_shard" -> ((s, dir) =>
+    Gate("pipe_shard", (s, dir) =>
       assignShards(s, dir)
-        .select(col("doc_id"), col("n_tok"), col("shard")))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // token split uses the EXPLICIT whitespace class (incl. \v): RE2's
-    // \s omits vertical tab where Java's includes it — the explicit
-    // class makes the oracle exact even on VT-bearing text (the same
-    // divergence text_tok_count documents for its n_piece column)
-    "pipe_shard" ->
+        .select(col("doc_id"), col("n_tok"), col("shard")), _ =>
+      // token split uses the EXPLICIT whitespace class (incl. \v): RE2's
+      // \s omits vertical tab where Java's includes it — the explicit
+      // class makes the oracle exact even on VT-bearing text (the same
+      // divergence text_tok_count documents for its n_piece column)
       s"""WITH toks AS (
          |  SELECT doc_id,
          |         CAST(len(list_filter(
@@ -135,6 +131,6 @@ object ShardQueries {
          |       CAST(LEAST(${ShardCount - 1}, s.cum_before // t.target)
          |            AS BIGINT) AS shard
          |FROM scan s CROSS JOIN tot t
-         |ORDER BY doc_id""".stripMargin
+         |ORDER BY doc_id""".stripMargin)
   )
 }

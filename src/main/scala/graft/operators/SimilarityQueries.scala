@@ -15,7 +15,7 @@ import graft.functions.VectorFunctions._
   *    space is per-bucket, so the shuffle is keyed by bucket and total
   *    cost scales with Σ|bucket|², tunable by plane count.
   */
-object SimilarityQueries {
+object SimilarityQueries extends GateFamily {
 
   /** Nearest-centroid assignment — the shared kernel of `ann_ivf`,
     * `ann_ivf_kmeans` seeding and `dedup_sem`: each source vector
@@ -838,8 +838,8 @@ object SimilarityQueries {
         col("e.id").as("vec_id"), col("e.score").as("cos"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_brute_topk" -> ((s, dir) => {
+  def gates: Seq[Gate] = Seq(
+    Gate("ann_brute_topk", (s, dir) => {
       val e = embeddings(s, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .withColumn("n2", normQ2(col("q")))
@@ -860,7 +860,18 @@ object SimilarityQueries {
         .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("vec_id"), col("e.payload").as("dot"),
           col("e.score").as("cos"))
-    }),
+    }, _ =>
+      (quantCte +
+      """SELECT qid, rn, vec_id, dot, cos FROM (
+        |  SELECT qid, vec_id,
+        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn,
+        |         dot, cos
+        |  FROM (SELECT a.vec_id AS qid, b.vec_id,
+        |               CAST(list_dot_product(a.q, b.q) AS BIGINT) AS dot,
+        |               CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |                 / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
+        |        FROM n a JOIN n b ON a.vec_id % 50 = 0 AND b.vec_id <> a.vec_id))
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // Hard-negative mining (§2.60) — the contrastive-training data op
     // (DPR/ANCE shape): for each query, the top-scoring corpus vectors
@@ -875,7 +886,7 @@ object SimilarityQueries {
     // map-side partials, ≤ (skip+k) heap entries per (partition,
     // query) on the shuffle — with heap size k+1 and the explode
     // dropping rank 1.
-    "emb_hardneg" -> ((s, dir) => {
+    Gate("emb_hardneg", (s, dir) => {
       val e = embeddings(s, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .withColumn("n2", normQ2(col("q")))
@@ -897,7 +908,20 @@ object SimilarityQueries {
         .filter(col("pos") >= 1) // rank 1 = presumed unlabeled positive
         .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("vec_id"), col("e.score").as("cos"))
-    }),
+    }, _ =>
+      // hard negatives: the brute chain with the labeled-positive
+      // exclusion and the semi-hard rank band (2..6 — rank 1 skipped)
+      (quantCte +
+      """SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT qid, vec_id,
+        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn,
+        |         cos
+        |  FROM (SELECT a.vec_id AS qid, b.vec_id,
+        |               CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |                 / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
+        |        FROM n a JOIN n b ON a.vec_id % 50 = 0
+        |          AND b.vec_id NOT IN (a.vec_id, a.vec_id + 1, a.vec_id + 2)))
+        |WHERE rn BETWEEN 2 AND 6 ORDER BY qid, rn""".stripMargin)),
 
     // IVF: coarse-quantizer cells + bounded probing — the other 100 TB
     // ANN shape (cont. §2.60: see [[hardNegIdx]] for the index-served
@@ -911,7 +935,7 @@ object SimilarityQueries {
     // tuned by nprobe and centroid count (a production index raises the
     // fixed k — 4096, 65536 — as the corpus grows; the plan is
     // unchanged). Exactness within probed cells — recall is the knob.
-    "ann_ivf" -> ((s, dir) => {
+    Gate("ann_ivf", (s, dir) => {
       val e = embeddings(s, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .withColumn("n2", normQ2(col("q")))
@@ -938,9 +962,42 @@ object SimilarityQueries {
         .select(col("qid"), posexplode(col("top")).as(Seq("pos", "e")))
         .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("vec_id"), col("e.score").as("cos"))
-    }),
+    }, _ =>
+      (quantCte +
+      """, cents AS (
+        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
+        |  WHERE vec_id % 25 = 0 AND vec_id < 400),
+        |assigned AS (
+        |  SELECT vec_id, cell, q, n2 FROM (
+        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
+        |               c.cid) AS crn
+        |    FROM n CROSS JOIN cents c)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT qid, cell, qq, qn2 FROM (
+        |    SELECT n.vec_id AS qid, c.cid AS cell, n.q AS qq, n.n2 AS qn2,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
+        |               c.cid) AS crn
+        |    FROM n CROSS JOIN cents c
+        |    WHERE n.vec_id % 50 = 0)
+        |  WHERE crn <= 2)
+        |SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT p.qid, a.vec_id,
+        |         CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
+        |           / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE))) AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY p.qid
+        |           ORDER BY CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
+        |             / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE))) DESC,
+        |             a.vec_id) AS rn
+        |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
-    "ann_lsh" -> ((s, dir) => {
+    Gate("ann_lsh", (s, dir) => {
       // top-1 neighbor via the bounded-heap aggregate: the bucket join
       // co-locates each ia's candidates, so the partial aggregate
       // collapses them in place instead of shuffling every pair through
@@ -953,7 +1010,31 @@ object SimilarityQueries {
         .select(col("ia"), col("bucket"),
           col("top").getItem(0).getField("id").as("nn"),
           col("top").getItem(0).getField("score").as("cos"))
-    }),
+    }, _ =>
+      (quantCte +
+      """, dots AS (
+        |  SELECT vec_id, p,
+        |         SUM(x * (((p * 131 + (i - 1) * 7919 + 17) % 1000) - 500)) AS dp
+        |  FROM (SELECT vec_id, UNNEST(q) AS x,
+        |               generate_subscripts(q, 1) AS i FROM v)
+        |  CROSS JOIN (SELECT UNNEST(range(0, 6)) AS p)
+        |  GROUP BY vec_id, p),
+        |buckets AS (
+        |  SELECT n.vec_id, n.q, n.n2,
+        |         (SELECT CAST(SUM(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT)
+        |          FROM dots d WHERE d.vec_id = n.vec_id) AS bucket
+        |  FROM n)
+        |SELECT ia, bucket, nn, cos FROM (
+        |  SELECT a.vec_id AS ia, a.bucket, b.vec_id AS nn,
+        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY a.vec_id
+        |           ORDER BY CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |             / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) DESC,
+        |             b.vec_id) AS rn
+        |  FROM buckets a JOIN buckets b
+        |    ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
+        |WHERE rn = 1 ORDER BY ia""".stripMargin)),
 
     // SEMANTIC dedup, the SemDeDup shape (cluster-then-pairwise): assign
     // every embedding to its nearest centroid (map-only against the
@@ -966,7 +1047,32 @@ object SimilarityQueries {
     // blocking function. At 100 TB: codebook broadcasts, assignment is
     // one map pass, the only shuffle keys on cluster id; a skewed
     // cluster is a centroid-count/skew-salt problem, not a plan change.
-    "dedup_sem" -> ((s, dir) => semanticDedup(s, dir, materialize = true)),
+    Gate("dedup_sem", (s, dir) => semanticDedup(s, dir, materialize = true), _ =>
+      // SemDeDup: the assigned CTE is the ann_ivf assignment restated;
+      // pairwise cosine only within a cluster, keep-lowest-id policy
+      (quantCte +
+      """, cents AS (
+        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
+        |  WHERE vec_id % 25 = 0
+        |    AND vec_id < 25 * LEAST(400,
+        |          CAST(ceil(sqrt(CAST((SELECT COUNT(*) FROM n) AS DOUBLE)))
+        |               AS BIGINT))),
+        |assigned AS (
+        |  SELECT vec_id, cell, q, n2 FROM (
+        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
+        |               c.cid) AS crn
+        |    FROM n CROSS JOIN cents c)
+        |  WHERE crn = 1)
+        |SELECT cell, ia, ib, cos FROM (
+        |  SELECT a.cell, a.vec_id AS ia, b.vec_id AS ib,
+        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
+        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
+        |  FROM assigned a JOIN assigned b
+        |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
+        |WHERE cos >= 0.30 ORDER BY ia, ib""".stripMargin)),
 
     // IVF with a TRAINED coarse quantizer — one Lloyd (k-means)
     // iteration over the deterministic seed centroids before the index
@@ -981,7 +1087,7 @@ object SimilarityQueries {
     // (GROUP BY over members). Refinement tightens cells around the
     // actual data distribution, which is what keeps probe counts low
     // when the corpus is skewed — sampled seeds alone inherit the skew.
-    "ann_ivf_kmeans" -> ((s, dir) => {
+    Gate("ann_ivf_kmeans", (s, dir) => {
       val e = embeddings(s, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .withColumn("n2", normQ2(col("q")))
@@ -1044,11 +1150,152 @@ object SimilarityQueries {
         .select(col("qid"), posexplode(col("top")).as(Seq("pos", "e")))
         .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("vec_id"), col("e.score").as("cos"))
-    }),
+    }, _ =>
+      // IVF + one Lloyd iteration: the same training loop stated via
+      // window functions — seed assignment, integer-mean centroid
+      // recompute (floor(sum/cnt), exact), final assignment, 2-probe
+      // retrieval, exact re-rank
+      (quantCte +
+      """, seeds AS (
+        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
+        |  WHERE vec_id % 25 = 0 AND vec_id < 400),
+        |a0 AS (
+        |  SELECT vec_id, q, cid FROM (
+        |    SELECT n.vec_id, n.q, s.cid,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, s.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(s.cn2 AS DOUBLE)))
+        |               DESC, s.cid) AS rn
+        |    FROM n CROSS JOIN seeds s)
+        |  WHERE rn = 1),
+        |cellsum AS (
+        |  SELECT cid, i, SUM(x) AS sm, COUNT(*) AS cnt
+        |  FROM (SELECT cid, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
+        |        FROM a0)
+        |  GROUP BY cid, i),
+        |cents1 AS (
+        |  SELECT cid,
+        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
+        |              ORDER BY i) AS cq
+        |  FROM cellsum GROUP BY cid),
+        |c1 AS (
+        |  SELECT cid, cq, CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2
+        |  FROM cents1),
+        |assigned AS (
+        |  SELECT vec_id, cell, q, n2 FROM (
+        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE)))
+        |               DESC, c.cid) AS crn
+        |    FROM n CROSS JOIN c1 c)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT qid, cell, qq, qn2 FROM (
+        |    SELECT n.vec_id AS qid, c.cid AS cell, n.q AS qq, n.n2 AS qn2,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
+        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE)))
+        |               DESC, c.cid) AS crn
+        |    FROM n CROSS JOIN c1 c
+        |    WHERE n.vec_id % 50 = 0)
+        |  WHERE crn <= 2)
+        |SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT p.qid, a.vec_id,
+        |         CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
+        |           / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY p.qid
+        |           ORDER BY CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
+        |             / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+        |             DESC, a.vec_id) AS rn
+        |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // PQ-ADC two-stage retrieval — the OTHER faiss serving shape (IVFPQ's
     // code side). See [[pqAdc]] for the plan.
-    "ann_pq_adc" -> ((s, dir) => pqAdc(s, dir, M = 8)),
+    Gate("ann_pq_adc", (s, dir) => pqAdc(s, dir, M = 8), _ =>
+      // PQ-ADC: the same training→encode→LUT→re-rank computation stated
+      // independently — subspace slices, L2 seed assignment + floor-mean
+      // Lloyd step, code assignment, LUT join in place of the broadcast
+      // map, window-function top-k in place of the bounded heap
+      // M = 8 subspaces (r8: raised from 4 — recall@5 0.68 → see
+      // AnnRecallSpec; the ADC scan still does M O(1) lookups)
+      (quantCte +
+      """, subs AS (
+        |  SELECT vec_id, m,
+        |         list_slice(q, m * (len(q) // 8) + 1, (m + 1) * (len(q) // 8)) AS sq
+        |  FROM n CROSS JOIN (SELECT UNNEST(range(0, 8)) AS m)),
+        |sn AS (
+        |  SELECT vec_id, m, sq,
+        |         CAST(list_dot_product(sq, sq) AS BIGINT) AS sn2 FROM subs),
+        |seeds AS (
+        |  SELECT m, vec_id AS cid, sq AS cq, sn2 AS cn2
+        |  FROM sn WHERE vec_id % 25 = 0 AND vec_id < 400),
+        |a0 AS (
+        |  SELECT vec_id, m, sq, cid FROM (
+        |    SELECT s.vec_id, s.m, s.sq, c.cid,
+        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+        |             ORDER BY s.sn2 + c.cn2
+        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM sn s JOIN seeds c ON c.m = s.m)
+        |  WHERE rn = 1),
+        |cellsum AS (
+        |  SELECT m, cid, i, SUM(x) AS sm, COUNT(*) AS cnt
+        |  FROM (SELECT m, cid, UNNEST(sq) AS x,
+        |               generate_subscripts(sq, 1) AS i FROM a0)
+        |  GROUP BY m, cid, i),
+        |cents1 AS (
+        |  SELECT m, cid,
+        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
+        |              ORDER BY i) AS cq
+        |  FROM cellsum GROUP BY m, cid),
+        |c1 AS (
+        |  SELECT m, cid, cq,
+        |         CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2 FROM cents1),
+        |codes AS (
+        |  SELECT vec_id, m, cid, cn2 FROM (
+        |    SELECT s.vec_id, s.m, c.cid, c.cn2,
+        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+        |             ORDER BY s.sn2 + c.cn2
+        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM sn s JOIN c1 c ON c.m = s.m)
+        |  WHERE rn = 1),
+        |recon AS (SELECT vec_id, SUM(cn2) AS rn2 FROM codes GROUP BY vec_id),
+        |luts AS (
+        |  SELECT s.vec_id AS qid, s.m, c.cid,
+        |         CAST(list_dot_product(s.sq, c.cq) AS BIGINT) AS ld
+        |  FROM sn s JOIN c1 c ON c.m = s.m
+        |  WHERE s.vec_id % 50 = 0),
+        |approx AS (
+        |  SELECT l.qid, k.vec_id, SUM(l.ld) AS lutsum
+        |  FROM codes k JOIN luts l ON l.m = k.m AND l.cid = k.cid
+        |  GROUP BY 1, 2),
+        |cand AS (
+        |  SELECT qid, vec_id FROM (
+        |    SELECT a.qid, a.vec_id,
+        |           ROW_NUMBER() OVER (PARTITION BY a.qid
+        |             ORDER BY CAST(a.lutsum AS DOUBLE)
+        |               / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(r.rn2 AS DOUBLE)))
+        |               DESC, a.vec_id) AS rn
+        |    FROM approx a JOIN n qn ON qn.vec_id = a.qid
+        |    JOIN recon r ON r.vec_id = a.vec_id
+        |    WHERE a.vec_id <> a.qid)
+        |  WHERE rn <= 100)
+        |SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT c.qid, c.vec_id,
+        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY c.qid
+        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |             DESC, c.vec_id) AS rn
+        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |  JOIN n qb ON qb.vec_id = c.vec_id)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // SEMANTIC benchmark decontamination — the embedding-space
     // complement of text_decontam (the n-gram rule): eval-set items
@@ -1068,7 +1315,7 @@ object SimilarityQueries {
     // ONE map pass at scan speed, no crossJoin fan, no shuffle (the
     // r8 first cut crossJoined the broadcast inventory and paid a
     // |bench|-fan + aggregate: 3.2 s vs 0.74 s at 10×).
-    "emb_decontam" -> ((s, dir) => {
+    Gate("emb_decontam", (s, dir) => {
       import graft.functions.VectorNative.max_cos_native
       val e = quantized(s, dir)
       val bench: Seq[Seq[Long]] = e.filter(col("vec_id") % 97 === 0)
@@ -1084,16 +1331,227 @@ object SimilarityQueries {
         .select(col("vec_id"),
           max_cos_native(col("q"), bench).as("max_cos"))
         .withColumn("contaminated", col("max_cos") >= 0.35)
-    }),
+    }, _ =>
+      // semantic decontamination: max cosine of each corpus vector
+      // against the broadcastable benchmark inventory
+      // zero-norm pairs state cos = 0 (the kernel's guard restated: the
+      // raw IEEE quotient would be NaN, ranked greatest by SQL MAX but
+      // silently skipped by the kernel's `>` — the CASE keeps both
+      // engines on one definition; real corpora have no zero vectors)
+      (quantCte +
+      """SELECT c.vec_id, MAX(
+        |         CASE WHEN c.n2 = 0 OR b.n2 = 0 THEN 0.0
+        |           ELSE CAST(list_dot_product(c.q, b.q) AS DOUBLE)
+        |             / (sqrt(CAST(c.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
+        |         END)
+        |       AS max_cos,
+        |       MAX(CASE WHEN c.n2 = 0 OR b.n2 = 0 THEN 0.0
+        |           ELSE CAST(list_dot_product(c.q, b.q) AS DOUBLE)
+        |             / (sqrt(CAST(c.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
+        |         END)
+        |         >= 0.35 AS contaminated
+        |FROM n c CROSS JOIN n b
+        |WHERE c.vec_id % 97 <> 0 AND b.vec_id % 97 = 0
+        |GROUP BY c.vec_id
+        |ORDER BY c.vec_id""".stripMargin)),
 
     // IVF-PQ — the composed faiss serving index; see [[ivfPq]].
-    "ann_ivfpq" -> ((s, dir) => ivfPq(s, dir, M = 8, nprobe = 4)),
+    Gate("ann_ivfpq", (s, dir) => ivfPq(s, dir, M = 8, nprobe = 4), _ =>
+      // IVF-PQ: the coarse quantizer stated as full-vector L2 CTEs
+      // (seed assign -> floor-mean Lloyd -> doc cells + 4-probe query
+      // cells), then the ann_pq_adc PQ pipeline with the approx scan
+      // restricted to probed cells — the shared ivfPqOracleCand chain
+      // (also the retr_rrf dense arm), then the exact re-rank
+      (quantCte +
+      ivfPqOracleCand(c => s"$c % 50 = 0", nprobe = 4) +
+      """SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT c.qid, c.vec_id,
+        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY c.qid
+        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |             DESC, c.vec_id) AS rn
+        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |  JOIN n qb ON qb.vec_id = c.vec_id)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // IVF-PQ under the production √N cell rule; see [[ivfPqScaled]].
-    "ann_ivfpq_scaled" -> ((s, dir) => ivfPqScaled(s, dir, M = 8)),
+    Gate("ann_ivfpq_scaled", (s, dir) => ivfPqScaled(s, dir, M = 8), _ =>
+      // the SCALED cell rule restated from COUNT(*): kC = √N clamped by
+      // [16,4096] and the N/64 min-points-per-cell bound, keep = N//kC,
+      // nprobe = √kC — the prm CTE derives all three, the seed predicate
+      // is the double-Knuth mix with the 16-bit downshift, and the
+      // capped seed ladder feeds the SAME shared chain as ann_ivfpq
+      (quantCte +
+      """, prm AS (
+        |  SELECT kc, GREATEST(1, nn // kc) AS keep,
+        |         LEAST(kc, GREATEST(4,
+        |           CAST(ceil(sqrt(CAST(kc AS DOUBLE))) AS BIGINT),
+        |           (2048 * kc + nn - 1) // nn)) AS npr,
+        |         LEAST(nn, 2048) AS rr
+        |  FROM (SELECT nn, GREATEST(16, LEAST(4096,
+        |            CAST(round(sqrt(CAST(nn AS DOUBLE))) AS BIGINT),
+        |            nn // 64)) AS kc
+        |        FROM (SELECT COUNT(*) AS nn FROM n)))
+        |""".stripMargin +
+      ivfPqOracleCandG(c => s"$c % 50 = 0",
+        nprobeSql = "(SELECT npr FROM prm)",
+        // round-1 modulus positivized ((x % m + m) % m) to match
+        // Spark's pmod on negative vec_ids too — plain % follows the
+        // dividend's sign in both engines, and `// 65536` on a
+        // negative value floor-divides where shiftright downshifts
+        coarseSeedPred =
+          "((((((vec_id % 2147483648) * 2654435761) % 4294967296" +
+            " + 4294967296) % 4294967296) // 65536)" +
+            " * 2654435761) % 4294967296 % (SELECT keep FROM prm) = 0",
+        kcSql = "(SELECT kc FROM prm)",
+        rerankSql = "(SELECT rr FROM prm)") +
+      """SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT c.qid, c.vec_id,
+        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY c.qid
+        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |             DESC, c.vec_id) AS rn
+        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |  JOIN n qb ON qb.vec_id = c.vec_id)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // incremental delta-vs-corpus ANN probe; see [[ivfPqIncr]].
-    "ann_incr" -> ((s, dir) => ivfPqIncr(s, dir, M = 8, nprobe = 4)),
+    Gate("ann_incr", (s, dir) => ivfPqIncr(s, dir, M = 8, nprobe = 4), _ =>
+      // incremental ANN probe: the ann_ivfpq chain with the index
+      // population restricted to the corpus (even ids, even-id seeds)
+      // and the query side to the delta batch (odd ids)
+      (quantCte +
+      """, cseeds AS (
+        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2
+        |  FROM n WHERE vec_id % 50 = 0 AND vec_id < 800),
+        |ca0 AS (
+        |  SELECT vec_id, q, cid FROM (
+        |    SELECT n.vec_id, n.q, c.cid,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY n.n2 + c.cn2
+        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM n CROSS JOIN cseeds c
+        |    WHERE n.vec_id % 2 = 0)
+        |  WHERE rn = 1),
+        |ccellsum AS (
+        |  SELECT cid, i, SUM(x) AS sm, COUNT(*) AS cnt
+        |  FROM (SELECT cid, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
+        |        FROM ca0)
+        |  GROUP BY cid, i),
+        |cc1 AS (
+        |  SELECT cid,
+        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
+        |              ORDER BY i) AS cq
+        |  FROM ccellsum GROUP BY cid),
+        |cc AS (
+        |  SELECT cid, cq, CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2
+        |  FROM cc1),
+        |dcell AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT n.vec_id, c.cid AS cell,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY n.n2 + c.cn2
+        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM n CROSS JOIN cc c
+        |    WHERE n.vec_id % 2 = 0)
+        |  WHERE rn = 1),
+        |qcell AS (
+        |  SELECT qid, cell FROM (
+        |    SELECT n.vec_id AS qid, c.cid AS cell,
+        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
+        |             ORDER BY n.n2 + c.cn2
+        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM n CROSS JOIN cc c
+        |    WHERE n.vec_id % 2 = 1)
+        |  WHERE rn <= 4),
+        |subs AS (
+        |  SELECT vec_id, m,
+        |         list_slice(q, m * (len(q) // 8) + 1, (m + 1) * (len(q) // 8)) AS sq
+        |  FROM n CROSS JOIN (SELECT UNNEST(range(0, 8)) AS m)),
+        |sn AS (
+        |  SELECT vec_id, m, sq,
+        |         CAST(list_dot_product(sq, sq) AS BIGINT) AS sn2 FROM subs),
+        |seeds AS (
+        |  SELECT m, vec_id AS cid, sq AS cq, sn2 AS cn2
+        |  FROM sn WHERE vec_id % 50 = 0 AND vec_id < 800),
+        |a0 AS (
+        |  SELECT vec_id, m, sq, cid FROM (
+        |    SELECT s.vec_id, s.m, s.sq, c.cid,
+        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+        |             ORDER BY s.sn2 + c.cn2
+        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM sn s JOIN seeds c ON c.m = s.m
+        |    WHERE s.vec_id % 2 = 0)
+        |  WHERE rn = 1),
+        |cellsum AS (
+        |  SELECT m, cid, i, SUM(x) AS sm, COUNT(*) AS cnt
+        |  FROM (SELECT m, cid, UNNEST(sq) AS x,
+        |               generate_subscripts(sq, 1) AS i FROM a0)
+        |  GROUP BY m, cid, i),
+        |cents1 AS (
+        |  SELECT m, cid,
+        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
+        |              ORDER BY i) AS cq
+        |  FROM cellsum GROUP BY m, cid),
+        |c1 AS (
+        |  SELECT m, cid, cq,
+        |         CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2 FROM cents1),
+        |codes AS (
+        |  SELECT vec_id, m, cid, cn2 FROM (
+        |    SELECT s.vec_id, s.m, c.cid, c.cn2,
+        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+        |             ORDER BY s.sn2 + c.cn2
+        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
+        |               c.cid) AS rn
+        |    FROM sn s JOIN c1 c ON c.m = s.m
+        |    WHERE s.vec_id % 2 = 0)
+        |  WHERE rn = 1),
+        |recon AS (SELECT vec_id, SUM(cn2) AS rn2 FROM codes GROUP BY vec_id),
+        |luts AS (
+        |  SELECT s.vec_id AS qid, s.m, c.cid,
+        |         CAST(list_dot_product(s.sq, c.cq) AS BIGINT) AS ld
+        |  FROM sn s JOIN c1 c ON c.m = s.m
+        |  WHERE s.vec_id % 2 = 1),
+        |approx AS (
+        |  SELECT l.qid, k.vec_id, SUM(l.ld) AS lutsum
+        |  FROM codes k
+        |  JOIN luts l ON l.m = k.m AND l.cid = k.cid
+        |  JOIN dcell d ON d.vec_id = k.vec_id
+        |  JOIN qcell qc ON qc.qid = l.qid AND qc.cell = d.cell
+        |  GROUP BY 1, 2),
+        |cand AS (
+        |  SELECT qid, vec_id FROM (
+        |    SELECT a.qid, a.vec_id,
+        |           ROW_NUMBER() OVER (PARTITION BY a.qid
+        |             ORDER BY CAST(a.lutsum AS DOUBLE)
+        |               / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(r.rn2 AS DOUBLE)))
+        |               DESC, a.vec_id) AS rn
+        |    FROM approx a JOIN n qn ON qn.vec_id = a.qid
+        |    JOIN recon r ON r.vec_id = a.vec_id
+        |    WHERE a.vec_id <> a.qid)
+        |  WHERE rn <= 100)
+        |SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT c.qid, c.vec_id,
+        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY c.qid
+        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |             DESC, c.vec_id) AS rn
+        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |  JOIN n qb ON qb.vec_id = c.vec_id)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)),
 
     // index-served hard-negative refresh — emb_hardneg's production
     // arm ([[hardNegIdx]]): mining from the PERSISTED IVF-PQ artifact,
@@ -1103,7 +1561,32 @@ object SimilarityQueries {
     // the shared ivfPqOracleCand chain plus the exclusion + semi-hard
     // band, so a drift in EITHER the stored artifact or the band logic
     // breaks the hash.
-    "emb_hardneg_idx" -> ((s, dir) => hardNegIdx(s, dir)),
+    Gate("emb_hardneg_idx", (s, dir) => hardNegIdx(s, dir), _ =>
+      // index-served hard negatives: the SAME probed-cell chain as
+      // ann_ivfpq/retr_rrf (train → cells → PQ candidates → exact
+      // re-rank, rerank=100) serving the k+3 = 8 band, then the labeled
+      // exclusion (q+1, q+2 — self never survives the serve) and the
+      // semi-hard re-rank keeping ranks 2..6
+      (quantCte +
+      ivfPqOracleCand(c => s"$c % 50 = 0", nprobe = 4) +
+      """, served AS (
+        |  SELECT qid, vec_id, rn FROM (
+        |    SELECT c.qid, c.vec_id,
+        |           ROW_NUMBER() OVER (PARTITION BY c.qid
+        |             ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |               / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |               DESC, c.vec_id) AS rn
+        |    FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |    JOIN n qb ON qb.vec_id = c.vec_id)
+        |  WHERE rn <= 8),
+        |filt AS (
+        |  SELECT qid, vec_id,
+        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rn) AS rk
+        |  FROM served WHERE vec_id NOT IN (qid + 1, qid + 2))
+        |SELECT qid, CAST(rk AS BIGINT) AS rn, vec_id FROM filt
+        |WHERE rk BETWEEN 2 AND 6 ORDER BY qid, rn""".stripMargin),
+      // the served index is retr_rrf's, trained once at ingest
+      prepare = RetrievalQueries.ensureRrfIndex(_, _)),
 
     // SQ8 two-stage retrieval — the faiss-style serving shape: (1) learn
     // per-dimension scalar-quantizer bounds from the data (one tiny
@@ -1117,7 +1600,7 @@ object SimilarityQueries {
     // against the fact table, never the reverse. The decoded grid values
     // are integers on the fixed-point domain (mn + ((x-mn) DIV s)·s), so
     // the candidate set is engine-exact and any engine restates it.
-    "ann_sq8" -> ((s, dir) => {
+    Gate("ann_sq8", (s, dir) => {
       val e = embeddings(s, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .withColumn("n2", normQ2(col("q")))
@@ -1177,7 +1660,54 @@ object SimilarityQueries {
         .select(col("qid"), posexplode(col("top")).as(Seq("pos", "e")))
         .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("vec_id"), col("e.score").as("cos"))
-    })
+    }, _ =>
+      // SQ8 two-stage: learn per-dim bounds, asymmetric-cosine approximate
+      // top-20 (exact query · decoded 8-bit grid, integer vectors so the
+      // candidate set is engine-exact), exact re-rank to top-5 — the same
+      // statement of the computation as the Spark plan, independently via
+      // window functions
+      (quantCte +
+      """, dims AS (
+        |  SELECT i, MIN(x) AS mn, MAX(x) AS mx
+        |  FROM (SELECT UNNEST(q) AS x, generate_subscripts(q, 1) AS i FROM n)
+        |  GROUP BY i),
+        |bounds AS (
+        |  SELECT list(mn ORDER BY i) AS mns,
+        |         list(GREATEST(1, (mx - mn + 254) // 255) ORDER BY i) AS steps
+        |  FROM dims),
+        |coded AS (
+        |  SELECT vec_id,
+        |         list(mns[i] + ((x - mns[i]) // steps[i]) * steps[i]
+        |              ORDER BY i) AS d
+        |  FROM (SELECT vec_id, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
+        |        FROM n)
+        |  CROSS JOIN bounds GROUP BY vec_id),
+        |cn AS (
+        |  SELECT vec_id, d, CAST(list_dot_product(d, d) AS BIGINT) AS dn2
+        |  FROM coded),
+        |cand AS (
+        |  SELECT qid, vec_id FROM (
+        |    SELECT a.vec_id AS qid, b.vec_id,
+        |           ROW_NUMBER() OVER (PARTITION BY a.vec_id
+        |             ORDER BY CAST(list_dot_product(a.q, cb.d) AS DOUBLE)
+        |               / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(cb.dn2 AS DOUBLE)))
+        |               DESC, b.vec_id) AS rn
+        |    FROM n a JOIN n b ON b.vec_id <> a.vec_id
+        |    JOIN cn cb ON cb.vec_id = b.vec_id
+        |    WHERE a.vec_id % 50 = 0)
+        |  WHERE rn <= 20)
+        |SELECT qid, rn, vec_id, cos FROM (
+        |  SELECT c.qid, c.vec_id,
+        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |           AS cos,
+        |         ROW_NUMBER() OVER (PARTITION BY c.qid
+        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
+        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
+        |             DESC, c.vec_id) AS rn
+        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
+        |  JOIN n qb ON qb.vec_id = c.vec_id)
+        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin))
   )
 
   /** The full IVF-PQ computation as a DuckDB CTE chain — coarse seed
@@ -1382,535 +1912,4 @@ object SimilarityQueries {
       .filter(col("rk") > 1 && col("rk") <= k + 1) // skip presumed positive
       .select(col("qid"), col("rk").cast("long").as("rn"), col("vec_id"))
   }
-
-  def oracleSql: Map[String, String] = Map(
-    // hard negatives: the brute chain with the labeled-positive
-    // exclusion and the semi-hard rank band (2..6 — rank 1 skipped)
-    "emb_hardneg" -> (quantCte +
-      """SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT qid, vec_id,
-        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn,
-        |         cos
-        |  FROM (SELECT a.vec_id AS qid, b.vec_id,
-        |               CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |                 / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-        |        FROM n a JOIN n b ON a.vec_id % 50 = 0
-        |          AND b.vec_id NOT IN (a.vec_id, a.vec_id + 1, a.vec_id + 2)))
-        |WHERE rn BETWEEN 2 AND 6 ORDER BY qid, rn""".stripMargin),
-    // index-served hard negatives: the SAME probed-cell chain as
-    // ann_ivfpq/retr_rrf (train → cells → PQ candidates → exact
-    // re-rank, rerank=100) serving the k+3 = 8 band, then the labeled
-    // exclusion (q+1, q+2 — self never survives the serve) and the
-    // semi-hard re-rank keeping ranks 2..6
-    "emb_hardneg_idx" -> (quantCte +
-      ivfPqOracleCand(c => s"$c % 50 = 0", nprobe = 4) +
-      """, served AS (
-        |  SELECT qid, vec_id, rn FROM (
-        |    SELECT c.qid, c.vec_id,
-        |           ROW_NUMBER() OVER (PARTITION BY c.qid
-        |             ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |               / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |               DESC, c.vec_id) AS rn
-        |    FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |    JOIN n qb ON qb.vec_id = c.vec_id)
-        |  WHERE rn <= 8),
-        |filt AS (
-        |  SELECT qid, vec_id,
-        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rn) AS rk
-        |  FROM served WHERE vec_id NOT IN (qid + 1, qid + 2))
-        |SELECT qid, CAST(rk AS BIGINT) AS rn, vec_id FROM filt
-        |WHERE rk BETWEEN 2 AND 6 ORDER BY qid, rn""".stripMargin),
-    "ann_brute_topk" -> (quantCte +
-      """SELECT qid, rn, vec_id, dot, cos FROM (
-        |  SELECT qid, vec_id,
-        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn,
-        |         dot, cos
-        |  FROM (SELECT a.vec_id AS qid, b.vec_id,
-        |               CAST(list_dot_product(a.q, b.q) AS BIGINT) AS dot,
-        |               CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |                 / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-        |        FROM n a JOIN n b ON a.vec_id % 50 = 0 AND b.vec_id <> a.vec_id))
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // SemDeDup: the assigned CTE is the ann_ivf assignment restated;
-    // pairwise cosine only within a cluster, keep-lowest-id policy
-    "dedup_sem" -> (quantCte +
-      """, cents AS (
-        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
-        |  WHERE vec_id % 25 = 0
-        |    AND vec_id < 25 * LEAST(400,
-        |          CAST(ceil(sqrt(CAST((SELECT COUNT(*) FROM n) AS DOUBLE)))
-        |               AS BIGINT))),
-        |assigned AS (
-        |  SELECT vec_id, cell, q, n2 FROM (
-        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
-        |               c.cid) AS crn
-        |    FROM n CROSS JOIN cents c)
-        |  WHERE crn = 1)
-        |SELECT cell, ia, ib, cos FROM (
-        |  SELECT a.cell, a.vec_id AS ia, b.vec_id AS ib,
-        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
-        |  FROM assigned a JOIN assigned b
-        |    ON a.cell = b.cell AND a.vec_id < b.vec_id)
-        |WHERE cos >= 0.30 ORDER BY ia, ib""".stripMargin),
-    "ann_ivf" -> (quantCte +
-      """, cents AS (
-        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
-        |  WHERE vec_id % 25 = 0 AND vec_id < 400),
-        |assigned AS (
-        |  SELECT vec_id, cell, q, n2 FROM (
-        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
-        |               c.cid) AS crn
-        |    FROM n CROSS JOIN cents c)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT qid, cell, qq, qn2 FROM (
-        |    SELECT n.vec_id AS qid, c.cid AS cell, n.q AS qq, n.n2 AS qn2,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
-        |               c.cid) AS crn
-        |    FROM n CROSS JOIN cents c
-        |    WHERE n.vec_id % 50 = 0)
-        |  WHERE crn <= 2)
-        |SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT p.qid, a.vec_id,
-        |         CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
-        |           / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE))) AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY p.qid
-        |           ORDER BY CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
-        |             / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE))) DESC,
-        |             a.vec_id) AS rn
-        |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    "ann_lsh" -> (quantCte +
-      """, dots AS (
-        |  SELECT vec_id, p,
-        |         SUM(x * (((p * 131 + (i - 1) * 7919 + 17) % 1000) - 500)) AS dp
-        |  FROM (SELECT vec_id, UNNEST(q) AS x,
-        |               generate_subscripts(q, 1) AS i FROM v)
-        |  CROSS JOIN (SELECT UNNEST(range(0, 6)) AS p)
-        |  GROUP BY vec_id, p),
-        |buckets AS (
-        |  SELECT n.vec_id, n.q, n.n2,
-        |         (SELECT CAST(SUM(CASE WHEN dp > 0 THEN 1 << p ELSE 0 END) AS BIGINT)
-        |          FROM dots d WHERE d.vec_id = n.vec_id) AS bucket
-        |  FROM n)
-        |SELECT ia, bucket, nn, cos FROM (
-        |  SELECT a.vec_id AS ia, a.bucket, b.vec_id AS nn,
-        |         CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |           ORDER BY CAST(list_dot_product(a.q, b.q) AS DOUBLE)
-        |             / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) DESC,
-        |             b.vec_id) AS rn
-        |  FROM buckets a JOIN buckets b
-        |    ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
-        |WHERE rn = 1 ORDER BY ia""".stripMargin),
-    // IVF + one Lloyd iteration: the same training loop stated via
-    // window functions — seed assignment, integer-mean centroid
-    // recompute (floor(sum/cnt), exact), final assignment, 2-probe
-    // retrieval, exact re-rank
-    "ann_ivf_kmeans" -> (quantCte +
-      """, seeds AS (
-        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM n
-        |  WHERE vec_id % 25 = 0 AND vec_id < 400),
-        |a0 AS (
-        |  SELECT vec_id, q, cid FROM (
-        |    SELECT n.vec_id, n.q, s.cid,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, s.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(s.cn2 AS DOUBLE)))
-        |               DESC, s.cid) AS rn
-        |    FROM n CROSS JOIN seeds s)
-        |  WHERE rn = 1),
-        |cellsum AS (
-        |  SELECT cid, i, SUM(x) AS sm, COUNT(*) AS cnt
-        |  FROM (SELECT cid, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
-        |        FROM a0)
-        |  GROUP BY cid, i),
-        |cents1 AS (
-        |  SELECT cid,
-        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
-        |              ORDER BY i) AS cq
-        |  FROM cellsum GROUP BY cid),
-        |c1 AS (
-        |  SELECT cid, cq, CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2
-        |  FROM cents1),
-        |assigned AS (
-        |  SELECT vec_id, cell, q, n2 FROM (
-        |    SELECT n.vec_id, c.cid AS cell, n.q, n.n2,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE)))
-        |               DESC, c.cid) AS crn
-        |    FROM n CROSS JOIN c1 c)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT qid, cell, qq, qn2 FROM (
-        |    SELECT n.vec_id AS qid, c.cid AS cell, n.q AS qq, n.n2 AS qn2,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY CAST(list_dot_product(n.q, c.cq) AS DOUBLE)
-        |               / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE)))
-        |               DESC, c.cid) AS crn
-        |    FROM n CROSS JOIN c1 c
-        |    WHERE n.vec_id % 50 = 0)
-        |  WHERE crn <= 2)
-        |SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT p.qid, a.vec_id,
-        |         CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
-        |           / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY p.qid
-        |           ORDER BY CAST(list_dot_product(p.qq, a.q) AS DOUBLE)
-        |             / (sqrt(CAST(p.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
-        |             DESC, a.vec_id) AS rn
-        |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // PQ-ADC: the same training→encode→LUT→re-rank computation stated
-    // independently — subspace slices, L2 seed assignment + floor-mean
-    // Lloyd step, code assignment, LUT join in place of the broadcast
-    // map, window-function top-k in place of the bounded heap
-    // M = 8 subspaces (r8: raised from 4 — recall@5 0.68 → see
-    // AnnRecallSpec; the ADC scan still does M O(1) lookups)
-    "ann_pq_adc" -> (quantCte +
-      """, subs AS (
-        |  SELECT vec_id, m,
-        |         list_slice(q, m * (len(q) // 8) + 1, (m + 1) * (len(q) // 8)) AS sq
-        |  FROM n CROSS JOIN (SELECT UNNEST(range(0, 8)) AS m)),
-        |sn AS (
-        |  SELECT vec_id, m, sq,
-        |         CAST(list_dot_product(sq, sq) AS BIGINT) AS sn2 FROM subs),
-        |seeds AS (
-        |  SELECT m, vec_id AS cid, sq AS cq, sn2 AS cn2
-        |  FROM sn WHERE vec_id % 25 = 0 AND vec_id < 400),
-        |a0 AS (
-        |  SELECT vec_id, m, sq, cid FROM (
-        |    SELECT s.vec_id, s.m, s.sq, c.cid,
-        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-        |             ORDER BY s.sn2 + c.cn2
-        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM sn s JOIN seeds c ON c.m = s.m)
-        |  WHERE rn = 1),
-        |cellsum AS (
-        |  SELECT m, cid, i, SUM(x) AS sm, COUNT(*) AS cnt
-        |  FROM (SELECT m, cid, UNNEST(sq) AS x,
-        |               generate_subscripts(sq, 1) AS i FROM a0)
-        |  GROUP BY m, cid, i),
-        |cents1 AS (
-        |  SELECT m, cid,
-        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
-        |              ORDER BY i) AS cq
-        |  FROM cellsum GROUP BY m, cid),
-        |c1 AS (
-        |  SELECT m, cid, cq,
-        |         CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2 FROM cents1),
-        |codes AS (
-        |  SELECT vec_id, m, cid, cn2 FROM (
-        |    SELECT s.vec_id, s.m, c.cid, c.cn2,
-        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-        |             ORDER BY s.sn2 + c.cn2
-        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM sn s JOIN c1 c ON c.m = s.m)
-        |  WHERE rn = 1),
-        |recon AS (SELECT vec_id, SUM(cn2) AS rn2 FROM codes GROUP BY vec_id),
-        |luts AS (
-        |  SELECT s.vec_id AS qid, s.m, c.cid,
-        |         CAST(list_dot_product(s.sq, c.cq) AS BIGINT) AS ld
-        |  FROM sn s JOIN c1 c ON c.m = s.m
-        |  WHERE s.vec_id % 50 = 0),
-        |approx AS (
-        |  SELECT l.qid, k.vec_id, SUM(l.ld) AS lutsum
-        |  FROM codes k JOIN luts l ON l.m = k.m AND l.cid = k.cid
-        |  GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT qid, vec_id FROM (
-        |    SELECT a.qid, a.vec_id,
-        |           ROW_NUMBER() OVER (PARTITION BY a.qid
-        |             ORDER BY CAST(a.lutsum AS DOUBLE)
-        |               / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(r.rn2 AS DOUBLE)))
-        |               DESC, a.vec_id) AS rn
-        |    FROM approx a JOIN n qn ON qn.vec_id = a.qid
-        |    JOIN recon r ON r.vec_id = a.vec_id
-        |    WHERE a.vec_id <> a.qid)
-        |  WHERE rn <= 100)
-        |SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT c.qid, c.vec_id,
-        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY c.qid
-        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |             DESC, c.vec_id) AS rn
-        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |  JOIN n qb ON qb.vec_id = c.vec_id)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // semantic decontamination: max cosine of each corpus vector
-    // against the broadcastable benchmark inventory
-    // zero-norm pairs state cos = 0 (the kernel's guard restated: the
-    // raw IEEE quotient would be NaN, ranked greatest by SQL MAX but
-    // silently skipped by the kernel's `>` — the CASE keeps both
-    // engines on one definition; real corpora have no zero vectors)
-    "emb_decontam" -> (quantCte +
-      """SELECT c.vec_id, MAX(
-        |         CASE WHEN c.n2 = 0 OR b.n2 = 0 THEN 0.0
-        |           ELSE CAST(list_dot_product(c.q, b.q) AS DOUBLE)
-        |             / (sqrt(CAST(c.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
-        |         END)
-        |       AS max_cos,
-        |       MAX(CASE WHEN c.n2 = 0 OR b.n2 = 0 THEN 0.0
-        |           ELSE CAST(list_dot_product(c.q, b.q) AS DOUBLE)
-        |             / (sqrt(CAST(c.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
-        |         END)
-        |         >= 0.35 AS contaminated
-        |FROM n c CROSS JOIN n b
-        |WHERE c.vec_id % 97 <> 0 AND b.vec_id % 97 = 0
-        |GROUP BY c.vec_id
-        |ORDER BY c.vec_id""".stripMargin),
-    // incremental ANN probe: the ann_ivfpq chain with the index
-    // population restricted to the corpus (even ids, even-id seeds)
-    // and the query side to the delta batch (odd ids)
-    "ann_incr" -> (quantCte +
-      """, cseeds AS (
-        |  SELECT vec_id AS cid, q AS cq, n2 AS cn2
-        |  FROM n WHERE vec_id % 50 = 0 AND vec_id < 800),
-        |ca0 AS (
-        |  SELECT vec_id, q, cid FROM (
-        |    SELECT n.vec_id, n.q, c.cid,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY n.n2 + c.cn2
-        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM n CROSS JOIN cseeds c
-        |    WHERE n.vec_id % 2 = 0)
-        |  WHERE rn = 1),
-        |ccellsum AS (
-        |  SELECT cid, i, SUM(x) AS sm, COUNT(*) AS cnt
-        |  FROM (SELECT cid, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
-        |        FROM ca0)
-        |  GROUP BY cid, i),
-        |cc1 AS (
-        |  SELECT cid,
-        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
-        |              ORDER BY i) AS cq
-        |  FROM ccellsum GROUP BY cid),
-        |cc AS (
-        |  SELECT cid, cq, CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2
-        |  FROM cc1),
-        |dcell AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT n.vec_id, c.cid AS cell,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY n.n2 + c.cn2
-        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM n CROSS JOIN cc c
-        |    WHERE n.vec_id % 2 = 0)
-        |  WHERE rn = 1),
-        |qcell AS (
-        |  SELECT qid, cell FROM (
-        |    SELECT n.vec_id AS qid, c.cid AS cell,
-        |           ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |             ORDER BY n.n2 + c.cn2
-        |               - 2 * CAST(list_dot_product(n.q, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM n CROSS JOIN cc c
-        |    WHERE n.vec_id % 2 = 1)
-        |  WHERE rn <= 4),
-        |subs AS (
-        |  SELECT vec_id, m,
-        |         list_slice(q, m * (len(q) // 8) + 1, (m + 1) * (len(q) // 8)) AS sq
-        |  FROM n CROSS JOIN (SELECT UNNEST(range(0, 8)) AS m)),
-        |sn AS (
-        |  SELECT vec_id, m, sq,
-        |         CAST(list_dot_product(sq, sq) AS BIGINT) AS sn2 FROM subs),
-        |seeds AS (
-        |  SELECT m, vec_id AS cid, sq AS cq, sn2 AS cn2
-        |  FROM sn WHERE vec_id % 50 = 0 AND vec_id < 800),
-        |a0 AS (
-        |  SELECT vec_id, m, sq, cid FROM (
-        |    SELECT s.vec_id, s.m, s.sq, c.cid,
-        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-        |             ORDER BY s.sn2 + c.cn2
-        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM sn s JOIN seeds c ON c.m = s.m
-        |    WHERE s.vec_id % 2 = 0)
-        |  WHERE rn = 1),
-        |cellsum AS (
-        |  SELECT m, cid, i, SUM(x) AS sm, COUNT(*) AS cnt
-        |  FROM (SELECT m, cid, UNNEST(sq) AS x,
-        |               generate_subscripts(sq, 1) AS i FROM a0)
-        |  GROUP BY m, cid, i),
-        |cents1 AS (
-        |  SELECT m, cid,
-        |         list(CAST(floor(CAST(sm AS DOUBLE) / cnt) AS BIGINT)
-        |              ORDER BY i) AS cq
-        |  FROM cellsum GROUP BY m, cid),
-        |c1 AS (
-        |  SELECT m, cid, cq,
-        |         CAST(list_dot_product(cq, cq) AS BIGINT) AS cn2 FROM cents1),
-        |codes AS (
-        |  SELECT vec_id, m, cid, cn2 FROM (
-        |    SELECT s.vec_id, s.m, c.cid, c.cn2,
-        |           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-        |             ORDER BY s.sn2 + c.cn2
-        |               - 2 * CAST(list_dot_product(s.sq, c.cq) AS BIGINT),
-        |               c.cid) AS rn
-        |    FROM sn s JOIN c1 c ON c.m = s.m
-        |    WHERE s.vec_id % 2 = 0)
-        |  WHERE rn = 1),
-        |recon AS (SELECT vec_id, SUM(cn2) AS rn2 FROM codes GROUP BY vec_id),
-        |luts AS (
-        |  SELECT s.vec_id AS qid, s.m, c.cid,
-        |         CAST(list_dot_product(s.sq, c.cq) AS BIGINT) AS ld
-        |  FROM sn s JOIN c1 c ON c.m = s.m
-        |  WHERE s.vec_id % 2 = 1),
-        |approx AS (
-        |  SELECT l.qid, k.vec_id, SUM(l.ld) AS lutsum
-        |  FROM codes k
-        |  JOIN luts l ON l.m = k.m AND l.cid = k.cid
-        |  JOIN dcell d ON d.vec_id = k.vec_id
-        |  JOIN qcell qc ON qc.qid = l.qid AND qc.cell = d.cell
-        |  GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT qid, vec_id FROM (
-        |    SELECT a.qid, a.vec_id,
-        |           ROW_NUMBER() OVER (PARTITION BY a.qid
-        |             ORDER BY CAST(a.lutsum AS DOUBLE)
-        |               / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(r.rn2 AS DOUBLE)))
-        |               DESC, a.vec_id) AS rn
-        |    FROM approx a JOIN n qn ON qn.vec_id = a.qid
-        |    JOIN recon r ON r.vec_id = a.vec_id
-        |    WHERE a.vec_id <> a.qid)
-        |  WHERE rn <= 100)
-        |SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT c.qid, c.vec_id,
-        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY c.qid
-        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |             DESC, c.vec_id) AS rn
-        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |  JOIN n qb ON qb.vec_id = c.vec_id)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // IVF-PQ: the coarse quantizer stated as full-vector L2 CTEs
-    // (seed assign -> floor-mean Lloyd -> doc cells + 4-probe query
-    // cells), then the ann_pq_adc PQ pipeline with the approx scan
-    // restricted to probed cells — the shared ivfPqOracleCand chain
-    // (also the retr_rrf dense arm), then the exact re-rank
-    "ann_ivfpq" -> (quantCte +
-      ivfPqOracleCand(c => s"$c % 50 = 0", nprobe = 4) +
-      """SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT c.qid, c.vec_id,
-        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY c.qid
-        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |             DESC, c.vec_id) AS rn
-        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |  JOIN n qb ON qb.vec_id = c.vec_id)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // the SCALED cell rule restated from COUNT(*): kC = √N clamped by
-    // [16,4096] and the N/64 min-points-per-cell bound, keep = N//kC,
-    // nprobe = √kC — the prm CTE derives all three, the seed predicate
-    // is the double-Knuth mix with the 16-bit downshift, and the
-    // capped seed ladder feeds the SAME shared chain as ann_ivfpq
-    "ann_ivfpq_scaled" -> (quantCte +
-      """, prm AS (
-        |  SELECT kc, GREATEST(1, nn // kc) AS keep,
-        |         LEAST(kc, GREATEST(4,
-        |           CAST(ceil(sqrt(CAST(kc AS DOUBLE))) AS BIGINT),
-        |           (2048 * kc + nn - 1) // nn)) AS npr,
-        |         LEAST(nn, 2048) AS rr
-        |  FROM (SELECT nn, GREATEST(16, LEAST(4096,
-        |            CAST(round(sqrt(CAST(nn AS DOUBLE))) AS BIGINT),
-        |            nn // 64)) AS kc
-        |        FROM (SELECT COUNT(*) AS nn FROM n)))
-        |""".stripMargin +
-      ivfPqOracleCandG(c => s"$c % 50 = 0",
-        nprobeSql = "(SELECT npr FROM prm)",
-        // round-1 modulus positivized ((x % m + m) % m) to match
-        // Spark's pmod on negative vec_ids too — plain % follows the
-        // dividend's sign in both engines, and `// 65536` on a
-        // negative value floor-divides where shiftright downshifts
-        coarseSeedPred =
-          "((((((vec_id % 2147483648) * 2654435761) % 4294967296" +
-            " + 4294967296) % 4294967296) // 65536)" +
-            " * 2654435761) % 4294967296 % (SELECT keep FROM prm) = 0",
-        kcSql = "(SELECT kc FROM prm)",
-        rerankSql = "(SELECT rr FROM prm)") +
-      """SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT c.qid, c.vec_id,
-        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY c.qid
-        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |             DESC, c.vec_id) AS rn
-        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |  JOIN n qb ON qb.vec_id = c.vec_id)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin),
-    // SQ8 two-stage: learn per-dim bounds, asymmetric-cosine approximate
-    // top-20 (exact query · decoded 8-bit grid, integer vectors so the
-    // candidate set is engine-exact), exact re-rank to top-5 — the same
-    // statement of the computation as the Spark plan, independently via
-    // window functions
-    "ann_sq8" -> (quantCte +
-      """, dims AS (
-        |  SELECT i, MIN(x) AS mn, MAX(x) AS mx
-        |  FROM (SELECT UNNEST(q) AS x, generate_subscripts(q, 1) AS i FROM n)
-        |  GROUP BY i),
-        |bounds AS (
-        |  SELECT list(mn ORDER BY i) AS mns,
-        |         list(GREATEST(1, (mx - mn + 254) // 255) ORDER BY i) AS steps
-        |  FROM dims),
-        |coded AS (
-        |  SELECT vec_id,
-        |         list(mns[i] + ((x - mns[i]) // steps[i]) * steps[i]
-        |              ORDER BY i) AS d
-        |  FROM (SELECT vec_id, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
-        |        FROM n)
-        |  CROSS JOIN bounds GROUP BY vec_id),
-        |cn AS (
-        |  SELECT vec_id, d, CAST(list_dot_product(d, d) AS BIGINT) AS dn2
-        |  FROM coded),
-        |cand AS (
-        |  SELECT qid, vec_id FROM (
-        |    SELECT a.vec_id AS qid, b.vec_id,
-        |           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |             ORDER BY CAST(list_dot_product(a.q, cb.d) AS DOUBLE)
-        |               / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(cb.dn2 AS DOUBLE)))
-        |               DESC, b.vec_id) AS rn
-        |    FROM n a JOIN n b ON b.vec_id <> a.vec_id
-        |    JOIN cn cb ON cb.vec_id = b.vec_id
-        |    WHERE a.vec_id % 50 = 0)
-        |  WHERE rn <= 20)
-        |SELECT qid, rn, vec_id, cos FROM (
-        |  SELECT c.qid, c.vec_id,
-        |         CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |           / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |           AS cos,
-        |         ROW_NUMBER() OVER (PARTITION BY c.qid
-        |           ORDER BY CAST(list_dot_product(qa.q, qb.q) AS DOUBLE)
-        |             / (sqrt(CAST(qa.n2 AS DOUBLE)) * sqrt(CAST(qb.n2 AS DOUBLE)))
-        |             DESC, c.vec_id) AS rn
-        |  FROM cand c JOIN n qa ON qa.vec_id = c.qid
-        |  JOIN n qb ON qb.vec_id = c.vec_id)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin)
-  )
 }

@@ -19,7 +19,7 @@ import graft.Tables._
   * results are IDENTICAL to the unsalted join; only the partitioning
   * changes.
   */
-object SkewJoin {
+object SkewJoin extends GateFamily {
 
   def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salts: Int,
       factSalt: Column): DataFrame = {
@@ -36,12 +36,12 @@ object SkewJoin {
     f.join(d.hint("merge"), Seq(key, "__salt")).drop("__salt")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Fact (events) joined to a per-event_type aggregate back onto
     // itself — event_type has ~5 distinct values, the canonical hot-key
     // shape. The above-average test is integral (value·n > sum in
     // cents) so both engines decide it exactly.
-    "q_skew_join" -> ((s, dir) => {
+    Gate("q_skew_join", (s, dir) => {
       val D = org.apache.spark.sql.types.DataTypes.createDecimalType(18, 2)
       val ev = events(s, dir).select(col("event_id"), col("event_type"),
         (col("value").cast(D) * 100).cast("long").as("cents"))
@@ -53,11 +53,7 @@ object SkewJoin {
         .agg(count(lit(1)).as("n_events"),
           sum(when(col("cents") * col("n") > col("sum_cents"), 1L)
             .otherwise(0L)).as("n_above_avg"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_skew_join" ->
+    }, _ =>
       """WITH ev AS (SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |  FROM events),
@@ -67,6 +63,6 @@ object SkewJoin {
         |  CAST(SUM(CASE WHEN ev.cents * d.n > d.sum_cents THEN 1 ELSE 0 END)
         |       AS BIGINT) AS n_above_avg
         |FROM ev JOIN d ON ev.event_type = d.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

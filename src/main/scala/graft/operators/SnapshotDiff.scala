@@ -19,7 +19,7 @@ import graft.Tables._
   * Op codes follow the reference's mview DMLTYPE mapping
   * (`KafkaSnapshotLogTable.java`: I→'c', U→'u', D→'d').
   */
-object SnapshotDiff {
+object SnapshotDiff extends GateFamily {
 
   /** Diff `newDf` against `oldDf` on `key`; both sides must carry the
     * same `compareCols`. Emits key, op ('c'/'u'/'d'), and before/after
@@ -61,12 +61,12 @@ object SnapshotDiff {
           col(s"__o_$c").as(s"before_$c"), col(s"__n_$c").as(s"after_$c"))): _*)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Old snapshot = orders as stored. New snapshot synthesized from the
     // same table with deterministic integer edits so both engines state
     // it exactly: keys %11==0 vanish (deletes), keys %7==0 gain 500
     // cents (updates), and negated keys %13==0 appear (inserts).
-    "q_snap_diff" -> ((s, dir) => {
+    Gate("q_snap_diff", (s, dir) => {
       // persisted: three branches read the scan+cast frame (the old
       // side plus both newSnap arms) — without the persist each gate
       // run scans orders and recomputes the decimal cast three times
@@ -84,11 +84,7 @@ object SnapshotDiff {
         .localCheckpoint(true)
       base.unpersist(blocking = false)
       out
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_snap_diff" ->
+    }, _ =>
       """WITH base AS (
         |  SELECT o_orderkey AS k,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -105,6 +101,6 @@ object SnapshotDiff {
         |       o.cents AS before_cents, n.cents AS after_cents
         |FROM base o FULL OUTER JOIN news n ON o.k = n.k
         |WHERE o.k IS NULL OR n.k IS NULL OR o.cents IS DISTINCT FROM n.cents
-        |ORDER BY k""".stripMargin
+        |ORDER BY k""".stripMargin)
   )
 }

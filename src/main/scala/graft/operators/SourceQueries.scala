@@ -23,7 +23,7 @@ import graft.streaming.ChangeStreams
   * (encode → block write → scan → parse → txn assembly) is verified, not
   * just the assembler.
   */
-object SourceQueries {
+object SourceQueries extends GateFamily {
 
   // per-JVM fixture memo: gate inputs are deterministic functions of
   // the sf dir, so repeated invocations (bench warmup + measured runs)
@@ -67,8 +67,21 @@ object SourceQueries {
     path
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_redo" -> ((s, dir) => {
+  /** s4_parse and s4_csf: the typed orders rows the redo SQL was synthesized from. */
+  private def s4Oracle: String =
+    """SELECT CASE WHEN o_orderkey % 3 = 0 THEN 1
+      |            WHEN o_orderkey % 3 = 1 THEN 3 ELSE 2 END AS op,
+      |       o_orderkey AS okey, o_custkey AS custkey,
+      |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
+      |            ELSE CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) END AS price,
+      |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
+      |            ELSE o_orderdate END AS odate,
+      |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
+      |            ELSE o_orderpriority END AS prio
+      |FROM orders ORDER BY okey""".stripMargin
+
+  def gates: Seq[Gate] = Seq(
+    Gate("s1_redo", (s, dir) => {
       import s.implicits._
       val logDir = writeRedoLogs(CdcQueries.redoRecords(s, dir), nThreads = 8,
         cacheKey = s"s1:$dir")
@@ -77,14 +90,17 @@ object SourceQueries {
         .select(col("xid"), col("commitScn").as("commit_scn"), col("scn"),
           col("op"), col("rowId").as("row_id"),
           element_at(col("after"), "value").cast("double").as("val"))
-    }),
+    }, _ =>
+      // identical expected emission to t1_txn_asm — by construction the
+      // redo encode/scan round-trip must be invisible to the result
+      CdcQueries.txnAsmOracle),
 
     // P1+P2: include/exclude wildcards + operation filter applied AT THE
     // SCAN (the DSv2 reader prunes before rows reach Spark). Events are
     // spread over three tables G.T0/1/2 with a mixed op profile; the
     // scan keeps tables G.T0 + %T2 and ops INSERT/UPDATE only. Control
     // records (COMMIT) must always pass so transactions still terminate.
-    "p1_p2_filters" -> ((s, dir) => {
+    Gate("p1_p2_filters", (s, dir) => {
       import s.implicits._
       val emptyMap = map().cast("map<string,string>")
       val noMulti = array().cast("array<map<string,string>>")
@@ -119,7 +135,25 @@ object SourceQueries {
         .option("ops", s"${graft.cdc.Ops.Insert},${graft.cdc.Ops.Update}")
         .load(logDir)
         .select(col("scn"), col("xid"), col("op"), col("table").as("tab"))
-    }),
+    }, _ =>
+      """WITH ch AS (
+        |  SELECT event_id AS scn, CAST(user_id AS VARCHAR) AS xid,
+        |         CASE WHEN event_type = 'signup' THEN 1
+        |              WHEN event_type = 'view' THEN 2
+        |              ELSE 3 END AS op,
+        |         'G.T' || CAST(user_id % 3 AS VARCHAR) AS tab,
+        |         user_id
+        |  FROM events),
+        |ctl AS (
+        |  SELECT MAX(event_id) + 1 AS scn, CAST(user_id AS VARCHAR) AS xid,
+        |         7 AS op, '' AS tab
+        |  FROM events GROUP BY user_id)
+        |SELECT scn, xid, op, tab FROM (
+        |  SELECT scn, xid, op, tab FROM ch
+        |  WHERE user_id % 3 <> 1 AND op IN (1, 3)
+        |  UNION ALL
+        |  SELECT scn, xid, op, tab FROM ctl)
+        |ORDER BY scn, xid""".stripMargin),
 
     // T7: direct-load 19.1 — orders rows arrive as whole direct-loaded
     // blocks (8 rows per block, one COLB-analogue vector each, no undo),
@@ -127,7 +161,7 @@ object SourceQueries {
     // per-row INSERTs with rowIds synthesized from (block address, row
     // ordinal) — the reference's RowId(obj, dba, row) — and stamp the
     // block transaction's commit SCN.
-    "t7_direct" -> ((s, dir) => {
+    Gate("t7_direct", (s, dir) => {
       import s.implicits._
       val records = orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey")).as[(Long, Long)]
@@ -153,14 +187,24 @@ object SourceQueries {
           element_at(col("after"), "o_custkey").cast("long").as("custkey"),
           col("op"), col("rowId").as("row_id"),
           col("commitScn").as("commit_scn"), col("ssn"))
-    }),
+    }, _ =>
+      """SELECT o_orderkey,
+        |       o_custkey AS custkey,
+        |       1 AS op,
+        |       CAST(o_orderkey // 8 AS VARCHAR) || '.' ||
+        |         CAST(ROW_NUMBER() OVER (PARTITION BY o_orderkey // 8
+        |                                 ORDER BY o_orderkey) - 1 AS VARCHAR) AS row_id,
+        |       (o_orderkey // 8) * 2 + 2 AS commit_scn,
+        |       CAST(ROW_NUMBER() OVER (PARTITION BY o_orderkey // 8
+        |                               ORDER BY o_orderkey) - 1 AS INT) AS ssn
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // T8: out-of-row LOB chunk assembly through the full binary path —
     // every document body is split into ~3 LOB chunk records plus an
     // INSERT whose column holds only the locator marker; after GRL
     // write → source scan → assembly, the reconstructed body must equal
     // the original text.
-    "t8_lob" -> ((s, dir) => {
+    Gate("t8_lob", (s, dir) => {
       import s.implicits._
       val records = documents(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -186,15 +230,16 @@ object SourceQueries {
       ChangeStreams.assembleBatch(back)
         .select(element_at(col("after"), "doc_id").cast("long").as("doc_id"),
           element_at(col("after"), "body").as("body"))
-    }),
+    }, _ =>
+      "SELECT doc_id, text AS body FROM documents ORDER BY doc_id"),
 
     // S4: LogMiner SQL_REDO text parse — redo SQL is SYNTHESIZED from
     // orders rows (distributed, with '' escaping and TO_TIMESTAMP
     // wrappers), parsed back by SqlRedoParser, and the reconstructed
     // typed columns must equal the source rows. op mix by o_orderkey%3:
     // 0→INSERT(values list) 1→UPDATE(set+where) 2→DELETE(where only).
-    "s4_parse" -> ((s, dir) =>
-      parseRedoTyped(s, synthesizedRedoSql(s, dir).select(col("sql_redo")))),
+    Gate("s4_parse", (s, dir) =>
+      parseRedoTyped(s, synthesizedRedoSql(s, dir).select(col("sql_redo"))), _ => s4Oracle),
 
     // S4 CSF parity: every synthesized statement is CHUNKED into
     // 40-char continuation rows (LogMiner's CSF encoding), shuffled,
@@ -204,7 +249,7 @@ object SourceQueries {
     // chunk breaks the parse or the hash. Statement ids deliberately
     // SHARE SCNs pairwise (scn = okey/2, ssn = okey%2) to prove
     // same-SCN statements never interleave.
-    "s4_csf" -> ((s, dir) => {
+    Gate("s4_csf", (s, dir) => {
       import s.implicits._
       val stmts = synthesizedRedoSql(s, dir)
         .withColumn("xid", concat(lit("tx"), col("okey") % 97))
@@ -250,7 +295,9 @@ object SourceQueries {
       }.toDF("xid", "scn", "ssn", "seq", "part")
       parseRedoTyped(s, CsfReassembly.reassemble(parts)
         .select(col("sql").as("sql_redo")))
-    }),
+    }, _ =>
+      // chunk → reassemble → parse must land on the identical typed table
+      s4Oracle),
 
     // S5 distributed topology gap audit: (thread, seq) segment
     // coordinates derived from orderkeys, with segments lost
@@ -260,13 +307,25 @@ object SourceQueries {
     // [gap_start, gap_end]. The driver-side listing
     // (RedoLogReader.listLogs) throws on the FIRST gap; this is the
     // audit-the-whole-catalog variant (see RedoTopology scaladoc).
-    "s5_gaps" -> ((s, dir) => {
+    Gate("s5_gaps", (s, dir) => {
       val topo = orders(s, dir)
         .filter(col("o_custkey") % 10 =!= 3)
         .select(((col("o_orderkey") % 4) + 1).cast("int").as("thread"),
           expr("o_orderkey DIV 4").as("seq"))
       graft.redo.RedoTopology.gapReport(topo, "thread", "seq")
-    })
+    }, _ =>
+      """WITH topo AS (
+        |  SELECT DISTINCT CAST(o_orderkey % 4 + 1 AS INTEGER) AS thread,
+        |         o_orderkey // 4 AS seq FROM orders
+        |  WHERE o_custkey % 10 <> 3),
+        |g AS (
+        |  SELECT thread, seq,
+        |         LAG(seq) OVER (PARTITION BY thread ORDER BY seq) AS prev
+        |  FROM topo)
+        |SELECT thread, prev + 1 AS gap_start, seq - 1 AS gap_end,
+        |       seq - prev - 1 AS missing
+        |FROM g WHERE prev IS NOT NULL AND seq > prev + 1
+        |ORDER BY thread, gap_start""".stripMargin)
   )
 
   /** The s4 statement corpus: redo SQL SYNTHESIZED from orders rows
@@ -322,78 +381,4 @@ object SourceQueries {
         col("price_s").cast("decimal(12,2)").cast("double").as("price"),
         col("odate_s").cast("timestamp_ntz").as("odate"), col("prio"))
   }
-
-  /** Identical expected emission to t1_txn_asm — by construction the
-    * redo encode/scan round-trip must be invisible to the result.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "s1_redo" -> CdcQueries.oracleSql("t1_txn_asm"),
-    "p1_p2_filters" ->
-      """WITH ch AS (
-        |  SELECT event_id AS scn, CAST(user_id AS VARCHAR) AS xid,
-        |         CASE WHEN event_type = 'signup' THEN 1
-        |              WHEN event_type = 'view' THEN 2
-        |              ELSE 3 END AS op,
-        |         'G.T' || CAST(user_id % 3 AS VARCHAR) AS tab,
-        |         user_id
-        |  FROM events),
-        |ctl AS (
-        |  SELECT MAX(event_id) + 1 AS scn, CAST(user_id AS VARCHAR) AS xid,
-        |         7 AS op, '' AS tab
-        |  FROM events GROUP BY user_id)
-        |SELECT scn, xid, op, tab FROM (
-        |  SELECT scn, xid, op, tab FROM ch
-        |  WHERE user_id % 3 <> 1 AND op IN (1, 3)
-        |  UNION ALL
-        |  SELECT scn, xid, op, tab FROM ctl)
-        |ORDER BY scn, xid""".stripMargin,
-    "t7_direct" ->
-      """SELECT o_orderkey,
-        |       o_custkey AS custkey,
-        |       1 AS op,
-        |       CAST(o_orderkey // 8 AS VARCHAR) || '.' ||
-        |         CAST(ROW_NUMBER() OVER (PARTITION BY o_orderkey // 8
-        |                                 ORDER BY o_orderkey) - 1 AS VARCHAR) AS row_id,
-        |       (o_orderkey // 8) * 2 + 2 AS commit_scn,
-        |       CAST(ROW_NUMBER() OVER (PARTITION BY o_orderkey // 8
-        |                               ORDER BY o_orderkey) - 1 AS INT) AS ssn
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "t8_lob" ->
-      "SELECT doc_id, text AS body FROM documents ORDER BY doc_id",
-    "s4_parse" ->
-      """SELECT CASE WHEN o_orderkey % 3 = 0 THEN 1
-        |            WHEN o_orderkey % 3 = 1 THEN 3 ELSE 2 END AS op,
-        |       o_orderkey AS okey, o_custkey AS custkey,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) END AS price,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE o_orderdate END AS odate,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE o_orderpriority END AS prio
-        |FROM orders ORDER BY okey""".stripMargin,
-    // chunk → reassemble → parse must land on the identical typed table
-    "s4_csf" ->
-      """SELECT CASE WHEN o_orderkey % 3 = 0 THEN 1
-        |            WHEN o_orderkey % 3 = 1 THEN 3 ELSE 2 END AS op,
-        |       o_orderkey AS okey, o_custkey AS custkey,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) END AS price,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE o_orderdate END AS odate,
-        |       CASE WHEN o_orderkey % 3 = 2 THEN NULL
-        |            ELSE o_orderpriority END AS prio
-        |FROM orders ORDER BY okey""".stripMargin,
-    "s5_gaps" ->
-      """WITH topo AS (
-        |  SELECT DISTINCT CAST(o_orderkey % 4 + 1 AS INTEGER) AS thread,
-        |         o_orderkey // 4 AS seq FROM orders
-        |  WHERE o_custkey % 10 <> 3),
-        |g AS (
-        |  SELECT thread, seq,
-        |         LAG(seq) OVER (PARTITION BY thread ORDER BY seq) AS prev
-        |  FROM topo)
-        |SELECT thread, prev + 1 AS gap_start, seq - 1 AS gap_end,
-        |       seq - prev - 1 AS missing
-        |FROM g WHERE prev IS NOT NULL AND seq > prev + 1
-        |ORDER BY thread, gap_start""".stripMargin)
 }

@@ -14,16 +14,16 @@ import graft.Tables._
   * unnesting, making the gate an engine-vs-engine check of the
   * decorrelation semantics (null handling included).
   */
-object SubqueryQueries {
+object SubqueryQueries extends GateFamily {
 
   private def views(s: SparkSession, dir: String): Unit = {
     customer(s, dir).createOrReplaceTempView("g_customer")
     orders(s, dir).createOrReplaceTempView("g_orders")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // EXISTS + NOT EXISTS, both correlated on the customer key.
-    "q_exists" -> ((s, dir) => {
+    Gate("q_exists", (s, dir) => {
       views(s, dir)
       s.sql(
         """SELECT c_custkey, c_name FROM g_customer c
@@ -34,12 +34,20 @@ object SubqueryQueries {
           |                  WHERE o.o_custkey = c.c_custkey
           |                    AND o.o_orderstatus = 'F')
           |ORDER BY c_custkey""".stripMargin)
-    }),
+    }, _ =>
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey
+        |                AND o.o_orderpriority = '1-URGENT')
+        |  AND NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey
+        |                    AND o.o_orderstatus = 'F')
+        |ORDER BY c_custkey""".stripMargin),
 
     // Correlated scalar aggregates: orders strictly above their own
     // customer's average price. Stated integrally (price·count > sum,
     // in cents) so both engines decide every row exactly.
-    "q_scalar" -> ((s, dir) => {
+    Gate("q_scalar", (s, dir) => {
       views(s, dir)
       s.sql(
         """SELECT o_orderkey FROM g_orders o
@@ -50,26 +58,13 @@ object SubqueryQueries {
           |                       AS BIGINT))
           |       FROM g_orders i WHERE i.o_custkey = o.o_custkey)
           |ORDER BY o_orderkey""".stripMargin)
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_exists" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_orderpriority = '1-URGENT')
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_scalar" ->
+    }, _ =>
       """SELECT o_orderkey FROM orders o
         |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
         |      (SELECT COUNT(*) FROM orders i WHERE i.o_custkey = o.o_custkey)
         |    > (SELECT SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
         |                       AS BIGINT))
         |       FROM orders i WHERE i.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

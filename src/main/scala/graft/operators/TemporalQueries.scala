@@ -30,7 +30,7 @@ import graft.Tables._
   * explicit epoch-µs longs (`Tables.tsMicros`) so Spark and the DuckDB
   * oracle (`epoch_us(ts)`) agree bit-for-bit.
   */
-object TemporalQueries {
+object TemporalQueries extends GateFamily {
   private val D = org.apache.spark.sql.types.DataTypes.createDecimalType(18, 2)
   private def dec(c: Column) = c.cast(D)
 
@@ -120,7 +120,7 @@ object TemporalQueries {
       .drop("__prev", "__ns")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Gap-fill + forward-fill resampling (§2.61) — the time-series
     // regularization every metrics/feature pipeline runs before
     // modeling: per user, the LAST observation of each day lands on a
@@ -134,7 +134,7 @@ object TemporalQueries {
     // an unbounded-preceding frame is computed in a single running
     // pass per partition, so the whole resample costs two small
     // aggregates + one window shuffle at any corpus size.
-    "q_ts_gapfill" -> ((s, dir) => {
+    Gate("q_ts_gapfill", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // integer epoch DAYS end to end (the q_cohort convention): the
       // grid generates with an integer sequence, and the output carries
@@ -172,7 +172,32 @@ object TemporalQueries {
             coalesce(col("nxt") - 1, col("day")))).as("day"))
         .select(col("user_id"), col("day"), col("v").as("value"),
           (col("day") =!= col("obs_day")).as("filled"))
-    }),
+    }, _ =>
+      // independent formulation: generate_series grid + IGNORE NULLS
+      // window fill (the value column passes through untouched, so
+      // doubles hash-match)
+      """WITH obs AS (
+        |  SELECT user_id, day, v FROM (
+        |    SELECT user_id, epoch_us(ts) // 86400000000 AS day, value AS v,
+        |           ROW_NUMBER() OVER (
+        |             PARTITION BY user_id, epoch_us(ts) // 86400000000
+        |             ORDER BY ts DESC, event_id DESC) AS rn
+        |    FROM events WHERE value IS NOT NULL) WHERE rn = 1),
+        |bounds AS (
+        |  SELECT user_id, MIN(day) AS lo, MAX(day) AS hi
+        |  FROM obs GROUP BY 1),
+        |grid AS (
+        |  SELECT user_id, UNNEST(range(lo, hi + 1)) AS day
+        |  FROM bounds),
+        |j AS (
+        |  SELECT g.user_id, g.day, o.v
+        |  FROM grid g LEFT JOIN obs o USING (user_id, day))
+        |SELECT user_id, day,
+        |       last_value(v IGNORE NULLS) OVER (
+        |         PARTITION BY user_id ORDER BY day
+        |         ROWS UNBOUNDED PRECEDING) AS value,
+        |       v IS NULL AS filled
+        |FROM j ORDER BY user_id, day""".stripMargin),
 
     // Rolling anomaly detection (§2.62) — the streaming-metrics staple:
     // flag an observation whose deviation from its OWN trailing window
@@ -191,7 +216,7 @@ object TemporalQueries {
     // discipline). Scale shape: ONE user-keyed window shuffle; the
     // three frame aggregates (n, S, Σx²) share the frame and compute
     // in one running pass per partition.
-    "q_ts_anomaly" -> ((s, dir) => {
+    Gate("q_ts_anomaly", (s, dir) => {
       val raw = (col("value").cast(D) * 100).cast("long")
       // null-safe: a NULL value (absent measurement) flows through the
       // frame aggregates untouched (count/sum skip nulls) — only a
@@ -213,7 +238,21 @@ object TemporalQueries {
               (col("n") * col("x") - col("sx")) >
               lit(9L) * (col("n") * col("qx") - col("sx") * col("sx")))
             .as("anomaly"))
-    }),
+    }, _ =>
+      // same integer-exact 3-sigma restatement over DuckDB windows
+      """SELECT event_id, user_id, n,
+        |  (n >= 3 AND (n*x - sx)*(n*x - sx) > 9*(n*qx - sx*sx)) AS anomaly
+        |FROM (
+        |  SELECT event_id, user_id, x,
+        |         COUNT(x) OVER wf AS n,
+        |         SUM(x) OVER wf AS sx,
+        |         SUM(x*x) OVER wf AS qx
+        |  FROM (SELECT event_id, user_id, ts,
+        |          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
+        |        FROM events)
+        |  WINDOW wf AS (PARTITION BY user_id ORDER BY ts, event_id
+        |                ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING))
+        |ORDER BY event_id""".stripMargin),
 
     // Robust outlier detection (§2.68) — the Hampel/median-MAD filter,
     // the robust sibling of q_ts_anomaly's mean/3σ rule (one extreme
@@ -230,7 +269,7 @@ object TemporalQueries {
     // the aggregates; the per-key frames the percentile needs are the
     // q_quantiles production note (approx_percentile sketches at
     // 100 TB — here the gate proves the exact path).
-    "q_mad_outlier" -> ((s, dir) => {
+    Gate("q_mad_outlier", (s, dir) => {
       val x = expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
       val ev = events(s, dir)
         .select(col("event_id"), col("user_id"), x.as("x"))
@@ -245,7 +284,27 @@ object TemporalQueries {
       dev.join(mad, "user_id")
         .select(col("event_id"), col("user_id"),
           (col("d2") * 2 > col("mad2") * 3).as("outlier"))
-    }),
+    }, _ =>
+      // same doubled-unit integer restatement over DuckDB's exact
+      // quantile_cont (both engines interpolate lower + 0.5·(upper−lower),
+      // integer-exact in double at the doubled scale)
+      """WITH e AS (
+        |  SELECT event_id, user_id,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
+        |  FROM events WHERE value IS NOT NULL),
+        |med AS (
+        |  SELECT user_id, CAST(quantile_cont(x, 0.5) * 2 AS BIGINT) AS med2
+        |  FROM e GROUP BY 1),
+        |dev AS (
+        |  SELECT e.event_id, e.user_id, ABS(e.x * 2 - med.med2) AS d2
+        |  FROM e JOIN med USING (user_id)),
+        |mad AS (
+        |  SELECT user_id, CAST(quantile_cont(d2, 0.5) * 2 AS BIGINT) AS mad2
+        |  FROM dev GROUP BY 1)
+        |SELECT dev.event_id, dev.user_id,
+        |       dev.d2 * 2 > mad.mad2 * 3 AS outlier
+        |FROM dev JOIN mad USING (user_id)
+        |ORDER BY event_id""".stripMargin),
 
     // Per-key trend extraction (§2.71) — the closed-form OLS slope of
     // each user's value series, the feature-engineering staple (is
@@ -261,7 +320,7 @@ object TemporalQueries {
     // either way). Shape: one per-key min aggregate + an equi-join
     // back + ONE map-side-combined five-sum aggregate — two shuffles
     // at any corpus size, nothing per-pair, no window.
-    "q_trend" -> ((s, dir) => {
+    Gate("q_trend", (s, dir) => {
       val y = expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
       val e = events(s, dir)
         .select(col("user_id"), tsMicros.as("t"), y.as("y"))
@@ -277,14 +336,30 @@ object TemporalQueries {
         .select(col("user_id"), col("n"),
           (col("n") * col("sxy") - col("sx") * col("sy")).as("slope_num"),
           (col("n") * col("sxx") - col("sx") * col("sx")).as("slope_den"))
-    }),
+    }, _ =>
+      // same integer-rational restatement; DuckDB's HUGEINT sums cast
+      // back to BIGINT inside the stated domain
+      """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS t,
+        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+        |  FROM events WHERE value IS NOT NULL),
+        |m AS (SELECT user_id, MIN(t) AS t0 FROM e GROUP BY 1),
+        |x AS (
+        |  SELECT e.user_id, (e.t - m.t0) // 3600000000 AS x, e.y
+        |  FROM e JOIN m USING (user_id))
+        |SELECT user_id, COUNT(*) AS n,
+        |       CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS BIGINT)
+        |         AS slope_num,
+        |       CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS BIGINT)
+        |         AS slope_den
+        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // As-of join: every event picks up the most recent error event of
     // the same user at-or-before its own timestamp (the "attach the
     // last marker" shape: last checkpoint, last config change, last
     // login). Markers sort before events at equal t (tag 0 < 1) so the
     // match is inclusive, exactly DuckDB's ASOF JOIN `>=` semantics.
-    "q_asof_join" -> ((s, dir) => {
+    Gate("q_asof_join", (s, dir) => {
       val ev = events(s, dir).select(col("event_id"), col("user_id"),
         tsMicros.as("t"))
       // right side unique per (user, t): ties collapse to max event_id
@@ -294,14 +369,26 @@ object TemporalQueries {
         .agg(max(col("event_id")).as("mk_id"))
       asofJoin(ev, mk, "user_id", "t", "mk_id", "last_error_id")
         .select(col("event_id"), col("user_id"), col("last_error_id"))
-    }),
+    }, _ =>
+      // independent formulation: DuckDB's native ASOF JOIN operator.
+      // epoch_us normalization on BOTH joins: the Spark side works in
+      // integer epoch microseconds (`Tables.tsMicros`), so the oracle
+      // compares at the same resolution. Same convention q_sessionize's
+      // oracle already uses.
+      """WITH mk AS (SELECT user_id, epoch_us(ts) AS t, MAX(event_id) AS mk_id
+        |            FROM events WHERE event_type = 'error' GROUP BY 1, 2),
+        |     e AS (SELECT event_id, user_id, epoch_us(ts) AS t FROM events)
+        |SELECT e.event_id, e.user_id, mk.mk_id AS last_error_id
+        |FROM e ASOF LEFT JOIN mk
+        |  ON e.user_id = mk.user_id AND e.t >= mk.t
+        |ORDER BY e.event_id""".stripMargin),
 
     // Banded range join: for each error event, aggregate all events of
     // the same user inside the following 6-hour window. Bucket width =
     // window width ⇒ every interval covers at most 2 buckets; events
     // carry exactly one bucket so no dedup pass is needed after the
     // equi-join.
-    "q_range_join" -> ((s, dir) => {
+    Gate("q_range_join", (s, dir) => {
       val B = 6L * HOUR_US
       val ev = events(s, dir)
         .select(col("user_id"), tsMicros.as("t"), col("value"))
@@ -317,7 +404,17 @@ object TemporalQueries {
         .groupBy(col("anchor_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(dec(col("value"))).cast("double").as("total"))
-    }),
+    }, _ =>
+      // independent formulation: plain inequality join
+      """WITH a AS (SELECT event_id, user_id, epoch_us(ts) AS t, event_type
+        |           FROM events),
+        |     e AS (SELECT user_id, epoch_us(ts) AS t, value FROM events)
+        |SELECT a.event_id AS anchor_id, COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM a JOIN e ON e.user_id = a.user_id
+        |  AND e.t >= a.t AND e.t < a.t + 21600000000
+        |WHERE a.event_type = 'error'
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Generic interval-OVERLAP join (§2.63) — both sides are interval
     // sets (q_range_join's interval×point sibling): per user, 6-hour
@@ -333,7 +430,7 @@ object TemporalQueries {
     // overlap, and in exactly one cell). At 100 TB the shuffle carries
     // cells ∝ total interval length / W and the pair space is bounded
     // by genuine cell co-occupancy, not |A|×|B|.
-    "q_interval_join" -> ((s, dir) => {
+    Gate("q_interval_join", (s, dir) => {
       val ev = events(s, dir)
       val a = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("a_id"), col("user_id"),
@@ -347,13 +444,26 @@ object TemporalQueries {
         .select(col("a_id"), col("b_id"),
           (least(col("e1"), col("e2")) -
             greatest(col("s1"), col("s2"))).as("overlap_us"))
-    }),
+    }, _ =>
+      // independent formulation: plain inequality join over both interval
+      // sets (DuckDB lowers it to its IEJoin)
+      """WITH a AS (SELECT event_id AS a_id, user_id, epoch_us(ts) AS s1,
+        |                  epoch_us(ts) + 21600000000 AS e1
+        |           FROM events WHERE event_type = 'error'),
+        |     b AS (SELECT event_id AS b_id, user_id, epoch_us(ts) AS s2,
+        |                  epoch_us(ts) + 7200000000 AS e2
+        |           FROM events WHERE event_type = 'purchase')
+        |SELECT a.a_id, b.b_id,
+        |       LEAST(a.e1, b.e2) - GREATEST(a.s1, b.s2) AS overlap_us
+        |FROM a JOIN b ON a.user_id = b.user_id
+        |  AND a.s1 < b.e2 AND b.s2 < a.e1
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // Sessionization: per-user sessions split on a >3h inactivity gap
     // (lag + running sum of session-start flags), then per-session
     // rollup. Ties broken on event_id so the window order — and hence
     // session numbering — is total on both engines.
-    "q_sessionize" -> ((s, dir) => {
+    Gate("q_sessionize", (s, dir) => {
       val ev = events(s, dir).select(col("user_id"), col("event_id"),
         tsMicros.as("t"), col("value"))
       sessionize(ev, "user_id", "t", "event_id", 3L * HOUR_US)
@@ -361,7 +471,20 @@ object TemporalQueries {
         .agg(count(lit(1)).as("n_events"),
           min(col("t")).as("start_us"), max(col("t")).as("end_us"),
           sum(dec(col("value"))).cast("double").as("total"))
-    }),
+    }, _ =>
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value
+        |           FROM events),
+        |f AS (SELECT *, COALESCE(
+        |        t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
+        |          > 10800000000, TRUE) AS ns FROM e),
+        |g AS (SELECT *, SUM(CASE WHEN ns THEN 1 ELSE 0 END) OVER (
+        |        PARTITION BY user_id ORDER BY t, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+        |      FROM f)
+        |SELECT user_id, CAST(sess AS BIGINT) AS sess, COUNT(*) AS n_events,
+        |  MIN(t) AS start_us, MAX(t) AS end_us,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM g GROUP BY 1, 2 ORDER BY user_id, sess""".stripMargin),
 
     // Retention cohort analysis — the other product-analytics staple:
     // users bucketed by first-active day, activity counted per
@@ -371,7 +494,7 @@ object TemporalQueries {
     // per-user minimum, one map-side-combinable cell count; (user, day)
     // uniqueness makes COUNT(*) the distinct-user count with no
     // count-distinct shuffle.
-    "q_cohort" -> ((s, dir) => {
+    Gate("q_cohort", (s, dir) => {
       val act = events(s, dir)
         .select(col("user_id"), tsMicros.as("t"))
         .select(col("user_id"), expr("t div 86400000000").as("d"))
@@ -380,7 +503,15 @@ object TemporalQueries {
       act.join(first, "user_id")
         .groupBy(col("cd").as("cohort_day"), (col("d") - col("cd")).as("day_off"))
         .agg(count(lit(1)).as("n_users"))
-    }),
+    }, _ =>
+      """WITH act AS (
+        |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
+        |  FROM events),
+        |f AS (SELECT user_id, MIN(d) AS cd FROM act GROUP BY 1)
+        |SELECT f.cd AS cohort_day, a.d - f.cd AS day_off,
+        |       COUNT(*) AS n_users
+        |FROM act a JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_off""".stripMargin),
 
     // Ordered funnel analysis (view → click → purchase): the product-
     // analytics staple. ONE user-keyed shuffle: each user's events
@@ -391,7 +522,7 @@ object TemporalQueries {
     // gate proves the fold against a different algorithm entirely. At
     // 100 TB the fold shape wins: per-user state is 3 longs, nothing
     // joins, and the shuffle carries each event exactly once.
-    "q_funnel" -> ((s, dir) => {
+    Gate("q_funnel", (s, dir) => {
       val ev = events(s, dir).select(col("user_id"), tsMicros.as("t"),
         col("event_type").as("typ"))
       ev.groupBy(col("user_id"))
@@ -413,7 +544,28 @@ object TemporalQueries {
           expr("CAST(CASE WHEN f.t3 IS NOT NULL THEN 3" +
             " WHEN f.t2 IS NOT NULL THEN 2" +
             " WHEN f.t1 IS NOT NULL THEN 1 ELSE 0 END AS INT)").as("stage"))
-    }),
+    }, _ =>
+      // independent formulation: three conditional-min phases, each
+      // bounded by the previous milestone, joined back per user
+      """WITH e AS (SELECT user_id, epoch_us(ts) AS t, event_type
+        |           FROM events),
+        |s1 AS (SELECT user_id, MIN(t) AS t1 FROM e
+        |       WHERE event_type = 'view' GROUP BY 1),
+        |s2 AS (SELECT e.user_id, MIN(e.t) AS t2
+        |       FROM e JOIN s1 USING (user_id)
+        |       WHERE e.event_type = 'click' AND e.t > s1.t1 GROUP BY 1),
+        |s3 AS (SELECT e.user_id, MIN(e.t) AS t3
+        |       FROM e JOIN s2 USING (user_id)
+        |       WHERE e.event_type = 'purchase' AND e.t > s2.t2 GROUP BY 1)
+        |SELECT u.user_id, s1.t1, s2.t2, s3.t3,
+        |  CAST(CASE WHEN s3.t3 IS NOT NULL THEN 3
+        |            WHEN s2.t2 IS NOT NULL THEN 2
+        |            WHEN s1.t1 IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
+        |    AS stage
+        |FROM (SELECT DISTINCT user_id FROM e) u
+        |LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
+        |LEFT JOIN s3 USING (user_id)
+        |ORDER BY user_id""".stripMargin),
 
     // Time-series top-k similarity search (the EDBT'19/ICDE'21 shape in
     // PAPERS.md): each entity's first-32-event value series, aligned by
@@ -426,7 +578,7 @@ object TemporalQueries {
     // per-query ranking runs through the TopKRewrite bounded heap — at
     // 100 TB nothing pairwise materializes beyond |corpus|·|queries|
     // scored rows collapsing into k-row heaps map-side.
-    "q_ts_knn" -> ((s, dir) => {
+    Gate("q_ts_knn", (s, dir) => {
       val e = events(s, dir).select(col("user_id"), tsMicros.as("t"),
         col("event_id"), expr("CAST(floor(value * 1000) AS BIGINT)").as("v"))
       // series assembly as ONE hash aggregate: collect the per-entity
@@ -453,177 +605,7 @@ object TemporalQueries {
           Window.partitionBy(col("qid")).orderBy(col("dist"), col("user_id"))))
         .filter(col("rn") <= 3)
         .select(col("qid"), col("rn"), col("user_id"), col("dist"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // independent formulation: generate_series grid + IGNORE NULLS
-    // window fill (the value column passes through untouched, so
-    // doubles hash-match)
-    "q_ts_gapfill" ->
-      """WITH obs AS (
-        |  SELECT user_id, day, v FROM (
-        |    SELECT user_id, epoch_us(ts) // 86400000000 AS day, value AS v,
-        |           ROW_NUMBER() OVER (
-        |             PARTITION BY user_id, epoch_us(ts) // 86400000000
-        |             ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events WHERE value IS NOT NULL) WHERE rn = 1),
-        |bounds AS (
-        |  SELECT user_id, MIN(day) AS lo, MAX(day) AS hi
-        |  FROM obs GROUP BY 1),
-        |grid AS (
-        |  SELECT user_id, UNNEST(range(lo, hi + 1)) AS day
-        |  FROM bounds),
-        |j AS (
-        |  SELECT g.user_id, g.day, o.v
-        |  FROM grid g LEFT JOIN obs o USING (user_id, day))
-        |SELECT user_id, day,
-        |       last_value(v IGNORE NULLS) OVER (
-        |         PARTITION BY user_id ORDER BY day
-        |         ROWS UNBOUNDED PRECEDING) AS value,
-        |       v IS NULL AS filled
-        |FROM j ORDER BY user_id, day""".stripMargin,
-
-    // same integer-exact 3-sigma restatement over DuckDB windows
-    "q_ts_anomaly" ->
-      """SELECT event_id, user_id, n,
-        |  (n >= 3 AND (n*x - sx)*(n*x - sx) > 9*(n*qx - sx*sx)) AS anomaly
-        |FROM (
-        |  SELECT event_id, user_id, x,
-        |         COUNT(x) OVER wf AS n,
-        |         SUM(x) OVER wf AS sx,
-        |         SUM(x*x) OVER wf AS qx
-        |  FROM (SELECT event_id, user_id, ts,
-        |          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
-        |        FROM events)
-        |  WINDOW wf AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING))
-        |ORDER BY event_id""".stripMargin,
-
-    // same integer-rational restatement; DuckDB's HUGEINT sums cast
-    // back to BIGINT inside the stated domain
-    "q_trend" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS t,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |m AS (SELECT user_id, MIN(t) AS t0 FROM e GROUP BY 1),
-        |x AS (
-        |  SELECT e.user_id, (e.t - m.t0) // 3600000000 AS x, e.y
-        |  FROM e JOIN m USING (user_id))
-        |SELECT user_id, COUNT(*) AS n,
-        |       CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS BIGINT)
-        |         AS slope_num,
-        |       CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS BIGINT)
-        |         AS slope_den
-        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // same doubled-unit integer restatement over DuckDB's exact
-    // quantile_cont (both engines interpolate lower + 0.5·(upper−lower),
-    // integer-exact in double at the doubled scale)
-    "q_mad_outlier" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
-        |  FROM events WHERE value IS NOT NULL),
-        |med AS (
-        |  SELECT user_id, CAST(quantile_cont(x, 0.5) * 2 AS BIGINT) AS med2
-        |  FROM e GROUP BY 1),
-        |dev AS (
-        |  SELECT e.event_id, e.user_id, ABS(e.x * 2 - med.med2) AS d2
-        |  FROM e JOIN med USING (user_id)),
-        |mad AS (
-        |  SELECT user_id, CAST(quantile_cont(d2, 0.5) * 2 AS BIGINT) AS mad2
-        |  FROM dev GROUP BY 1)
-        |SELECT dev.event_id, dev.user_id,
-        |       dev.d2 * 2 > mad.mad2 * 3 AS outlier
-        |FROM dev JOIN mad USING (user_id)
-        |ORDER BY event_id""".stripMargin,
-
-    // independent formulation: DuckDB's native ASOF JOIN operator.
-    // epoch_us normalization on BOTH joins: the Spark side works in
-    // integer epoch microseconds (`Tables.tsMicros`), so the oracle
-    // compares at the same resolution. Same convention q_sessionize's
-    // oracle already uses.
-    "q_asof_join" ->
-      """WITH mk AS (SELECT user_id, epoch_us(ts) AS t, MAX(event_id) AS mk_id
-        |            FROM events WHERE event_type = 'error' GROUP BY 1, 2),
-        |     e AS (SELECT event_id, user_id, epoch_us(ts) AS t FROM events)
-        |SELECT e.event_id, e.user_id, mk.mk_id AS last_error_id
-        |FROM e ASOF LEFT JOIN mk
-        |  ON e.user_id = mk.user_id AND e.t >= mk.t
-        |ORDER BY e.event_id""".stripMargin,
-    // independent formulation: plain inequality join over both interval
-    // sets (DuckDB lowers it to its IEJoin)
-    "q_interval_join" ->
-      """WITH a AS (SELECT event_id AS a_id, user_id, epoch_us(ts) AS s1,
-        |                  epoch_us(ts) + 21600000000 AS e1
-        |           FROM events WHERE event_type = 'error'),
-        |     b AS (SELECT event_id AS b_id, user_id, epoch_us(ts) AS s2,
-        |                  epoch_us(ts) + 7200000000 AS e2
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT a.a_id, b.b_id,
-        |       LEAST(a.e1, b.e2) - GREATEST(a.s1, b.s2) AS overlap_us
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a.s1 < b.e2 AND b.s2 < a.e1
-        |ORDER BY a_id, b_id""".stripMargin,
-    // independent formulation: plain inequality join
-    "q_range_join" ->
-      """WITH a AS (SELECT event_id, user_id, epoch_us(ts) AS t, event_type
-        |           FROM events),
-        |     e AS (SELECT user_id, epoch_us(ts) AS t, value FROM events)
-        |SELECT a.event_id AS anchor_id, COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM a JOIN e ON e.user_id = a.user_id
-        |  AND e.t >= a.t AND e.t < a.t + 21600000000
-        |WHERE a.event_type = 'error'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value
-        |           FROM events),
-        |f AS (SELECT *, COALESCE(
-        |        t - LAG(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-        |          > 10800000000, TRUE) AS ns FROM e),
-        |g AS (SELECT *, SUM(CASE WHEN ns THEN 1 ELSE 0 END) OVER (
-        |        PARTITION BY user_id ORDER BY t, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |      FROM f)
-        |SELECT user_id, CAST(sess AS BIGINT) AS sess, COUNT(*) AS n_events,
-        |  MIN(t) AS start_us, MAX(t) AS end_us,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM g GROUP BY 1, 2 ORDER BY user_id, sess""".stripMargin,
-    "q_cohort" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
-        |  FROM events),
-        |f AS (SELECT user_id, MIN(d) AS cd FROM act GROUP BY 1)
-        |SELECT f.cd AS cohort_day, a.d - f.cd AS day_off,
-        |       COUNT(*) AS n_users
-        |FROM act a JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_off""".stripMargin,
-    // independent formulation: three conditional-min phases, each
-    // bounded by the previous milestone, joined back per user
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS t, event_type
-        |           FROM events),
-        |s1 AS (SELECT user_id, MIN(t) AS t1 FROM e
-        |       WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.t) AS t2
-        |       FROM e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.t > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.t) AS t3
-        |       FROM e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.t > s2.t2 GROUP BY 1)
-        |SELECT u.user_id, s1.t1, s2.t2, s3.t3,
-        |  CAST(CASE WHEN s3.t3 IS NOT NULL THEN 3
-        |            WHEN s2.t2 IS NOT NULL THEN 2
-        |            WHEN s1.t1 IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
-        |    AS stage
-        |FROM (SELECT DISTINCT user_id FROM e) u
-        |LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-        |LEFT JOIN s3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    "q_ts_knn" ->
+    }, _ =>
       """WITH r AS (
         |  SELECT user_id, CAST(floor(value * 1000) AS BIGINT) AS v,
         |         ROW_NUMBER() OVER (PARTITION BY user_id
@@ -645,6 +627,6 @@ object TemporalQueries {
         |         ROW_NUMBER() OVER (PARTITION BY qid
         |           ORDER BY dist, user_id) AS rn
         |  FROM d)
-        |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+        |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin)
   )
 }

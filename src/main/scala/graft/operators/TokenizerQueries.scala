@@ -31,15 +31,120 @@ import graft.functions.TextFunctions._
   * `PlanAuditSpec` can assert the physical shape (single parquet scan,
   * cache reuse, no cartesian) on the lazy plan — the dsir precedent.
   */
-object TokenizerQueries {
+object TokenizerQueries extends GateFamily {
 
   private val K = 8 // gram length for substring dedup (tokens)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_sdedup" -> ((s, dir) => sdedup(s, dir, materialize = true)),
-    "text_bpe" -> ((s, dir) => bpe(s, dir, materialize = true)),
-    "text_pmi" -> ((s, dir) => pmi(s, dir, materialize = true)),
-    "pipe_tok" -> ((s, dir) => pipeTok(s, dir)),
+  def gates: Seq[Gate] = Seq(
+    Gate("text_sdedup", (s, dir) => sdedup(s, dir, materialize = true), _ =>
+      // same poly-hash domain as the dedup family (rep_filter precedent)
+      (toksCte +
+      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
+        |g AS (
+        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+        |         list_reduce(list_transform(
+        |             string_split(array_to_string(tk[i : i+7], ' '), ''),
+        |             c -> CAST(ord(c) AS BIGINT)),
+        |           (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |  FROM (SELECT doc_id, tk, UNNEST(range(1, len(tk) - 6)) AS i
+        |        FROM t WHERE len(tk) >= 8)),
+        |firsts AS (SELECT h, MIN(doc_id * 1000 + pos) AS mk FROM g GROUP BY 1),
+        |cov AS (
+        |  SELECT DISTINCT doc_id, UNNEST(range(pos, pos + 8)) AS p
+        |  FROM g JOIN firsts USING (h) WHERE doc_id * 1000 + pos <> mk),
+        |ncov AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
+        |pos AS (SELECT doc_id, UNNEST(range(0, len(tk))) AS p, tk FROM t),
+        |kept AS (
+        |  SELECT p.doc_id, string_agg(p.tk[p.p + 1], ' ' ORDER BY p.p) AS new_text
+        |  FROM pos p LEFT JOIN cov c ON c.doc_id = p.doc_id AND c.p = p.p
+        |  WHERE c.p IS NULL GROUP BY 1)
+        |SELECT t.doc_id, CAST(len(t.tk) AS BIGINT) AS n_tok,
+        |       CAST(COALESCE(n.n_removed, 0) AS BIGINT) AS n_removed,
+        |       COALESCE(k.new_text, '') AS new_text
+        |FROM t LEFT JOIN ncov n USING (doc_id) LEFT JOIN kept k USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)),
+    Gate("text_bpe", (s, dir) => bpe(s, dir, materialize = true), _ =>
+      (toksCte +
+      """, tok AS (SELECT doc_id, UNNEST(tk) AS t FROM toks),
+        |pairs AS (
+        |  SELECT t[i : i+1] AS pr
+        |  FROM (SELECT t, UNNEST(range(1, length(t))) AS i
+        |        FROM tok WHERE length(t) >= 2)),
+        |best AS (SELECT pr, COUNT(*) AS c FROM pairs GROUP BY 1
+        |         ORDER BY c DESC, pr LIMIT 1)
+        |SELECT doc_id,
+        |  CAST(SUM(length(t)) AS BIGINT) AS n_sym0,
+        |  CAST(SUM(length(replace(t, b.pr, chr(1)))) AS BIGINT) AS n_sym1,
+        |  ANY_VALUE(b.pr) AS best_pair,
+        |  CAST(ANY_VALUE(b.c) AS BIGINT) AS best_cnt
+        |FROM tok, best b GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Gate("text_pmi", (s, dir) => pmi(s, dir, materialize = true), _ =>
+      (toksCte +
+      """, t AS (SELECT tk FROM toks WHERE len(tk) > 0),
+        |uni AS (SELECT t AS w, COUNT(*) AS c
+        |        FROM (SELECT UNNEST(tk) AS t FROM t) GROUP BY 1),
+        |n AS (SELECT SUM(c) AS n FROM uni),
+        |bc AS (
+        |  SELECT w1, w2, COUNT(*) AS cxy
+        |  FROM (SELECT tk[i] AS w1, tk[i+1] AS w2
+        |        FROM (SELECT tk, UNNEST(range(1, len(tk))) AS i
+        |              FROM t WHERE len(tk) >= 2))
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 5)
+        |SELECT b.w1, b.w2, CAST(b.cxy AS BIGINT) AS cxy,
+        |       CAST((b.cxy * 1000000 // u1.c) * n.n // u2.c AS BIGINT) AS pmi_u
+        |FROM bc b, n
+        |JOIN uni u1 ON u1.w = b.w1
+        |JOIN uni u2 ON u2.w = b.w2
+        |ORDER BY pmi_u DESC, w1, w2 LIMIT 20""".stripMargin)),
+    Gate("pipe_tok", (s, dir) => pipeTok(s, dir), _ =>
+      // the whole chain stated independently: three unrolled training
+      // iterations (pair stats → argmax → replace-with-placeholder),
+      // whole-text encode, window-function prefix sum for the packing
+      (toksCte +
+      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
+        |tok AS (SELECT UNNEST(tk) AS w FROM t),
+        |p1 AS (
+        |  SELECT pr FROM (
+        |    SELECT w[i : i+1] AS pr
+        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
+        |          FROM tok WHERE length(w) >= 2))
+        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
+        |s1 AS (SELECT replace(w, (SELECT pr FROM p1), chr(1)) AS w FROM tok),
+        |p2 AS (
+        |  SELECT pr FROM (
+        |    SELECT w[i : i+1] AS pr
+        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
+        |          FROM s1 WHERE length(w) >= 2))
+        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
+        |s2 AS (SELECT replace(w, (SELECT pr FROM p2), chr(2)) AS w FROM s1),
+        |p3 AS (
+        |  SELECT pr FROM (
+        |    SELECT w[i : i+1] AS pr
+        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
+        |          FROM s2 WHERE length(w) >= 2))
+        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
+        |enc AS (
+        |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
+        |         CAST(length(replace(replace(replace(array_to_string(tk, ' '),
+        |             (SELECT pr FROM p1), chr(1)),
+        |             (SELECT pr FROM p2), chr(2)),
+        |             (SELECT pr FROM p3), chr(3)))
+        |           - (len(tk) - 1) AS BIGINT) AS n_sym
+        |  FROM t),
+        |c AS (
+        |  SELECT doc_id, n_tok, n_sym,
+        |         COALESCE(SUM(n_sym) OVER (ORDER BY doc_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |           AS cum_before
+        |  FROM enc)
+        |SELECT doc_id, n_tok, n_sym, CAST(cum_before AS BIGINT) AS cum_before,
+        |       CAST(cum_before // 1024 AS BIGINT) AS blk0,
+        |       CAST((cum_before + n_sym - 1) // 1024 AS BIGINT) AS blk1,
+        |       CAST((cum_before + n_sym - 1) // 1024
+        |            - cum_before // 1024 + 1 AS BIGINT) AS n_blocks,
+        |       (SELECT pr FROM p1) AS m1, (SELECT pr FROM p2) AS m2,
+        |       (SELECT pr FROM p3) AS m3
+        |FROM c ORDER BY doc_id""".stripMargin)),
 
     // T5-style span-corruption sample builder (Raffel et al. 2020) —
     // the denoising-objective data-generation step between a curated
@@ -51,7 +156,7 @@ object TokenizerQueries {
     // needs only each position's left neighbor — element_at(m, i), no
     // sequential state — so the whole op is ONE map pass at
     // parquet-scan speed with zero shuffle at 100 TB.
-    "text_mask" -> ((s, dir) => {
+    Gate("text_mask", (s, dir) => {
       documents(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("tk"))
         .filter(size(col("tk")) > 0)
@@ -79,7 +184,31 @@ object TokenizerQueries {
               "CASE WHEN NOT element_at(m, i+1) THEN array() " +
               "WHEN i = 0 OR NOT element_at(m, i) THEN array('<X>', element_at(tk, i+1)) " +
               "ELSE array(element_at(tk, i+1)) END))")).as("target_text"))
-    }),
+    }, _ =>
+      // DuckDB list indexing is 1-based like element_at; m[i+1] = mask of
+      // pos i, m[i] = left neighbor — identical neighbor logic
+      (toksCte +
+      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
+        |mk AS (
+        |  SELECT doc_id, tk,
+        |         list_transform(range(0, len(tk)), i ->
+        |           (((doc_id * 1000 + i) % 2147483648) * 2654435761)
+        |             % 1000000007 % 100 < 15) AS m
+        |  FROM t)
+        |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
+        |  CAST(len(list_filter(m, x -> x)) AS BIGINT) AS n_masked,
+        |  COALESCE(array_to_string(flatten(list_transform(range(0, len(tk)), i ->
+        |    CASE WHEN NOT m[i+1] THEN [tk[i+1]]
+        |         WHEN i = 0 OR NOT m[i] THEN ['<X>']
+        |         ELSE [] END)), ' '), '') AS input_text,
+        |  -- array_to_string([]) is NULL in DuckDB, '' in Spark's
+        |  -- concat_ws: coalesce so a doc with no masked position (or
+        |  -- all masked) states the same empty string in both engines
+        |  COALESCE(array_to_string(flatten(list_transform(range(0, len(tk)), i ->
+        |    CASE WHEN NOT m[i+1] THEN []
+        |         WHEN i = 0 OR NOT m[i] THEN ['<X>', tk[i+1]]
+        |         ELSE [tk[i+1]] END)), ' '), '') AS target_text
+        |FROM mk ORDER BY doc_id""".stripMargin)),
 
     // Sliding-window document chunking — the retrieval/embedding prep
     // step (RAG indexing, long-doc embedding): 64-token windows at
@@ -90,7 +219,7 @@ object TokenizerQueries {
     // starts and slices come from the row's own token array, so at
     // 100 TB chunking runs at parquet-scan speed with zero shuffle and
     // the output feeds the ANN family's embedding side directly.
-    "text_chunk" -> ((s, dir) => {
+    Gate("text_chunk", (s, dir) => {
       documents(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("tk"))
         .filter(size(col("tk")) > 0)
@@ -103,7 +232,21 @@ object TokenizerQueries {
           col("c.start").cast("long").as("start"),
           size(col("c.w")).cast("long").as("n_chunk_tok"),
           concat_ws(" ", col("c.w")).as("chunk_text"))
-    })
+    }, _ =>
+      // DuckDB list slice tk[a : b] is 1-based inclusive and clamps at
+      // the list end — identical to Spark's slice(tk, a, 64) semantics
+      (toksCte +
+      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
+        |st AS (
+        |  SELECT doc_id, tk, UNNEST(list_filter(
+        |    list_transform(range(0, (len(tk)-1)//48 + 1), k -> k*48),
+        |    s -> s = 0 OR s + 16 < len(tk))) AS s
+        |  FROM t)
+        |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
+        |       CAST(s AS BIGINT) AS start,
+        |       CAST(len(tk[s+1 : s+64]) AS BIGINT) AS n_chunk_tok,
+        |       array_to_string(tk[s+1 : s+64], ' ') AS chunk_text
+        |FROM st ORDER BY doc_id, start""".stripMargin))
   )
 
   /** Exact substring dedup. Plan shape (all equi-keyed, linear): one
@@ -379,150 +522,4 @@ object TokenizerQueries {
       |         list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'), x -> x <> '') AS tk
       |  FROM documents)
       |""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    // the whole chain stated independently: three unrolled training
-    // iterations (pair stats → argmax → replace-with-placeholder),
-    // whole-text encode, window-function prefix sum for the packing
-    "pipe_tok" -> (toksCte +
-      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
-        |tok AS (SELECT UNNEST(tk) AS w FROM t),
-        |p1 AS (
-        |  SELECT pr FROM (
-        |    SELECT w[i : i+1] AS pr
-        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
-        |          FROM tok WHERE length(w) >= 2))
-        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
-        |s1 AS (SELECT replace(w, (SELECT pr FROM p1), chr(1)) AS w FROM tok),
-        |p2 AS (
-        |  SELECT pr FROM (
-        |    SELECT w[i : i+1] AS pr
-        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
-        |          FROM s1 WHERE length(w) >= 2))
-        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
-        |s2 AS (SELECT replace(w, (SELECT pr FROM p2), chr(2)) AS w FROM s1),
-        |p3 AS (
-        |  SELECT pr FROM (
-        |    SELECT w[i : i+1] AS pr
-        |    FROM (SELECT w, UNNEST(range(1, length(w))) AS i
-        |          FROM s2 WHERE length(w) >= 2))
-        |  GROUP BY pr ORDER BY COUNT(*) DESC, pr LIMIT 1),
-        |enc AS (
-        |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
-        |         CAST(length(replace(replace(replace(array_to_string(tk, ' '),
-        |             (SELECT pr FROM p1), chr(1)),
-        |             (SELECT pr FROM p2), chr(2)),
-        |             (SELECT pr FROM p3), chr(3)))
-        |           - (len(tk) - 1) AS BIGINT) AS n_sym
-        |  FROM t),
-        |c AS (
-        |  SELECT doc_id, n_tok, n_sym,
-        |         COALESCE(SUM(n_sym) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS cum_before
-        |  FROM enc)
-        |SELECT doc_id, n_tok, n_sym, CAST(cum_before AS BIGINT) AS cum_before,
-        |       CAST(cum_before // 1024 AS BIGINT) AS blk0,
-        |       CAST((cum_before + n_sym - 1) // 1024 AS BIGINT) AS blk1,
-        |       CAST((cum_before + n_sym - 1) // 1024
-        |            - cum_before // 1024 + 1 AS BIGINT) AS n_blocks,
-        |       (SELECT pr FROM p1) AS m1, (SELECT pr FROM p2) AS m2,
-        |       (SELECT pr FROM p3) AS m3
-        |FROM c ORDER BY doc_id""".stripMargin),
-    // same poly-hash domain as the dedup family (rep_filter precedent)
-    "text_sdedup" -> (toksCte +
-      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
-        |g AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |         list_reduce(list_transform(
-        |             string_split(array_to_string(tk[i : i+7], ' '), ''),
-        |             c -> CAST(ord(c) AS BIGINT)),
-        |           (a, b) -> (a * 31 + b) % 1000000007) AS h
-        |  FROM (SELECT doc_id, tk, UNNEST(range(1, len(tk) - 6)) AS i
-        |        FROM t WHERE len(tk) >= 8)),
-        |firsts AS (SELECT h, MIN(doc_id * 1000 + pos) AS mk FROM g GROUP BY 1),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, UNNEST(range(pos, pos + 8)) AS p
-        |  FROM g JOIN firsts USING (h) WHERE doc_id * 1000 + pos <> mk),
-        |ncov AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
-        |pos AS (SELECT doc_id, UNNEST(range(0, len(tk))) AS p, tk FROM t),
-        |kept AS (
-        |  SELECT p.doc_id, string_agg(p.tk[p.p + 1], ' ' ORDER BY p.p) AS new_text
-        |  FROM pos p LEFT JOIN cov c ON c.doc_id = p.doc_id AND c.p = p.p
-        |  WHERE c.p IS NULL GROUP BY 1)
-        |SELECT t.doc_id, CAST(len(t.tk) AS BIGINT) AS n_tok,
-        |       CAST(COALESCE(n.n_removed, 0) AS BIGINT) AS n_removed,
-        |       COALESCE(k.new_text, '') AS new_text
-        |FROM t LEFT JOIN ncov n USING (doc_id) LEFT JOIN kept k USING (doc_id)
-        |ORDER BY doc_id""".stripMargin),
-    "text_bpe" -> (toksCte +
-      """, tok AS (SELECT doc_id, UNNEST(tk) AS t FROM toks),
-        |pairs AS (
-        |  SELECT t[i : i+1] AS pr
-        |  FROM (SELECT t, UNNEST(range(1, length(t))) AS i
-        |        FROM tok WHERE length(t) >= 2)),
-        |best AS (SELECT pr, COUNT(*) AS c FROM pairs GROUP BY 1
-        |         ORDER BY c DESC, pr LIMIT 1)
-        |SELECT doc_id,
-        |  CAST(SUM(length(t)) AS BIGINT) AS n_sym0,
-        |  CAST(SUM(length(replace(t, b.pr, chr(1)))) AS BIGINT) AS n_sym1,
-        |  ANY_VALUE(b.pr) AS best_pair,
-        |  CAST(ANY_VALUE(b.c) AS BIGINT) AS best_cnt
-        |FROM tok, best b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    "text_pmi" -> (toksCte +
-      """, t AS (SELECT tk FROM toks WHERE len(tk) > 0),
-        |uni AS (SELECT t AS w, COUNT(*) AS c
-        |        FROM (SELECT UNNEST(tk) AS t FROM t) GROUP BY 1),
-        |n AS (SELECT SUM(c) AS n FROM uni),
-        |bc AS (
-        |  SELECT w1, w2, COUNT(*) AS cxy
-        |  FROM (SELECT tk[i] AS w1, tk[i+1] AS w2
-        |        FROM (SELECT tk, UNNEST(range(1, len(tk))) AS i
-        |              FROM t WHERE len(tk) >= 2))
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 5)
-        |SELECT b.w1, b.w2, CAST(b.cxy AS BIGINT) AS cxy,
-        |       CAST((b.cxy * 1000000 // u1.c) * n.n // u2.c AS BIGINT) AS pmi_u
-        |FROM bc b, n
-        |JOIN uni u1 ON u1.w = b.w1
-        |JOIN uni u2 ON u2.w = b.w2
-        |ORDER BY pmi_u DESC, w1, w2 LIMIT 20""".stripMargin),
-    // DuckDB list indexing is 1-based like element_at; m[i+1] = mask of
-    // pos i, m[i] = left neighbor — identical neighbor logic
-    "text_mask" -> (toksCte +
-      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
-        |mk AS (
-        |  SELECT doc_id, tk,
-        |         list_transform(range(0, len(tk)), i ->
-        |           (((doc_id * 1000 + i) % 2147483648) * 2654435761)
-        |             % 1000000007 % 100 < 15) AS m
-        |  FROM t)
-        |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
-        |  CAST(len(list_filter(m, x -> x)) AS BIGINT) AS n_masked,
-        |  COALESCE(array_to_string(flatten(list_transform(range(0, len(tk)), i ->
-        |    CASE WHEN NOT m[i+1] THEN [tk[i+1]]
-        |         WHEN i = 0 OR NOT m[i] THEN ['<X>']
-        |         ELSE [] END)), ' '), '') AS input_text,
-        |  -- array_to_string([]) is NULL in DuckDB, '' in Spark's
-        |  -- concat_ws: coalesce so a doc with no masked position (or
-        |  -- all masked) states the same empty string in both engines
-        |  COALESCE(array_to_string(flatten(list_transform(range(0, len(tk)), i ->
-        |    CASE WHEN NOT m[i+1] THEN []
-        |         WHEN i = 0 OR NOT m[i] THEN ['<X>', tk[i+1]]
-        |         ELSE [tk[i+1]] END)), ' '), '') AS target_text
-        |FROM mk ORDER BY doc_id""".stripMargin),
-    // DuckDB list slice tk[a : b] is 1-based inclusive and clamps at
-    // the list end — identical to Spark's slice(tk, a, 64) semantics
-    "text_chunk" -> (toksCte +
-      """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
-        |st AS (
-        |  SELECT doc_id, tk, UNNEST(list_filter(
-        |    list_transform(range(0, (len(tk)-1)//48 + 1), k -> k*48),
-        |    s -> s = 0 OR s + 16 < len(tk))) AS s
-        |  FROM t)
-        |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok,
-        |       CAST(s AS BIGINT) AS start,
-        |       CAST(len(tk[s+1 : s+64]) AS BIGINT) AS n_chunk_tok,
-        |       array_to_string(tk[s+1 : s+64], ' ') AS chunk_text
-        |FROM st ORDER BY doc_id, start""".stripMargin)
-  )
 }

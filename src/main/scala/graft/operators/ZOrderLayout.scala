@@ -14,7 +14,7 @@ import graft.functions.ZOrderOps._
   * materialization) and the sort is per-partition — both scale linearly
   * and spill; nothing here is quadratic or driver-bound.
   */
-object ZOrderLayout {
+object ZOrderLayout extends GateFamily {
 
   def clusterByZ(df: DataFrame, x: Column, y: Column, bits: Int,
       partitions: Int): DataFrame = {
@@ -24,11 +24,11 @@ object ZOrderLayout {
       .drop("__z")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // z-value arithmetic gate: interleave (user_id mod 1024, cents mod
     // 1024) and keep each z-cell's population + value sum — exercises
     // the codegen expression end-to-end with an integer-exact oracle.
-    "q_zorder" -> ((s, dir) => {
+    Gate("q_zorder", (s, dir) => {
       val D = org.apache.spark.sql.types.DataTypes.createDecimalType(18, 2)
       events(s, dir)
         .select(col("event_id"), col("user_id"),
@@ -38,7 +38,16 @@ object ZOrderLayout {
         .groupBy(expr("z div 4096").as("z_block"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
           min(col("z")).as("z_min"), max(col("z")).as("z_max"))
-    })
+    }, _ =>
+      s"""WITH e AS (
+         |  SELECT event_id, user_id,
+         |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+         |  FROM events)
+         |SELECT CAST(z // 4096 AS BIGINT) AS z_block, COUNT(*) AS n,
+         |       CAST(SUM(cents) AS BIGINT) AS sum_cents,
+         |       MIN(z) AS z_min, MAX(z) AS z_max
+         |FROM (SELECT cents, ($zExpr) AS z FROM e)
+         |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 
   // the oracle spreads the bits explicitly: Σ ((x>>i)&1)<<2i | ((y>>i)&1)<<(2i+1)
@@ -52,17 +61,4 @@ object ZOrderLayout {
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})")
       .mkString(" + ")
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_zorder" ->
-      s"""WITH e AS (
-         |  SELECT event_id, user_id,
-         |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-         |  FROM events)
-         |SELECT CAST(z // 4096 AS BIGINT) AS z_block, COUNT(*) AS n,
-         |       CAST(SUM(cents) AS BIGINT) AS sum_cents,
-         |       MIN(z) AS z_min, MAX(z) AS z_max
-         |FROM (SELECT cents, ($zExpr) AS z FROM e)
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-  )
 }

@@ -38,7 +38,8 @@ import graft.redo.{LocalRedoProvider, RedoLogReader, RedoStorageProvider}
   *            reference's offset bookkeeping resumes at the next redo log.
   *
   * Options: `path`, `tables` (comma list, `%`/`*` wildcards — P1),
-  * `ops` (comma list of op codes — P2), `maxFilesPerTrigger`.
+  * `ops` (comma list of data op codes, `graft.cdc.Ops.data` — P2),
+  * `maxFilesPerTrigger` (a positive integer).
   */
 class RedoLogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-redo"
@@ -115,11 +116,20 @@ class RedoLogScan(options: CaseInsensitiveStringMap) extends Scan {
     throw new IllegalArgumentException("graft-redo requires a path"))
   private val tables: Seq[String] = Option(options.get("tables"))
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-  private val ops: Seq[Int] = Option(options.get("ops"))
-    .map(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-    .getOrElse(Nil)
+  // checked here, once per scan: an unknown op code would match no data
+  // record, and a non-positive file limit would admit no file, so the
+  // stream would idle forever without an error
+  private def invalid(option: String, v: String, why: String) =
+    new IllegalArgumentException(s"graft-redo option $option='$v' $why")
+  private val ops: Seq[Int] = Option(options.get("ops")).map { v =>
+    v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(o =>
+      o.toIntOption.filter(graft.cdc.Ops.data).getOrElse(throw invalid("ops", v,
+        s"names '$o', not a data op code (${graft.cdc.Ops.data.toSeq.sorted.mkString(", ")})")))
+  }.getOrElse(Nil)
   private val maxFilesPerTrigger: Int =
-    Option(options.get("maxFilesPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue)
+    Option(options.get("maxFilesPerTrigger")).map(v => v.toIntOption.filter(_ > 0)
+      .getOrElse(throw invalid("maxFilesPerTrigger", v, "is not a positive integer")))
+      .getOrElse(Int.MaxValue)
   // K6 polish: `metricsName` registers a `graft.cdc:type=source-conn`
   // MBean (the OraCdcSourceConnMgmt analogue) updated as this scan's
   // stream commits offsets; absent → zero overhead

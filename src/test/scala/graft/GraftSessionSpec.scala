@@ -17,4 +17,22 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$v'"), e.getMessage)
     }
   }
+
+  private val known = Set("q1_agg", "pipe_curate")
+
+  test("an unset gate filter means every gate") {
+    assert(GraftSession.parseOnly(None, known) === None)
+    assert(GraftSession.parseOnly(Some("pipe_curate,q1_agg"), known) === Some(known))
+  }
+
+  test("a gate filter naming no gate is rejected with the unknown names") {
+    Seq("q1_agg,q9_nope" -> Seq("q9_nope"), "q1_agg, pipe_curate" -> Seq(" pipe_curate"),
+        "" -> Seq(""), "q1_agg," -> Seq(""), "x,y" -> Seq("x", "y")).foreach {
+      case (v, unknown) =>
+        val e = intercept[IllegalArgumentException](
+          GraftSession.parseOnly(Some(v), known))
+        assert(e.getMessage.contains("SPARK_GRAFT_ONLY"), e.getMessage)
+        unknown.foreach(n => assert(e.getMessage.contains(s"'$n'"), e.getMessage))
+    }
+  }
 }

@@ -314,6 +314,24 @@ class RedoSourceSpec extends AnyFunSuite {
     assert(insertsOnly.count(_.op == Ops.Insert) === 2)
   }
 
+  test("a bad ops or maxFilesPerTrigger option is rejected by name") {
+    val dir = Files.createTempDirectory("grlsrc").toFile
+    writeLogs(dir)
+    def scanWith(option: String, v: String): String =
+      intercept[IllegalArgumentException](spark.read.format("graft-redo")
+        .option(option, v).load(dir.getAbsolutePath).collect()).getMessage
+    // a limit below 1 admits no file; a stream would idle without error
+    Seq("0", "-3", "abc", "", "2.5").foreach { v =>
+      val m = scanWith("maxFilesPerTrigger", v)
+      assert(m.contains("maxFilesPerTrigger") && m.contains(s"'$v'"), m)
+    }
+    // an unknown or control code matches no data record: every row dropped
+    Seq("4", "1,x", s"${Ops.Insert},${Ops.Commit}", "-1").foreach { v =>
+      val m = scanWith("ops", v)
+      assert(m.contains("ops") && m.contains(s"'$v'"), m)
+    }
+  }
+
   test("session-audit records bypass table AND op filters (P7 survival)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("grlsrc").toFile

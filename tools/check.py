@@ -93,7 +93,10 @@ def main():
         flag = "PASS" if v.startswith("OK") or (v.startswith("rows-only") and "EMPTY" not in v) else "FAIL"
         print(f"[{flag}] {name}: {v}")
     print(f"\n{ok}/{len(results)} pass")
-    sys.exit(0 if ok == len(results) else 1)
+    if not results:
+        print(f"no gate results under {out_dir}", file=sys.stderr)
+    # an empty run checked nothing: it must not pass
+    sys.exit(0 if results and ok == len(results) else 1)
 
 
 if __name__ == "__main__":

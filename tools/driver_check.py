@@ -99,7 +99,10 @@ def main():
         flag = "PASS" if v.startswith("PASS") or v.startswith("rows-only") else "FAIL"
         print(f"[{flag}] {name}: {v}")
     print(f"\npass={n_pass} rows-only={n_rowsonly} hash-fail={n_hashfail} err={n_err} total={len(results)}")
-    sys.exit(0 if n_hashfail + n_err == 0 else 1)
+    if not results:
+        print(f"no gate results under {out_dir}", file=sys.stderr)
+    # an empty run checked nothing: it must not pass
+    sys.exit(0 if results and n_hashfail + n_err == 0 else 1)
 
 
 if __name__ == "__main__":
