@@ -5,8 +5,7 @@ import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** Bloom-filter build/probe for semi-join scan reduction.
@@ -45,10 +44,12 @@ object BloomFilterOps {
       .toAggregateExpression(isDistinct = false))
 
   /** Probe: true iff `key` may be in `filter` (no false negatives);
-    * reads the hash count from the filter's own header.
+    * reads the hash count from the filter's own header. A bit test on
+    * the serialized filter, no deserialization per row.
     */
   def bloomMightContain(filter: Column, key: Column): Column =
-    c(BloomMightContain(e(filter), e(key)))
+    KernelCall.bind("bloom_might_contain", BloomKernel, "mightContain", BooleanType)(
+      filter -> BinaryType, key -> LongType)
 }
 
 /** Static kernels shared by interpreted eval and generated code. */
@@ -204,26 +205,4 @@ case class BloomBuildAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(nc: Expression): BloomBuildAgg =
     copy(child = nc)
-}
-
-/** Probe expression — codegen'd bit test, no deserialization per row;
-  * the hash count comes from the filter's own header byte.
-  */
-case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, LongType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(filter: Any, key: Any): Any =
-    BloomKernel.mightContain(filter.asInstanceOf[Array[Byte]],
-      key.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (f, k) =>
-      s"graft.functions.BloomKernel.mightContain($f, $k)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): BloomMightContain = copy(left = l, right = r)
 }

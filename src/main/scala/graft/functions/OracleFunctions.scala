@@ -1,21 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst expressions for the Oracle wire-format codecs (SURVEY.md §2.4
-  * F1–F7). Native `Expression`s with whole-stage codegen on the hot
-  * NUMBER/DATE paths — each generated call is a single static invoke into
-  * `graft.codec.*` (Scala objects expose static forwarders), so decode
-  * stays inside the WholeStageCodegen span instead of falling back to an
-  * interpreted UDF. At 100 TB the decode sits on every row of the change
-  * stream; this is the difference between codegen'd tight loops and
-  * boxing through ScalaUDF.
-  */
+import graft.codec._
+import graft.functions.KernelCall.{bind, param}
+
 /** Runtime bridge between Spark's Decimal and the NUMBER codec: tries
   * the compact unscaled-long path (precision ≤ 18 decimals are
   * long-backed — no BigDecimal, no BigInteger, no string) and falls
@@ -23,7 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Lives outside the pure codec so `graft.codec` keeps zero Spark deps.
   */
 object OraNumberRt {
-  import graft.codec.OraNumber
 
   def toDecimal(b: Array[Byte], precision: Int, scale: Int): Decimal =
     if (precision <= 18) {
@@ -52,436 +43,127 @@ object OraNumberRt {
   }
 }
 
+/** Column functions for the Oracle wire-format codecs (SURVEY.md §2.4
+  * F1–F14). Each is one [[KernelCall]] binding: a static call into
+  * `graft.codec.*` (or a one-line `UTF8String`/`ArrayData` adapter in
+  * [[CodecBridge]]) that runs inside whole-stage codegen, so decode on
+  * every row of the change stream stays a tight generated loop instead
+  * of boxing through a ScalaUDF. `register` exposes them to SQL under
+  * the same names. The TDE pair stays hand-written: its key is a
+  * reference object, so it never prints in a plan string.
+  */
 object OracleFunctions {
 
   private def c(e: Expression): Column = GraftSqlBridge.column(e)
   private def e(col: Column): Expression = GraftSqlBridge.expression(col)
 
   // ---- NUMBER (F1) ----
+  def oranumber_to_decimal(col: Column, precision: Int, scale: Int): Column =
+    bind("oranumber_to_decimal", OraNumberRt, "toDecimal", DecimalType(precision, scale))(
+      col -> BinaryType, param(precision) -> IntegerType, param(scale) -> IntegerType)
+  def oranumber_to_long(col: Column): Column =
+    bind("oranumber_to_long", OraNumber, "decodeToLong", LongType)(col -> BinaryType)
+  def oranumber_to_double(col: Column): Column =
+    bind("oranumber_to_double", OraNumber, "decodeToDouble", DoubleType)(col -> BinaryType)
+  def oranumber_from_decimal(col: Column): Column =
+    bind("oranumber_from_decimal", OraNumberRt, "fromDecimal", BinaryType)(col -> DecimalType)
+  def oranumber_from_long(col: Column): Column =
+    bind("oranumber_from_long", OraNumber, "encodeLong", BinaryType)(col -> LongType)
 
-  case class OraNumberToDecimal(child: Expression, precision: Int, scale: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = DecimalType(precision, scale)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      OraNumberRt.toDecimal(v.asInstanceOf[Array[Byte]], precision, scale)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, b =>
-        s"${ev.value} = graft.functions.OraNumberRt.toDecimal($b, $precision, $scale);")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraNumberToLong(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraNumber.decodeToLong(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraNumber.decodeToLong($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraNumberToDouble(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraNumber.decodeToDouble(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraNumber.decodeToDouble($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraNumberFromDecimal(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(DecimalType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      OraNumberRt.fromDecimal(v.asInstanceOf[Decimal])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, d => s"graft.functions.OraNumberRt.fromDecimal($d)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraNumberFromLong(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(LongType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraNumber.encodeLong(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, v => s"graft.codec.OraNumber.encodeLong($v)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  // ---- DATE / TIMESTAMP (F3) ----
-
-  case class OraDateToTimestamp(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    // NTZ: the 7/11-byte Oracle form has no zone; matches parquet TIMESTAMP
-    override def dataType: DataType = TimestampNTZType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraDateTime.decodeToMicros(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraDateTime.decodeToMicros($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraTimestampFromMicros(child: Expression)
-      extends UnaryExpression {
-    // accepts TimestampType or TimestampNTZType — both are epoch micros
-    override def checkInputDataTypes() =
-      if (child.dataType == TimestampType || child.dataType == TimestampNTZType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"expected timestamp, got ${child.dataType}")
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraDateTime.encodeTimestamp(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, v => s"graft.codec.OraDateTime.encodeTimestamp($v)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  // ---- DATE / TIMESTAMP (F3); NTZ: the 7/11-byte Oracle form has no zone ----
+  def oradate_to_timestamp(col: Column): Column =
+    bind("oradate_to_timestamp", OraDateTime, "decodeToMicros", TimestampNTZType)(
+      col -> BinaryType)
+  def oratimestamp_from_micros(col: Column): Column =
+    bind("oratimestamp_from_micros", OraDateTime, "encodeTimestamp", BinaryType)(
+      col -> GraftSqlBridge.oneOf(TimestampType, TimestampNTZType))
 
   // ---- TIMESTAMP WITH TIME ZONE (F4) ----
-
-  case class OraTsTzEncode(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(LongType, IntegerType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(m: Any, o: Any): Any =
-      graft.codec.OraDateTime.encodeTsTz(m.asInstanceOf[Long], o.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (m, o) => s"graft.codec.OraDateTime.encodeTsTz($m, $o)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-  }
-
-  case class OraTsTzMicros(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraDateTime.decodeTsTzMicros(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraDateTime.decodeTsTzMicros($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraTsTzOffsetMinutes(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraDateTime.decodeTsTzOffset(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraDateTime.decodeTsTzOffset($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def oratstz_encode(micros: Column, offsetMin: Column): Column =
+    bind("oratstz_encode", OraDateTime, "encodeTsTz", BinaryType)(
+      micros -> LongType, offsetMin -> IntegerType)
+  def oratstz_micros(col: Column): Column =
+    bind("oratstz_micros", OraDateTime, "decodeTsTzMicros", LongType)(col -> BinaryType)
+  def oratstz_offset_minutes(col: Column): Column =
+    bind("oratstz_offset_minutes", OraDateTime, "decodeTsTzOffset", IntegerType)(
+      col -> BinaryType)
 
   // ---- ROWID (F7) ----
-
-  case class OraRowIdEncode(first: Expression, second: Expression,
-      third: Expression, fourth: Expression)
-      extends QuaternaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(LongType, IntegerType, LongType, IntegerType)
-    override def dataType: DataType = StringType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(o: Any, f: Any, b: Any, r: Any): Any =
-      UTF8String.fromString(graft.codec.OraRowId.encode(
-        o.asInstanceOf[Long], f.asInstanceOf[Int], b.asInstanceOf[Long], r.asInstanceOf[Int]))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (o, f, b, r) =>
-        s"UTF8String.fromString(graft.codec.OraRowId.encode($o, $f, $b, $r))")
-    override protected def withNewChildrenInternal(c1: Expression,
-        c2: Expression, c3: Expression, c4: Expression): Expression =
-      copy(c1, c2, c3, c4)
-  }
-
-  case class OraRowIdPart(child: Expression, part: Int)
-      extends UnaryExpression with ExpectsInputTypes
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def inputTypes = Seq(StringType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any = {
-      val r = graft.codec.OraRowId.decode(v.toString)
-      part match {
-        case 0 => r.dataObj
-        case 1 => r.fileNo.toLong
-        case 2 => r.blockNo
-        case 3 => r.rowNo.toLong
-      }
-    }
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def orarowid(dataObj: Column, fileNo: Column, blockNo: Column, rowNo: Column): Column =
+    bind("orarowid", CodecBridge, "rowIdEncode", StringType)(
+      dataObj -> LongType, fileNo -> IntegerType, blockNo -> LongType, rowNo -> IntegerType)
+  private def rowIdPart(name: String, col: Column, part: Int): Column =
+    bind(name, CodecBridge, "rowIdPart", LongType)(col -> StringType, param(part) -> IntegerType)
+  def orarowid_dataobj(col: Column): Column = rowIdPart("orarowid_dataobj", col, 0)
+  def orarowid_fileno(col: Column): Column = rowIdPart("orarowid_fileno", col, 1)
+  def orarowid_blockno(col: Column): Column = rowIdPart("orarowid_blockno", col, 2)
+  def orarowid_rowno(col: Column): Column = rowIdPart("orarowid_rowno", col, 3)
 
   // ---- INTERVALS (F5) ----
-
-  case class OraIntervalYMToMonths(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraInterval.decodeYMToMonths(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraInterval.decodeYMToMonths($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraIntervalDSToMicros(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraInterval.decodeDSToMicros(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraInterval.decodeDSToMicros($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraIntervalYMFromMonths(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(IntegerType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraInterval.encodeYM(v.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, m => s"graft.codec.OraInterval.encodeYM($m)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraIntervalDSFromMicros(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(LongType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraInterval.encodeDS(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, u => s"graft.codec.OraInterval.encodeDS($u)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def orainterval_ym_months(col: Column): Column =
+    bind("orainterval_ym_months", OraInterval, "decodeYMToMonths", IntegerType)(
+      col -> BinaryType)
+  def orainterval_ds_micros(col: Column): Column =
+    bind("orainterval_ds_micros", OraInterval, "decodeDSToMicros", LongType)(col -> BinaryType)
+  def orainterval_from_months(col: Column): Column =
+    bind("orainterval_from_months", OraInterval, "encodeYM", BinaryType)(col -> IntegerType)
+  def orainterval_from_micros(col: Column): Column =
+    bind("orainterval_from_micros", OraInterval, "encodeDS", BinaryType)(col -> LongType)
 
   // ---- BINARY_FLOAT / BINARY_DOUBLE (F2) ----
-
-  case class OraBinaryDoubleEncode(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(DoubleType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraBinaryFp.encodeDouble(v.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, d => s"graft.codec.OraBinaryFp.encodeDouble($d)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraBinaryDoubleDecode(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraBinaryFp.decodeDouble(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraBinaryFp.decodeDouble($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraBinaryFloatEncode(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(FloatType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraBinaryFp.encodeFloat(v.asInstanceOf[Float])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, f => s"graft.codec.OraBinaryFp.encodeFloat($f)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraBinaryFloatDecode(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = FloatType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraBinaryFp.decodeFloat(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.OraBinaryFp.decodeFloat($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def orabinarydouble_encode(col: Column): Column =
+    bind("orabinarydouble_encode", OraBinaryFp, "encodeDouble", BinaryType)(col -> DoubleType)
+  def orabinarydouble_decode(col: Column): Column =
+    bind("orabinarydouble_decode", OraBinaryFp, "decodeDouble", DoubleType)(col -> BinaryType)
+  def orabinaryfloat_encode(col: Column): Column =
+    bind("orabinaryfloat_encode", OraBinaryFp, "encodeFloat", BinaryType)(col -> FloatType)
+  def orabinaryfloat_decode(col: Column): Column =
+    bind("orabinaryfloat_decode", OraBinaryFp, "decodeFloat", FloatType)(col -> BinaryType)
 
   // ---- VECTOR (F10) ----
-
-  case class OraVectorEncodeFloats(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(FloatType))
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      CodecBridge.vectorEncodeFloats(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a => s"graft.functions.CodecBridge.vectorEncodeFloats($a)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraVectorDecodeFloats(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      CodecBridge.vectorDecodeFloats(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.functions.CodecBridge.vectorDecodeFloats($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def oravector_encode(col: Column): Column =
+    bind("oravector_encode", CodecBridge, "vectorEncodeFloats", BinaryType)(
+      col -> ArrayType(FloatType))
+  def oravector_decode(col: Column): Column =
+    bind("oravector_decode", CodecBridge, "vectorDecodeFloats",
+      ArrayType(FloatType, containsNull = false))(col -> BinaryType)
 
   // ---- LOB locator (F12) ----
+  def lob_inline(col: Column): Column =
+    bind("lob_inline", CodecBridge, "lobInline", BinaryType)(col -> BinaryType)
+  def lob_out_of_row(col: Column): Column =
+    bind("lob_out_of_row", CodecBridge, "lobOutOfRow", BinaryType)(col -> LongType)
+  def lob_is_inline(col: Column): Column =
+    bind("lob_is_inline", LobLocator, "isInline", BooleanType)(col -> BinaryType)
+  /** NULL for an out-of-row locator. */
+  def lob_inline_data(col: Column): Column =
+    bind("lob_inline_data", LobLocator, "inlineData", BinaryType, returnNullable = true)(
+      col -> BinaryType)
+  /** NULL for an inline locator. */
+  def lob_id(col: Column): Column =
+    bind("lob_id", LobLocator, "lobId", LongType, returnNullable = true)(col -> BinaryType)
 
-  case class LobLocatorInline(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      CodecBridge.lobInline(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.functions.CodecBridge.lobInline($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class LobLocatorOutOfRow(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(LongType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      CodecBridge.lobOutOfRow(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, id => s"graft.functions.CodecBridge.lobOutOfRow($id)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class LobLocatorIsInline(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BooleanType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.LobLocator.isInline(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.LobLocator.isInline($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class LobLocatorInlineData(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = true // out-of-row locator → null
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.LobLocator.inlineData(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, b =>
-        s"""${ev.value} = graft.codec.LobLocator.inlineData($b);
-           |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class LobLocatorId(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true // inline locator → null id
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any = {
-      val id = graft.codec.LobLocator.lobId(v.asInstanceOf[Array[Byte]])
-      if (id == null) null else id.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, b =>
-        s"""java.lang.Long gLobId = graft.codec.LobLocator.lobId($b);
-           |if (gLobId == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = gLobId.longValue(); }""".stripMargin)
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  // ---- OSON binary JSON (F9) + XMLTYPE text envelope (F8) ----
+  def oson_encode(col: Column): Column =
+    bind("oson_encode", CodecBridge, "osonEncode", BinaryType)(col -> StringType)
+  def oson_decode(col: Column): Column =
+    bind("oson_decode", CodecBridge, "osonDecode", StringType)(col -> BinaryType)
+  def oraxml_clob_decode(col: Column): Column =
+    bind("oraxml_clob_decode", CodecBridge, "xmlClobDecode", StringType)(col -> BinaryType)
+  def oraxml_blob_decode(col: Column): Column =
+    bind("oraxml_blob_decode", CodecBridge, "xmlBlobDecode", StringType)(col -> BinaryType)
 
   // ---- Oracle charset names (F6) + GZIP util (F14) ----
-
-  case class OraCharsetEncode(child: Expression, oracleCharset: String)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(StringType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.OraCharset.encode(v.asInstanceOf[UTF8String].toString, oracleCharset)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cs = ctx.addReferenceObj("charset", oracleCharset, "java.lang.String")
-      defineCodeGen(ctx, ev, s => s"graft.codec.OraCharset.encode($s.toString(), $cs)")
-    }
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OraCharsetDecode(child: Expression, oracleCharset: String)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = StringType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      UTF8String.fromString(
-        graft.codec.OraCharset.decode(v.asInstanceOf[Array[Byte]], oracleCharset))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cs = ctx.addReferenceObj("charset", oracleCharset, "java.lang.String")
-      defineCodeGen(ctx, ev, b =>
-        s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.codec.OraCharset.decode($b, $cs))")
-    }
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class GzipCompress(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.GzipUtil.compress(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.GzipUtil.compress($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class GzipDecompress(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.GzipUtil.decompress(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"graft.codec.GzipUtil.decompress($b)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def oracharset_encode(col: Column, oracleCharset: String): Column =
+    bind("oracharset_encode", CodecBridge, "charsetEncode", BinaryType)(
+      col -> StringType, param(oracleCharset) -> StringType)
+  def oracharset_decode(col: Column, oracleCharset: String): Column =
+    bind("oracharset_decode", CodecBridge, "charsetDecode", StringType)(
+      col -> BinaryType, param(oracleCharset) -> StringType)
+  def gzip_compress(col: Column): Column =
+    bind("gzip_compress", GzipUtil, "compress", BinaryType)(col -> BinaryType)
+  def gzip_decompress(col: Column): Column =
+    bind("gzip_decompress", GzipUtil, "decompress", BinaryType)(col -> BinaryType)
 
   // ---- TDE column encryption (F11) ----
 
@@ -517,139 +199,44 @@ object OracleFunctions {
     override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
   }
 
-  // ---- XMLTYPE text envelope (F8) ----
-
-  case class OraXmlDecode(child: Expression, clobCarrier: Boolean)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = StringType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any = {
-      val b = v.asInstanceOf[Array[Byte]]
-      UTF8String.fromString(
-        if (clobCarrier) graft.codec.OraXml.decodeClob(b)
-        else graft.codec.OraXml.decodeBlob(b))
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b =>
-        s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          (if (clobCarrier) s"graft.codec.OraXml.decodeClob($b))"
-           else s"graft.codec.OraXml.decodeBlob($b))"))
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  // ---- OSON binary JSON (F9) ----
-
-  case class OsonEncodeText(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(StringType)
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      graft.codec.Oson.encodeText(v.asInstanceOf[UTF8String].toString)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, s => s"graft.codec.Oson.encodeText($s.toString())")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class OsonDecodeText(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = StringType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      UTF8String.fromString(graft.codec.Oson.decodeText(v.asInstanceOf[Array[Byte]]))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b =>
-        s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.codec.Oson.decodeText($b))")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  // ---- Column API ----
-
-  def oranumber_to_decimal(col: Column, precision: Int, scale: Int): Column =
-    c(OraNumberToDecimal(e(col), precision, scale))
-  def oranumber_to_long(col: Column): Column = c(OraNumberToLong(e(col)))
-  def oranumber_to_double(col: Column): Column = c(OraNumberToDouble(e(col)))
-  def oranumber_from_decimal(col: Column): Column = c(OraNumberFromDecimal(e(col)))
-  def oranumber_from_long(col: Column): Column = c(OraNumberFromLong(e(col)))
-  def oradate_to_timestamp(col: Column): Column = c(OraDateToTimestamp(e(col)))
-  def oratimestamp_from_micros(col: Column): Column = c(OraTimestampFromMicros(e(col)))
-  def orarowid(dataObj: Column, fileNo: Column, blockNo: Column, rowNo: Column): Column =
-    c(OraRowIdEncode(e(dataObj), e(fileNo), e(blockNo), e(rowNo)))
-  def orarowid_dataobj(col: Column): Column = c(OraRowIdPart(e(col), 0))
-  def orarowid_fileno(col: Column): Column = c(OraRowIdPart(e(col), 1))
-  def orarowid_blockno(col: Column): Column = c(OraRowIdPart(e(col), 2))
-  def orarowid_rowno(col: Column): Column = c(OraRowIdPart(e(col), 3))
-  def orainterval_ym_months(col: Column): Column = c(OraIntervalYMToMonths(e(col)))
-  def orainterval_ds_micros(col: Column): Column = c(OraIntervalDSToMicros(e(col)))
-  def orainterval_from_months(col: Column): Column = c(OraIntervalYMFromMonths(e(col)))
-  def orainterval_from_micros(col: Column): Column = c(OraIntervalDSFromMicros(e(col)))
-  def oratstz_encode(micros: Column, offsetMin: Column): Column =
-    c(OraTsTzEncode(e(micros), e(offsetMin)))
-  def oratstz_micros(col: Column): Column = c(OraTsTzMicros(e(col)))
-  def oratstz_offset_minutes(col: Column): Column = c(OraTsTzOffsetMinutes(e(col)))
-  def orabinarydouble_encode(col: Column): Column = c(OraBinaryDoubleEncode(e(col)))
-  def orabinarydouble_decode(col: Column): Column = c(OraBinaryDoubleDecode(e(col)))
-  def orabinaryfloat_encode(col: Column): Column = c(OraBinaryFloatEncode(e(col)))
-  def orabinaryfloat_decode(col: Column): Column = c(OraBinaryFloatDecode(e(col)))
-  def oravector_encode(col: Column): Column = c(OraVectorEncodeFloats(e(col)))
-  def oravector_decode(col: Column): Column = c(OraVectorDecodeFloats(e(col)))
-  def lob_inline(col: Column): Column = c(LobLocatorInline(e(col)))
-  def lob_out_of_row(col: Column): Column = c(LobLocatorOutOfRow(e(col)))
-  def lob_is_inline(col: Column): Column = c(LobLocatorIsInline(e(col)))
-  def lob_inline_data(col: Column): Column = c(LobLocatorInlineData(e(col)))
-  def lob_id(col: Column): Column = c(LobLocatorId(e(col)))
-  def oson_encode(col: Column): Column = c(OsonEncodeText(e(col)))
-  def oson_decode(col: Column): Column = c(OsonDecodeText(e(col)))
-  def oraxml_clob_decode(col: Column): Column = c(OraXmlDecode(e(col), clobCarrier = true))
-  def oraxml_blob_decode(col: Column): Column = c(OraXmlDecode(e(col), clobCarrier = false))
   def tde_encrypt(col: Column, dataKey: Array[Byte], encAlg: Int,
       intAlg: Int, salted: Boolean): Column =
     c(TdeEncrypt(e(col), dataKey, encAlg, intAlg, salted))
   def tde_decrypt(col: Column, dataKey: Array[Byte], encAlg: Int,
       intAlg: Int, salted: Boolean): Column =
     c(TdeDecrypt(e(col), dataKey, encAlg, intAlg, salted))
-  def oracharset_encode(col: Column, oracleCharset: String): Column =
-    c(OraCharsetEncode(e(col), oracleCharset))
-  def oracharset_decode(col: Column, oracleCharset: String): Column =
-    c(OraCharsetDecode(e(col), oracleCharset))
-  def gzip_compress(col: Column): Column = c(GzipCompress(e(col)))
-  def gzip_decompress(col: Column): Column = c(GzipDecompress(e(col)))
 
   /** SQL registration so the codecs are usable from spark.sql(...). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def unary(name: String, f: Expression => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, es => f(es.head), "built-in")
-    unary("oranumber_to_long", OraNumberToLong)
-    unary("oranumber_to_double", OraNumberToDouble)
-    unary("oradate_to_timestamp", OraDateToTimestamp)
-    unary("oranumber_from_long", OraNumberFromLong)
-    unary("oranumber_from_decimal", OraNumberFromDecimal)
-    unary("oratimestamp_from_micros", OraTimestampFromMicros)
-    unary("orainterval_ym_months", OraIntervalYMToMonths)
-    unary("orainterval_ds_micros", OraIntervalDSToMicros)
-    unary("orabinarydouble_encode", OraBinaryDoubleEncode)
-    unary("orabinarydouble_decode", OraBinaryDoubleDecode)
-    unary("orabinaryfloat_encode", OraBinaryFloatEncode)
-    unary("orabinaryfloat_decode", OraBinaryFloatDecode)
-    unary("oravector_encode", OraVectorEncodeFloats)
-    unary("oravector_decode", OraVectorDecodeFloats)
-    unary("lob_inline", LobLocatorInline)
-    unary("lob_is_inline", LobLocatorIsInline)
-    unary("lob_inline_data", LobLocatorInlineData)
-    unary("lob_id", LobLocatorId)
-    unary("oson_encode", OsonEncodeText)
-    unary("oson_decode", OsonDecodeText)
-    unary("oraxml_clob_decode", OraXmlDecode(_, clobCarrier = true))
-    unary("oraxml_blob_decode", OraXmlDecode(_, clobCarrier = false))
-    unary("gzip_compress", GzipCompress)
-    unary("gzip_decompress", GzipDecompress)
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      es => BloomMightContain(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("zvalue2",
-      es => ZValue2(es(0), es(1), bits = 16), "built-in")
+    def sql(name: String, f: Seq[Column] => Column): Unit =
+      reg.createOrReplaceTempFunction(name, es => e(f(es.map(c))), "built-in")
+    def unary(name: String, f: Column => Column): Unit = sql(name, cs => f(cs.head))
+    unary("oranumber_to_long", oranumber_to_long)
+    unary("oranumber_to_double", oranumber_to_double)
+    unary("oradate_to_timestamp", oradate_to_timestamp)
+    unary("oranumber_from_long", oranumber_from_long)
+    unary("oranumber_from_decimal", oranumber_from_decimal)
+    unary("oratimestamp_from_micros", oratimestamp_from_micros)
+    unary("orainterval_ym_months", orainterval_ym_months)
+    unary("orainterval_ds_micros", orainterval_ds_micros)
+    unary("orabinarydouble_encode", orabinarydouble_encode)
+    unary("orabinarydouble_decode", orabinarydouble_decode)
+    unary("orabinaryfloat_encode", orabinaryfloat_encode)
+    unary("orabinaryfloat_decode", orabinaryfloat_decode)
+    unary("oravector_encode", oravector_encode)
+    unary("oravector_decode", oravector_decode)
+    unary("lob_inline", lob_inline)
+    unary("lob_is_inline", lob_is_inline)
+    unary("lob_inline_data", lob_inline_data)
+    unary("lob_id", lob_id)
+    unary("oson_encode", oson_encode)
+    unary("oson_decode", oson_decode)
+    unary("oraxml_clob_decode", oraxml_clob_decode)
+    unary("oraxml_blob_decode", oraxml_blob_decode)
+    unary("gzip_compress", gzip_compress)
+    unary("gzip_decompress", gzip_decompress)
+    sql("bloom_might_contain", cs => BloomFilterOps.bloomMightContain(cs(0), cs(1)))
+    sql("zvalue2", cs => ZOrderOps.zValue2(cs(0), cs(1)))
   }
 }

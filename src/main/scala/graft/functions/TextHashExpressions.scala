@@ -1,273 +1,107 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd Catalyst expressions for the text-hash hot path.
+import graft.functions.KernelCall.{bind, param}
+
+/** Column functions for the text-hash hot path.
   *
   * The HOF formulations (`aggregate(split(s,""), …)`) evaluate an
   * interpreted lambda and allocate a UTF8String PER CHARACTER — at 100 TB
-  * that is billions of allocations inside the dedup scan. Each expression
-  * here compiles to a single static call into [[TextHash]] inside
-  * WholeStageCodegen, with identical semantics to the HOF versions (and to
-  * the DuckDB oracles).
+  * that is billions of allocations inside the dedup scan. Each function
+  * here is one [[KernelCall]] binding: a single static call into
+  * [[TextHash]] inside WholeStageCodegen, with identical semantics to the
+  * HOF versions (and to the DuckDB oracles).
   */
 object TextHashExpressions {
 
-  private def c(e: Expression): Column = GraftSqlBridge.column(e)
-  private def e(col: Column): Expression = GraftSqlBridge.expression(col)
+  private val Longs = ArrayType(LongType)
+  private val Strings = ArrayType(StringType)
+  private val LongSet = ArrayType(LongType, containsNull = false)
 
   /** polyHash(string) → long. */
-  case class PolyStringHash(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(StringType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.polyHash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, s => s"graft.functions.TextHash.polyHash($s)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def poly_hash(col: Column): Column =
+    bind("poly_hash", TextHash, "polyHash", LongType)(col -> StringType)
 
   /** min((h*a+b) mod P) over array<long>. */
-  case class PolyMinHash(child: Expression, a: Long, b: Long)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.minHash(v.asInstanceOf[ArrayData], a, b)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.minHash($h, ${a}L, ${b}L)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def poly_minhash(col: Column, a: Long, b: Long): Column =
+    bind("poly_minhash", TextHash, "minHash", LongType)(
+      col -> Longs, param(a) -> LongType, param(b) -> LongType)
 
   /** One-pass 16-bit SimHash over array<long> token hashes. */
-  case class SimHash16Expr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.simHash16(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.simHash16($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def simhash16(col: Column): Column =
+    bind("simhash16", TextHash, "simHash16", LongType)(col -> Longs)
+
+  /** 60-bit SimHash over array<long> (see TextHash.simHash60). */
+  def sim_hash60(col: Column): Column =
+    bind("sim_hash60", TextHash, "simHash60", LongType)(col -> Longs)
 
   /** Σ position·polyHash(token) mod P over array<string>. */
-  case class FingerprintExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(StringType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.fingerprint(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, t => s"graft.functions.TextHash.fingerprint($t)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def fingerprint(col: Column): Column =
+    bind("fingerprint", TextHash, "fingerprint", LongType)(col -> Strings)
 
   /** Word n-gram shingle hashes from array<string> tokens; no shingle
     * strings materialized.
     */
-  case class ShingleHashesExpr(child: Expression, n: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(StringType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.shingleHashes(v.asInstanceOf[ArrayData], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, t => s"graft.functions.TextHash.shingleHashes($t, $n)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def shingle_hashes(col: Column, n: Int): Column =
+    bind("shingle_hashes", TextHash, "shingleHashes", LongSet)(
+      col -> Strings, param(n) -> IntegerType)
 
   /** Distinct over array<long> (first-occurrence order). */
-  case class DistinctLongsExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.distinctLongs(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.distinctLongs($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def distinct_longs(col: Column): Column =
+    bind("distinct_longs", TextHash, "distinctLongs", LongSet)(col -> Longs)
 
   /** Ascending-sorted distinct array<long> — the set form
-    * [[IntersectCountSortedExpr]] merges.
+    * [[intersect_count_sorted]] merges.
     */
-  case class SortedDistinctLongsExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.sortedDistinctLongs(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.sortedDistinctLongs($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def sorted_distinct_longs(col: Column): Column =
+    bind("sorted_distinct_longs", TextHash, "sortedDistinctLongs", LongSet)(col -> Longs)
 
   /** |A ∩ B| over two ascending-sorted array<long> — allocation-free
     * merge, vs `size(array_intersect(...))` building a hash set and the
     * intersection array per evaluation just to take its length.
     */
-  case class IntersectCountSortedExpr(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any =
-      TextHash.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (a, b) => s"graft.functions.TextHash.sortedIntersectCount($a, $b)")
-    override protected def withNewChildrenInternal(nl: Expression, nr: Expression): Expression =
-      copy(left = nl, right = nr)
-  }
+  def intersect_count_sorted(a: Column, b: Column): Column =
+    bind("intersect_count_sorted", TextHash, "sortedIntersectCount", LongType)(
+      a -> Longs, b -> Longs)
 
   /** Banded byte-Levenshtein (−1 past `maxDist`) — see
     * TextHash.levBanded. The §2.69 fuzzy-verify hot path: the builtin
     * levenshtein measured ~35 µs (full) / ~7 µs (banded) per 64-char
     * pair; this compiles to one static call on primitive rows.
     */
-  case class LevBandedExpr(left: Expression, right: Expression, maxDist: Int)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(StringType, StringType)
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any =
-      TextHash.levBanded(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxDist)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (a, b) => s"graft.functions.TextHash.levBanded($a, $b, $maxDist)")
-    override protected def withNewChildrenInternal(nl: Expression, nr: Expression): Expression =
-      copy(left = nl, right = nr)
-  }
+  def lev_banded(a: Column, b: Column, maxDist: Int): Column =
+    bind("lev_banded", TextHash, "levBanded", IntegerType)(
+      a -> StringType, b -> StringType, param(maxDist) -> IntegerType)
 
   /** Count of the most frequent value in array<long> (0 for empty). */
-  case class MaxDupCountExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.maxDupCount(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.maxDupCount($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def max_dup_count(col: Column): Column =
+    bind("max_dup_count", TextHash, "maxDupCount", LongType)(col -> Longs)
 
   /** Whitespace-token count over a string — ≡ size(filter(split(s,
     * "\\s+"), _ != "")) without the token-array allocation or regex
     * (see TextHash.wsTokenCount). The count-only hot path. */
-  case class WsTokenCountExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(StringType)
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.wsTokenCount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, s => s"graft.functions.TextHash.wsTokenCount($s)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  // ---- Column API ----
-  def ws_token_count(col: Column): Column = c(WsTokenCountExpr(e(col)))
-  def lev_banded(a: Column, b: Column, maxDist: Int): Column =
-    c(LevBandedExpr(e(a), e(b), maxDist))
-  def poly_hash(col: Column): Column = c(PolyStringHash(e(col)))
-  def poly_minhash(col: Column, a: Long, b: Long): Column = c(PolyMinHash(e(col), a, b))
-  def simhash16(col: Column): Column = c(SimHash16Expr(e(col)))
-  def fingerprint(col: Column): Column = c(FingerprintExpr(e(col)))
-  def shingle_hashes(col: Column, n: Int): Column = c(ShingleHashesExpr(e(col), n))
-  /** 60-bit SimHash over array<long> (see TextHash.simHash60). */
-  case class SimHash60Expr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.simHash60(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.simHash60($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def ws_token_count(col: Column): Column =
+    bind("ws_token_count", TextHash, "wsTokenCount", IntegerType)(col -> StringType)
 
   /** Winnowing fingerprint selection (see TextHash.winnow). */
-  case class WinnowExpr(child: Expression, w: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.winnow(v.asInstanceOf[ArrayData], w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.winnow($h, $w)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def winnow(col: Column, w: Int): Column =
+    bind("winnow", TextHash, "winnow", LongSet)(col -> Longs, param(w) -> IntegerType)
 
   /** Exact Σ over array<long> (see TextHash.sumLongs). */
-  case class SumLongsExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.sumLongs(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.sumLongs($h)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def sum_longs(col: Column): Column =
+    bind("sum_longs", TextHash, "sumLongs", LongType)(col -> Longs)
 
   /** Residue-class histogram over array<long> (see TextHash.modCounts). */
-  case class ModCountsExpr(child: Expression, m: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.modCounts(v.asInstanceOf[ArrayData], m)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h => s"graft.functions.TextHash.modCounts($h, $m)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
+  def mod_counts(col: Column, m: Int): Column =
+    bind("mod_counts", TextHash, "modCounts", LongSet)(col -> Longs, param(m) -> IntegerType)
 
   /** Adjacent-pair emitter over array<string> (see TextHash.adjacentPairs):
     * one (w1, w2) struct per position, last position (wₙ, NULL).
     */
-  case class AdjacentPairsExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(StringType))
-    override def dataType: DataType = ArrayType(StructType(Seq(
+  def adjacent_pairs(col: Column): Column =
+    bind("adjacent_pairs", TextHash, "adjacentPairs", ArrayType(StructType(Seq(
       StructField("w1", StringType, nullable = false),
-      StructField("w2", StringType, nullable = true))), containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      TextHash.adjacentPairs(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, t => s"graft.functions.TextHash.adjacentPairs($t)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  def distinct_longs(col: Column): Column = c(DistinctLongsExpr(e(col)))
-  def adjacent_pairs(col: Column): Column = c(AdjacentPairsExpr(e(col)))
-  def sorted_distinct_longs(col: Column): Column = c(SortedDistinctLongsExpr(e(col)))
-  def intersect_count_sorted(a: Column, b: Column): Column =
-    c(IntersectCountSortedExpr(e(a), e(b)))
-  def max_dup_count(col: Column): Column = c(MaxDupCountExpr(e(col)))
-  def mod_counts(col: Column, m: Int): Column = c(ModCountsExpr(e(col), m))
-  def sim_hash60(col: Column): Column = c(SimHash60Expr(e(col)))
-  def winnow(col: Column, w: Int): Column = c(WinnowExpr(e(col), w))
-  def sum_longs(col: Column): Column = c(SumLongsExpr(e(col)))
+      StructField("w2", StringType, nullable = true))), containsNull = false))(col -> Strings)
 }

@@ -7,14 +7,20 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Tight-loop vector kernels + their codegen Catalyst expressions.
+import graft.functions.KernelCall.{bind, param}
+
+/** Tight-loop vector kernels + their Column functions.
   *
   * The HOF formulations (`aggregate(zip_with(a,b,…))`) build a struct per
   * element and call an interpreted lambda per element — for an ANN scan
-  * that is |pairs|·dim allocations. Each expression here is one static
-  * call inside WholeStageCodegen. Semantics are identical to the HOF
-  * versions and the DuckDB oracles (exact integer arithmetic on 1e-6
-  * quantized floats — see VectorFunctions).
+  * that is |pairs|·dim allocations. Each function here is one static
+  * call inside WholeStageCodegen: `quantize`, `dotQ`, `sq8Decode` and
+  * `lshBucket` through a [[KernelCall]] binding; the four kernels over a
+  * fixed driver-side codebook or inventory (`pqProbe`, `maxCos`,
+  * `pqEncode`, `pqLut`) through hand-written expressions that pass the
+  * `long[][]` constant as a codegen reference object. Semantics are
+  * identical to the HOF versions and the DuckDB oracles (exact integer
+  * arithmetic on 1e-6 quantized floats — see VectorFunctions).
   */
 object VectorNative {
 
@@ -373,65 +379,12 @@ object VectorNative {
     override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
   }
 
-  case class QuantizeExpr(child: Expression)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(FloatType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      VectorNative.quantize(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a => s"graft.functions.VectorNative.quantize($a)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
-  case class DotQExpr(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any =
-      VectorNative.dotQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorNative.dotQ($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-  }
-
-  case class Sq8DecodeExpr(first: Expression, second: Expression,
-      third: Expression)
-      extends TernaryExpression with ExpectsInputTypes {
-    override def inputTypes =
-      Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(q: Any, mns: Any, steps: Any): Any =
-      VectorNative.sq8Decode(q.asInstanceOf[ArrayData],
-        mns.asInstanceOf[ArrayData], steps.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b, c) =>
-        s"graft.functions.VectorNative.sq8Decode($a, $b, $c)")
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-  }
-
-  case class LshBucketExpr(child: Expression, planes: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      VectorNative.lshBucket(v.asInstanceOf[ArrayData], planes)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a => s"graft.functions.VectorNative.lshBucket($a, $planes)")
-    override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-  }
-
   private def c(e: Expression): Column = GraftSqlBridge.column(e)
   private def e(col: Column): Expression = GraftSqlBridge.expression(col)
+  private val Quantized = ArrayType(LongType, containsNull = false)
 
-  def quantize_native(col: Column): Column = c(QuantizeExpr(e(col)))
+  def quantize_native(col: Column): Column =
+    bind("quantize_native", VectorNative, "quantize", Quantized)(col -> ArrayType(FloatType))
   def max_cos_native(q: Column, bench: Seq[Seq[Long]]): Column =
     c(MaxCosExpr(e(q), bench))
   def pq_encode_native(q: Column, cents: Seq[Seq[Seq[Long]]]): Column =
@@ -440,8 +393,13 @@ object VectorNative {
     c(PqLutExpr(e(q), cents))
   def pq_probe_native(q: Column, coarse: Seq[Seq[Long]], nprobe: Int): Column =
     c(PqProbeExpr(e(q), coarse, nprobe))
-  def dotq_native(a: Column, b: Column): Column = c(DotQExpr(e(a), e(b)))
-  def lsh_bucket_native(q: Column, planes: Int): Column = c(LshBucketExpr(e(q), planes))
+  def dotq_native(a: Column, b: Column): Column =
+    bind("dotq_native", VectorNative, "dotQ", LongType)(
+      a -> ArrayType(LongType), b -> ArrayType(LongType))
+  def lsh_bucket_native(q: Column, planes: Int): Column =
+    bind("lsh_bucket_native", VectorNative, "lshBucket", LongType)(
+      q -> ArrayType(LongType), param(planes) -> IntegerType)
   def sq8_decode_native(q: Column, mns: Column, steps: Column): Column =
-    c(Sq8DecodeExpr(e(q), e(mns), e(steps)))
+    bind("sq8_decode_native", VectorNative, "sq8Decode", Quantized)(
+      q -> ArrayType(LongType), mns -> ArrayType(LongType), steps -> ArrayType(LongType))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Z-order (Morton) interleave — the clustering key behind
   * multi-dimensional data skipping: laying a 100 TB table out in z-value
@@ -29,30 +26,10 @@ object ZOrderKernel {
 }
 
 object ZOrderOps {
-  private def c(e: Expression): Column = GraftSqlBridge.column(e)
-  private def e(col: Column): Expression = GraftSqlBridge.expression(col)
-
   /** z-value of two non-negative long dims, `bits` bits each (≤ 31). */
-  def zValue2(x: Column, y: Column, bits: Int = 16): Column =
-    c(ZValue2(e(x), e(y), bits))
-}
-
-case class ZValue2(left: Expression, right: Expression, bits: Int)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  require(bits > 0 && bits <= 31, s"bits must be in [1,31], got $bits")
-
-  override def inputTypes = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    ZOrderKernel.interleave2(x.asInstanceOf[Long], y.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) =>
-      s"graft.functions.ZOrderKernel.interleave2($x, $y, $bits)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZValue2 = copy(left = l, right = r)
+  def zValue2(x: Column, y: Column, bits: Int = 16): Column = {
+    require(bits > 0 && bits <= 31, s"bits must be in [1,31], got $bits")
+    KernelCall.bind("zvalue2", ZOrderKernel, "interleave2", LongType)(
+      x -> LongType, y -> LongType, KernelCall.param(bits) -> IntegerType)
+  }
 }

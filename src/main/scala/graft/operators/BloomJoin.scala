@@ -38,10 +38,8 @@ object BloomJoin extends GateFamily {
     // probe bit positions the builder never set — silent false
     // NEGATIVES, i.e. dropped matching rows, not just lost efficiency
     val bf = dim.agg(bloomAgg(dimKey, numBits, hashes).as("__bf"))
-    fact.filter(GraftSqlBridge.column(
-      graft.functions.BloomMightContain(
-        GraftSqlBridge.scalarSubquery(bf),
-        GraftSqlBridge.expression(factKey))))
+    fact.filter(bloomMightContain(
+      GraftSqlBridge.column(GraftSqlBridge.scalarSubquery(bf)), factKey))
   }
 
   def gates: Seq[Gate] = Seq(

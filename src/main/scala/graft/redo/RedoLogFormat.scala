@@ -327,6 +327,11 @@ object RedoLogReader {
     import RedoLogFormat._
     val header = readHeader(src, name)
     val blockSize = header.blockSize
+    // the writer emits whole blocks only: a partial tail is a torn copy,
+    // and dropping it would drop the records it carries
+    if (src.length % blockSize != 0)
+      throw new java.io.IOException(s"torn redo segment $name: ${src.length} bytes " +
+        s"is not a whole number of $blockSize-byte blocks")
     val totalBlocks = (src.length / blockSize).toInt // incl. header block
     val payloadPer = blockSize - HeaderBytes
     val bn0 = math.max(1, startBlock)
@@ -379,10 +384,15 @@ object RedoLogReader {
     val bytes =
       if (effStartOffset == 0) out
       else java.util.Arrays.copyOfRange(out, effStartOffset, out.length)
-    parseStream(bytes)
+    parseStream(bytes, name)
   }
 
-  private[redo] def parseStream(bytes: Array[Byte]): Iterator[RedoRecord] = {
+  /** Records of a stitched payload. It ends at a zero record length
+    * (the writer's padding) or with fewer than 4 bytes left; a record
+    * length below 4 or past the payload's end is a corrupt or truncated
+    * segment and fails naming `name`.
+    */
+  private def parseStream(bytes: Array[Byte], name: String): Iterator[RedoRecord] = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     new Iterator[RedoRecord] {
       private var nextRec: RedoRecord = _
@@ -414,7 +424,10 @@ object RedoLogReader {
         if (bb.remaining() < 4) { done = true; return }
         val start = bb.position()
         val recLen = bb.getInt
-        if (recLen <= 0 || bb.remaining() < recLen - 4) { done = true; return }
+        if (recLen == 0) { done = true; return }
+        if (recLen < 4 || bb.remaining() < recLen - 4)
+          throw new java.io.IOException(s"truncated redo segment $name: record at " +
+            s"payload offset $start has length $recLen, ${bb.remaining() + 4} bytes remain")
         val scn = bb.getLong
         val ssn = bb.getShort & 0xffff
         val ts = bb.getLong
@@ -462,7 +475,7 @@ object RedoLogReader {
             case (LayerDdl, OpDdlStmt) =>
               op = Ops.Ddl; after = rows.headOption.getOrElse(Map.empty)
             case other =>
-              throw new java.io.IOException(s"unknown change vector $other")
+              throw new java.io.IOException(s"unknown change vector $other in $name")
           }
         }
         bb.position(start + recLen)

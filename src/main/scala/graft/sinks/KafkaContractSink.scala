@@ -19,15 +19,13 @@ import org.apache.spark.sql.functions._
   *  - topic names come from the K1 mappers, partitions from key hash or
   *    the RAC THREAD#−1 rule.
   *
-  * With a `batchId`, each (topic, partition) run lands as ONE atomic
+  * Each (topic, partition) run of a batch lands as ONE atomic
   * per-batch segment `topic-partition.jsonl.b<id>` (temp write + atomic
   * rename): Spark task RETRIES and checkpoint REPLAYS overwrite the
   * same segment with identical content instead of re-appending —
   * duplication-free where a plain append was only at-least-once. A
   * partition's log is its segments concatenated in batch order (the id
-  * is zero-padded so name order IS batch order). Without a batchId the
-  * legacy single append-only `topic-partition.jsonl` file is kept (the
-  * one-shot test surface). Swapping this for
+  * is zero-padded so name order IS batch order). Swapping this for
   * `writeStream.format("kafka")` is a config change: the routing
   * columns are the same ones the Kafka connector reads.
   *
@@ -79,8 +77,8 @@ object KafkaContractSink {
     * in-partition order (commit SCN first, like the reference's
     * delivery order).
     *
-    * Pass the foreachBatch `batchId` for idempotent delivery (atomic
-    * per-batch segments, see the class doc). The done-marker carries a
+    * `batchId` is the foreachBatch id (≥ 0): it names the atomic
+    * per-batch segments (see the class doc). The done-marker carries a
     * CONTENT FINGERPRINT: a marker whose fingerprint matches this
     * batch is a true replay and skips; a mismatch means the marker
     * came from a DIFFERENT stream incarnation (checkpoint reset over a
@@ -90,35 +88,35 @@ object KafkaContractSink {
     * run.
     */
   def writeBatch(batch: DataFrame, dir: String, orderCols: Seq[String],
-      batchId: Long = -1L): Unit = {
+      batchId: Long): Unit = {
+    require(batchId >= 0, s"batchId must be a foreachBatch id (>= 0), got $batchId")
     val required = Seq("topic", "partition", "key", "value")
     val missing = required.filterNot(batch.columns.contains)
     require(missing.isEmpty, s"kafka contract batch lacks columns: $missing")
     new File(dir).mkdirs()
-    val marker =
-      if (batchId >= 0) Some(new File(dir, s".batch-$batchId.done")) else None
+    val marker = new File(dir, s".batch-$batchId.done")
     // cache across the fingerprint job and the delivery job — without
-    // it every marked batch recomputes its upstream twice
-    val cached = if (batchId >= 0) batch.persist() else batch
-    val fingerprint: Option[String] = marker.map { _ =>
-      // deterministic content fingerprint (row-order-independent): the
-      // same logical batch replayed computes the same value
+    // it every batch recomputes its upstream twice
+    val cached = batch.persist()
+    try {
+    // deterministic content fingerprint (row-order-independent): the
+    // same logical batch replayed computes the same value
+    val fingerprint = {
       val r = cached.select(
         count(lit(1)).cast("long"),
         coalesce(sum(hash(col("topic"), col("partition"), col("key"),
           col("value")).cast("long")), lit(0L))).head()
       s"${r.getLong(0)}:${r.getLong(1)}"
     }
-    try {
-    marker.filter(_.exists()).foreach { m =>
-      val stored = new String(java.nio.file.Files.readAllBytes(m.toPath),
+    if (marker.exists()) {
+      val stored = new String(java.nio.file.Files.readAllBytes(marker.toPath),
         java.nio.charset.StandardCharsets.UTF_8).trim
       // only an EXACT fingerprint match is a true replay. An EMPTY
       // marker (crash between create and write) proves nothing about
       // delivery — redeliver; segments are atomic overwrites, so a
       // redelivery is always safe where a skip can lose the batch
       // forever.
-      if (stored == fingerprint.get) return
+      if (stored == fingerprint) return
       // mismatch/empty: the marker came from a DIFFERENT incarnation
       // (checkpoint reset over a kept dir). Delivering only this
       // batch's pairs would leave the OLD incarnation's segments for
@@ -147,14 +145,12 @@ object KafkaContractSink {
       var fin: java.nio.file.Path = null
       def closeSegment(): Unit = if (out != null) {
         out.close(); out = null
-        if (tmp != null) {
-          // atomic appearance: a retry/replay re-produces the identical
-          // segment and the rename replaces it — never a partial append
-          java.nio.file.Files.move(tmp, fin,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          tmp = null
-        }
+        // atomic appearance: a retry/replay re-produces the identical
+        // segment and the rename replaces it — never a partial append
+        java.nio.file.Files.move(tmp, fin,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        tmp = null
       }
       try {
         rows.foreach { r =>
@@ -165,21 +161,10 @@ object KafkaContractSink {
             // explicit UTF-8: a real Kafka producer delivers UTF-8
             // bytes; the platform-default charset would corrupt
             // non-ASCII payloads on non-UTF-8 JVMs
-            if (bid >= 0) {
-              fin = new File(dir,
-                f"${tp._1}-${tp._2}.jsonl.b$bid%09d").toPath
-              tmp = new File(dir,
-                f".${tp._1}-${tp._2}.b$bid%09d.inprogress").toPath
-              out = java.nio.file.Files.newBufferedWriter(tmp,
-                java.nio.charset.StandardCharsets.UTF_8)
-            } else {
-              fin = null; tmp = null
-              out = java.nio.file.Files.newBufferedWriter(
-                new File(dir, s"${tp._1}-${tp._2}.jsonl").toPath,
-                java.nio.charset.StandardCharsets.UTF_8,
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
-            }
+            fin = new File(dir, f"${tp._1}-${tp._2}.jsonl.b$bid%09d").toPath
+            tmp = new File(dir, f".${tp._1}-${tp._2}.b$bid%09d.inprogress").toPath
+            out = java.nio.file.Files.newBufferedWriter(tmp,
+              java.nio.charset.StandardCharsets.UTF_8)
           }
           out.write(enc(r.getString(2)))
           out.write('\t')
@@ -194,10 +179,8 @@ object KafkaContractSink {
         if (tmp != null) java.nio.file.Files.deleteIfExists(tmp)
       }
     }
-    marker.foreach { m =>
-      java.nio.file.Files.write(m.toPath,
-        fingerprint.get.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    } finally if (batchId >= 0) cached.unpersist(blocking = false)
+    java.nio.file.Files.write(marker.toPath,
+      fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } finally cached.unpersist(blocking = false)
   }
 }

@@ -11,6 +11,14 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `types.AbstractDataType` (package-private): the type of an entry in
+    * `ExpectsInputTypes.inputTypes` — a `DataType` or a type family such
+    * as `DecimalType` or a `TypeCollection`.
+    */
+  type InputType = types.AbstractDataType
+  /** An input that accepts any one of `ts`. */
+  def oneOf(ts: InputType*): InputType = types.TypeCollection(ts: _*)
+
   /** The given one-row/one-column frame as a scalar-subquery expression —
     * the shape Spark's own runtime-filter injection uses: the subquery
     * plan executes ONCE and its value is bound into the outer plan as a

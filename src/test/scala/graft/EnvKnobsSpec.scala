@@ -1,9 +1,5 @@
 package graft
 
-import java.io.File
-
-import scala.io.Source
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine reads only the environment a deployment sets. A new knob
@@ -19,28 +15,13 @@ class EnvKnobsSpec extends AnyFunSuite {
   private val named =
     """(?:sys\.env(?:\.(?:get|getOrElse|contains|apply))?|System\.getenv)\(\s*"([^"]*)"""".r
 
-  private def scalaFiles(f: File): Seq[File] =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
-      .flatMap(scalaFiles)
-    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-
-  private lazy val mainSrc: File =
-    Iterator.iterate(new File(".").getAbsoluteFile)(_.getParentFile)
-      .takeWhile(_ != null)
-      .map(new File(_, "src/main/scala/graft"))
-      .find(_.isDirectory)
-      .getOrElse(fail("src/main/scala/graft not found above the working dir"))
-
   test("src/main reads no environment variable outside the allowlist") {
     val reads = for {
-      f <- scalaFiles(mainSrc)
-      (line, no) <- {
-        val src = Source.fromFile(f, "UTF-8")
-        try src.getLines().toList.zipWithIndex finally src.close()
-      }
+      f <- MainSources.files
+      (line, no) <- MainSources.text(f).linesIterator.toList.zipWithIndex
       if read.findFirstIn(line).isDefined
     } yield (s"${f.getName}:${no + 1}", line)
-    assert(reads.nonEmpty, s"no env reads found under $mainSrc")
+    assert(reads.nonEmpty, s"no env reads found under ${MainSources.root}")
     // every read must name its variable, so the allowlist can judge it
     val unnamed = reads.filter { case (_, l) =>
       read.findAllIn(l).size != named.findAllIn(l).size }

@@ -143,7 +143,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the final adaptive plan marks codegen stages with the `*(n)` star
     val p1 = finalPlan("f1_oranum_long")
     assert(p1.contains("*(") &&
-      """\*\(\d+\) Project \[.*oranumbertolong""".r.findFirstIn(p1).isDefined,
+      """\*\(\d+\) Project \[.*OraNumber\.decodeToLong""".r.findFirstIn(p1).isDefined,
       s"codec projection must sit inside a codegen stage:\n$p1")
     assert(finalPlan("f2_bin_double").contains("*("))
   }
@@ -574,7 +574,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin") &&
       !p.contains("CartesianProduct"),
       s"SNM band join must be equi-keyed:\n$p")
-    assert(p.contains("levbandedexpr"),
+    assert(p.contains("TextHash.levBanded"),
       s"verify must run through the native banded kernel:\n$p")
     // r16: the rank is the range-partitioned two-pass scan — a Window
     // here would mean the per-language single-task sort is back

@@ -85,7 +85,7 @@ class Round4OpsSpec extends AnyFunSuite {
     val plan = BloomJoin.bloomPrefilter(fact, col("fk"), dim, col("dk"))
       .join(dim.hint("merge"), col("fk") === col("dk"))
       .queryExecution.executedPlan.toString
-    val probeAt = plan.indexOf("bloommightcontain")
+    val probeAt = plan.indexOf("BloomKernel.mightContain")
     val exchangeAt = plan.indexOf("Exchange hashpartitioning(fk")
     assert(probeAt >= 0, s"probe missing from plan:\n$plan")
     assert(exchangeAt >= 0, s"expected a shuffled join:\n$plan")

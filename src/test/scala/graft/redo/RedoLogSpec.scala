@@ -78,6 +78,34 @@ class RedoLogSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("checksum"))
   }
 
+  /** A written log cut to its first `keep(length)` bytes. */
+  private def cut(records: Seq[RedoRecord], keep: Long => Long): File = {
+    val f = new File(tmpDir(), "log_1.grl")
+    val w = new RedoLogWriter(f, blockSize = 512)
+    records.foreach(w.append)
+    w.close()
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try raf.setLength(keep(raf.length())) finally raf.close()
+    f
+  }
+
+  test("a log cut mid-block fails naming the file, never drops its tail") {
+    val f = cut((1 to 50).map(i => rec(i, "tx", Ops.Insert,
+      after = Map("k" -> ("payload" * 10 + i)))), _ - 100)
+    val ex = intercept[java.io.IOException](RedoLogReader.records(f).toSeq)
+    assert(ex.getMessage.contains(f.getPath) && ex.getMessage.contains("torn"),
+      ex.getMessage)
+  }
+
+  test("a log missing the last block of a multi-block record fails naming the file") {
+    val big = (1 to 200).map(i => s"col_$i" -> ("v" * 50 + i)).toMap // ~11 KB
+    val f = cut(Seq(rec(1, "tx", Ops.Insert, after = Map("a" -> "1")),
+      rec(2, "tx", Ops.Insert, after = big)), _ - 512)
+    val ex = intercept[java.io.IOException](RedoLogReader.records(f).toSeq)
+    assert(ex.getMessage.contains(f.getPath) && ex.getMessage.contains("truncated"),
+      ex.getMessage)
+  }
+
   test("RBA positioning starts at the first record of a later block") {
     val dir = tmpDir()
     val f = new File(dir, "log_1.grl")

@@ -130,6 +130,17 @@ class KafkaContractSinkSpec extends AnyFunSuite {
     assert(content == List("k1\tnew-run"))
   }
 
+  test("a negative batchId is rejected by name, nothing is written") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("k1_neg").toFile
+    val batch = Seq(("t", 0, "k1", "v")).toDF("topic", "partition", "key", "value")
+      .withColumn("scn", lit(1L))
+    val ex = intercept[IllegalArgumentException](
+      KafkaContractSink.writeBatch(batch, out.getAbsolutePath, Seq("scn"), batchId = -1))
+    assert(ex.getMessage.contains("batchId") && ex.getMessage.contains("-1"))
+    assert(out.listFiles().isEmpty)
+  }
+
   test("null key and null value (tombstone) encode instead of NPEing") {
     import spark.implicits._
     val out = Files.createTempDirectory("k1_null").toFile.getAbsolutePath
