@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder for the entry points (Verify, Bench): every
-  * gate runs under the same configuration whichever of them drives it.
+/** The one session builder for the entry points (Verify, Bench) and the
+  * test suites: every gate and every test runs under the same
+  * configuration whichever of them drives it.
   */
 object GraftSession {
 
@@ -58,6 +59,10 @@ object GraftSession {
       // graft optimizer rules (row_number≤k → bounded-heap top-k): the
       // gates run THROUGH the rewrites, so the DuckDB oracle checks them
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // transformWithState (ChangeStreams.assembleStream,
+      // CsfReassembly.reassembleStream) runs only on the RocksDB store
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -84,7 +85,11 @@ object JdbcGateQueries extends GateFamily {
             } finally { ps.close(); c.close() }
           }
         }
+      val fs = FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+      // the result is read lazily from outDir, so it goes at JVM exit
       val outDir = Files.createTempDirectory("s3_poll_out").toFile.getAbsolutePath
+      fs.deleteOnExit(new Path(outDir))
+      val ckpt = Files.createTempDirectory("s3_poll_ckpt").toFile.getAbsolutePath
       val q = s.readStream.format("graft-jdbc-poll")
         .option("url", url)
         .option("table", "APP.ORD_CDC")
@@ -94,8 +99,7 @@ object JdbcGateQueries extends GateFamily {
         .option("numPartitions", "8")
         .load()
         .writeStream
-        .option("checkpointLocation",
-          Files.createTempDirectory("s3_poll_ckpt").toFile.getAbsolutePath)
+        .option("checkpointLocation", ckpt)
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.write.mode("append").parquet(outDir)
           ()
@@ -103,11 +107,13 @@ object JdbcGateQueries extends GateFamily {
         .trigger(Trigger.AvailableNow()).start()
       // a timed-out stream must fail loudly, not fall through to read a
       // partially-written directory while the query still runs
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "s3_jdbc_poll: AvailableNow drain did not finish within 300s")
-      }
+      try {
+        if (!q.awaitTermination(300000)) {
+          q.stop()
+          throw new IllegalStateException(
+            "s3_jdbc_poll: AvailableNow drain did not finish within 300s")
+        }
+      } finally fs.delete(new Path(ckpt), true)
       // the stream has drained to parquet; the Derby copy of orders is
       // dead weight from here — release its heap
       dropDerby(url)

@@ -3,6 +3,7 @@ package graft.operators
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,6 +54,9 @@ object SourceQueries extends GateFamily {
       .getOption("spark.graft.redo.gateDir")
       .map { d => val f = new File(d); f.mkdirs(); Files.createTempDirectory(f.toPath, "gate").toFile }
       .getOrElse(Files.createTempDirectory("graft_redo_gate").toFile)
+    // read lazily and cached per application, so the logs go at JVM exit
+    FileSystem.getLocal(records.sparkSession.sparkContext.hadoopConfiguration)
+      .deleteOnExit(new Path(base.getAbsolutePath))
     val out = new File(base, "logs")
     out.mkdirs()
     val path = out.getAbsolutePath

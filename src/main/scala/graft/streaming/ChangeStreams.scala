@@ -54,10 +54,9 @@ object ChangeStreams {
   }
 
   /** Streaming assembly: buffers per open transaction, emits at commit.
-    * Use with OutputMode.Append and the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`), which `transformWithState`
-    * requires and which large transactions need for spill anyway.
+    * Use with OutputMode.Append on a session from [[graft.GraftSession]],
+    * which sets the RocksDB state store provider that `transformWithState`
+    * requires and that large transactions need for spill anyway.
     *
     * PRODUCTION: set `idleTimeoutMs` (e.g. 30 min) so transactions whose
     * terminal record is lost don't pin state forever. The default is 0

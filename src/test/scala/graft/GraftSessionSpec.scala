@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.TopKRewrite
+
 class GraftSessionSpec extends AnyFunSuite {
 
   test("an unset core count means every available core") {
@@ -34,5 +36,14 @@ class GraftSessionSpec extends AnyFunSuite {
         assert(e.getMessage.contains("SPARK_GRAFT_ONLY"), e.getMessage)
         unknown.foreach(n => assert(e.getMessage.contains(s"'$n'"), e.getMessage))
     }
+  }
+
+  test("a built session runs the RocksDB state store and graft's optimizer rules") {
+    val s = SharedSpark.spark
+    assert(s.conf.get("spark.sql.streaming.stateStore.providerClass") ===
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    assert(s.conf.get("spark.sql.extensions") === "graft.plans.GraftExtensions")
+    assert(s.sessionState.optimizer.batches.exists(_.rules.contains(TopKRewrite)),
+      "GraftExtensions did not install TopKRewrite")
   }
 }

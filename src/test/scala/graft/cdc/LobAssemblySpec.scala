@@ -2,9 +2,10 @@ package graft.cdc
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.TransactionAssembler.{assemble, LobRef}
 
-class LobAssemblySpec extends AnyFunSuite {
+class LobAssemblySpec extends AnyFunSuite with SharedSpark {
 
   private def chunk(scn: Long, lobId: String, seq: Int, data: String) =
     RedoRecord(scn, seq, "tx", Ops.LobChunk, "S.T", "", rollback = false,
@@ -66,14 +67,6 @@ class LobAssemblySpec extends AnyFunSuite {
     // statement log (ref `OraCdcTransaction.java:1991-2263` keeps LOBs in
     // the transaction buffer for the same reason), so an out-of-row LOB
     // written across micro-batches resolves at the commit batch.
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input =

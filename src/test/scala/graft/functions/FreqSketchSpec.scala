@@ -1,16 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class FreqSketchSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .appName("freq-sketch-spec").getOrCreate()
+class FreqSketchSpec extends AnyFunSuite with SharedSpark {
 
   /** zipf-ish skewed stream: token i appears ~N/i times. */
   private def skewed(n: Int): Seq[String] =

@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The kernel bindings compute the same values in generated code as in
   * interpreted evaluation, on seeded-random inputs with NULLs: every
@@ -12,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * codegen on) and once under `NO_CODEGEN` (whole-stage codegen off, so
   * each call is evaluated reflectively), and the rows must be equal.
   */
-class KernelBindingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("kernel-binding-spec").getOrCreate()
+class KernelBindingSpec extends AnyFunSuite with SharedSpark {
 
   private val schema = StructType(Seq(
     StructField("l", LongType), StructField("l2", LongType),
@@ -98,11 +93,11 @@ class KernelBindingSpec extends AnyFunSuite {
   }
 
   /** The kernels over `seed`'s rows: (rows, executed plan). */
-  private def run(seed: Long, generated: Boolean): (Seq[Seq[Any]], String) = {
-    spark.conf.set("spark.sql.codegen.factoryMode",
-      if (generated) "CODEGEN_ONLY" else "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", generated)
-    try {
+  private def run(seed: Long, generated: Boolean): (Seq[Seq[Any]], String) =
+    withConf(
+        "spark.sql.codegen.factoryMode" ->
+          (if (generated) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.wholeStage" -> generated.toString) {
       // an RDD source, not a local relation, so the optimizer cannot
       // evaluate the projection itself
       val df = spark.createDataFrame(
@@ -112,11 +107,7 @@ class KernelBindingSpec extends AnyFunSuite {
         case v => v
       })
       (out, df.queryExecution.executedPlan.toString)
-    } finally {
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-      spark.conf.unset("spark.sql.codegen.wholeStage")
     }
-  }
 
   test("generated and interpreted kernel calls agree on random inputs") {
     Seq(20261018L, 7L, 991L).foreach { seed =>

@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Unit fixtures for the LLM-pipeline function layer: known-value hash
   * folds, shingles, simhash determinism, quantized vector math, and the
   * multimodal stub plumbing.
   */
-class PipelineFunctionsSpec extends AnyFunSuite {
+class PipelineFunctionsSpec extends AnyFunSuite with SharedSpark {
 
   test("the polynomial-hash modulus has exactly one value everywhere") {
     // TextHash.P and TextFunctions.P are separate definitions (a val
@@ -18,12 +19,6 @@ class PipelineFunctionsSpec extends AnyFunSuite {
     // and every DuckDB oracle
     assert(graft.functions.TextHash.P == graft.functions.TextFunctions.P)
   }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def one[T](c: org.apache.spark.sql.Column): T = {
     import spark.implicits._

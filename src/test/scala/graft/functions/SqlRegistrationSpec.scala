@@ -1,24 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The codec expressions must be reachable from plain spark.sql — the
   * surface a SQL-facing user of the reference would migrate to.
   */
-class SqlRegistrationSpec extends AnyFunSuite {
+class SqlRegistrationSpec extends AnyFunSuite with SharedSpark
+    with BeforeAndAfterAll {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("sql-reg-spec").getOrCreate()
-    OracleFunctions.register(s)
-    s
-  }
+  override def beforeAll(): Unit = OracleFunctions.register(spark)
 
   private def hex(b: Array[Byte]): String = b.map("%02X".format(_)).mkString("X'", "", "'")
 

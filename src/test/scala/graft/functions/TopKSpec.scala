@@ -1,17 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TopKSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("topk-spec").getOrCreate()
+class TopKSpec extends AnyFunSuite with SharedSpark {
 
   test("heap keeps k best with score-desc id-asc tie-break, merge works") {
     val h = new TopKHeap(3)

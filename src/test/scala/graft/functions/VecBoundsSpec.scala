@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** VecBoundsAgg: element-wise min/max bounds in one mergeable pass —
   * correctness vs the explode formulation, buffer merge/shrink rules,
   * and the serialize roundtrip partial aggregation depends on.
   */
-class VecBoundsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .appName("vec-bounds-spec").getOrCreate()
+class VecBoundsSpec extends AnyFunSuite with SharedSpark {
 
   test("bounds equal the explode formulation on random vectors") {
     import spark.implicits._

@@ -2,22 +2,16 @@ package graft.metrics
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The metrics MBean must be readable through the PLATFORM MBean server
   * — the same path a JMX console or exporter uses against the
   * reference's connector metrics.
   */
-class CdcMetricsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("cdc-metrics-spec").getOrCreate()
+class CdcMetricsSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming progress surfaces through the JMX MBean") {
     import spark.implicits._

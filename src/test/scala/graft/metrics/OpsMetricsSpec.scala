@@ -4,10 +4,12 @@ import java.io.File
 import java.lang.management.ManagementFactory
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.redo.RedoLogWriter
 
@@ -16,14 +18,7 @@ import graft.redo.RedoLogWriter
   * path a JMX console uses against the reference's
   * OraCdcInitialLoad / OraCdcSourceConnMgmt beans.
   */
-class OpsMetricsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("ops-metrics-spec").getOrCreate()
+class OpsMetricsSpec extends AnyFunSuite with SharedSpark {
 
   private val mbs = ManagementFactory.getPlatformMBeanServer
 
@@ -96,10 +91,15 @@ class OpsMetricsSpec extends AnyFunSuite {
       graft.redo.ShipmentClient.fetch(
         s"${graft.redo.RedoShipment.Scheme}127.0.0.1:${server.boundPort}" +
           new File(dir, "log_1.grl").getAbsolutePath, dest)
-      assert(mbs.getAttribute(m.objectName, "ProcessedFilesCount") == 1)
-      assert(mbs.getAttribute(m.objectName, "ProcessedBytesCount") ==
-        payload.length.toLong)
-      assert(mbs.getAttribute(m.objectName, "LastProcessedFile") == "log_1.grl")
+      // the agent counts a chunk after writing it and the file after the
+      // last flush, so the fetch can return before the agent's handler
+      // has recorded them: wait for it, then the counts are final
+      eventually(timeout(10.seconds)) {
+        assert(mbs.getAttribute(m.objectName, "ProcessedFilesCount") == 1)
+        assert(mbs.getAttribute(m.objectName, "ProcessedBytesCount") ==
+          payload.length.toLong)
+        assert(mbs.getAttribute(m.objectName, "LastProcessedFile") == "log_1.grl")
+      }
       assert(mbs.getAttribute(m.objectName, "MiBPerSecond")
         .asInstanceOf[Double] >= 0.0)
     } finally { m.uninstall(); server.close() }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Measured quality of the approximate ANN paths against the exact
   * brute-force baseline: recall@5 over the same query set. IVF's
@@ -11,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cell assignment or probing silently degrading the index shows up as
   * a failing number, not as user-visible bad neighbors at 100 TB.
   */
-class AnnRecallSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("ann-recall-spec").getOrCreate()
+class AnnRecallSpec extends AnyFunSuite with SharedSpark {
 
   private def recallAt5(dir: String): Double = {
     val bf = SimilarityQueries.queries("ann_brute_topk")(spark, dir)
@@ -58,8 +52,7 @@ class AnnRecallSpec extends AnyFunSuite {
       SimilarityQueries.queries("ann_incr")(spark, dir)
         .collect().map(_.toString).sorted
     val incrBroadcast = runIncr()
-    spark.conf.set("graft.ann.maxBroadcastQueries", "0")
-    try {
+    withConf("graft.ann.maxBroadcastQueries" -> "0") {
       val viaSalted = run()
       assert(viaSalted.length == viaBroadcast.length &&
         viaSalted.sameElements(viaBroadcast),
@@ -68,7 +61,7 @@ class AnnRecallSpec extends AnyFunSuite {
       assert(incrSalted.length == incrBroadcast.length &&
         incrSalted.sameElements(incrBroadcast),
         "salted serve path (codes-replicated branch) diverged from broadcast")
-    } finally spark.conf.unset("graft.ann.maxBroadcastQueries")
+    }
   }
 
   /** Recall@5 of the scaled-rule serve vs the exact brute top-5 over

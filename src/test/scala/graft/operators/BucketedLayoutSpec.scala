@@ -2,8 +2,9 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Lifecycle of the bucketed star layout (the `ensureCuratedBase`
   * contract applied to storage layout): build-once, marker-gated reuse,
@@ -11,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * place, and correct results served through the registered external
   * bucketed tables either way.
   */
-class BucketedLayoutSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("bucketed-layout-spec").getOrCreate()
+class BucketedLayoutSpec extends AnyFunSuite with SharedSpark {
 
   test("build once, reuse via marker, rebuild on in-place regeneration") {
     import org.apache.spark.sql.functions._
@@ -125,9 +119,7 @@ class BucketedLayoutSpec extends AnyFunSuite {
 
     // appended keys join appended keys; base keys join base keys —
     // and the whole thing plans without an orderkey exchange
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(oT)
         .join(spark.table(lT), col("l_orderkey") === col("o_orderkey"))
         .groupBy((col("o_orderkey") >= 10000000L).as("appended"))
@@ -142,7 +134,7 @@ class BucketedLayoutSpec extends AnyFunSuite {
         s"appended layout lost co-partitioning:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"join did not use the bucketed scan:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
 
     // —— compaction keeps the bucketed layout (the §2.21 × §2.56
     // maintenance contract): the appends above left one file per
@@ -175,8 +167,7 @@ class BucketedLayoutSpec extends AnyFunSuite {
     assert(Compaction.bucketedFileFactor(spark, oT) <= 1.0,
       "trigger must read fully-compacted after the rewrite")
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(oT)
         .join(spark.table(lT), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderkey")).agg(count(lit(1)).as("n"))
@@ -188,7 +179,7 @@ class BucketedLayoutSpec extends AnyFunSuite {
         s"compaction lost co-partitioning:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"compacted join did not use the bucketed scan:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
   }
 
   test("appendMaintained keeps file counts bounded across many batches") {

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The r16 single-partition contraction shortcut: when the whole
   * candidate graph fits one union-find task, the contraction's output is
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * graph with chains (the loop's hard case), cliques, singletons and
   * self-loops.
   */
-class CcShortcutSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("cc-shortcut-spec").getOrCreate()
+class CcShortcutSpec extends AnyFunSuite with SharedSpark {
 
   private def reference(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]

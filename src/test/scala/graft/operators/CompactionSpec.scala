@@ -1,17 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CompactionSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("compaction-spec").getOrCreate()
+class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   private def parquetFiles(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles().toSeq

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Pins the one-file-per-bucket property of the star-layout BUILD on a
   * MULTI-SPLIT input under AQE — the shape where the insertInto route
@@ -14,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the scan's file-count economics both ride on exactly one sorted
   * file per bucket.
   */
-class CtasAlignmentSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("ctas-alignment-spec").getOrCreate()
+class CtasAlignmentSpec extends AnyFunSuite with SharedSpark {
 
   test("star-layout build writes exactly one file per non-empty bucket " +
       "from a multi-split input") {

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantics of the corpus-curation gates added for the C4/CCNet/DSIR
   * pipeline stages (`text_ldedup`, `text_classify`, `text_dsir`) on
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * inspection — the oracle gates prove engine equivalence at SF scale,
   * these prove the operator does what the curation literature says.
   */
-class CurationOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("curation-ops-spec").getOrCreate()
+class CurationOpsSpec extends AnyFunSuite with SharedSpark {
 
   /** Writes a documents.parquet micro-corpus and returns its dir. */
   private def corpus(rows: Seq[(Long, String, String)]): String = {

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Invariants of the winnow-fingerprint dedup path (`dedup_winnow`)
   * beyond the DuckDB gate: the fingerprint substitution must KEEP the
@@ -12,16 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * substitution; the Schleimer shared-span guarantee itself is proven
   * in WinnowPropsSpec / VectorKernelPropsSpec).
   */
-class DedupWinnowSpec extends AnyFunSuite {
+class DedupWinnowSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("dedup-winnow-spec").getOrCreate()
 
   test("every exact-duplicate pair is found with jac = 1.0") {
     // exact text duplicates (with >= 4 3-gram shingles, the winnow

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The range-partitioned sorted-neighborhood rank (DedupQueries.snmRanked,
   * r16) must agree bit-for-bit with the windowed formulation it replaced
@@ -12,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a single-task sort of most of the corpus under a dominant language —
   * which is exactly the skewed-key scale-killer the decomposition removes.
   */
-class FuzzySnmSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 7)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("fuzzy-snm-spec").getOrCreate()
+class FuzzySnmSpec extends AnyFunSuite with SharedSpark {
 
   private def windowed(d: DataFrame): Seq[(Long, String, Long)] = {
     import spark.implicits._
@@ -68,9 +63,11 @@ class FuzzySnmSpec extends AnyFunSuite {
     import spark.implicits._
     // 7 shuffle partitions over 30 rows of one language forces language
     // spans to straddle several range partitions (the offset-seeding path)
-    val rows = (0L until 30L).map(i => (i, "en", s"k${i % 5}"))
-    val d = rows.toDF("doc_id", "lang", "k")
-    assert(decomposed(d) === windowed(d))
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val rows = (0L until 30L).map(i => (i, "en", s"k${i % 5}"))
+      val d = rows.toDF("doc_id", "lang", "k")
+      assert(decomposed(d) === windowed(d))
+    }
   }
 
   test("dedup_fuzzy gate plan contains no Window and no single-task sort " +

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** PageRank semantics (§2.65): the distributed superstep loop must equal
   * a sequential reference implementation EXACTLY (the arithmetic is
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * invariant under input partitioning, and conserve the damped mass
   * bound that makes the int64 domain argument hold.
   */
-class GraphQueriesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("graph-queries-spec").getOrCreate()
+class GraphQueriesSpec extends AnyFunSuite with SharedSpark {
 
   /** Sequential reference: same integer recurrence, plain Maps. */
   private def reference(edges: Seq[(Long, Long)], iters: Int)

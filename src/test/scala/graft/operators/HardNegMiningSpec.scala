@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** §2.60 at the production scale path: hard negatives mined from the
   * PERSISTED IVF-PQ index ([[SimilarityQueries.hardNegIdx]]) must
@@ -13,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must hold REGARDLESS of the candidate machinery: no self, no
   * labeled positive, exactly k per query.
   */
-class HardNegMiningSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("hardneg-mining-spec").getOrCreate()
+class HardNegMiningSpec extends AnyFunSuite with SharedSpark {
 
   for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
     test(s"index-served mining matches the brute band above the " +

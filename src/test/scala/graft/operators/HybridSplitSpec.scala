@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Invariants of the round-9 composition gates beyond the DuckDB gate:
   *
@@ -23,16 +24,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `adjacent_pairs` kernel ≡ the transform(sequence(...)) HOF it
   *    replaced (text_pmi's fused tally input).
   */
-class HybridSplitSpec extends AnyFunSuite {
+class HybridSplitSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("hybrid-split-spec").getOrCreate()
 
   test("retr_rrf equals an independently fused ranking of the two arms") {
     val s = spark

@@ -1,20 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Round-4 additions: incremental aggregate maintenance, containment
   * dedup, correlated-subquery decorrelation.
   */
-class IncrementalSubquerySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("incr-subq-spec").getOrCreate()
+class IncrementalSubquerySpec extends AnyFunSuite with SharedSpark {
 
   private def sf = "/root/testdata/sf0.001"
 

@@ -1,25 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.functions.TextFunctions._
 
 /** The production MinHash candidate contract: star edges are
   * membership-sized (≤ bands·|docs|), never clique-quadratic, and
   * produce the SAME connected components as the pairwise candidate set.
   */
-class MinHashStarSpec extends AnyFunSuite {
+class MinHashStarSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("minhash-star-spec").getOrCreate()
 
   private def shingled = {
     import graft.Tables.documents

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Invariants of the end-to-end curation pipeline (`pipe_curate`) that
   * the DuckDB gate can't state directly: stage containment, filter
@@ -10,16 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * curated set contains no verified near-dup pair, so re-running the
   * sweep on its own output is a fixpoint).
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("pipeline-spec").getOrCreate()
 
   private lazy val curated =
     PipelineQueries.queries("pipe_curate")(spark, dir).cache()

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Physical-plan audits: the scale properties the operators claim must
   * be visible in the executed plan, not just in comments — broadcast
@@ -11,16 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * turns a 100 TB-shaped plan into a shuffle storm long before any
   * correctness gate notices.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("plan-audit-spec").getOrCreate()
 
   private def plan(name: String): String = {
     val q = graft.SparkEntry.queries(name)
@@ -74,9 +68,7 @@ class PlanAuditSpec extends AnyFunSuite {
     def orderkeyShuffles(p: String): Int =
       "Exchange hashpartitioning\\((?:o_orderkey|l_orderkey)#\\d+L?, \\d+\\)".r
         .findAllIn(p).size
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Seq("q3_bucketed", "q5_bucketed").foreach { g =>
         val p = finalPlan(g)
         assert(orderkeyShuffles(p) == 0,
@@ -88,7 +80,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // the layout removes) — guards against a silently-matching regex
       assert(orderkeyShuffles(finalPlan("q3_join_topk")) > 0,
         "raw q3 unexpectedly planned no orderkey shuffle — harness broken?")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
 
     // with the default threshold back, the local q3_bucketed final plan
     // is shuffle-free END TO END: join covered by buckets, aggregate by
@@ -397,9 +389,6 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("BM25 ranking runs through the bounded-heap top-k rewrite") {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
     val p = RetrievalQueries.bm25(spark, dir, materialize = false)
       .queryExecution.executedPlan.toString
     try assert(p.contains("rowtopk"),
@@ -503,12 +492,6 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("per-group sample runs through the bounded-heap top-k rewrite") {
-    // the gate sessions (Verify/Bench) install GraftExtensions; here the
-    // rule is injected session-side, which also exercises the late-batch
-    // position where InferWindowGroupLimit has already run
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
     val p = plan("q_sample_k")
     assert(p.contains("rowtopk"),
       s"expected the bounded-heap aggregate:\n$p")
@@ -518,9 +501,6 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("weighted priority sample runs through the bounded-heap rewrite " +
       "and never windows the table") {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
     val p = plan("q_wsample")
     assert(p.contains("rowtopk"),
       s"expected the bounded-heap aggregate:\n$p")

@@ -1,22 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The distributed exclusive scan must agree with the single-partition
   * window formulation (the semantics) while never BEING one (the scale
   * property), and its output must be invariant to how the input arrives.
   */
-class PrefixSumSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("prefix-sum-spec").getOrCreate()
+class PrefixSumSpec extends AnyFunSuite with SharedSpark {
 
   private def reference(rows: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
     var acc = 0L

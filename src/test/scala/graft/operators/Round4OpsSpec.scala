@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.functions.BloomFilterOps._
 import graft.functions.{BloomKernel, ZOrderKernel}
 import graft.functions.ZOrderOps._
@@ -10,14 +10,7 @@ import graft.functions.ZOrderOps._
 /** Specs for the round-4 operators: snapshot diff, bloom semi-join,
   * z-order layout.
   */
-class Round4OpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("round4-ops-spec").getOrCreate()
+class Round4OpsSpec extends AnyFunSuite with SharedSpark {
 
   // ---------------- snapshot diff ----------------
 

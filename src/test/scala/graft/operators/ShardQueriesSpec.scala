@@ -1,23 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The epoch-shuffle shard packer: deterministic, token-balanced,
   * permutation-fresh across seeds, and physically written as one
   * sequentially-readable directory per shard.
   */
-class ShardQueriesSpec extends AnyFunSuite {
+class ShardQueriesSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("shard-queries-spec").getOrCreate()
 
   test("assignment is deterministic and covers every document exactly once") {
     val a = ShardQueries.assignShards(spark, dir)

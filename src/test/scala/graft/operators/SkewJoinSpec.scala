@@ -1,17 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SkewJoinSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("skew-join-spec").getOrCreate()
+class SkewJoinSpec extends AnyFunSuite with SharedSpark {
 
   test("salted join returns exactly the rows of the plain join") {
     import spark.implicits._

@@ -1,23 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantics of the temporal operators (as-of join, banded range join,
   * sessionization) and the sampling/quantile operators — edge cases on
   * hand-built frames plus invariants on the driver testdata.
   */
-class TemporalSamplingSpec extends AnyFunSuite {
+class TemporalSamplingSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("temporal-sampling-spec").getOrCreate()
 
   test("asofJoin: inclusive match, no-prior null, key isolation") {
     import spark.implicits._

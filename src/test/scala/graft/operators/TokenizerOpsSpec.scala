@@ -2,9 +2,10 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantics of the tokenizer-training / corpus-statistics operators
   * (`text_sdedup`, `text_bpe`, `text_pmi`, [[BpeTrainer]]) on
@@ -13,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * trainer loop. The oracle gates prove engine equivalence at SF scale;
   * these prove the operators do what the literature says.
   */
-class TokenizerOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("tokenizer-ops-spec").getOrCreate()
+class TokenizerOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus(rows: Seq[(Long, String)]): String = {
     val dir = Files.createTempDirectory("tok-spec").toFile

@@ -1,33 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The row_number()≤k → bounded-heap rewrite: fires on the naive
   * window pattern, leaves everything else alone, and returns exactly
   * the window's rows.
   */
-class TopKRewriteSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .appName("topk-rewrite-spec").getOrCreate()
-    // suites share one JVM: if another suite created the session first,
-    // the static extensions conf was ignored — install the rule via the
-    // session-mutable hook too (idempotent: the rewrite matches nothing
-    // on its own output)
-    if (!s.experimental.extraOptimizations.contains(TopKRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ TopKRewrite
-    s
-  }
+class TopKRewriteSpec extends AnyFunSuite with SharedSpark {
 
   import org.apache.spark.sql.DataFrame
 

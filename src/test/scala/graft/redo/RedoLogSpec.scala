@@ -4,8 +4,8 @@ import java.io.File
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 
 class RedoLogSpec extends AnyFunSuite {
@@ -273,14 +273,7 @@ class RedoOffsetSpec extends AnyFunSuite {
   }
 }
 
-class RedoSourceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("redo-source-spec").getOrCreate()
+class RedoSourceSpec extends AnyFunSuite with SharedSpark {
 
   private def writeLogs(dir: File): Seq[RedoRecord] = {
     def rr(scn: Long, xid: String, op: Int, table: String,

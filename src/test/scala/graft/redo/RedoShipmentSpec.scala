@@ -3,10 +3,12 @@ package graft.redo
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.streaming.ChangeStreams
 
@@ -16,7 +18,7 @@ import graft.streaming.ChangeStreams
   * reconnect, and the mid-transfer-kill → resume lifecycle of the
   * target-agent spool.
   */
-class RedoShipmentSpec extends AnyFunSuite {
+class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
 
   private def ins(scn: Long, id: Int, v: String): RedoRecord =
     RedoRecord(scn, 0, "x1", Ops.Insert, "APP.T", s"r$scn",
@@ -86,12 +88,6 @@ class RedoShipmentSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("ship_mine").toFile
     writeLogs(dir)
     val server = new ShipmentServer(dir)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("redo-shipment-spec").getOrCreate()
     import spark.implicits._
     try {
       val base = s"${RedoShipment.Scheme}127.0.0.1:${server.boundPort}" +
@@ -236,11 +232,6 @@ class RedoShipmentSpec extends AnyFunSuite {
     writeLogs(src)
     val spool = Files.createTempDirectory("ship_comp_spool").toFile
     val server = new ShipmentServer(src)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("ship-comp-spec").getOrCreate()
     import spark.implicits._
     try {
       def ship(name: String): Unit = ShipmentClient.fetch(
@@ -309,11 +300,16 @@ class RedoShipmentSpec extends AnyFunSuite {
       assert(Files.readAllBytes(got.toPath).toSeq == payload.toSeq,
         "resumed file must be byte-identical")
       assert(!partial.exists(), "inprogress must be renamed away")
-      assert(fast.bytesShipped.get() == payload.length - resumedFrom,
-        s"resume must ship only the tail: shipped ${fast.bytesShipped.get()}" +
-          s" of ${payload.length} with ${resumedFrom} already local")
-      assert(fast.filesShipped.get() == 1 &&
-        fast.lastShippedFile == "log_9.grl")
+      // the agent counts a chunk after writing it and the file after the
+      // last flush, so the fetch can return before the agent's handler
+      // has recorded the tail: wait for it, then the counts are final
+      eventually(timeout(10.seconds)) {
+        assert(fast.bytesShipped.get() == payload.length - resumedFrom,
+          s"resume must ship only the tail: shipped ${fast.bytesShipped.get()}" +
+            s" of ${payload.length} with ${resumedFrom} already local")
+        assert(fast.filesShipped.get() == 1 &&
+          fast.lastShippedFile == "log_9.grl")
+      }
       // an already-complete fetch is a no-op (no new bytes)
       assert(ShipmentClient.fetch(url2, dest).isFile)
       assert(fast.bytesShipped.get() == payload.length - resumedFrom)

@@ -7,13 +7,14 @@ import java.nio.file.Files
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 
 /** S6: the same GRL bytes must parse identically through every
   * transport — local file, in-memory (the ASM/SSH/SMB stand-in), and
   * ranged HTTP (a real remote byte source).
   */
-class RedoStorageSpec extends AnyFunSuite {
+class RedoStorageSpec extends AnyFunSuite with SharedSpark {
 
   private def rec(scn: Long, xid: String, op: Int,
       after: Map[String, String] = Map.empty): RedoRecord =
@@ -111,12 +112,6 @@ class RedoStorageSpec extends AnyFunSuite {
       assert(got === expected)
 
       // end-to-end: the DSv2 source reads the same URL on executors
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 2)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", false)
-        .appName("redo-http-spec").getOrCreate()
       val df = spark.read.format("graft-redo").option("path", base).load()
       assert(df.count() === expected.size)
       assert(df.selectExpr("max(scn)").head().getLong(0) === 10L)

@@ -1,7 +1,8 @@
 package graft.redo
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** S5 distributed gap audit: every missing per-thread sequence run is
   * reported exactly once with correct bounds, duplicates and unordered
@@ -9,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * distributed counterpart of RedoLogReader.listLogs' throw-on-gap
   * (covered by RedoLogSpec).
   */
-class RedoTopologySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .appName("redo-topology-spec").getOrCreate()
+class RedoTopologySpec extends AnyFunSuite with SharedSpark {
 
   private def report(rows: Seq[(Int, Long)]): Set[(Int, Long, Long, Long)] = {
     import spark.implicits._

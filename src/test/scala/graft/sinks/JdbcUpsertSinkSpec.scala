@@ -1,20 +1,15 @@
 package graft.sinks
 
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** End-to-end sink integration test against embedded Derby (the JDBC
   * driver that ships with Spark): upsert + delete + within-batch dedup,
   * executed from executor partitions like a real foreachBatch.
   */
-class JdbcUpsertSinkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JdbcUpsertSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("foreachBatch-style upsert/delete into Derby with batch dedup") {
     import spark.implicits._

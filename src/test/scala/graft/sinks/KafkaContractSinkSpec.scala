@@ -3,10 +3,10 @@ package graft.sinks
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.redo.RedoLogWriter
 import graft.streaming.{ChangeStreams, Envelopes}
@@ -15,16 +15,7 @@ import graft.streaming.{ChangeStreams, Envelopes}
   * → topic routing + partitioning → Kafka-contract sink; asserts topic
   * names, partition assignment, and per-partition delivery order.
   */
-class KafkaContractSinkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("kafka-contract-spec").getOrCreate()
+class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("defaultTopicColumn agrees with NameMappers.defaultTopic") {
     import spark.implicits._

@@ -2,19 +2,14 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** K6: the progress notifier writes the last processed batch to a file. */
-class LastProcessedNotifierSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", false)
-    .appName("notifier-spec").getOrCreate()
+/** K6: the progress notifier writes the last processed batch to a file. */
+class LastProcessedNotifierSpec extends AnyFunSuite with SharedSpark {
 
   test("notifier records the last fully processed micro-batch") {
     import spark.implicits._

@@ -1,10 +1,11 @@
 package graft.sinks
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Property tie between the K5 Column mirrors (`tableFromTopicCol`,
   * `tableFromSchemaNameCol`) and their driver-side Scala functions: the
@@ -12,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantic mismatch (ltrim charset, substring_index edge, startsWith on
   * a short string) fails here before it can skew the k5 gate.
   */
-class NameMapperColumnProps extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .appName("name-mapper-column-props").getOrCreate()
+class NameMapperColumnProps extends AnyFunSuite with SharedSpark {
 
   private val nameChar: Gen[Char] = Gen.frequency(
     8 -> Gen.alphaNumChar,

@@ -2,20 +2,15 @@ package graft.sinks
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** K4: wrapped-data partial updates — present columns only, update-then-
   * insert fallback, delete by key.
   */
-class PartialUpsertSinkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", false)
-    .appName("partial-upsert-spec").getOrCreate()
+class PartialUpsertSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("partial updates touch only present columns; absent stays intact") {
     val url = "jdbc:derby:memory:partial;create=true"

@@ -6,10 +6,10 @@ import java.nio.file.Files
 import java.sql.DriverManager
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.redo.RedoLogWriter
 import graft.streaming.ChangeStreams
@@ -28,7 +28,7 @@ import graft.streaming.ChangeStreams
   * (standby stand-in) + Derby dictionary (primary stand-in) end-to-end
   * and proves the assembled stream types against the PRIMARY's schema.
   */
-class DistributedTopologySpec extends AnyFunSuite {
+class DistributedTopologySpec extends AnyFunSuite with SharedSpark {
 
   test("mine redo from one endpoint, dictionary from another") {
     // --- standby stand-in: GRL logs served over ranged HTTP ---
@@ -87,12 +87,6 @@ class DistributedTopologySpec extends AnyFunSuite {
       val td = DictionaryReader.readTable(conn, "APP", "EMP")
       assert(td.keyType === "PK" && td.keyCols === Seq("EMPNO"))
 
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 2)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", false)
-        .appName("distributed-topology-spec").getOrCreate()
       import spark.implicits._
 
       // mine from the standby URL; type with the primary's dictionary

@@ -3,22 +3,16 @@ package graft.sources
 import java.nio.file.Files
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** S3: SCN-windowed JDBC polling against embedded Derby — the
   * V$LOGMNR_CONTENTS-shaped path. Checks windowing, schema inference via
   * the dictionary reader, and checkpoint resume picking up only new rows.
   */
-class JdbcPollSourceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("jdbc-poll-spec").getOrCreate()
+class JdbcPollSourceSpec extends AnyFunSuite with SharedSpark {
 
   test("polls watermark windows, resumes from checkpoint on new data") {
     val url = "jdbc:derby:memory:polltest;create=true"

@@ -4,11 +4,11 @@ import java.io.File
 import java.nio.file.Files
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.redo.RedoLogWriter
 import graft.sinks.{DerbyDialect, JdbcUpsertSink}
@@ -20,16 +20,7 @@ import graft.sinks.{DerbyDialect, JdbcUpsertSink}
   * file per trigger) so commit resolution must come from streaming state,
   * not from within a batch.
   */
-class EndToEndPipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("e2e-pipeline-spec").getOrCreate()
+class EndToEndPipelineSpec extends AnyFunSuite with SharedSpark {
 
   private def rr(scn: Long, xid: String, op: Int, rowId: String,
       after: Map[String, String] = Map.empty): RedoRecord =

@@ -1,18 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{EmittedChange, Ops}
 
-class EnvelopesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", false)
-    .appName("envelopes-spec").getOrCreate()
+class EnvelopesSpec extends AnyFunSuite with SharedSpark {
 
   test("wrapped envelope keeps absent-from-redo distinguishable from NULL") {
     import spark.implicits._

@@ -3,11 +3,11 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.cdc.TransactionAssembler.LobRef
 import graft.codec.OraVector
@@ -43,16 +43,7 @@ import graft.redo.RedoLogWriter
   *  - deterministic replay: fresh logs/artifacts/checkpoint, same
   *    final index.
   */
-class RedoAnnE2ESpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("redo-ann-e2e-spec").getOrCreate()
+class RedoAnnE2ESpec extends AnyFunSuite with SharedSpark {
 
   private def ctl(scn: Long, xid: String, op: Int): RedoRecord =
     RedoRecord(scn, 0, xid, op, "", "", rollback = false, scn,

@@ -3,11 +3,12 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.operators.{BucketedLayout, Compaction}
 import graft.redo.RedoLogWriter
@@ -33,16 +34,7 @@ import graft.redo.RedoLogWriter
   *  - deterministic replay: fresh tables + checkpoint over the same
   *    logs reproduce the identical table content.
   */
-class RedoBucketedIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("redo-bucketed-ingest-spec").getOrCreate()
+class RedoBucketedIngestSpec extends AnyFunSuite with SharedSpark {
 
   private def ins(scn: Long, xid: String, table: String,
       cols: Map[String, String]): RedoRecord =
@@ -71,18 +63,15 @@ class RedoBucketedIngestSpec extends AnyFunSuite {
   /** Assert the join plans with zero orderkey exchange under forced
     * sort-merge (no broadcast escape hatch) and uses the bucketed scan.
     */
-  private def assertExchangeFree(df: DataFrame, when: String): Unit = {
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+  private def assertExchangeFree(df: DataFrame, when: String): Unit =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert("Exchange hashpartitioning\\((?:o_orderkey|l_orderkey)#\\d+L?, \\d+\\)".r
         .findAllIn(plan).isEmpty, s"$when: orderkey exchange appeared:\n$plan")
       assert(plan.contains("Bucketed: true"),
         s"$when: join did not use the bucketed scan:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-  }
+    }
 
   test("redo → assembly → bucketed appends: exchange-free mid-stream, " +
       "through compaction, deterministic on replay") {

@@ -3,11 +3,11 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.operators.{DedupQueries, PipelineQueries}
 import graft.redo.RedoLogWriter
@@ -32,16 +32,7 @@ import graft.functions.TextFunctions.shingleHashes
   *  - deterministic replay: tearing everything down and re-running the
   *    same logs yields the identical admitted sequence.
   */
-class RedoCurationE2ESpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("redo-curation-e2e-spec").getOrCreate()
+class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
 
   private def ins(scn: Long, xid: String, id: Long, text: String): RedoRecord =
     RedoRecord(scn, 0, xid, Ops.Insert, "G.DOCS", s"r$id", rollback = false,

@@ -3,11 +3,11 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord, SchemaRegistry}
 import graft.redo.RedoLogWriter
 
@@ -36,16 +36,7 @@ import graft.redo.RedoLogWriter
   *  - deterministic replay: tearing down and re-running yields the
   *    identical (doc, version) sequence.
   */
-class RedoDdlStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("redo-ddl-stream-spec").getOrCreate()
+class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
 
   private val baseSchema = StructType(Seq(
     StructField("ID", LongType, nullable = false),

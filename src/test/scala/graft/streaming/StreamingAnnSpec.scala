@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.operators.SimilarityQueries
 
 /** Streaming embedding ingestion — `ann_incr` in its production
@@ -18,14 +18,7 @@ import graft.operators.SimilarityQueries
   * fixed from initial training, nothing re-encodes the corpus, and
   * per batch only the delta pays the probe.
   */
-class StreamingAnnSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-ann-spec").getOrCreate()
+class StreamingAnnSpec extends AnyFunSuite with SharedSpark {
 
   test("delta batches probe the persisted index; duplicate arrivals are dropped") {
     import spark.implicits._

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.TimeSeriesStreams.{AnomalyFlag, Obs}
 
 /** The streaming anomaly detector must flag EXACTLY what the batch
@@ -13,14 +13,7 @@ import graft.streaming.TimeSeriesStreams.{AnomalyFlag, Obs}
   * show. Fed in three event-time-ordered batches (the CDC ordering
   * contract) through MemoryStream.
   */
-class StreamingAnomalySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("streaming-anomaly-spec").getOrCreate()
+class StreamingAnomalySpec extends AnyFunSuite with SharedSpark {
 
   test("streaming flags equal the batch gate across micro-batch " +
       "boundaries") {

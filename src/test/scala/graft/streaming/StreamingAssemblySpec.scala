@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.cdc._
 
 /** End-to-end Structured Streaming test: MemoryStream of redo records →
@@ -11,21 +11,7 @@ import graft.cdc._
   * changes arriving in batch 1 emit only when the COMMIT arrives in a
   * later batch, and ROLLBACK discards buffered state silently.
   */
-class StreamingAssemblySpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    // transformWithState (list-state assembler) requires RocksDB; set on
-    // the session conf because getOrCreate may reuse a suite-shared session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class StreamingAssemblySpec extends AnyFunSuite with SharedSpark {
 
   private def rec(scn: Long, xid: String, op: Int, rowId: String = "",
       after: Map[String, String] = Map.empty) =

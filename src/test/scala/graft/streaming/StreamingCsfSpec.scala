@@ -3,12 +3,12 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.logminer.CsfReassembly
 import graft.logminer.CsfReassembly.CsfChunk
@@ -21,21 +21,7 @@ import graft.logminer.CsfReassembly.CsfChunk
   * the stitcher's RocksDB state carries the open statement across
   * micro-batches and query restarts via the checkpoint).
   */
-class StreamingCsfSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("csf-stream-spec").getOrCreate()
-    // transformWithState requires the RocksDB provider; session conf
-    // because getOrCreate may reuse a suite-shared session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class StreamingCsfSpec extends AnyFunSuite with SharedSpark {
 
   /** LogMiner-style 40-char CSF chunking: every chunk but the last is
     * flagged CSF=1.

@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.operators.{DedupQueries, PipelineQueries}
 import graft.functions.TextFunctions.shingleHashes
 
@@ -27,14 +28,7 @@ import graft.functions.TextFunctions.shingleHashes
   * never indexes a rejected doc — and bucket-cap-free, since the
   * streaming probe is the uncapped index path.)
   */
-class StreamingCurationSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-curation-spec").getOrCreate()
+class StreamingCurationSpec extends AnyFunSuite with SharedSpark {
 
   test("micro-batch admission against the persisted index equals batch pipe_incr") {
     import spark.implicits._

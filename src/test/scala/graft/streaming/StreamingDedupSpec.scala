@@ -1,24 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** §2.7 streaming dedup: exactly-once per key over a change stream via
   * dropDuplicatesWithinWatermark — duplicate deliveries (source retries,
   * rewinds within an in-progress commit) collapse inside the watermark,
   * the state store evicts beyond it.
   */
-class StreamingDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-dedup-spec").getOrCreate()
+class StreamingDedupSpec extends AnyFunSuite with SharedSpark {
 
   test("duplicate change deliveries collapse within the watermark") {
     import spark.implicits._

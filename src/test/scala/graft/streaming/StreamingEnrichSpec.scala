@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.cdc._
 
 /** Stream-static enrichment: the assembled change stream joined to a
@@ -13,19 +13,7 @@ import graft.cdc._
   * the static side per micro-batch, which is what makes slowly-refreshed
   * dimension snapshots safe to swap underneath a running query.
   */
-class StreamingEnrichSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+class StreamingEnrichSpec extends AnyFunSuite with SharedSpark {
 
   private def rec(scn: Long, xid: String, op: Int, rowId: String = "",
       after: Map[String, String] = Map.empty) =

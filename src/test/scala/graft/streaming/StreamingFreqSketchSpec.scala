@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The Misra-Gries heavy-hitters aggregate (§2.16) under STREAMING
   * aggregation: the sketch's serialize/merge path is exactly what the
@@ -14,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sketch's mergeability claim proven on the engine's real streaming
   * path, not just in-suite merges.
   */
-class StreamingFreqSketchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("streaming-freq-sketch-spec").getOrCreate()
+class StreamingFreqSketchSpec extends AnyFunSuite with SharedSpark {
 
   test("complete-mode streaming sketch equals the batch sketch on the " +
       "same tokens, sliced across micro-batches") {

@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.TimeSeriesStreams.{DayFill, GapObs}
 
 /** The streaming gap-fill twin must emit EXACTLY the batch gate's grid
@@ -19,14 +20,7 @@ import graft.streaming.TimeSeriesStreams.{DayFill, GapObs}
   * NEW query over the same checkpoint with the last chunk + the flush
   * sentinels that close each key's final open day.
   */
-class StreamingGapFillSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("streaming-gapfill-spec").getOrCreate()
+class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming grid equals the batch gate across batch boundaries " +
       "and a restart") {

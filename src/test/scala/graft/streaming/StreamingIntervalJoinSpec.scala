@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Streaming twin of §2.63's interval-overlap join: when the two
   * interval sets arrive as STREAMS, the operator is Spark's native
@@ -20,15 +21,8 @@ object StreamingIntervalJoinSpec {
   case class Ev(eventId: Long, userId: Long, tsMicros: Long, typ: String)
 }
 
-class StreamingIntervalJoinSpec extends AnyFunSuite {
+class StreamingIntervalJoinSpec extends AnyFunSuite with SharedSpark {
   import StreamingIntervalJoinSpec.Ev
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("streaming-interval-join-spec").getOrCreate()
 
   test("watermarked stream-stream range join emits exactly the batch " +
       "gate's overlap pairs across micro-batch boundaries") {

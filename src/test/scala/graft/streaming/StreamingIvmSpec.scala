@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.operators.IncrementalAgg
 
 /** The IVM family in its production streaming harness: a CDC changelog
@@ -15,14 +15,7 @@ import graft.operators.IncrementalAgg
   * groups that vanish mid-stream and keys that churn through
   * insert → update → delete → re-insert across batch boundaries.
   */
-class StreamingIvmSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-ivm-spec").getOrCreate()
+class StreamingIvmSpec extends AnyFunSuite with SharedSpark {
 
   test("maintained view equals recomputation after every micro-batch") {
     import spark.implicits._

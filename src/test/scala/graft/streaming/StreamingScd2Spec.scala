@@ -3,11 +3,12 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.cdc.{Ops, RedoRecord}
 import graft.operators.{CdcQueries, IncrementalAgg}
 import graft.redo.RedoLogWriter
@@ -28,16 +29,7 @@ import graft.redo.RedoLogWriter
   *  - mid-stream, the dimension serves a consistent point-in-time
   *    state (only commits so far, fully chained).
   */
-class StreamingScd2Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .appName("streaming-scd2-spec").getOrCreate()
+class StreamingScd2Spec extends AnyFunSuite with SharedSpark {
 
   private def ins(scn: Long, xid: String, k: Long, id: Long, cents: Long,
       day: Int): RedoRecord =

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** §2.9 streaming twin of `TemporalQueries.sessionize`: event-time
   * session windows (`session_window`) with a watermark. Sessions grow
@@ -11,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * event connects two open sessions, and finalize — append mode emits
   * them — once the watermark passes session end + gap.
   */
-class StreamingSessionizeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-sessionize-spec").getOrCreate()
+class StreamingSessionizeSpec extends AnyFunSuite with SharedSpark {
 
   test("session windows extend within gap, merge on bridge, finalize at watermark") {
     import spark.implicits._

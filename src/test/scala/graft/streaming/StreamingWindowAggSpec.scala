@@ -1,23 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** §2.7 streaming time-window aggregation: event-time tumbling windows
   * with a watermark — windows finalize (append mode emits them) once the
   * watermark passes their end, and data later than the watermark is
   * dropped instead of corrupting a finalized window.
   */
-class StreamingWindowAggSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", false)
-    .appName("stream-window-spec").getOrCreate()
+class StreamingWindowAggSpec extends AnyFunSuite with SharedSpark {
 
   test("tumbling window finalizes at the watermark; late rows are dropped") {
     import spark.implicits._

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Run a graft main class against the compiled classes + Spark jars,
+# Run a graft main class against the compiled classes, resources + Spark jars,
 # bypassing sbt's JVM-forking overhead. Usage: tools/run.sh <MainClass> [args...]
 set -e
 cd "$(dirname "$0")/.."
@@ -17,5 +17,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "graft.$MAIN" "$@"
