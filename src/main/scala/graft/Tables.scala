@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.expr
 
 /** Parquet table access for the driver-generated testdata
@@ -32,9 +32,18 @@ object Tables {
     * scan yields ONE input partition and every map-side stage above it
     * (shingle hashing, codec decode, vector math) runs single-threaded.
     * On a real 100 TB lakehouse the file/row-group count dwarfs the core
-    * count and this helper is a no-op — the repartition is applied ONLY
-    * when the scan's own parallelism is below the session default, so big
+    * count and this helper is a no-op — the spread is applied ONLY when
+    * the scan's own parallelism is below the session default, so big
     * inputs never pay an extra shuffle.
+    *
+    * The spread is a [[graft.plans.Spread]] node, not a `repartition`:
+    * Spark's predicate pushdown moves a filter through a `Repartition`
+    * and substitutes the aliased kernel expressions into it, so the
+    * filters that carry the kernels ran in the one-task scan stage below
+    * the spread (29 of the 154 gates, `pipe_curate` among them). Filters
+    * are not pushed through `Spread`; column pruning still is. The node
+    * is planned by `graft.plans.SpreadStrategy`, which every
+    * `GraftSession` installs through `GraftExtensions`.
     */
   def tablePar(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = table(spark, sfDir, name)
@@ -50,12 +59,14 @@ object Tables {
     val bytes = walkFiles(f).map(_.length()).sum
     val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
     val scanParts = math.max(1L, bytes / math.max(1L, maxPart))
-    if (f.exists() && scanParts < math.max(2, target / 2)) df.repartition(target)
+    if (f.exists() && scanParts < math.max(2, target / 2))
+      GraftSqlBridge.wrapPlan(df)(graft.plans.Spread(target, _))
     else df
   }
 
   // compute-heavy tables: normalized parallelism (map-side work above
-  // them — shingle hashing, vector math — dominates the scan itself)
+  // them — shingle hashing, vector math — dominates the scan itself, and
+  // the spread keeps every filter on it above the exchange, see tablePar)
   def documents(s: SparkSession, d: String): DataFrame = tablePar(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = tablePar(s, d, "embeddings")
   // relational tables: plain scans — their queries shuffle on their own

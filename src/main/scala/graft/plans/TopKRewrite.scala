@@ -162,9 +162,11 @@ object TopKRewrite extends Rule[LogicalPlan] {
 
 /** Session extensions entry point:
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
+  * Installs the top-k rewrite and the planner of [[Spread]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => TopKRewrite)
+    ext.injectPlannerStrategy(_ => SpreadStrategy)
   }
 }

@@ -28,4 +28,12 @@ object GraftSqlBridge {
     */
   def scalarSubquery(df: Dataset[_]): Expression =
     catalyst.expressions.ScalarSubquery(df.queryExecution.analyzed)
+
+  /** `df` with its analyzed plan wrapped by `wrap` — the way to put a
+    * logical node of graft's own into a DataFrame's plan.
+    */
+  def wrapPlan(df: DataFrame)(wrap: catalyst.plans.logical.LogicalPlan =>
+      catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      wrap(df.queryExecution.analyzed))
 }

@@ -139,8 +139,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     // commit). The replay must stamp the pre-DDL row with the OLD
     // version both times — the version-at-commit timeline, not the
     // registry head — and must not re-append the DDL to the history.
-    val hist = java.nio.file.Files
-      .createTempDirectory("stamp_replay").resolve("h.tsv")
+    val hist = graft.SharedSpark
+      .tempDir("stamp_replay").resolve("h.tsv")
     def ch(commit: Long, scn: Long, op: Int,
         after: Map[String, String]): EmittedChange =
       EmittedChange("x", commit, scn, 0, "S.T", op, s"r$scn", scn,
@@ -204,8 +204,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   }
 
   test("replay rejects a corrupted 3-field history line instead of applying garbage") {
-    val hist = java.nio.file.Files
-      .createTempDirectory("hist_corrupt").resolve("h.tsv")
+    val hist = graft.SharedSpark
+      .tempDir("hist_corrupt").resolve("h.tsv")
     // SCN field corrupted to non-numeric: must throw, not fall back to
     // the 2-field legacy interpretation with the tail applied as DDL
     java.nio.file.Files.writeString(hist,

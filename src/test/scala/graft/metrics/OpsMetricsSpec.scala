@@ -27,7 +27,7 @@ class OpsMetricsSpec extends AnyFunSuite with SharedSpark {
     val m = new InitialLoadMetrics("spec_load").install()
     try {
       val sf = "/root/testdata/sf0.001"
-      val out = Files.createTempDirectory("ops_load_out").toString
+      val out = SharedSpark.tempDir("ops_load_out").toString
       // two bounded per-table snapshot loads (the S8 select-then-send
       // shape); inside each select, the in-flight list must already
       // show the table — that visibility is what the list exists for
@@ -80,14 +80,14 @@ class OpsMetricsSpec extends AnyFunSuite with SharedSpark {
 
   test("shipment MBean reads an agent's throughput off the platform server") {
     import java.io.File
-    val dir = Files.createTempDirectory("ops_ship").toFile
+    val dir = SharedSpark.tempDir("ops_ship").toFile
     val payload = new Array[Byte](64 * 1024)
     new java.util.Random(7).nextBytes(payload)
     Files.write(new File(dir, "log_1.grl").toPath, payload)
     val server = new graft.redo.ShipmentServer(dir)
     val m = new ShipmentMetrics("spec_ship", server).install()
     try {
-      val dest = Files.createTempDirectory("ops_ship_dst").toFile
+      val dest = SharedSpark.tempDir("ops_ship_dst").toFile
       graft.redo.ShipmentClient.fetch(
         s"${graft.redo.RedoShipment.Scheme}127.0.0.1:${server.boundPort}" +
           new File(dir, "log_1.grl").getAbsolutePath, dest)
@@ -108,7 +108,7 @@ class OpsMetricsSpec extends AnyFunSuite with SharedSpark {
   test("source-connection MBean: committed logs, scn/seq watermarks, " +
       "scope list and out-of-scope count from a metricsName'd stream") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("ops_conn_grl").toFile
+    val dir = SharedSpark.tempDir("ops_conn_grl").toFile
     def ins(scn: Long, table: String): RedoRecord =
       RedoRecord(scn, 0, "x1", Ops.Insert, table, s"r$scn",
         rollback = false, scn, Map.empty, Map("ID" -> scn.toString))
@@ -130,7 +130,7 @@ class OpsMetricsSpec extends AnyFunSuite with SharedSpark {
       .as[RedoRecord]
     val q = records.writeStream.format("memory").queryName("ops_conn_out")
       .option("checkpointLocation",
-        Files.createTempDirectory("ops_conn_ckpt").toString)
+        SharedSpark.tempDir("ops_conn_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(120000), "stream did not finish")

@@ -235,7 +235,7 @@ class AnnRecallSpec extends AnyFunSuite with SharedSpark {
     val codesSrc = corpus.select(col("vec_id"), col("q"))
     val direct = SimilarityQueries
       .ivfPqSearch(index, corpus, codesSrc, delta, nprobe = 4)
-    val path = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
+    val path = SharedSpark.tempDir("ivfpqidx").toString
     SimilarityQueries.saveIvfPqIndex(spark, index, codesSrc, path)
     val (loaded, codes) = SimilarityQueries.loadIvfPqIndex(spark, path)
     assert(loaded === index, "codebooks must round-trip exactly")

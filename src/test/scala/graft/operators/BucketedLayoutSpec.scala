@@ -18,7 +18,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     // private dataset dir so marker/fingerprint churn cannot interfere
     // with the real testdata artifacts
-    val dir = Files.createTempDirectory("bkt_spec_ds").toString
+    val dir = SharedSpark.tempDir("bkt_spec_ds").toString
     val src = "/root/testdata/sf0.001"
     for (t <- Seq("orders", "lineitem")) {
       val f = new java.io.File(s"$src/$t.parquet")
@@ -59,7 +59,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SharedSpark {
     val shrunk = spark.read.parquet(s"$dir/orders.parquet")
       .filter(col("o_orderkey") =!= 1L).cache()
     val shrunkN = shrunk.count()
-    val tmpDs = Files.createTempDirectory("bkt_spec_regen").toString
+    val tmpDs = SharedSpark.tempDir("bkt_spec_regen").toString
     shrunk.coalesce(1).write.mode("overwrite").parquet(s"$tmpDs/orders.parquet")
     shrunk.unpersist(blocking = false)
     // the copied source is a single parquet FILE; the regenerated one is
@@ -83,7 +83,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SharedSpark {
     // must still plan with zero exchange — the property a one-time
     // layout write alone cannot give a GROWING table
     val src = "/root/testdata/sf0.001"
-    val loc = Files.createTempDirectory("bkt_stream_tbl").toString
+    val loc = SharedSpark.tempDir("bkt_stream_tbl").toString
     val oSrc = spark.read.parquet(s"$src/orders.parquet")
     val lSrc = spark.read.parquet(s"$src/lineitem.parquet")
     val oT = "grf_spec_stream_orders"
@@ -185,7 +185,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SharedSpark {
   test("appendMaintained keeps file counts bounded across many batches") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val loc = Files.createTempDirectory("bkt_maint_tbl").toString
+    val loc = SharedSpark.tempDir("bkt_maint_tbl").toString
     val t = "grf_spec_maint_orders"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     BucketedLayout.streamTable(spark, t, s"$loc/orders",

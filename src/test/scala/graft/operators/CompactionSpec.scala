@@ -13,7 +13,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   test("compaction shrinks file count, preserves rows, sizes by target") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
+    val base = SharedSpark.tempDir("compact").toString
     // accrete 40 tiny files — the micro-batch-per-file shape
     (1 to 40).foreach { b =>
       (1L to 500L).map(i => (b.toLong * 10000 + i, s"row$i"))
@@ -36,7 +36,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   test("clustered compaction keeps range-disjoint files") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("compactc").toString
+    val base = SharedSpark.tempDir("compactc").toString
     (1L to 20000L).map(i => ((i * 2654435761L) % 100000, i))
       .toDF("k", "v")
       .repartition(20).write.mode("overwrite").parquet(s"$base/src")
@@ -63,7 +63,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   test("multi-column bucket spec compacts to one file per bucket") {
     import spark.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("compact_mc").toString
+    val loc = SharedSpark.tempDir("compact_mc").toString
     val t = "cpt_mc_t"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(
@@ -119,7 +119,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   test("journal replay finishes a crashed swap's deletes (post-rename " +
       "crash window)") {
-    val loc = java.nio.file.Files.createTempDirectory("compact_jr").toString
+    val loc = SharedSpark.tempDir("compact_jr").toString
     val t = "cpt_jr_t"
     val (base, sumV) = mkBucketed(t, loc)
 
@@ -155,7 +155,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
 
   test("journal replay completes the renames first (pre-rename crash " +
       "window loses no rows)") {
-    val loc = java.nio.file.Files.createTempDirectory("compact_jp").toString
+    val loc = SharedSpark.tempDir("compact_jp").toString
     val t = "cpt_jp_t"
     val (base, sumV) = mkBucketed(t, loc)
 
@@ -192,7 +192,7 @@ class CompactionSpec extends AnyFunSuite with SharedSpark {
     // exactly like the renames the swap already checks: a local-FS stub
     // that refuses deletes stands in for that mode
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("cpt_del").toFile
+    val dir = SharedSpark.tempDir("cpt_del").toFile
     val stuck = new java.io.File(dir, "stuck.parquet")
     java.nio.file.Files.write(stuck.toPath, Array[Byte](1, 2, 3))
     val gone = new java.io.File(dir, "gone.parquet") // never created

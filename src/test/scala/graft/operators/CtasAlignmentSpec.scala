@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +21,7 @@ class CtasAlignmentSpec extends AnyFunSuite with SharedSpark {
     // dataset dir whose facts are 8-part directories — 8 map splits
     // feed each bucket repartition (the fragmentation-prone shape)
     val src = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("ctas_align_ds").toString
+    val dir = SharedSpark.tempDir("ctas_align_ds").toString
     for (t <- Seq("orders", "lineitem")) {
       spark.read.parquet(s"$src/$t.parquet").repartition(8)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")

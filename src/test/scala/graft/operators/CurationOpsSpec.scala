@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ class CurationOpsSpec extends AnyFunSuite with SharedSpark {
 
   /** Writes a documents.parquet micro-corpus and returns its dir. */
   private def corpus(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("curation-spec").toFile
+    val dir = SharedSpark.tempDir("curation-spec").toFile
     dir.deleteOnExit()
     import spark.implicits._
     rows.toDF("doc_id", "text", "lang")

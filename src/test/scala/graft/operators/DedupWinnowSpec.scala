@@ -33,7 +33,7 @@ class DedupWinnowSpec extends AnyFunSuite with SharedSpark {
         (0 until 20).map(_ => s"w${rnd.nextInt(400)}").mkString(" "))
     }
     val copies = base.take(5).map { case (id, t) => (id + 100, t) }
-    val fx = java.nio.file.Files.createTempDirectory("winnow-dup").toFile
+    val fx = SharedSpark.tempDir("winnow-dup").toFile
     fx.deleteOnExit()
     val noise = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))

@@ -123,7 +123,7 @@ class HybridSplitSpec extends AnyFunSuite with SharedSpark {
       (i.toLong, (0 until 25).map(_ => s"w${rnd.nextInt(300)}").mkString(" "))
     }
     val copies = (0 until 6).map { i => (100L + i, base(i)._2) }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_split").toString
+    val tmp = SharedSpark.tempDir("graft_split").toString
     (base ++ copies).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("syn"))
       .withColumn("n_chars", length(col("text")))

@@ -122,7 +122,7 @@ class IncrementalSubquerySpec extends AnyFunSuite with SharedSpark {
       (2L, "prefix words alpha beta gamma delta epsilon zeta eta theta suffix tail"),
       (3L, "completely different content with other words entirely")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("contain").toString
+    val dir = SharedSpark.tempDir("contain").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = DedupQueries.containment(spark, dir, None, 0.8)
       .select("contained", "container", "cont").collect()

@@ -122,7 +122,7 @@ class MinHashStarSpec extends AnyFunSuite with SharedSpark {
     val fam = (0 until 30).map(i => (1000L + i, "w1 w2 w3 w4 w5 w6 w7 w8"))
     val pair = Seq((100L, "p1 p2 p3 p4 p5 p6 p7"), (101L, "p1 p2 p3 p4 p5 p6 p7"))
     val solo = Seq((200L, "z1 z2 z3 z4 q9 q8 q7"))
-    val fx = java.nio.file.Files.createTempDirectory("shham-dense").toFile
+    val fx = SharedSpark.tempDir("shham-dense").toFile
     fx.deleteOnExit()
     (fam ++ pair ++ solo).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))

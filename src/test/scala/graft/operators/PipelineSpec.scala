@@ -94,7 +94,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       .filter(size(col("hs")) > 0).persist()
     val corpus = hashes.filter(col("doc_id") % 2 === 0)
     val delta = hashes.filter(col("doc_id") % 2 === 1)
-    val path = java.nio.file.Files.createTempDirectory("bandidx").toString
+    val path = SharedSpark.tempDir("bandidx").toString
     DedupQueries.saveBandIndex(corpus, path)
     val (bands, sets) = DedupQueries.loadBandIndex(spark, path)
     val fromDisk = DedupQueries
@@ -158,7 +158,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     // contaminate-drop its whole family, which is not what this test
     // probes); 96 members still flood the maxBucket = 8 cap
     val family = (0 until 96).map(k => (1068L + k, rot(k)))
-    val fx = java.nio.file.Files.createTempDirectory("pipe-dense").toFile
+    val fx = SharedSpark.tempDir("pipe-dense").toFile
     fx.deleteOnExit()
     family.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
@@ -199,7 +199,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       (5L, nearDupA),                       // delta: near-dup of base 2
       (7L, novel),                          // delta: novel -> admitted
       (9L, "the tiny short doc stops here now so soon done")) // < 20 toks
-    val fx = java.nio.file.Files.createTempDirectory("pipe-incr-edge").toFile
+    val fx = SharedSpark.tempDir("pipe-incr-edge").toFile
     fx.deleteOnExit()
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
@@ -233,7 +233,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       (2L, a), (4L, b),
       (3L, a), (5L, a + " with two extras"), (7L, novel),
       (9L, "the tiny short doc stops here now so soon done"))
-    val fx = java.nio.file.Files.createTempDirectory("pipe-incr-idx").toFile
+    val fx = SharedSpark.tempDir("pipe-incr-idx").toFile
     fx.deleteOnExit()
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
@@ -282,7 +282,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       "while the pool keeps a slot open for the tiny task ahead now"
     val docs = Seq((3L, a), (57L, b), (10L, f1), (11L, f2),
       (194L, "zz yy xx ww vv")) // 194 = 2*97: the benchmark slice
-    val fx = java.nio.file.Files.createTempDirectory("pipe-full-edge").toFile
+    val fx = SharedSpark.tempDir("pipe-full-edge").toFile
     fx.deleteOnExit()
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))

@@ -668,4 +668,39 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
         s"global top-20 must be TakeOrdered (k per partition), not a full sort:\n$p")
     } finally spark.sharedState.cacheManager.clearCache()
   }
+
+  /** Each Filter or Project below a round-robin exchange that runs a
+    * kernel (a `StaticInvoke`, an unreplaced `KernelCall`) or a lambda.
+    */
+  private def kernelWorkUnderSpread(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val kernel: org.apache.spark.sql.catalyst.expressions.Expression => Boolean = _.exists {
+      case _: StaticInvoke | _: graft.functions.KernelCall | _: LambdaFunction => true
+      case _ => false
+    }
+    df.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+        e.child.collect {
+          case n @ (_: FilterExec | _: ProjectExec) if n.expressions.exists(kernel) =>
+            n.simpleString(400)
+        }
+    }.flatten
+  }
+
+  test("kernel filters and projections run above tablePar's spread, never below it") {
+    val lazyCurate = PipelineQueries.curate(spark, dir, materialize = false)
+    val plans = ("pipe_curate (lazy)" -> lazyCurate) +:
+      Seq("text_classify", "text_decontam", "text_rep_filter", "f10_vector",
+        "dedup_simhash").map(n => n -> graft.SparkEntry.queries(n)(spark, dir))
+    try plans.foreach { case (name, df) =>
+      val under = kernelWorkUnderSpread(df)
+      assert(under.isEmpty,
+        s"$name runs kernel work in the one-task scan stage below the spread:\n" +
+          under.mkString("\n"))
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
 }

@@ -148,7 +148,7 @@ class Round4OpsSpec extends AnyFunSuite with SharedSpark {
     val df = (1L to 200000L)
       .map(i => (i, (i * 2654435761L) % 256, (i * 40503L) % 256))
       .toDF("id", "x", "y")
-    val base = java.nio.file.Files.createTempDirectory("zprune").toString
+    val base = SharedSpark.tempDir("zprune").toString
     ZOrderLayout.clusterByZ(df, col("x"), col("y"), bits = 8,
       partitions = 16).write.mode("overwrite").parquet(s"$base/clustered")
     df.repartition(16).write.mode("overwrite").parquet(s"$base/random")

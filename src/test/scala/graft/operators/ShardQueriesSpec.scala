@@ -67,7 +67,7 @@ class ShardQueriesSpec extends AnyFunSuite with SharedSpark {
     // review-found ambiguity; the (h, doc_id) tiebreak must make the
     // assignment total, engine-stable and equal to the reference packer
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shard-64b").toString
+    val tmp = SharedSpark.tempDir("graft-shard-64b").toString
     try {
       // collision pairs beyond 2^31 AND negative ids (the oracle's
       // positivized modulus chain must equal Spark's pmod on them)
@@ -115,7 +115,7 @@ class ShardQueriesSpec extends AnyFunSuite with SharedSpark {
     // the gate path reads the parquet table; re-deriving from an
     // adversarially repartitioned copy must agree (the PrefixSum
     // invariance property composed through the shard rule)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shard-inv").toString
+    val tmp = SharedSpark.tempDir("graft-shard-inv").toString
     try {
       spark.read.parquet(s"$dir/documents.parquet")
         .repartition(13, col("lang"))
@@ -131,7 +131,7 @@ class ShardQueriesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("writeShards lays out one directory per shard, permuted order within") {
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val out = SharedSpark.tempDir("graft-shards").toString
     try {
       ShardQueries.writeShards(spark, dir, out)
       val dirs = new java.io.File(out).listFiles()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ import graft.SharedSpark
 class TokenizerOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("tok-spec").toFile
+    val dir = SharedSpark.tempDir("tok-spec").toFile
     dir.deleteOnExit()
     import spark.implicits._
     rows.toDF("doc_id", "text")

@@ -27,7 +27,7 @@ class RedoCorruptionProps extends AnyFunSuite {
       Map("k" -> ("payload" * (1 + i % 7) + i), "n" -> i.toString), Nil)
 
   test("600 random bit flips: every read throws or returns the pristine stream") {
-    val dir = Files.createTempDirectory("grl-fuzz").toFile
+    val dir = graft.SharedSpark.tempDir("grl-fuzz").toFile
     val f = new File(dir, "log_1.grl")
     val w = new RedoLogWriter(f, blockSize = 512, seq = 1, thread = 0)
     val records = (1 to 80).map(i => rec(i.toLong, i))

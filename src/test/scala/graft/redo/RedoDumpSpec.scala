@@ -1,7 +1,6 @@
 package graft.redo
 
 import java.io.File
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,7 +31,7 @@ class RedoDumpSpec extends AnyFunSuite {
 
   test("remote dump: filter and extract an incident straight off the " +
       "shipment socket") {
-    val dir = Files.createTempDirectory("redodump_remote").toFile
+    val dir = graft.SharedSpark.tempDir("redodump_remote").toFile
     val txA = Seq(rec(10, "A", Ops.Insert), rec(12, "A", Ops.Update),
       rec(14, "A", Ops.Commit, table = "", img = Map.empty))
     val txB = Seq(rec(11, "B", Ops.Insert), rec(15, "B", Ops.Commit,
@@ -50,7 +49,7 @@ class RedoDumpSpec extends AnyFunSuite {
         .map(_.scn) == Seq(11L, 15L))
       // remote incident extract: the standalone mini-log replays
       // byte-identically through the normal local reader
-      val out = new File(Files.createTempDirectory("redodump_remote_out")
+      val out = new File(graft.SharedSpark.tempDir("redodump_remote_out")
         .toFile, "incident.grl")
       val a = RedoDump.parse(Array(base, "--xid", "A"))
       val n = RedoDump.extractTo(a, RedoDump.logMeta(base), out.getPath)
@@ -60,7 +59,7 @@ class RedoDumpSpec extends AnyFunSuite {
   }
 
   test("xid/scn filters and the incident-extract roundtrip") {
-    val dir = Files.createTempDirectory("redodump").toFile
+    val dir = graft.SharedSpark.tempDir("redodump").toFile
     val txA = Seq(rec(10, "A", Ops.Insert), rec(12, "A", Ops.Update),
       rec(14, "A", Ops.Commit, table = ""))
     val txB = Seq(rec(11, "B", Ops.Insert), rec(15, "B", Ops.Commit,
@@ -81,7 +80,7 @@ class RedoDumpSpec extends AnyFunSuite {
     // the source's sequence number, and a duplicate (thread, seq)
     // would break the directory's continuity check); the normal reader
     // must return the identical records (the replay contract)
-    val outDir = Files.createTempDirectory("redodump_out").toFile
+    val outDir = graft.SharedSpark.tempDir("redodump_out").toFile
     val out = new File(outDir, "incident_A.grl")
     val a = RedoDump.parse(Array(dir.getPath, "--xid", "A",
       "--extract", out.getPath))
@@ -109,7 +108,7 @@ class RedoDumpSpec extends AnyFunSuite {
     // the open-file guard (reference `OpenFileChecker`): the writer
     // works under an .inprogress name and renames at close, so a
     // directory listing can never admit a half-written segment
-    val dir = Files.createTempDirectory("redodump_atomic").toFile
+    val dir = graft.SharedSpark.tempDir("redodump_atomic").toFile
     val f = new File(dir, "log_1.grl")
     val w = new RedoLogWriter(f, 1024, seq = 1)
     w.append(rec(1, "A", Ops.Insert))

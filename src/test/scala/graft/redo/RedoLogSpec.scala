@@ -1,7 +1,6 @@
 package graft.redo
 
 import java.io.File
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +17,7 @@ class RedoLogSpec extends AnyFunSuite {
     RedoRecord(scn, 0, xid, op, if (op == Ops.Commit || op == Ops.Rollback) ""
       else "T.TAB", scn.toString, rollback, scn * 1000, before, after, multi)
 
-  private def tmpDir(): File = Files.createTempDirectory("grl").toFile
+  private def tmpDir(): File = SharedSpark.tempDir("grl").toFile
 
   test("writer/reader round-trip preserves every field") {
     val dir = tmpDir()
@@ -306,7 +305,7 @@ class RedoSourceSpec extends AnyFunSuite with SharedSpark {
 
   test("batch read returns all records across log files in order") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("grlsrc").toFile
+    val dir = SharedSpark.tempDir("grlsrc").toFile
     val expected = writeLogs(dir)
     val got = spark.read.format("graft-redo").load(dir.getAbsolutePath)
       .as[RedoRecord].collect().sortBy(_.scn).toSeq
@@ -315,7 +314,7 @@ class RedoSourceSpec extends AnyFunSuite with SharedSpark {
 
   test("table wildcard (P1) and op (P2) pruning happen in the scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("grlsrc").toFile
+    val dir = SharedSpark.tempDir("grlsrc").toFile
     writeLogs(dir)
     val t1 = spark.read.format("graft-redo")
       .option("tables", "s.t1").load(dir.getAbsolutePath).as[RedoRecord].collect()
@@ -336,7 +335,7 @@ class RedoSourceSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("a bad ops or maxFilesPerTrigger option is rejected by name") {
-    val dir = Files.createTempDirectory("grlsrc").toFile
+    val dir = SharedSpark.tempDir("grlsrc").toFile
     writeLogs(dir)
     def scanWith(option: String, v: String): String =
       intercept[IllegalArgumentException](spark.read.format("graft-redo")
@@ -355,7 +354,7 @@ class RedoSourceSpec extends AnyFunSuite with SharedSpark {
 
   test("session-audit records bypass table AND op filters (P7 survival)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("grlsrc").toFile
+    val dir = SharedSpark.tempDir("grlsrc").toFile
     // the audit vector is stamped with a table name that does NOT match
     // the filter — it must still pass, or every P7 pseudo-column in the
     // transaction silently nulls out
@@ -378,7 +377,7 @@ class RedoSourceSpec extends AnyFunSuite with SharedSpark {
 
   test("micro-batch stream consumes logs file-by-file with offsets") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("grlsrc").toFile
+    val dir = SharedSpark.tempDir("grlsrc").toFile
     val expected = writeLogs(dir)
     val q = spark.readStream.format("graft-redo")
       .option("maxFilesPerTrigger", 1)

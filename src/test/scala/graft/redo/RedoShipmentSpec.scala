@@ -41,7 +41,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("provider protocol: list, stat, positional reads, containment") {
-    val dir = Files.createTempDirectory("ship_proto").toFile
+    val dir = SharedSpark.tempDir("ship_proto").toFile
     writeLogs(dir)
     // a non-.grl file must not appear in listings
     Files.write(new File(dir, "README.txt").toPath, "hi".getBytes)
@@ -85,7 +85,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
 
   test("DSv2 mines directly over the shipment socket; reconnects across " +
       "an agent restart") {
-    val dir = Files.createTempDirectory("ship_mine").toFile
+    val dir = SharedSpark.tempDir("ship_mine").toFile
     writeLogs(dir)
     val server = new ShipmentServer(dir)
     import spark.implicits._
@@ -122,7 +122,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("paths with spaces survive the wire (URL-encoded fields)") {
-    val parent = Files.createTempDirectory("ship sp").toFile
+    val parent = SharedSpark.tempDir("ship sp").toFile
     val dir = new File(parent, "redo logs")
     assert(dir.mkdir())
     writeLogs(dir)
@@ -140,7 +140,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
         src.readFully(0, buf, 0, 64)
         assert(buf.toSeq == local.take(64).toSeq)
       } finally src.close()
-      val dest = Files.createTempDirectory("ship_sp_dst").toFile
+      val dest = SharedSpark.tempDir("ship_sp_dst").toFile
       val got = ShipmentClient.fetch(s"$base/log_2.grl", dest)
       assert(Files.readAllBytes(got.toPath).toSeq ==
         Files.readAllBytes(new File(dir, "log_2.grl").toPath).toSeq)
@@ -150,7 +150,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
   test("thread-per-connection: concurrent readers each get exact bytes") {
     // the executor fan-out shape: many partitions each open their own
     // connection and window-read the same archive concurrently
-    val dir = Files.createTempDirectory("ship_conc").toFile
+    val dir = SharedSpark.tempDir("ship_conc").toFile
     writeLogs(dir)
     val server = new ShipmentServer(dir)
     try {
@@ -185,7 +185,7 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
 
   test("protocol robustness: malformed frames and unknown commands " +
       "error without wedging the server") {
-    val dir = Files.createTempDirectory("ship_fuzz").toFile
+    val dir = SharedSpark.tempDir("ship_fuzz").toFile
     writeLogs(dir)
     val server = new ShipmentServer(dir)
     try {
@@ -228,9 +228,9 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
     // archives to a local spool NEXT TO the miner, which lists the
     // spool. The .inprogress convention is what makes the composition
     // safe — the miner's listing must never see a partial .grl.
-    val src = Files.createTempDirectory("ship_comp_src").toFile
+    val src = SharedSpark.tempDir("ship_comp_src").toFile
     writeLogs(src)
-    val spool = Files.createTempDirectory("ship_comp_spool").toFile
+    val spool = SharedSpark.tempDir("ship_comp_spool").toFile
     val server = new ShipmentServer(src)
     import spark.implicits._
     try {
@@ -259,13 +259,13 @@ class RedoShipmentSpec extends AnyFunSuite with SharedSpark {
 
   test("target-agent spool: mid-transfer kill leaves a resumable " +
       ".inprogress; the next fetch ships only the tail") {
-    val dir = Files.createTempDirectory("ship_spool_src").toFile
+    val dir = SharedSpark.tempDir("ship_spool_src").toFile
     // a multi-MB payload so the throttled first attempt is killable
     val big = new File(dir, "log_9.grl")
     val payload = new Array[Byte](3 * 1024 * 1024)
     new java.util.Random(42).nextBytes(payload)
     Files.write(big.toPath, payload)
-    val dest = Files.createTempDirectory("ship_spool_dst").toFile
+    val dest = SharedSpark.tempDir("ship_spool_dst").toFile
 
     // first attempt: ~1 MiB/s throttle, killed once >= 256 KiB landed
     val slow = new ShipmentServer(dir, throttleBytesPerSec = 1024 * 1024)

@@ -37,7 +37,7 @@ class RedoStorageSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("in-memory provider parses identically to local files") {
-    val dir = Files.createTempDirectory("grl-mem").toFile
+    val dir = SharedSpark.tempDir("grl-mem").toFile
     val expected = writeLogs(dir)
     val mem = new InMemoryRedoProvider(
       dir.listFiles().map(f => f.getName -> Files.readAllBytes(f.toPath)).toMap)
@@ -52,7 +52,7 @@ class RedoStorageSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("in-memory provider surfaces sequence gaps like the local scan") {
-    val dir = Files.createTempDirectory("grl-gap").toFile
+    val dir = SharedSpark.tempDir("grl-gap").toFile
     writeLogs(dir)
     val w = new RedoLogWriter(new File(dir, "log_9.grl"), blockSize = 512, seq = 9)
     w.append(rec(20, "tx", Ops.Commit)); w.close()
@@ -65,7 +65,7 @@ class RedoStorageSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("HTTP range provider reads headers and records remotely") {
-    val dir = Files.createTempDirectory("grl-http").toFile
+    val dir = SharedSpark.tempDir("grl-http").toFile
     val expected = writeLogs(dir)
     val bytes = dir.listFiles().map(f => f.getName -> Files.readAllBytes(f.toPath)).toMap
 

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +26,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("redo → assembly → envelope → contract files, ordered per partition") {
-    val dir = Files.createTempDirectory("k1_grl").toFile
+    val dir = SharedSpark.tempDir("k1_grl").toFile
     // two tables; txA spans both logs, txB commits in log 1
     val f1 = Seq(
       rr(1, "A", Ops.Insert, "G.ACCTS", Map("k" -> "1", "v" -> "a1")),
@@ -43,7 +42,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
       w.close()
     }
 
-    val outDir = Files.createTempDirectory("k1_topics").toFile.getAbsolutePath
+    val outDir = SharedSpark.tempDir("k1_topics").toFile.getAbsolutePath
     import spark.implicits._
     val records = spark.readStream.format("graft-redo")
       .option("maxFilesPerTrigger", 1)
@@ -59,7 +58,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
       .withColumn("partition", KafkaContractSink.keyHashPartition(col("key"), 4))
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("k1_ckpt").toFile.getAbsolutePath)
+        SharedSpark.tempDir("k1_ckpt").toFile.getAbsolutePath)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
         KafkaContractSink.writeBatch(df, outDir,
           orderCols = Seq("commitScn", "scn"), batchId = batchId)
@@ -104,7 +103,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("a checkpoint reset over a kept output dir redelivers instead of skipping") {
     import spark.implicits._
-    val out = Files.createTempDirectory("k1_reset").toFile.getAbsolutePath
+    val out = SharedSpark.tempDir("k1_reset").toFile.getAbsolutePath
     def batch(v: String) = Seq(("t", 0, "k1", v))
       .toDF("topic", "partition", "key", "value").withColumn("scn", lit(1L))
     // first stream incarnation writes batch 0
@@ -123,7 +122,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("a negative batchId is rejected by name, nothing is written") {
     import spark.implicits._
-    val out = Files.createTempDirectory("k1_neg").toFile
+    val out = SharedSpark.tempDir("k1_neg").toFile
     val batch = Seq(("t", 0, "k1", "v")).toDF("topic", "partition", "key", "value")
       .withColumn("scn", lit(1L))
     val ex = intercept[IllegalArgumentException](
@@ -134,7 +133,7 @@ class KafkaContractSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("null key and null value (tombstone) encode instead of NPEing") {
     import spark.implicits._
-    val out = Files.createTempDirectory("k1_null").toFile.getAbsolutePath
+    val out = SharedSpark.tempDir("k1_null").toFile.getAbsolutePath
     val batch = Seq(
       (Option("k1"), Option.empty[String]),  // tombstone
       (Option.empty[String], Option("v2"))   // keyless record

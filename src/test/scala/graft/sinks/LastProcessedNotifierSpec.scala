@@ -13,7 +13,7 @@ class LastProcessedNotifierSpec extends AnyFunSuite with SharedSpark {
 
   test("notifier records the last fully processed micro-batch") {
     import spark.implicits._
-    val path = Files.createTempFile("last_seq", ".json").toString
+    val path = SharedSpark.tempFile("last_seq", ".json").toString
     val listener = new LastProcessedNotifier(path)
     spark.streams.addListener(listener)
     try {

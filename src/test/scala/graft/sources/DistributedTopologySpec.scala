@@ -32,7 +32,7 @@ class DistributedTopologySpec extends AnyFunSuite with SharedSpark {
 
   test("mine redo from one endpoint, dictionary from another") {
     // --- standby stand-in: GRL logs served over ranged HTTP ---
-    val dir = Files.createTempDirectory("grl-dist").toFile
+    val dir = SharedSpark.tempDir("grl-dist").toFile
     val w = new RedoLogWriter(new File(dir, "log_1.grl"), blockSize = 512,
       seq = 1, thread = 0)
     def ins(scn: Long, empno: Int, ename: String, sal: String) =

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.sql.DriverManager
 
 import org.apache.spark.sql.streaming.Trigger
@@ -26,7 +25,7 @@ class JdbcPollSourceSpec extends AnyFunSuite with SharedSpark {
     (1 to 20).foreach(i => st.execute(
       s"INSERT INTO APP.CHANGES VALUES ($i, ${i % 3 + 1}, 'S.T', $i.50)"))
 
-    val ckpt = Files.createTempDirectory("poll_ckpt").toFile.getAbsolutePath
+    val ckpt = SharedSpark.tempDir("poll_ckpt").toFile.getAbsolutePath
     def runOnce(): Seq[(Long, String)] = {
       val got = collection.mutable.ArrayBuffer[(Long, String)]()
       val df = spark.readStream.format("graft-jdbc-poll")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
@@ -34,7 +33,7 @@ class EndToEndPipelineSpec extends AnyFunSuite with SharedSpark {
     scala.collection.mutable.Map.empty[Long, List[String]]
 
   test("redo logs → streaming assembly → Derby upsert, txns span batches") {
-    val dir = Files.createTempDirectory("e2e_grl").toFile
+    val dir = SharedSpark.tempDir("e2e_grl").toFile
     // log 1: txA inserts k=1,k=2 (NO commit yet), txB inserts k=3 + commits
     val f1 = Seq(
       rr(1, "A", Ops.Insert, "r1", Map("k" -> "1", "v" -> "a1")),
@@ -71,7 +70,7 @@ class EndToEndPipelineSpec extends AnyFunSuite with SharedSpark {
         col("op"), col("commitScn"), col("scn"))
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("e2e_ckpt").toFile.getAbsolutePath)
+        SharedSpark.tempDir("e2e_ckpt").toFile.getAbsolutePath)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
         // diagnostic capture for a full-suite-only flake (one observed
         // run delivered all 8 source rows yet Derby ended with one key):

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -103,7 +102,7 @@ class RedoAnnE2ESpec extends AnyFunSuite with SharedSpark {
 
     def runPipeline(tag: String): (Set[Long], Long, Double) = {
       val (l1, l2, l3) = logRecords
-      val redoDir = Files.createTempDirectory(s"redo_ann_grl_$tag").toFile
+      val redoDir = SharedSpark.tempDir(s"redo_ann_grl_$tag").toFile
       def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
         val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
         recs.foreach(w.append)
@@ -113,8 +112,8 @@ class RedoAnnE2ESpec extends AnyFunSuite with SharedSpark {
       // code rows + the corpus store (the ensureRrfIndex lifecycle)
       val e = SimilarityQueries.quantized(spark, dir)
       val corpus0 = e.filter(col("vec_id") % 2 === 0)
-      val idxDir = Files.createTempDirectory(s"redo_ann_idx_$tag").toString
-      val corpDir = Files.createTempDirectory(s"redo_ann_corp_$tag").toString
+      val idxDir = SharedSpark.tempDir(s"redo_ann_idx_$tag").toString
+      val corpDir = SharedSpark.tempDir(s"redo_ann_corp_$tag").toString
       val index = SimilarityQueries.trainIvfPq(spark, corpus0, 8,
         col("vec_id") % 50 === 0 && col("vec_id") < 800)
       SimilarityQueries.saveIvfPqIndex(spark, index,
@@ -122,7 +121,7 @@ class RedoAnnE2ESpec extends AnyFunSuite with SharedSpark {
       corpus0.write.mode("overwrite").parquet(corpDir)
       val nCorpus0 = corpus0.count()
 
-      val ckpt = Files.createTempDirectory(s"redo_ann_ckpt_$tag")
+      val ckpt = SharedSpark.tempDir(s"redo_ann_ckpt_$tag")
         .toFile.getAbsolutePath
       def runStream(): Unit = {
         val records = spark.readStream.format("graft-redo")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -94,13 +93,13 @@ class RedoBucketedIngestSpec extends AnyFunSuite with SharedSpark {
     val expected = Set((10L, 100L, 12L), (20L, 200L, 24L))
 
     def runPipeline(tag: String): Set[(Long, Long, Long)] = {
-      val redoDir = Files.createTempDirectory(s"redo_bkt_grl_$tag").toFile
+      val redoDir = SharedSpark.tempDir(s"redo_bkt_grl_$tag").toFile
       def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
         val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
         recs.foreach(w.append)
         w.close()
       }
-      val loc = Files.createTempDirectory(s"redo_bkt_tbl_$tag").toString
+      val loc = SharedSpark.tempDir(s"redo_bkt_tbl_$tag").toString
       val oT = s"grf_spec_redo_orders_$tag"
       val lT = s"grf_spec_redo_lineitem_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $oT")
@@ -113,7 +112,7 @@ class RedoBucketedIngestSpec extends AnyFunSuite with SharedSpark {
         StructType(Seq(StructField("l_orderkey", LongType),
           StructField("l_qty", LongType))), "l_orderkey")
 
-      val ckpt = Files.createTempDirectory(s"redo_bkt_ckpt_$tag")
+      val ckpt = SharedSpark.tempDir(s"redo_bkt_ckpt_$tag")
         .toFile.getAbsolutePath
       // maintenance threshold: compact once a table fragments past 2
       // files (2/Buckets files per bucket) — production would run the

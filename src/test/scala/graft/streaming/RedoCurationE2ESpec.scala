@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -77,7 +76,7 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
       Seq(ctl(9, "S", Ops.Commit), ctl(10, "R", Ops.Rollback)))
 
     def runPipeline(): Seq[Long] = {
-      val redoDir = Files.createTempDirectory("redo_cur_grl").toFile
+      val redoDir = SharedSpark.tempDir("redo_cur_grl").toFile
       logs.zipWithIndex.foreach { case (recs, i) =>
         val w = new RedoLogWriter(new File(redoDir, s"log_${i + 1}.grl"),
           1024, seq = i + 1)
@@ -90,8 +89,8 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
       val base = PipelineQueries.stage16Of(
         baseDocs.toDF("doc_id", "text").withColumn("source", lit("src0")),
         bench)
-      val idxDir = Files.createTempDirectory("redo_cur_idx").toString
-      val digDir = Files.createTempDirectory("redo_cur_dig").toString
+      val idxDir = SharedSpark.tempDir("redo_cur_idx").toString
+      val digDir = SharedSpark.tempDir("redo_cur_dig").toString
       DedupQueries.saveBandIndex(
         base.select(col("doc_id"), shingleHashes(col("toks"), 2).as("hs")),
         idxDir)
@@ -106,7 +105,7 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
         .toDF()
         .writeStream
         .option("checkpointLocation",
-          Files.createTempDirectory("redo_cur_ckpt").toFile.getAbsolutePath)
+          SharedSpark.tempDir("redo_cur_ckpt").toFile.getAbsolutePath)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           // the committed INSERT stream of the DOCUMENTS table — only
           // what transaction assembly EMITTED (rolled-back txns never
@@ -154,7 +153,7 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
         "dup docs 3/7/9 must not appear")
 
     // the stream equals the batch gate over base + COMMITTED deltas
-    val fx = Files.createTempDirectory("redo_cur_fx").toString
+    val fx = SharedSpark.tempDir("redo_cur_fx").toString
     (baseDocs ++ committedDeltas).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -186,7 +185,7 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
     // rows from log 2 are restored from the checkpointed state store
     // so its log-3 commit still emits doc 11, (c) txn R's restored
     // rows are discarded by its log-3 rollback.
-    val redoDir = Files.createTempDirectory("redo_rst_grl").toFile
+    val redoDir = SharedSpark.tempDir("redo_rst_grl").toFile
     def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
       val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
       recs.foreach(w.append)
@@ -195,8 +194,8 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
     writeLog(1, Seq(ins(1, "D1", 5, novel1), ctl(2, "D1", Ops.Commit)))
     writeLog(2, Seq(ins(3, "S", 11, novel2), ins(4, "R", 15, novel3)))
 
-    val idxDir = Files.createTempDirectory("redo_rst_idx").toString
-    val digDir = Files.createTempDirectory("redo_rst_dig").toString
+    val idxDir = SharedSpark.tempDir("redo_rst_idx").toString
+    val digDir = SharedSpark.tempDir("redo_rst_dig").toString
     // empty curated base: digests dir seeded with an empty frame of the
     // right schema, band index built from zero docs
     val bench = Array.empty[Long]
@@ -208,7 +207,7 @@ class RedoCurationE2ESpec extends AnyFunSuite with SharedSpark {
       idxDir)
     empty.select(col("digest")).write.mode("overwrite").parquet(digDir)
 
-    val ckpt = Files.createTempDirectory("redo_rst_ckpt").toFile.getAbsolutePath
+    val ckpt = SharedSpark.tempDir("redo_rst_ckpt").toFile.getAbsolutePath
     val admitted = scala.collection.mutable.ArrayBuffer[Long]()
     def runOnce(): Unit = {
       val records = spark.readStream.format("graft-redo")

@@ -57,7 +57,7 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
   test("mid-stream DDL bumps the envelope's schema version; restart " +
       "crosses the DDL boundary through the persisted history") {
     import spark.implicits._
-    val redoDir = Files.createTempDirectory("redo_ddl_grl").toFile
+    val redoDir = SharedSpark.tempDir("redo_ddl_grl").toFile
     def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
       val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
       recs.foreach(w.append)
@@ -75,9 +75,9 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
       ctl(4, "D1", Ops.Commit),
       ins(5, "T2", Map("ID" -> "2", "NAME" -> "b", "EXTRA" -> "1.50"))))
 
-    val history = Files.createTempDirectory("redo_ddl_hist")
+    val history = SharedSpark.tempDir("redo_ddl_hist")
       .resolve("history.tsv")
-    val ckpt = Files.createTempDirectory("redo_ddl_ckpt").toFile.getAbsolutePath
+    val ckpt = SharedSpark.tempDir("redo_ddl_ckpt").toFile.getAbsolutePath
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Option[String])]()
 
     def runOnce(): Unit = {
@@ -127,7 +127,7 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
     val out1 = out.toSeq
     out.clear()
     java.nio.file.Files.deleteIfExists(history)
-    val ckpt2 = Files.createTempDirectory("redo_ddl_ckpt2").toFile.getAbsolutePath
+    val ckpt2 = SharedSpark.tempDir("redo_ddl_ckpt2").toFile.getAbsolutePath
     val reg2 = SchemaRegistry.replay(Map("G.T" -> baseSchema), Some(history))
     val q2 = ChangeStreams.assembleStream(
         spark.readStream.format("graft-redo")
@@ -159,7 +159,7 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
     // ALTER TABLE ADD path (`TargetDbSqlUtils` alter; K3) before
     // binding, so pre-DDL rows land with the old shape, post-DDL rows
     // with the new, in ONE streaming query.
-    val redoDir = Files.createTempDirectory("redo_ddlk3_grl").toFile
+    val redoDir = SharedSpark.tempDir("redo_ddlk3_grl").toFile
     def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
       val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
       recs.foreach(w.append)
@@ -177,7 +177,7 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
     val url = "jdbc:derby:memory:ddlsink;create=true"
     val sink = graft.sinks.JdbcUpsertSink(url, "G_T", keyCols = Seq("ID"),
       dialect = graft.sinks.DerbyDialect)
-    val history = Files.createTempDirectory("redo_ddlk3_hist")
+    val history = SharedSpark.tempDir("redo_ddlk3_hist")
       .resolve("history.tsv")
     val reg = SchemaRegistry.replay(Map("G.T" -> baseSchema), Some(history))
     val q = ChangeStreams.assembleStream(
@@ -187,7 +187,7 @@ class RedoDdlStreamSpec extends AnyFunSuite with SharedSpark {
           .as[RedoRecord])
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("redo_ddlk3_ckpt").toFile.getAbsolutePath)
+        SharedSpark.tempDir("redo_ddlk3_ckpt").toFile.getAbsolutePath)
       .foreachBatch {
         (ds: org.apache.spark.sql.Dataset[graft.cdc.EmittedChange],
          _: Long) =>

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -28,8 +27,8 @@ class StreamingAnnSpec extends AnyFunSuite with SharedSpark {
     val e = SimilarityQueries.quantized(spark, dir)
     val corpus0 = e.filter(col("vec_id") % 2 === 0)
     val nCorpus0 = corpus0.count()
-    val idxDir = Files.createTempDirectory("graft_annidx").toString
-    val corpDir = Files.createTempDirectory("graft_anncorp").toString
+    val idxDir = SharedSpark.tempDir("graft_annidx").toString
+    val corpDir = SharedSpark.tempDir("graft_anncorp").toString
     val index = SimilarityQueries.trainIvfPq(spark, corpus0, 8,
       col("vec_id") % 50 === 0 && col("vec_id") < 800)
     SimilarityQueries.saveIvfPqIndex(spark, index,
@@ -111,8 +110,8 @@ class StreamingAnnSpec extends AnyFunSuite with SharedSpark {
     val dir = "/root/testdata/sf0.001"
     val e = SimilarityQueries.quantized(spark, dir)
     val corpus0 = e.filter(col("vec_id") % 2 === 0)
-    val idxDir = Files.createTempDirectory("graft_eo_idx").toString
-    val corpDir = Files.createTempDirectory("graft_eo_corp").toString
+    val idxDir = SharedSpark.tempDir("graft_eo_idx").toString
+    val corpDir = SharedSpark.tempDir("graft_eo_corp").toString
     val index = SimilarityQueries.trainIvfPq(spark, corpus0, 8,
       col("vec_id") % 50 === 0 && col("vec_id") < 800)
     SimilarityQueries.saveIvfPqIndex(spark, index,

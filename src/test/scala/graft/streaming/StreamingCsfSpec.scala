@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.DriverManager
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -101,7 +100,7 @@ class StreamingCsfSpec extends AnyFunSuite with SharedSpark {
         s"${c._1}, ${c._2}, '${c._3.replace("'", "''")}')")
     }
 
-    val ckpt = Files.createTempDirectory("csf_ckpt").toFile.getAbsolutePath
+    val ckpt = SharedSpark.tempDir("csf_ckpt").toFile.getAbsolutePath
     def runOnce(): Seq[RedoRecord] = {
       import spark.implicits._
       val got = collection.mutable.ArrayBuffer[RedoRecord]()

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -51,7 +50,7 @@ class StreamingCurationSpec extends AnyFunSuite with SharedSpark {
       (9L, b + " plus two extras"),// delta batch 2: near-dup of base -> reject
       (11L, novel2),               // delta batch 3: novel -> admit
       (13L, "the tiny short doc stops here now so soon done")) // reject (len)
-    val fx = Files.createTempDirectory("graft_stream_cur").toString
+    val fx = SharedSpark.tempDir("graft_stream_cur").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -70,8 +69,8 @@ class StreamingCurationSpec extends AnyFunSuite with SharedSpark {
       docs.toDF("doc_id", "text")
         .withColumn("source", lit("src0"))
         .filter(col("doc_id") % 2 === 0), bench)
-    val idxDir = Files.createTempDirectory("graft_cur_idx").toString
-    val digDir = Files.createTempDirectory("graft_cur_dig").toString
+    val idxDir = SharedSpark.tempDir("graft_cur_idx").toString
+    val digDir = SharedSpark.tempDir("graft_cur_dig").toString
     val baseHashes = base
       .select(col("doc_id"), shingleHashes(col("toks"), 2).as("hs"))
     DedupQueries.saveBandIndex(baseHashes, idxDir)

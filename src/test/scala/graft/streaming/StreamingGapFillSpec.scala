@@ -46,13 +46,13 @@ class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
     val chunks = obs.grouped(math.max(1, obs.length / 3 + 1)).toSeq
     assert(chunks.size == 3)
 
-    val srcDir = Files.createTempDirectory("gapfill_src").toFile
-    val ckpt = Files.createTempDirectory("gapfill_ckpt").toString
+    val srcDir = SharedSpark.tempDir("gapfill_src").toFile
+    val ckpt = SharedSpark.tempDir("gapfill_ckpt").toString
     var mtime = System.currentTimeMillis() - 60000
     def writeChunk(name: String, rows: Seq[GapObs]): Unit = {
       // one file per chunk, strictly increasing mtime so the file
       // source consumes chunks in event-time order across batches
-      val tmp = Files.createTempDirectory("gapfill_tmp").toString
+      val tmp = SharedSpark.tempDir("gapfill_tmp").toString
       rows.toDS().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -65,14 +64,14 @@ class StreamingScd2Spec extends AnyFunSuite with SharedSpark {
       ctl(6, "S", Ops.Commit),
       ins(7, "R", 3, 301, 3000, 3), ctl(8, "R", Ops.Rollback))
 
-    val redoDir = Files.createTempDirectory("scd2_grl").toFile
+    val redoDir = SharedSpark.tempDir("scd2_grl").toFile
     def writeLog(i: Int, recs: Seq[RedoRecord]): Unit = {
       val w = new RedoLogWriter(new File(redoDir, s"log_$i.grl"), 1024, seq = i)
       recs.foreach(w.append)
       w.close()
     }
     // the stored dimension starts EMPTY (schema via an empty apply)
-    val dimDir = Files.createTempDirectory("scd2_dim").toString
+    val dimDir = SharedSpark.tempDir("scd2_dim").toString
     val empty = decode(Seq.empty[(String, Int, Map[String, String])]
       .toDF("table", "op", "after")
       .withColumn("op", lit(Ops.Insert)))
@@ -81,7 +80,7 @@ class StreamingScd2Spec extends AnyFunSuite with SharedSpark {
         col("valid_from"), col("valid_to"), col("is_current"))
       .write.mode("overwrite").parquet(dimDir)
 
-    val ckpt = Files.createTempDirectory("scd2_ckpt").toFile.getAbsolutePath
+    val ckpt = SharedSpark.tempDir("scd2_ckpt").toFile.getAbsolutePath
     def runStream(): Unit = {
       val records = spark.readStream.format("graft-redo")
         .option("maxFilesPerTrigger", 1)
