@@ -109,18 +109,6 @@ object Tables {
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       .mkString("|"))
 
-  /** The marker-gated build-once artifact lifecycle, shared by every
-    * artifact writer (curated base, RRF index, bucketed layout): if
-    * `path/_GRAFT_OK` already holds `stamp`, the build short-circuits
-    * (returns false); otherwise `build` runs into a fresh unique temp
-    * dir, the marker is stamped LAST inside it, and the whole dir is
-    * atomically published over `path` (returns true). The stamp should
-    * carry a semantics version + a source-data fingerprint
-    * ([[tableFingerprint]]) so code changes and in-place dataset
-    * regeneration both force a rebuild. The marker can vanish between
-    * exists() and read — a concurrent [[publishDir]]'s no-target
-    * window; a missing/unreadable marker means build, never an error.
-    */
   /** The completeness-marker stamp of a published artifact, None when
     * absent/unreadable (an incomplete or in-flight publish).
     */
@@ -133,6 +121,18 @@ object Tables {
     } catch { case _: java.io.IOException => None }
   }
 
+  /** The marker-gated build-once artifact lifecycle, shared by every
+    * artifact writer (curated base, RRF index, bucketed layout): if
+    * `path/_GRAFT_OK` already holds `stamp`, the build short-circuits
+    * (returns false); otherwise `build` runs into a fresh unique temp
+    * dir, the marker is stamped LAST inside it, and the whole dir is
+    * atomically published over `path` (returns true). The stamp should
+    * carry a semantics version + a source-data fingerprint
+    * ([[tableFingerprint]]) so code changes and in-place dataset
+    * regeneration both force a rebuild. The marker can vanish between
+    * exists() and read — a concurrent [[publishDir]]'s no-target
+    * window; a missing/unreadable marker means build, never an error.
+    */
   def ensureArtifact(path: String, stamp: String, force: Boolean = false)(
       build: String => Unit): Boolean = {
     val marker = readMarker(path)
@@ -197,6 +197,13 @@ object Tables {
     math.max(16L << 20, math.min(128L << 20, total / math.max(1, cores)))
   }
 
+  private def rmTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+
   /** Publish a freshly written artifact directory over its stable
     * location: the stale target (if any) moves aside and the temp dir
     * renames into place — a same-filesystem rename, so a reader never
@@ -208,13 +215,6 @@ object Tables {
     * wins any of the races, its artifact is complete and equivalent —
     * ours is dropped.
     */
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
   def publishDir(tmp: String, target: String): Unit = {
     import java.nio.file.{Files, Paths, NoSuchFileException,
       DirectoryNotEmptyException, FileAlreadyExistsException,

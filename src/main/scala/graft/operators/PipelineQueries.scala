@@ -34,7 +34,7 @@ import graft.functions.TextFunctions._
 object PipelineQueries extends GateFamily {
 
   def gates: Seq[Gate] = Seq(
-    Gate("pipe_curate", (s, dir) => curate(s, dir, materialize = true), _ =>
+    Gate("pipe_curate", (s, dir) => curate(s, dir), _ =>
       (curateCtes +
       """SELECT doc_id, source, CAST(n_tok AS INTEGER) AS n_tok, q,
         |       CAST(length(norm) AS INTEGER) AS norm_len
@@ -85,7 +85,7 @@ object PipelineQueries extends GateFamily {
           body
         } finally s.sparkContext.setJobDescription(null)
       val cF = Future(described("curate") {
-        curate(s, dir, materialize = true).select(col("doc_id"))
+        curate(s, dir).select(col("doc_id"))
       })
       val kF = Future(described("near-dup clustering") {
         val pairs = DedupQueries.minHashStarCandidates(
@@ -667,21 +667,16 @@ object PipelineQueries extends GateFamily {
           col("n_tok"), col("q"), col("digest"))
   }
 
-  /** The curation pipeline as one plan. `materialize = true` (the gate /
-    * production path) persists the shared frames, eagerly materializes
-    * the manifest and releases the caches; `materialize = false` returns
-    * the LAZY plan — the full tree stays visible for plan audits and
-    * explain() (an eager localCheckpoint would reduce the audited plan
-    * to a cached-RDD scan).
+  /** The curation pipeline as one plan: persists the shared frames,
+    * eagerly materializes the manifest and releases the caches.
     */
-  private[graft] def curate(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private[graft] def curate(s: SparkSession, dir: String): DataFrame = {
       // stages 1–6 + digest: one fused map pass (see stage16); the
       // survivors frame is read by BOTH the shingle pipeline and the
       // final manifest join — persist materializes the
       // scan+normalize+score pass once (the dedup_jac_lsh discipline)
-      val survivors0 = stage16(s, dir, benchShingles(s, dir), lit(true))
-      val survivors = if (materialize) survivors0.persist() else survivors0
+      val survivors = stage16(s, dir, benchShingles(s, dir), lit(true))
+        .persist()
       val keep = survivors.groupBy(col("digest"))
         .agg(min(col("doc_id")).as("doc_id"))
       val exact = survivors.join(keep, Seq("digest", "doc_id"))
@@ -701,9 +696,9 @@ object PipelineQueries extends GateFamily {
       // candidate) — duplicates in huge families are still dropped,
       // never silently leaked. The oracle states the same bucket-size
       // split, so the gate checks the capped+routed semantics.
-      val hashes0 = exact
+      val hashes = exact
         .select(col("doc_id"), shingleHashes(col("toks"), 2).as("hs"))
-      val hashes = if (materialize) hashes0.persist() else hashes0
+        .persist()
       val drops = DedupQueries.jaccardOnCandidates(
           hashes.filter(size(col("hs")) > 0), maxBucket = Some(8))
         .select(col("ib")).distinct()
@@ -713,17 +708,14 @@ object PipelineQueries extends GateFamily {
       // the drop list is near-dup-pair-sized (orders of magnitude below
       // the corpus) — broadcast it so the anti-join never shuffles the
       // curated side
-      val out0 = exact.join(broadcast(drops),
+      val out = exact.join(broadcast(drops),
           exact("doc_id") === drops("ib"), "left_anti")
         .select(col("doc_id"), col("source"), col("n_tok"), col("q"),
           length(col("norm")).as("norm_len"))
-      if (!materialize) out0
-      else {
-        val out = out0.localCheckpoint(true)
-        hashes.unpersist(blocking = false)
-        survivors.unpersist(blocking = false)
-        out
-      }
+        .localCheckpoint(true)
+      hashes.unpersist(blocking = false)
+      survivors.unpersist(blocking = false)
+      out
   }
 
   /** Stages 1–7 of the curation pipeline as a DuckDB CTE chain through

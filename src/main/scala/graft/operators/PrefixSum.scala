@@ -45,26 +45,21 @@ object PrefixSum extends GateFamily {
     * The range-sorted frame feeds BOTH passes (totals + scan), so it is
     * persisted — the totals collect forces it, the per-row pass reads
     * the cache, and without it the parallel sort would run twice (the
-    * dominant cost at corpus scale). `materialize = true` (the default
-    * and the only EXECUTABLE mode) eagerly checkpoints the result and
-    * releases the sort cache. `materialize = false` is PLAN-INSPECTION
-    * ONLY (the PrefixSumSpec window-absence audit): the returned plan's
-    * broadcast offsets are valid only against the in-cache partitioning
-    * that produced them — executing it after the cache is gone would
-    * re-plan the range partitioning and misalign the offsets, so don't.
+    * dominant cost at corpus scale). The result is eagerly
+    * checkpointed before the sort cache is released: the broadcast
+    * offsets are valid only against the cached partitioning that
+    * produced them.
     */
   def withRunningTotal(df: DataFrame, orderCol: String, valueCol: String,
-      out: String, materialize: Boolean = true,
-      tieCols: Seq[String] = Nil): DataFrame =
-    scanWithTotal(df, orderCol, valueCol, out, materialize, tieCols)._1
+      out: String, tieCols: Seq[String] = Nil): DataFrame =
+    scanWithTotal(df, orderCol, valueCol, out, tieCols)._1
 
   /** [[withRunningTotal]] + the grand total, which pass 1 already
     * computes driver-side (the last exclusive offset + its partition's
     * mass) — consumers needing `sum(valueCol)` (e.g. the shard packer's
     * target) take it from here instead of paying another action. */
   def scanWithTotal(df: DataFrame, orderCol: String, valueCol: String,
-      out: String, materialize: Boolean = true,
-      tieCols: Seq[String] = Nil): (DataFrame, Long) = {
+      out: String, tieCols: Seq[String] = Nil): (DataFrame, Long) = {
     val spark = df.sparkSession
     val orderKey = (orderCol +: tieCols).map(col)
     // enforce the "values are summed as longs" contract at the source:
@@ -99,15 +94,9 @@ object PrefixSum extends GateFamily {
     // with the partition's exclusive offset
     val scanned = parted.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      // belt for the plan-inspection mode — HONEST LIMITS: this only
-      // catches a re-plan that changed the partition COUNT. The
-      // materialize=false contract is therefore "execute while the
-      // persisted partitioning is still cached" (which is why that
-      // path deliberately never unpersists `parted`): if the cache
-      // were evicted and the range sort re-sampled into the SAME
-      // number of partitions with different bounds, offsets would
-      // seed silently wrong — the materialize=true path (every
-      // production caller) closes the window with an eager checkpoint
+      // belt: the offsets are indexed by the partitions pass 1
+      // totalled; a scan over more partitions fails here, naming the
+      // cause, rather than with a bare index error
       require(pid < bOffsets.value.length,
         s"prefix-sum executed against a re-planned partitioning " +
           s"($pid >= ${bOffsets.value.length}) — see withRunningTotal docs")
@@ -124,16 +113,9 @@ object PrefixSum extends GateFamily {
         row
       }
     }(enc)
-    // materialize=false keeps `parted` cached ON PURPOSE (see the
-    // belt comment above): the lazy result's correctness rides on the
-    // cached partitioning. Audit sessions are short-lived; production
-    // callers use materialize=true, which releases it below.
-    if (!materialize) (scanned, acc)
-    else {
-      val outDf = scanned.localCheckpoint(true)
-      parted.unpersist(blocking = false)
-      (outDf, acc)
-    }
+    val outDf = scanned.localCheckpoint(true)
+    parted.unpersist(blocking = false)
+    (outDf, acc)
   }
 
   def gates: Seq[Gate] = Seq(

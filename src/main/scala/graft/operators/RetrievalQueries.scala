@@ -75,18 +75,11 @@ object RetrievalQueries extends GateFamily {
   private val nllMicroExpr =
     "CAST(floor(-ln((CAST(c2 AS DOUBLE) + 1.0) / (CAST(c1 AS DOUBLE) + CAST(v AS DOUBLE))) * 1000000.0) AS BIGINT)"
 
-  /** BM25 retrieval (see object scaladoc). `materialize = false` skips
-    * the eager checkpoint + cache release so PlanAuditSpec can inspect
-    * the lazy plan WITH its persists in place (the caller clears the
-    * cache; same convention as [[PipelineQueries.curate]]).
-    */
-  def bm25(s: SparkSession, dir: String, materialize: Boolean = true): DataFrame = {
+  /** BM25 retrieval (see object scaladoc). */
+  def bm25(s: SparkSession, dir: String): DataFrame = {
       import s.implicits._
       // one tokenize pass for both consumers (postings build + corpus
       // stats) — corpus-bounded doc_id+array frame, released at the end
-      // persist unconditionally (it IS the audited plan shape —
-      // PlanAuditSpec asserts the cache); materialize gates only the
-      // eager checkpoint + release
       val toks = documents(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("tk"))
         .filter(size(col("tk")) > 0)
@@ -124,23 +117,18 @@ object RetrievalQueries extends GateFamily {
         .agg(sum(col("s_u")).as("score_u"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("score_u").desc, col("doc_id"))
-      val ranked = scored.withColumn("rn", row_number().over(w))
+      // result is ≤ 10·|queries| rows — eager materialize, release caches
+      val out = scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10)
         .select(col("qid"), col("doc_id"), col("score_u"), col("rn"))
-      if (!materialize) ranked
-      else {
-        // result is ≤ 10·|queries| rows — eager materialize, release caches
-        val out = ranked.localCheckpoint(true)
-        slice.unpersist(blocking = false)
-        toks.unpersist(blocking = false)
-        out
-      }
+        .localCheckpoint(true)
+      slice.unpersist(blocking = false)
+      toks.unpersist(blocking = false)
+      out
   }
 
-  /** Bigram-LM scoring (see object scaladoc); `materialize = false` for
-    * plan audits.
-    */
-  def lmScore(s: SparkSession, dir: String, materialize: Boolean = true): DataFrame = {
+  /** Bigram-LM scoring (see object scaladoc). */
+  def lmScore(s: SparkSession, dir: String): DataFrame = {
 
       // ONE tokenize pass feeds all four consumers (unigram counts,
       // vocabulary size, bigram-count build, bigram scorer): the token
@@ -181,23 +169,20 @@ object RetrievalQueries extends GateFamily {
       val c2 = bi.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
       // counts join back by key: postings-shaped equi-joins; documents
       // with < 2 tokens have no bigrams and drop out (as in the oracle)
-      val scored = bi.join(c2, "bg")
+      // eager materialize (the per-doc score table IS the operator's
+      // output — it would be written to storage at corpus scale), so
+      // the caches can release immediately
+      val out = bi.join(c2, "bg")
         .join(uni.withColumnRenamed("t", "w1"), "w1")
         .crossJoin(broadcast(vstats))
         .withColumn("nll", expr(nllMicroExpr))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bi"), sum(col("nll")).as("nll_u"))
         .withColumn("avg_u", expr("nll_u div n_bi"))
-      if (!materialize) scored
-      else {
-        // eager materialize (the per-doc score table IS the operator's
-        // output — it would be written to storage at corpus scale), so
-        // the caches can release immediately
-        val out = scored.localCheckpoint(true)
-        uni.unpersist(blocking = false)
-        toks.unpersist(blocking = false)
-        out
-      }
+        .localCheckpoint(true)
+      uni.unpersist(blocking = false)
+      toks.unpersist(blocking = false)
+      out
   }
 
   /** Hybrid retrieval with reciprocal-rank fusion (`retr_rrf`) — the
@@ -224,15 +209,14 @@ object RetrievalQueries extends GateFamily {
     * micro-units (1e6 div (60+r)) so the fused ordering is
     * bit-identical cross-engine.
     */
-  private[graft] def rrf(s: SparkSession, dir: String,
-      materialize: Boolean = true): DataFrame = {
+  private[graft] def rrf(s: SparkSession, dir: String): DataFrame = {
     // sparse arm: BM25 top-10 (≤ 10·|queries| rows, checkpointed).
     // The arms are independent plans and COULD run as two concurrent
     // job groups, but measured on local[32] the overlap loses badly
     // (31.9 s vs 5.9 s sequential — the lloyd mapPartitions pass and
     // the checkpoint actions thrash each other's task slots), so they
     // run sequentially.
-    val sp = bm25(s, dir, materialize)
+    val sp = bm25(s, dir)
       .select(col("qid"), col("doc_id"), col("rn").as("rs"))
     // dense arm: IVF-PQ index-served cosine top-10. Queries are the
     // five vec_id % 100 = 0 lattice vectors (query q ↔ embedding

@@ -38,12 +38,8 @@ object SimilarityQueries extends GateFamily {
       .select(col(idCol), col("q"), col("n2"), explode(col("top")).as("e"))
       .select(col(idCol), col("q"), col("n2"), col("e.id").as("cid"))
 
-  /** Semantic dedup (the SemDeDup shape) — see the gate scaladoc below.
-    * `materialize = false` returns the lazy plan (PlanAuditSpec audits
-    * the REAL pipeline, not a copy; caller clears the cache).
-    */
-  private[operators] def semanticDedup(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  /** Semantic dedup (the SemDeDup shape) — see the gate scaladoc below. */
+  private[operators] def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("q"))
       .withColumn("n2", normQ2(col("q")))
@@ -72,17 +68,14 @@ object SimilarityQueries extends GateFamily {
       col("q").as("qa"), col("n2").as("na"))
     val b = assigned.select(col("cell"), col("vec_id").as("ib"),
       col("q").as("qb"), col("n2").as("nb"))
-    val out0 = a.join(b, Seq("cell")).filter(col("ia") < col("ib"))
+    val out = a.join(b, Seq("cell")).filter(col("ia") < col("ib"))
       .withColumn("cos",
         cosineFromQ(dotQ(col("qa"), col("qb")), col("na"), col("nb")))
       .filter(col("cos") >= 0.30)
       .select(col("cell"), col("ia"), col("ib"), col("cos"))
-    if (!materialize) out0
-    else {
-      val out = out0.localCheckpoint(true)
-      assigned.unpersist(blocking = false)
-      out
-    }
+      .localCheckpoint(true)
+    assigned.unpersist(blocking = false)
+    out
   }
 
   /** Quantized embeddings blocked by random-hyperplane LSH bucket and
@@ -1047,7 +1040,7 @@ object SimilarityQueries extends GateFamily {
     // blocking function. At 100 TB: codebook broadcasts, assignment is
     // one map pass, the only shuffle keys on cluster id; a skewed
     // cluster is a centroid-count/skew-salt problem, not a plan change.
-    Gate("dedup_sem", (s, dir) => semanticDedup(s, dir, materialize = true), _ =>
+    Gate("dedup_sem", (s, dir) => semanticDedup(s, dir), _ =>
       // SemDeDup: the assigned CTE is the ann_ivf assignment restated;
       // pairwise cosine only within a cluster, keep-lowest-id policy
       (quantCte +

@@ -362,7 +362,7 @@ object TextQueries extends GateFamily {
     // scoring join keyed the same way (shuffle-join at corpus scale — a
     // 100 TB corpus's bigram vocabulary does NOT broadcast), one final
     // per-doc sum. Linear end to end, two shuffles total.
-    Gate("text_dsir", (s, dir) => dsir(s, dir, materialize = true), _ =>
+    Gate("text_dsir", (s, dir) => dsir(s, dir), _ =>
       // DSIR: same bigram-hash domain as the dedup/decontam family
       """WITH toks AS (
         |  SELECT doc_id, lang,
@@ -489,12 +489,11 @@ object TextQueries extends GateFamily {
       .withColumn("contaminated", col("n_hit") >= 8)
   }
 
-  /** DSIR plan shared by the gate (materialize = true: persist/force/
-    * release discipline) and `PlanAuditSpec` (false: lazy plan, caller
-    * clears the cache). See the `text_dsir` scaladoc above.
+  /** The `text_dsir` plan (see its scaladoc above): the bigram frame
+    * is persisted, the scores are eagerly materialized, then the cache
+    * is released.
     */
-  private[operators] def dsir(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private[operators] def dsir(s: SparkSession, dir: String): DataFrame = {
     val sh = documents(s, dir)
       .select(col("doc_id"), col("lang"),
         shingleHashes(tokens(col("text")), 2).as("hs"))
@@ -505,17 +504,14 @@ object TextQueries extends GateFamily {
       .agg(count(lit(1)).as("cr"),
         count(when(col("lang") === "en", 1)).as("ct"))
       .select(col("h"), expr("ct * 1000000 div cr").as("r"))
-    val scored = occ.join(ratio, "h")
+    val out = occ.join(ratio, "h")
       .groupBy(col("doc_id"))
       .agg(sum(col("r")).as("rsum"), count(lit(1)).as("n"))
       .select(col("doc_id"), expr("rsum div n").as("wt_u"),
         (expr("rsum div n") > 500000L).as("keep"))
-    if (!materialize) scored
-    else {
-      val out = scored.localCheckpoint(true)
-      sh.unpersist(blocking = false)
-      out
-    }
+      .localCheckpoint(true)
+    sh.unpersist(blocking = false)
+    out
   }
 
   /** SQL statement of the hashing-trick classifier score over a token

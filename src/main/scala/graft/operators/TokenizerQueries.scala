@@ -26,17 +26,13 @@ import graft.functions.TextFunctions._
   * Reference analogue: the reference has no text analytics (SURVEY §2.7
   * — oracdc is a CDC pipeline); these extend the BASELINE.json
   * LLM-pipeline mandate alongside TextQueries.
-  *
-  * Each query has a `materialize = false` builder variant so
-  * `PlanAuditSpec` can assert the physical shape (single parquet scan,
-  * cache reuse, no cartesian) on the lazy plan — the dsir precedent.
   */
 object TokenizerQueries extends GateFamily {
 
   private val K = 8 // gram length for substring dedup (tokens)
 
   def gates: Seq[Gate] = Seq(
-    Gate("text_sdedup", (s, dir) => sdedup(s, dir, materialize = true), _ =>
+    Gate("text_sdedup", (s, dir) => sdedup(s, dir), _ =>
       // same poly-hash domain as the dedup family (rep_filter precedent)
       (toksCte +
       """, t AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
@@ -63,7 +59,7 @@ object TokenizerQueries extends GateFamily {
         |       COALESCE(k.new_text, '') AS new_text
         |FROM t LEFT JOIN ncov n USING (doc_id) LEFT JOIN kept k USING (doc_id)
         |ORDER BY doc_id""".stripMargin)),
-    Gate("text_bpe", (s, dir) => bpe(s, dir, materialize = true), _ =>
+    Gate("text_bpe", (s, dir) => bpe(s, dir), _ =>
       (toksCte +
       """, tok AS (SELECT doc_id, UNNEST(tk) AS t FROM toks),
         |pairs AS (
@@ -78,7 +74,7 @@ object TokenizerQueries extends GateFamily {
         |  ANY_VALUE(b.pr) AS best_pair,
         |  CAST(ANY_VALUE(b.c) AS BIGINT) AS best_cnt
         |FROM tok, best b GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
-    Gate("text_pmi", (s, dir) => pmi(s, dir, materialize = true), _ =>
+    Gate("text_pmi", (s, dir) => pmi(s, dir), _ =>
       (toksCte +
       """, t AS (SELECT tk FROM toks WHERE len(tk) > 0),
         |uni AS (SELECT t AS w, COUNT(*) AS c
@@ -265,8 +261,7 @@ object TokenizerQueries extends GateFamily {
     * corpus on one machine. Positions pack as doc_id*1000+pos
     * (≤ 553-char docs → < 1000 tokens, same bound as text_ldedup).
     */
-  private[operators] def sdedup(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private[operators] def sdedup(s: SparkSession, dir: String): DataFrame = {
     val base = documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
@@ -295,12 +290,9 @@ object TokenizerQueries extends GateFamily {
           "transform(filter(sequence(0, size(tk)-1)," +
             " i -> NOT array_contains(cov, i))," +
             " i -> element_at(tk, i+1))")).as("new_text"))
-    if (!materialize) out
-    else {
-      val res = out.localCheckpoint(true)
-      base.unpersist(blocking = false)
-      res
-    }
+      .localCheckpoint(true)
+    base.unpersist(blocking = false)
+    out
   }
 
   /** END-TO-END tokenizer chain — the corpus → training-tensors path as
@@ -338,7 +330,7 @@ object TokenizerQueries extends GateFamily {
       .filter(size(col("tk")) > 0)
       .persist()
     val merges = learnChainMerges(tok, n = 3)
-    val out = packEncoded(tok, merges, materialize = true)
+    val out = packEncoded(tok, merges)
     tok.unpersist(blocking = false)
     out
   }
@@ -349,11 +341,10 @@ object TokenizerQueries extends GateFamily {
   private val placeholders = Seq("\u0001", "\u0002", "\u0003")
 
   /** Pair statistics over the current symbol state (prior merges
-    * applied as chained literal replaces) — the LAZY frame one
-    * training iteration aggregates; exposed so PlanAuditSpec can
-    * assert it reads the persisted tokenize pass.
+    * applied as chained literal replaces) — the frame one training
+    * iteration aggregates.
     */
-  private[operators] def pairStats(tok: DataFrame,
+  private def pairStats(tok: DataFrame,
       applied: Seq[(String, String)]): DataFrame = {
     val st = applied.foldLeft(col("t")) { case (c, (p, ch)) =>
       replace(c, lit(p), lit(ch))
@@ -389,19 +380,16 @@ object TokenizerQueries extends GateFamily {
   /** Encode with the learned merges (one map pass over the
     * space-joined document — see the pipeTok scaladoc for why this
     * equals per-token apply) and sequence-pack the symbol counts via
-    * the distributed exclusive scan. `materialize = false` returns
-    * the lazy pre-scan plan for PlanAuditSpec.
+    * the distributed exclusive scan.
     */
-  private[operators] def packEncoded(tok: DataFrame, merges: Seq[String],
-      materialize: Boolean): DataFrame = {
+  private def packEncoded(tok: DataFrame, merges: Seq[String]): DataFrame = {
     val enc = merges.zip(placeholders).foldLeft(concat_ws(" ", col("tk"))) {
       case (c, (p, ch)) => replace(c, lit(p), lit(ch))
     }
     val perDoc = tok.select(col("doc_id"),
       size(col("tk")).cast("long").as("n_tok"),
       (length(enc) - (size(col("tk")) - 1)).cast("long").as("n_sym"))
-    if (!materialize) perDoc
-    else PrefixSum.withRunningTotal(perDoc, "doc_id", "n_sym", "cum_before")
+    PrefixSum.withRunningTotal(perDoc, "doc_id", "n_sym", "cum_before")
       .withColumn("blk0", expr("cum_before div 1024"))
       .withColumn("blk1", expr("(cum_before + n_sym - 1) div 1024"))
       .withColumn("n_blocks", col("blk1") - col("blk0") + 1)
@@ -422,8 +410,7 @@ object TokenizerQueries extends GateFamily {
     * one map pass, and the trainer loop ([[BpeTrainer.learn]]) carries
     * only the merge table on the driver.
     */
-  private[operators] def bpe(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private[operators] def bpe(s: SparkSession, dir: String): DataFrame = {
     val tok = documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
       .persist()
@@ -443,12 +430,9 @@ object TokenizerQueries extends GateFamily {
           lit(1.toChar.toString)))).as("n_sym1"),
         first(col("best_pair")).as("best_pair"),
         first(col("best_cnt")).as("best_cnt"))
-    if (!materialize) out
-    else {
-      val res = out.localCheckpoint(true)
-      tok.unpersist(blocking = false)
-      res
-    }
+      .localCheckpoint(true)
+    tok.unpersist(blocking = false)
+    out
   }
 
   /** PMI collocations: score_u = ((cxy·10^6 div cx)·N) div cy — the
@@ -472,8 +456,7 @@ object TokenizerQueries extends GateFamily {
     * a global top-20 (TakeOrdered, k rows per partition).
     * min-support cxy ≥ 5 prunes the noise floor, as in Church & Hanks.
     */
-  private[operators] def pmi(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private[operators] def pmi(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // no corpus-sized persist: the token stream is read ONCE (the whole
     // point of the fusion); only the grouped pair frame — bounded by
@@ -508,12 +491,9 @@ object TokenizerQueries extends GateFamily {
       .select(col("w1"), col("w2"), col("cxy"),
         expr("(cxy * 1000000 div c1) * n div c2").as("pmi_u"))
       .orderBy(col("pmi_u").desc, col("w1"), col("w2")).limit(20)
-    if (!materialize) out
-    else {
-      val res = out.localCheckpoint(true)
-      gw.unpersist(blocking = false)
-      res
-    }
+      .localCheckpoint(true)
+    gw.unpersist(blocking = false)
+    out
   }
 
   private val toksCte =

@@ -28,8 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * upper bound.
   *
   * Options: `url`, `table` ("SCHEMA.TABLE"), `wmColumn` (numeric,
-  * monotonic), `numPartitions` (default 1), `startWm` (default 0),
-  * `fetchSize` (default 1000 — the reference's a2.fetch.size analogue).
+  * monotonic), `numPartitions` (positive, default 1), `startWm` (a
+  * long, default 0), `fetchSize` (positive, default 1000 — the
+  * reference's a2.fetch.size analogue), `lagBehind` (a long ≥ 0,
+  * default 0). A bad value fails with an error naming the option.
   * Schema comes from the S9 dictionary reader on first touch.
   */
 class JdbcPollSource extends TableProvider with DataSourceRegister {
@@ -129,9 +131,18 @@ class JdbcPollStream(schema: StructType, options: CaseInsensitiveStringMap)
   private val url = require(options, "url")
   private val table = require(options, "table")
   private val wmColumn = require(options, "wmColumn")
-  private val numPartitions = Option(options.get("numPartitions")).map(_.toInt).getOrElse(1)
-  private val startWm = Option(options.get("startWm")).map(_.toLong).getOrElse(0L)
-  private val fetchSize = Option(options.get("fetchSize")).map(_.toInt).getOrElse(1000)
+  private def invalid(option: String, v: String, why: String) =
+    new IllegalArgumentException(s"graft-jdbc-poll option $option='$v' $why")
+  /** Option `k` parsed by `parse`, `default` when absent. */
+  private def opt[T](k: String, default: T, why: String)(parse: String => Option[T]): T =
+    Option(options.get(k))
+      .map(v => parse(v).getOrElse(throw invalid(k, v, why)))
+      .getOrElse(default)
+  private val numPartitions =
+    opt("numPartitions", 1, "is not a positive integer")(_.toIntOption.filter(_ > 0))
+  private val startWm = opt("startWm", 0L, "is not a long")(_.toLongOption)
+  private val fetchSize =
+    opt("fetchSize", 1000, "is not a positive integer")(_.toIntOption.filter(_ > 0))
   // Commit-visibility margin: MAX(wm) sees only COMMITTED rows, but a
   // writer can hold wm=100 uncommitted while wm=101 commits first —
   // advancing the offset to 101 would skip row 100 forever once it
@@ -141,7 +152,8 @@ class JdbcPollStream(schema: StructType, options: CaseInsensitiveStringMap)
   // the offset only advances to max-lag). Size it to the writers' max
   // transaction duration in wm units; 0 (default) preserves the
   // poll-only semantics for gap-free monotonic feeds.
-  private val lagBehind = Option(options.get("lagBehind")).map(_.toLong).getOrElse(0L)
+  private val lagBehind =
+    opt("lagBehind", 0L, "is not a long >= 0")(_.toLongOption.filter(_ >= 0))
 
   override def initialOffset(): Offset = WmOffset(startWm)
 

@@ -21,6 +21,20 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     q(spark, dir).queryExecution.executedPlan.toString
   }
 
+  /** Every query execution `body` ran. Fails when it ran none, so an
+    * audit cannot pass on an empty capture.
+    */
+  private def ran(body: => Any): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val qes = executedPlans(body)
+    assert(qes.nonEmpty, "no query ran")
+    qes
+  }
+
+  /** The final plans of every query `body` ran, in the order they ended:
+    * an operator's last one is its eager checkpoint.
+    */
+  private def ranPlans(body: => Any): Seq[String] = ran(body).map(finalPlan(_))
+
   test("dimension joins broadcast (q3, q5)") {
     // at test scale every dim fits autoBroadcastJoinThreshold, so the
     // physical plan must still pick broadcast joins WITHOUT forced hints
@@ -290,15 +304,15 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("pipe_curate: filters fuse into the scan side; drop list is a broadcast anti-join") {
-    // the gate entry eagerly checkpoints (its plan reduces to a cached-
-    // RDD scan) — audit the lazy plan the checkpoint materializes
-    val p = PipelineQueries.curate(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
+    // the plans the gate's operator ran; the last is the manifest
+    // checkpoint
+    val ps = ranPlans(PipelineQueries.curate(spark, dir))
+    val p = ps.last
     assert("BroadcastHashJoin .*LeftAnti".r.findFirstIn(p).isDefined ||
       ("LeftAnti".r.findFirstIn(p).isDefined && p.contains("BroadcastExchange")),
       s"near-dup drop list must anti-join via broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"no cartesian anywhere in the curation pipeline:\n$p")
+    ps.foreach(p => assert(!p.contains("CartesianProduct"),
+      s"no cartesian anywhere in the curation pipeline:\n$p"))
   }
 
   test("incremental near-dedup probes the index with equi-joins only") {
@@ -371,67 +385,61 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("BM25: postings slice cached once; stats/query/df joins broadcast; no cartesian") {
-    // audit the lazy plan (the gate entry eagerly checkpoints); the
-    // scale claims: the corpus-sized explode+groupBy feeds the scorer
-    // through ONE cached slice, every small side (query set, df table,
-    // corpus stats) broadcasts, and nothing degenerates to a cartesian
-    val p = RetrievalQueries.bm25(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        s"token frame and postings slice must be cached:\n$p")
-      assert("BroadcastExchange".r.findAllIn(p).size >= 2,
-        s"query/df/stats sides must broadcast:\n$p")
+    // the scale claims: the corpus-sized explode+groupBy feeds the
+    // scorer through ONE cached slice, every small side (query set, df
+    // table, corpus stats) broadcasts, and nothing degenerates to a
+    // cartesian
+    val ps = ranPlans(RetrievalQueries.bm25(spark, dir))
+    val p = ps.last
+    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
+      s"token frame and postings slice must be cached:\n$p")
+    assert("BroadcastExchange".r.findAllIn(p).size >= 2,
+      s"query/df/stats sides must broadcast:\n$p")
+    ps.foreach { p =>
       assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
       assert(!p.contains("SortMergeJoin"),
         s"scoring joins must all be broadcast-hash:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("BM25 ranking runs through the bounded-heap top-k rewrite") {
-    val p = RetrievalQueries.bm25(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try assert(p.contains("rowtopk"),
+    val p = ranPlans(RetrievalQueries.bm25(spark, dir)).last
+    assert(p.contains("rowtopk"),
       s"per-query ranking must use the bounded heap:\n$p")
-    finally spark.sharedState.cacheManager.clearCache()
   }
 
   test("LM score: one tokenize pass via cache; count joins equi-only") {
-    val p = RetrievalQueries.lmScore(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      // one tokenize pass: every consumer reads the cached token frame;
-      // the bigram/unigram count joins are equi-joins (postings-shaped)
-      // — never nested-loop over the corpus — and only the 1-row V
-      // frame rides a broadcast nested loop
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        s"token frame must be cached:\n$p")
+    val ps = ranPlans(RetrievalQueries.lmScore(spark, dir))
+    val p = ps.last
+    // one tokenize pass: every consumer reads the cached token frame;
+    // the bigram/unigram count joins are equi-joins (postings-shaped)
+    // — never nested-loop over the corpus — and only the 1-row V
+    // frame rides a broadcast nested loop
+    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
+      s"token frame must be cached:\n$p")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
+      p.contains("BroadcastHashJoin"), s"count joins must be equi-joins:\n$p")
+    ps.foreach { p =>
       assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
       val bnl = "BroadcastNestedLoopJoin".r.findAllIn(p).size
       assert(bnl <= 1, s"only the scalar V frame may cross-join:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-        p.contains("BroadcastHashJoin"), s"count joins must be equi-joins:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("semantic dedup: codebook broadcasts for assignment; no cartesian anywhere") {
     // the SemDeDup claims: centroid assignment is map-only against a
     // BROADCAST codebook (collapsed by the bounded heap before any
     // shuffle), and the pair stage is an equi-join on the cluster key —
-    // a cartesian would mean the blocking failed. Audits the REAL
-    // pipeline through the lazy form (the gate entry eagerly
-    // checkpoints, which would reduce the audited plan to an RDD scan).
-    val p = SimilarityQueries.semanticDedup(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert(p.contains("BroadcastExchange"),
-        s"codebook must broadcast:\n$p")
-      assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
-      assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,
-        s"assignment heap must partial-aggregate map-side:\n$p")
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        s"assignment frame must be cached for the two pair sides:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    // a cartesian would mean the blocking failed
+    val ps = ranPlans(SimilarityQueries.semanticDedup(spark, dir))
+    val p = ps.last
+    assert(p.contains("BroadcastExchange"),
+      s"codebook must broadcast:\n$p")
+    assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,
+      s"assignment heap must partial-aggregate map-side:\n$p")
+    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
+      s"assignment frame must be cached for the two pair sides:\n$p")
+    ps.foreach(p => assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p"))
   }
 
   test("domain mix: rate table broadcasts; keep filter adds no corpus shuffle") {
@@ -459,18 +467,17 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("DSIR: one cached bigram pass feeds tally and scoring; no cartesian") {
-    val p = TextQueries.dsir(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      // BOTH consumers (ratio tally build side, scoring probe side) must
-      // read the cached bigram frame — each InMemoryTableScan's printout
-      // embeds the cache's build plan, so count the cache reads, not the
-      // FileScan strings inside them
-      assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
-        s"both join sides must read the cached bigram frame:\n$p")
+    val ps = ranPlans(TextQueries.dsir(spark, dir))
+    val p = ps.last
+    // BOTH consumers (ratio tally build side, scoring probe side) must
+    // read the cached bigram frame — each InMemoryTableScan's printout
+    // embeds the cache's build plan, so count the cache reads, not the
+    // FileScan strings inside them
+    assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
+      s"both join sides must read the cached bigram frame:\n$p")
+    ps.foreach(p =>
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
-        s"scoring join must stay an equi-join:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+        s"scoring join must stay an equi-join:\n$p"))
   }
 
   test("funnel folds in one user shuffle: no join, no window") {
@@ -586,15 +593,14 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     } finally edges.unpersist(blocking = false)
   }
   test("substring dedup: one scan pass, all joins equi, no cartesian") {
-    // the gate entry eagerly checkpoints; audit the lazy plan. Scale
-    // claims: tokens+gram hashes are computed ONCE (both the gram side
-    // and the rebuild side read the cached frame), every join is
+    // scale claims: tokens+gram hashes are computed ONCE (both the gram
+    // side and the rebuild side read the cached frame), every join is
     // equi-keyed (gram hash, doc_id), nothing pairwise
-    val p = TokenizerQueries.sdedup(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
-        s"gram side AND rebuild side must read the cached scan:\n$p")
+    val ps = ranPlans(TokenizerQueries.sdedup(spark, dir))
+    val p = ps.last
+    assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
+      s"gram side AND rebuild side must read the cached scan:\n$p")
+    ps.foreach { p =>
       // every printed parquet scan must sit INSIDE an InMemoryRelation
       // cached-plan printout (the jac_lsh audit idiom) — a bare scan
       // would mean a consumer bypassed the cache
@@ -604,7 +610,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"substring dedup has no non-equi join:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("pipe_tok: one tokenize pass feeds training, encode and packing") {
@@ -612,95 +618,108 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     // corpus read — every training iteration's pair statistic and the
     // encode+pack projection consume the cache, never a fresh parquet
     // scan of documents
-    import org.apache.spark.sql.functions.{col, size}
-    import graft.functions.TextFunctions.tokens
-    val tok = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) > 0)
-      .persist()
-    try {
-      val stats = TokenizerQueries.pairStats(tok, Seq(("ab", "")))
-        .queryExecution.executedPlan.toString
-      assert(stats.contains("InMemoryTableScan"),
-        s"training pair stats must read the cached tokenize pass:\n$stats")
-      assert("FileScan|Scan parquet".r.findAllIn(stats).size <=
-        "InMemoryRelation".r.findAllIn(stats).size,
-        s"training re-scans parquet outside the cache:\n$stats")
-      val pack = TokenizerQueries
-        .packEncoded(tok, Seq("ab", "cd", "ef"), materialize = false)
-        .queryExecution.executedPlan.toString
-      assert(pack.contains("InMemoryTableScan"),
-        s"encode+pack must read the cached tokenize pass:\n$pack")
-      // map-only ABOVE the cache: any Exchange in the printout belongs
-      // to the cached subtree (the input repartition inside the
-      // InMemoryRelation), never to the encode projection itself
-      assert(!pack.substring(0, pack.indexOf("InMemoryRelation"))
-        .contains("Exchange"),
-        s"encode is a map-only projection — no shuffle above the cache:\n$pack")
-    } finally tok.unpersist(blocking = true)
+    val ps = ranPlans(TokenizerQueries.pipeTok(spark, dir))
+    val all = ps.mkString("\n\n")
+    assert(ps.count(_.contains("TakeOrderedAndProject(limit=1,")) == 3,
+      s"expected the three training iterations' pair statistics:\n$all")
+    ps.foreach { p =>
+      assert(p.contains("InMemoryTableScan"),
+        s"every pass must read the cached tokenize pass:\n$p")
+      assert("FileScan|Scan parquet".r.findAllIn(p).size <=
+        "InMemoryRelation".r.findAllIn(p).size,
+        s"a pass re-scans parquet outside the cache:\n$p")
+    }
+    // the encode projection (the one computing n_sym) and what it reads,
+    // down to the first cached relation below it
+    val encodes = ps.flatMap { p =>
+      val at = p.indexOf(" AS n_sym#")
+      if (at < 0) None
+      else Some(p.substring(at, p.indexOf("InMemoryRelation", at)))
+    }
+    assert(encodes.nonEmpty, s"no plan ran the encode projection:\n$all")
+    encodes.foreach { e =>
+      assert(e.contains("InMemoryTableScan"),
+        s"encode+pack must read the cached tokenize pass:\n$e")
+      assert(!e.contains("Exchange"),
+        s"encode is a map-only projection — no shuffle above the cache:\n$e")
+    }
   }
 
   test("BPE step: corpus never moves — pair argmax broadcasts back") {
-    val p = TokenizerQueries.bpe(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
-        s"pair counts and symbol sums must share one exploded frame:\n$p")
-      assert(p.contains("BroadcastExchange"),
-        s"the 1-row best-pair frame must broadcast:\n$p")
-      assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
-        s"only the 1-row argmax may cross-join:\n$p")
-      assert(p.contains("partial_count"),
-        s"pair statistic must combine map-side:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    val ps = ranPlans(TokenizerQueries.bpe(spark, dir))
+    val p = ps.last
+    assert("InMemoryTableScan".r.findAllIn(p).size >= 2,
+      s"pair counts and symbol sums must share one exploded frame:\n$p")
+    assert(p.contains("BroadcastExchange"),
+      s"the 1-row best-pair frame must broadcast:\n$p")
+    assert(p.contains("partial_count"),
+      s"pair statistic must combine map-side:\n$p")
+    ps.foreach(p => assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
+      s"only the 1-row argmax may cross-join:\n$p"))
   }
 
   test("PMI: one tokenize pass; bigram-unigram joins never cartesian") {
-    val p = TokenizerQueries.pmi(spark, dir, materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert("InMemoryTableScan".r.findAllIn(p).size >= 3,
-        s"unigram, bigram and scoring sides must share cached frames:\n$p")
+    val ps = ranPlans(TokenizerQueries.pmi(spark, dir))
+    val p = ps.last
+    assert("InMemoryTableScan".r.findAllIn(p).size >= 3,
+      s"unigram, bigram and scoring sides must share cached frames:\n$p")
+    assert(p.contains("TakeOrderedAndProject"),
+      s"global top-20 must be TakeOrdered (k per partition), not a full sort:\n$p")
+    ps.foreach { p =>
       assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
       val bnl = "BroadcastNestedLoopJoin".r.findAllIn(p).size
       assert(bnl <= 1, s"only the scalar N frame may cross-join:\n$p")
-      assert(p.contains("TakeOrderedAndProject"),
-        s"global top-20 must be TakeOrdered (k per partition), not a full sort:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   /** Each Filter or Project below a round-robin exchange that runs a
-    * kernel (a `StaticInvoke`, an unreplaced `KernelCall`) or a lambda.
+    * kernel (a `StaticInvoke`, an unreplaced `KernelCall`) or a lambda,
+    * in a physical plan and the plans of the caches it reads.
     */
-  private def kernelWorkUnderSpread(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  private def kernelWorkUnderSpread(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.LambdaFunction
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
     val kernel: org.apache.spark.sql.catalyst.expressions.Expression => Boolean = _.exists {
       case _: StaticInvoke | _: graft.functions.KernelCall | _: LambdaFunction => true
       case _ => false
     }
-    df.queryExecution.sparkPlan.collect {
-      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
-        e.child.collect {
-          case n @ (_: FilterExec | _: ProjectExec) if n.expressions.exists(kernel) =>
-            n.simpleString(400)
-        }
-    }.flatten
+    spreads(plan).flatMap { e =>
+      nodes(e.child).collect {
+        case n @ (_: FilterExec | _: ProjectExec)
+            if n.asInstanceOf[SparkPlan].expressions.exists(kernel) =>
+          n.simpleString(400)
+      }
+    }
+  }
+
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan) =
+    SharedSpark.planNodes(p).map(_._1)
+
+  /** The round-robin exchanges in a physical plan and its caches' plans. */
+  private def spreads(plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    nodes(plan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
   }
 
   test("kernel filters and projections run above tablePar's spread, never below it") {
-    val lazyCurate = PipelineQueries.curate(spark, dir, materialize = false)
-    val plans = ("pipe_curate (lazy)" -> lazyCurate) +:
-      Seq("text_classify", "text_decontam", "text_rep_filter", "f10_vector",
-        "dedup_simhash").map(n => n -> graft.SparkEntry.queries(n)(spark, dir))
-    try plans.foreach { case (name, df) =>
-      val under = kernelWorkUnderSpread(df)
-      assert(under.isEmpty,
-        s"$name runs kernel work in the one-task scan stage below the spread:\n" +
-          under.mkString("\n"))
-    } finally spark.sharedState.cacheManager.clearCache()
+    Seq("pipe_curate", "text_classify", "text_decontam", "text_rep_filter",
+        "f10_vector", "dedup_simhash").foreach { name =>
+      // run as Bench runs a gate: into the noop sink
+      val qes = ran(graft.SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+      // the spread must be in what ran, or the audit checks nothing
+      assert(qes.exists(qe => spreads(qe.sparkPlan).nonEmpty),
+        s"$name ran no round-robin spread")
+      qes.foreach { qe =>
+        val under = kernelWorkUnderSpread(qe.sparkPlan)
+        assert(under.isEmpty,
+          s"$name runs kernel work in the one-task scan stage below the spread:\n" +
+            under.mkString("\n"))
+      }
+    }
   }
 }

@@ -82,23 +82,17 @@ class PrefixSumSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("the scan plan contains no single-partition global window") {
-    // audit the LAZY operator plan: the gate's eager checkpoint truncates
-    // lineage, so auditing the gate output would pass vacuously
+    // the plans the operator ran: pass 1's totals and pass 2's eager
+    // checkpoint, which is the last
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "CAST(n_chars AS BIGINT) AS v")
-    val p = PrefixSum.withRunningTotal(df, "doc_id", "v", "cum",
-        materialize = false)
-      .queryExecution.executedPlan.toString
-    try {
-      assert(!p.contains("Window ["),
-        s"the scan must not plan a window:\n$p")
-      assert(p.contains("MapPartitions") || p.contains("mapPartitions"),
-        s"expected the per-partition scan stage:\n$p")
-    } finally {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
+    val ps = executedPlans(PrefixSum.withRunningTotal(df, "doc_id", "v", "cum"))
+      .map(finalPlan)
+    assert(ps.nonEmpty, "the scan ran no query")
+    ps.foreach(p => assert(!p.contains("Window ["),
+      s"the scan must not plan a window:\n$p"))
+    assert(ps.last.contains("MapPartitions") || ps.last.contains("mapPartitions"),
+      s"expected the per-partition scan stage:\n${ps.last}")
   }
 
   test("fuzz: 15 seeded-random layouts all agree with the reference") {

@@ -61,4 +61,47 @@ class JdbcPollSourceSpec extends AnyFunSuite with SharedSpark {
     assert(second.head._2 === "21.25")
     conn.close()
   }
+
+  /** The error a stream with `option = v` fails with when it is built. */
+  private def rejected(option: String, v: String): String = {
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("url", "jdbc:derby:memory:unused")
+    opts.put("table", "APP.CHANGES")
+    opts.put("wmColumn", "SCN")
+    opts.put(option, v)
+    intercept[IllegalArgumentException](new JdbcPollStream(
+      new org.apache.spark.sql.types.StructType(),
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))).getMessage
+  }
+
+  test("numPartitions must be a positive integer") {
+    // 0 divided by zero when a batch was planned; a negative count
+    // planned no partitions and skipped the window's rows
+    Seq("0", "-3", "four").foreach { v =>
+      assert(rejected("numPartitions", v) ===
+        s"graft-jdbc-poll option numPartitions='$v' is not a positive integer")
+    }
+  }
+
+  test("lagBehind must be a long >= 0") {
+    // a negative margin set the offset past MAX(wm): rows committed
+    // later inside it were never read
+    Seq("-1", "soon").foreach { v =>
+      assert(rejected("lagBehind", v) ===
+        s"graft-jdbc-poll option lagBehind='$v' is not a long >= 0")
+    }
+  }
+
+  test("fetchSize must be a positive integer") {
+    Seq("0", "-10", "1e3").foreach { v =>
+      assert(rejected("fetchSize", v) ===
+        s"graft-jdbc-poll option fetchSize='$v' is not a positive integer")
+    }
+  }
+
+  test("startWm must be a long") {
+    Seq("abc", "1.5", "").foreach { v =>
+      assert(rejected("startWm", v) === s"graft-jdbc-poll option startWm='$v' is not a long")
+    }
+  }
 }
