@@ -9,7 +9,7 @@ import scala.collection.mutable.ArrayBuffer
   * expand multi-row ops, optionally drop no-op updates and prune DELETE
   * columns — as a pure function over one transaction's records. Pure
   * Scala: unit-testable without Spark, and the same core drives both the
-  * batch `flatMapGroups` and the streaming `flatMapGroupsWithState`
+  * batch `flatMapGroups` and the streaming `transformWithState`
   * wrappers in graft.streaming.
   *
   * Reference behaviors re-expressed (not ported):

@@ -36,6 +36,11 @@ object TemporalQueries extends GateFamily {
 
   private val HOUR_US = 3600L * 1000000L
 
+  /** `q_ts_anomaly`'s frame and exact-domain bound in cents (see the
+    * gate; the bound holds for this width only), shared with its twin. */
+  val AnomalyWindow = 5
+  val AnomalyMaxCents = 1L << 27
+
   /** Generic as-of join: every `left` row picks up `payload` from the
     * latest `right` row with right.time ≤ left.time within the same
     * `key` (inclusive — DuckDB ASOF `>=` semantics); null when no such
@@ -221,12 +226,12 @@ object TemporalQueries extends GateFamily {
       // null-safe: a NULL value (absent measurement) flows through the
       // frame aggregates untouched (count/sum skip nulls) — only a
       // PRESENT value outside the exact domain raises
-      val x = when(raw.isNull || abs(raw) < lit(1L << 27), raw).otherwise(
+      val x = when(raw.isNull || abs(raw) < AnomalyMaxCents, raw).otherwise(
         raise_error(format_string(
           "q_ts_anomaly: |value| >= 2^27 cents breaks integer-exact " +
             "arithmetic (got %s)", col("value"))).cast("long"))
       val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id")).rowsBetween(-5, -1)
+        .orderBy(col("ts"), col("event_id")).rowsBetween(-AnomalyWindow, -1)
       events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), x.as("x"))
         .withColumn("n", count(col("x")).over(w))

@@ -89,6 +89,10 @@ object ChangeStreams {
       opts: TransactionAssembler.Options = TransactionAssembler.DefaultOptions,
       idleTimeoutMs: Long = 0L,
       tombstoneTtlMs: Long = 0L): Dataset[EmittedChange] = {
+    require(idleTimeoutMs >= 0, s"idleTimeoutMs < 0: $idleTimeoutMs")
+    require(tombstoneTtlMs >= 0, s"tombstoneTtlMs < 0: $tombstoneTtlMs")
+    require(tombstoneTtlMs == 0 || idleTimeoutMs > 0, s"tombstoneTtlMs " +
+      s"$tombstoneTtlMs needs idleTimeoutMs > 0 (eviction makes tombstones)")
     val spark = records.sparkSession
     import spark.implicits._
     // saturate FAR below Long.MaxValue: the state store computes the

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+
+import graft.operators.TemporalQueries.{AnomalyMaxCents, AnomalyWindow}
 
 /** Streaming twins of the temporal batch operators (§2.61/§2.62) — the
   * form they take when the observations arrive as a CDC-ordered stream
@@ -15,6 +20,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * — each batch sorts per key). The engine's CDC sources satisfy this
   * by construction: commit-SCN-ordered emission (T3) is the property
   * that makes every downstream temporal operator well-defined.
+  *
+  * Each operator is a `StatefulProcessor` on `transformWithState`, so it
+  * needs the RocksDB state-store provider [[graft.GraftSession.build]]
+  * sets. A checkpoint written by these operators before they moved to
+  * `transformWithState` (from the older group-state API) does not
+  * restart on them: such a query starts on a new checkpoint.
   */
 object TimeSeriesStreams {
 
@@ -27,15 +38,9 @@ object TimeSeriesStreams {
   case class AnomalyFlag(eventId: Long, userId: Long, n: Long,
       anomaly: Boolean)
 
-  /** Per-key trailing window (≤ `window` most recent observations). */
+  /** Per-key trailing window (≤ `AnomalyWindow` most recent observations). */
   case class TrailState(obs: Seq[(Long, Long, Long)]) // (ts, eventId, x)
 
-  /** Rolling 3σ anomaly flags over a stream — the `q_ts_anomaly`
-    * semantics ((nx−S)² > 9(nΣx²−S²) on the trailing `window`
-    * observations, integer-exact) with the trailing window held in the
-    * state store per key: O(window) state per key forever, flags
-    * emitted exactly once per observation (append mode).
-    */
   /** One raw observation for gap-fill: key, event-time micros, event
     * id (the within-day tiebreak), carried value. `tsMicros ==
     * Long.MaxValue` is the FLUSH sentinel: it closes the key's open
@@ -68,24 +73,6 @@ object TimeSeriesStreams {
   case class GapState(day: Long, ts: Long, eventId: Long, value: Double,
       emitted: Boolean)
 
-  private val DayMicros = 86400L * 1000000L
-
-  /** Sanity ceiling on epoch day (~year 275 000 — the timestamp type's
-    * own ceiling): a corrupt tsMicros below the flush sentinel would
-    * otherwise open a day the forward-fill loop then bridges with up to
-    * ~10^11 rows. Beyond this is data corruption, not data.
-    */
-  private val MaxSaneDay = 100000000L
-
-  private def saneDay(variant: String, user: Long, tsMicros: Long): Long = {
-    val d = Math.floorDiv(tsMicros, DayMicros)
-    if (d > MaxSaneDay) throw new IllegalStateException(
-      s"$variant: key $user observation at tsMicros=$tsMicros (epoch day " +
-        s"$d, past year ~275000) — corrupt event time; forward-filling " +
-        "to it would emit a grid row per intervening day")
-    d
-  }
-
   /** End-of-key flush marker for [[gapFillStream]]. */
   def gapFlush(userId: Long): GapObs =
     GapObs(userId, Long.MaxValue, 0L, 0.0)
@@ -104,74 +91,18 @@ object TimeSeriesStreams {
     * than silently rewriting emitted history.
     *
     * State bound: one row per ever-flushed key (the tombstone carrier)
-    * — exact grid continuity costs that. With NoTimeout there is no
+    * — exact grid continuity costs that. With no timers there is no
     * expiry hook; a long-lived stream with unbounded one-shot key churn
     * should use [[gapFillStreamWatermarked]] with `tombstoneTtlDays`,
     * which expires quiet carriers off the event-time clock.
     */
-  def gapFillStream(events: Dataset[GapObs]): Dataset[DayFill] = {
-    implicit val outEnc = Encoders.product[DayFill]
-    implicit val stateEnc = Encoders.product[GapState]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[GapObs], state: GroupState[GapState]) =>
-          var open = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[DayFill]
-          it.toSeq.sortBy(o => (o.tsMicros, o.eventId)).foreach { o =>
-            if (o.tsMicros == Long.MaxValue) {
-              // flush: close and emit the open day; keep a tombstone so
-              // a post-flush wake-up continues the grid rather than
-              // silently restarting it (a second flush is a no-op)
-              open = open.map { p =>
-                if (!p.emitted)
-                  out += DayFill(user, p.day, p.value, filled = false)
-                p.copy(emitted = true)
-              }
-            } else {
-              val d = saneDay("gapFillStream", user, o.tsMicros)
-              open match {
-                case None =>
-                  open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                    emitted = false))
-                case Some(p) if d == p.day && !p.emitted =>
-                  // same day still open: keep the LAST observation
-                  // (max (ts, eventId) — the batch gate's max_by)
-                  if (o.tsMicros > p.ts ||
-                    (o.tsMicros == p.ts && o.eventId > p.eventId))
-                    open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                      emitted = false))
-                case Some(p) if d > p.day =>
-                  // later day arrived: close the open day (already done
-                  // if a flush tombstoned it), forward-fill up to d
-                  if (!p.emitted)
-                    out += DayFill(user, p.day, p.value, filled = false)
-                  var g = p.day + 1
-                  while (g < d) {
-                    out += DayFill(user, g, p.value, filled = true)
-                    g += 1
-                  }
-                  open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                    emitted = false))
-                case Some(p) =>
-                  throw new IllegalStateException(
-                    s"gapFillStream: key $user received day $d at or after " +
-                      s"emitted/closed day ${p.day} — sources must deliver " +
-                      "each key in non-decreasing event time across batches " +
-                      "(T3), and a flushed day cannot reopen")
-              }
-            }
-          }
-          open.foreach(state.update)
-          out.iterator
-      }
-  }
+  def gapFillStream(events: Dataset[GapObs]): Dataset[DayFill] =
+    gapFill(events, TimeMode.None(), 0L)
 
   /** [[gapFillStream]] with WATERMARK-driven day closure — the fully
     * production shape: no explicit flush sentinel; a key's open day
     * closes (emits) when the stream's event-time watermark passes the
-    * end of that day, via an event-time timeout on the key's state.
+    * end of that day, via an event-time timer on the key.
     * The caller declares lateness tolerance once with
     * `withWatermark(eventTimeCol, delay)` on the input; this wrapper
     * derives the column from `tsMicros` and applies the given delay.
@@ -208,113 +139,170 @@ object TimeSeriesStreams {
     // carrier immediately — the opposite of asking for a long TTL)
     require(tombstoneTtlDays >= 0 && tombstoneTtlDays <= 100_000_000L,
       s"tombstoneTtlDays out of range: $tombstoneTtlDays")
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[DayFill]
-    implicit val stateEnc = Encoders.product[GapState]
-    val withWm = events
-      .withColumn("eventTime",
-        (col("tsMicros") / lit(1000000L)).cast("timestamp"))
-      .withWatermark("eventTime", delay)
-      .as[GapObs]
-    withWm.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, it: Iterator[GapObs], state: GroupState[GapState]) =>
-          if (state.hasTimedOut) {
-            val p = state.get
-            if (p.emitted) {
-              // the tombstone's TTL timer fired: the key stayed quiet
-              // for the whole horizon — drop the carrier (bounded state
-              // per quiet key). Without a configured TTL this branch is
-              // unreachable (no timer is armed on a tombstone); keep
-              // the carrier in that case rather than guess.
-              if (tombstoneTtlDays > 0) state.remove()
-              Iterator.empty
-            } else {
-              // the watermark passed the open day's end: close + emit,
-              // keep the tombstone (the carrier for later forward-fill)
-              state.update(p.copy(emitted = true))
-              if (tombstoneTtlDays > 0)
-                state.setTimeoutTimestamp(math.max(
-                  (p.day + 1 + tombstoneTtlDays) * 86400000L,
-                  state.getCurrentWatermarkMs() + 1))
-              Iterator.single(DayFill(user, p.day, p.value,
-                filled = false))
-            }
-          } else {
-            var open = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayFill]
-            it.toSeq.sortBy(o => (o.tsMicros, o.eventId)).foreach { o =>
-              if (o.tsMicros == Long.MaxValue)
-                throw new IllegalStateException(
-                  s"gapFillStreamWatermarked: key $user received the flush " +
-                    "sentinel (tsMicros = Long.MaxValue) — that is the " +
-                    "sentinel variant's protocol; here the watermark closes " +
-                    "days, and the sentinel would forward-fill ~10^11 grid " +
-                    "days. Strip gapFlush() markers before this operator.")
-              val d = saneDay("gapFillStreamWatermarked", user, o.tsMicros)
-              open match {
-                case None =>
-                  open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                    emitted = false))
-                case Some(p) if d == p.day && !p.emitted =>
-                  if (o.tsMicros > p.ts ||
-                    (o.tsMicros == p.ts && o.eventId > p.eventId))
-                    open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                      emitted = false))
-                case Some(p) if d > p.day =>
-                  if (!p.emitted)
-                    out += DayFill(user, p.day, p.value, filled = false)
-                  var g = p.day + 1
-                  while (g < d) {
-                    out += DayFill(user, g, p.value, filled = true)
-                    g += 1
-                  }
-                  open = Some(GapState(d, o.tsMicros, o.eventId, o.value,
-                    emitted = false))
-                case Some(p) =>
-                  throw new IllegalStateException(
-                    s"gapFillStreamWatermarked: key $user received day $d " +
-                      s"at or after closed day ${p.day} — late data past " +
-                      "the declared watermark tolerance")
-              }
-            }
-            open.foreach { p =>
-              state.update(p)
-              // close the open day when the watermark passes its end;
-              // an already-late day (recovery over old data) arms at
-              // watermark+1 so the registration is always valid
-              val dayEndMs = (p.day + 1) * 86400000L
-              state.setTimeoutTimestamp(
-                math.max(dayEndMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
+    gapFill(events.withColumn("eventTime", timestamp_micros(col("tsMicros")))
+      .withWatermark("eventTime", delay).as[GapObs](Encoders.product[GapObs]),
+      TimeMode.EventTime(), tombstoneTtlDays)
+  }
+
+  private def gapFill(events: Dataset[GapObs], closure: TimeMode,
+      tombstoneTtlDays: Long): Dataset[DayFill] =
+    events.groupByKey(_.userId)(Encoders.scalaLong)
+      .transformWithState(new GapFillProcessor(closure, tombstoneTtlDays),
+        closure, OutputMode.Append())(Encoders.product[DayFill])
+
+  /** Rolling 3σ anomaly flags over a stream — the `q_ts_anomaly`
+    * semantics ((nx−S)² > 9(nΣx²−S²) on the trailing `AnomalyWindow`
+    * observations, integer-exact) with the trailing window held in the
+    * state store per key: O(window) state per key forever, flags
+    * emitted exactly once per observation (append mode). A value with
+    * |x| ≥ 2^27 cents throws, as the batch gate raises: beyond it the
+    * longs of the rule would wrap silently.
+    */
+  def anomalyStream(events: Dataset[Obs]): Dataset[AnomalyFlag] =
+    events.groupByKey(_.userId)(Encoders.scalaLong)
+      .transformWithState(new AnomalyProcessor, TimeMode.None(),
+        OutputMode.Append())(Encoders.product[AnomalyFlag])
+
+  /** Gap fill's one state machine. `closure`, the time mode the entry
+    * point runs it under, picks what besides a later day closes an open
+    * day: the flush sentinel (`None`) or a timer at the day's end
+    * (`EventTime`, which rejects the sentinel). A key holds at most one
+    * timer, the open day's end or the tombstone's expiry.
+    */
+  private class GapFillProcessor(closure: TimeMode, tombstoneTtlDays: Long)
+    extends StatefulProcessor[Long, GapObs, DayFill] {
+
+    @transient private var open: ValueState[GapState] = _
+
+    private val DayMs = 86400000L
+    // epoch-day ceiling (~year 275 000, the timestamp type's own): past it
+    // a corrupt tsMicros would have the forward-fill bridge ~10^11 rows
+    private val MaxSaneDay = 100000000L
+
+    private val watermarked = closure == TimeMode.EventTime()
+    private val variant =
+      if (watermarked) "gapFillStreamWatermarked" else "gapFillStream"
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      open = getHandle.getValueState("open", Encoders.product[GapState],
+        TTLConfig.NONE)
+
+    override def handleInputRows(user: Long, rows: Iterator[GapObs],
+        timerValues: TimerValues): Iterator[DayFill] = {
+      var p = if (open.exists()) Some(open.get()) else None
+      val out = ArrayBuffer.empty[DayFill]
+      rows.toArray.sortBy(o => (o.tsMicros, o.eventId))
+        .foreach(o => p = step(user, p, o, out))
+      p.foreach { s =>
+        open.update(s)
+        if (watermarked) arm((s.day + 1) * DayMs, timerValues)
+      }
+      out.iterator
+    }
+
+    override def handleExpiredTimer(user: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[DayFill] = {
+      val p = open.get()
+      if (p.emitted) {
+        // the tombstone's TTL ran out: drop the carrier
+        open.clear()
+        Iterator.empty
+      } else {
+        // the watermark passed the open day's end: emit it, keep the carrier
+        open.update(p.copy(emitted = true))
+        if (tombstoneTtlDays > 0)
+          arm((p.day + 1 + tombstoneTtlDays) * DayMs, timerValues)
+        Iterator.single(DayFill(user, p.day, p.value, filled = false))
+      }
+    }
+
+    /** Makes `atMs` (watermark + 1 once the watermark passed it) the key's
+      * only timer: a stale day-end timer would close a later day early.
+      */
+    private def arm(atMs: Long, timerValues: TimerValues): Unit = {
+      val at = math.max(atMs, timerValues.getCurrentWatermarkInMs() + 1)
+      val stale = getHandle.listTimers().toList.filter(_ != at)
+      stale.foreach(getHandle.deleteTimer)
+      getHandle.registerTimer(at)
+    }
+
+    /** The key's open day after `o`; the days `o` closes go to `out`. */
+    private def step(user: Long, open: Option[GapState], o: GapObs,
+        out: ArrayBuffer[DayFill]): Option[GapState] =
+      if (o.tsMicros == Long.MaxValue) {
+        if (watermarked) throw new IllegalStateException(
+          s"$variant: key $user received the flush " +
+            "sentinel (tsMicros = Long.MaxValue) — that is the " +
+            "sentinel variant's protocol; here the watermark closes " +
+            "days, and the sentinel would forward-fill ~10^11 grid " +
+            "days. Strip gapFlush() markers before this operator.")
+        // flush: close and emit the open day; keep a tombstone so a
+        // post-flush wake-up continues the grid rather than silently
+        // restarting it (a second flush is a no-op)
+        open.map { p =>
+          if (!p.emitted) out += DayFill(user, p.day, p.value, filled = false)
+          p.copy(emitted = true)
+        }
+      } else {
+        val d = Math.floorDiv(o.tsMicros, DayMs * 1000L)
+        if (d > MaxSaneDay) throw new IllegalStateException(
+          s"$variant: key $user observation at tsMicros=${o.tsMicros} (epoch " +
+            s"day $d, past year ~275000) — corrupt event time; forward-" +
+            "filling to it would emit a grid row per intervening day")
+        val observed = Some(GapState(d, o.tsMicros, o.eventId, o.value,
+          emitted = false))
+        open match {
+          case None => observed
+          case Some(p) if d == p.day && !p.emitted =>
+            // same day still open: keep the LAST observation
+            // (max (ts, eventId) — the batch gate's max_by)
+            if (o.tsMicros > p.ts ||
+              (o.tsMicros == p.ts && o.eventId > p.eventId)) observed
+            else open
+          case Some(p) if d > p.day =>
+            // later day arrived: close the open day (already done if a
+            // flush or timer tombstoned it), forward-fill up to d
+            if (!p.emitted) out += DayFill(user, p.day, p.value, filled = false)
+            for (g <- p.day + 1 until d)
+              out += DayFill(user, g, p.value, filled = true)
+            observed
+          case Some(p) => throw new IllegalStateException(
+            s"$variant: key $user received day $d at or after closed day " +
+              s"${p.day} — " + (if (watermarked) "late data past the " +
+              "declared watermark tolerance" else "sources must deliver " +
+              "each key in non-decreasing event time across batches (T3), " +
+              "and a flushed day cannot reopen"))
+        }
       }
   }
 
-  def anomalyStream(events: Dataset[Obs], window: Int = 5)
-      : Dataset[AnomalyFlag] = {
-    implicit val flagEnc = Encoders.product[AnomalyFlag]
-    implicit val stateEnc = Encoders.product[TrailState]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[Obs], state: GroupState[TrailState]) =>
-          var hist = state.getOption.map(_.obs).getOrElse(Seq.empty)
-          val out = it.toSeq.sortBy(o => (o.tsMicros, o.eventId)).map { o =>
-            val n = hist.size.toLong
-            val s = hist.iterator.map(_._3).sum
-            val q = hist.iterator.map(h => h._3 * h._3).sum
-            val d = n * o.x - s
-            val anom = n >= 3 && d * d > 9L * (n * q - s * s)
-            hist = (hist :+ ((o.tsMicros, o.eventId, o.x))).takeRight(window)
-            AnomalyFlag(o.eventId, user, n, anom)
-          }
-          state.update(TrailState(hist))
-          out.iterator
+  /** [[TimeSeriesStreams.anomalyStream]]'s per-key trailing window. */
+  private class AnomalyProcessor
+    extends StatefulProcessor[Long, Obs, AnomalyFlag] {
+
+    @transient private var trail: ValueState[TrailState] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      trail = getHandle.getValueState("trail", Encoders.product[TrailState],
+        TTLConfig.NONE)
+
+    override def handleInputRows(user: Long, rows: Iterator[Obs],
+        timerValues: TimerValues): Iterator[AnomalyFlag] = {
+      var hist = if (trail.exists()) trail.get().obs else Seq.empty
+      val out = rows.toArray.sortBy(o => (o.tsMicros, o.eventId)).map { o =>
+        require(-AnomalyMaxCents < o.x && o.x < AnomalyMaxCents,
+          s"anomalyStream: key $user event ${o.eventId} has x = ${o.x} " +
+            "cents; |x| >= 2^27 cents breaks integer-exact arithmetic")
+        val n = hist.size.toLong
+        val s = hist.iterator.map(_._3).sum
+        val q = hist.iterator.map(h => h._3 * h._3).sum
+        val d = n * o.x - s
+        val anom = n >= 3 && d * d > 9L * (n * q - s * s)
+        hist = (hist :+ ((o.tsMicros, o.eventId, o.x))).takeRight(AnomalyWindow)
+        AnomalyFlag(o.eventId, user, n, anom)
       }
+      trail.update(TrailState(hist))
+      out.iterator
+    }
   }
 }

@@ -13,7 +13,7 @@ import graft.redo.RedoLogWriter
 import graft.sinks.{DerbyDialect, JdbcUpsertSink}
 
 /** The reference's whole pipeline, Spark-first: binary redo logs →
-  * `graft-redo` micro-batch source → flatMapGroupsWithState transaction
+  * `graft-redo` micro-batch source → transformWithState transaction
   * assembly (RocksDB state store, T10) → foreachBatch JDBC upsert sink
   * (K2) into Derby. Transactions deliberately SPAN micro-batches (one log
   * file per trigger) so commit resolution must come from streaming state,

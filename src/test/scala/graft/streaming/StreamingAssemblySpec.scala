@@ -6,7 +6,7 @@ import graft.SharedSpark
 import graft.cdc._
 
 /** End-to-end Structured Streaming test: MemoryStream of redo records →
-  * flatMapGroupsWithState assembly → memory sink (SURVEY.md §5 test plan
+  * transformWithState assembly → memory sink (SURVEY.md §5 test plan
   * item c). Proves commit-deferred emission works across micro-batches —
   * changes arriving in batch 1 emit only when the COMMIT arrives in a
   * later batch, and ROLLBACK discards buffered state silently.
@@ -335,5 +335,23 @@ class StreamingAssemblySpec extends AnyFunSuite with SharedSpark {
     val out = ChangeStreams.assembleBatch(recs).collect().sortBy(_.scn)
     assert(out.map(_.scn).toSeq == Seq(10, 50))
     assert(out.map(_.commitScn).toSeq == Seq(20, 60))
+  }
+
+  test("assembleStream rejects an idle or tombstone window it would " +
+      "ignore or replace, naming the argument") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val records = MemoryStream[RedoRecord].toDS()
+    def rejected(idleTimeoutMs: Long, tombstoneTtlMs: Long) =
+      intercept[IllegalArgumentException] {
+        ChangeStreams.assembleStream(records, idleTimeoutMs = idleTimeoutMs,
+          tombstoneTtlMs = tombstoneTtlMs)
+      }.getMessage
+    // negative: today it means no eviction / 64 idle windows
+    assert(rejected(-1L, 0L).contains("idleTimeoutMs"))
+    assert(rejected(1000L, -1L).contains("tombstoneTtlMs"))
+    // a tombstone TTL without idle eviction: no tombstone ever exists
+    val noIdle = rejected(0L, 5000L)
+    assert(noIdle.contains("tombstoneTtlMs") && noIdle.contains("idleTimeoutMs"))
   }
 }

@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -46,52 +42,24 @@ class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
     val chunks = obs.grouped(math.max(1, obs.length / 3 + 1)).toSeq
     assert(chunks.size == 3)
 
-    val srcDir = SharedSpark.tempDir("gapfill_src").toFile
-    val ckpt = SharedSpark.tempDir("gapfill_ckpt").toString
-    var mtime = System.currentTimeMillis() - 60000
-    def writeChunk(name: String, rows: Seq[GapObs]): Unit = {
-      // one file per chunk, strictly increasing mtime so the file
-      // source consumes chunks in event-time order across batches
-      val tmp = SharedSpark.tempDir("gapfill_tmp").toString
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(srcDir, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      mtime += 1000
-      assert(dst.setLastModified(mtime))
-    }
+    val feed = new FileFeed[GapObs](spark, "gapfill")
 
     // replay-safe collector: a restart may re-deliver the last batch,
     // and each (user, day) is emitted once logically — assert that any
     // duplicate delivery carries the identical row
     val seen = new java.util.concurrent.ConcurrentHashMap[
       (Long, Long), (Double, Boolean)]()
-    def run(): Unit = {
-      val q = TimeSeriesStreams.gapFillStream(
-        spark.readStream.schema(implicitly[org.apache.spark.sql.Encoder[
-          GapObs]].schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir.getAbsolutePath).as[GapObs])
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (out: Dataset[DayFill], _: Long) =>
-          out.collect().foreach { d =>
-            val prev = seen.put((d.userId, d.day), (d.value, d.filled))
-            assert(prev == null || prev == ((d.value, d.filled)),
-              s"conflicting re-emission for (${d.userId}, ${d.day}): " +
-                s"$prev vs (${d.value}, ${d.filled})")
-          }
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(300000), "stream did not finish in 300s")
-    }
+    def run(): Unit =
+      feed.drain(TimeSeriesStreams.gapFillStream(feed.stream)) { d =>
+        val prev = seen.put((d.userId, d.day), (d.value, d.filled))
+        assert(prev == null || prev == ((d.value, d.filled)),
+          s"conflicting re-emission for (${d.userId}, ${d.day}): " +
+            s"$prev vs (${d.value}, ${d.filled})")
+      }
 
     // —— run 1: two chunks, then the query STOPS (AvailableNow)
-    writeChunk("chunk_0.parquet", chunks(0).toSeq)
-    writeChunk("chunk_1.parquet", chunks(1).toSeq)
+    feed.write("chunk_0.parquet", chunks(0).toSeq)
+    feed.write("chunk_1.parquet", chunks(1).toSeq)
     run()
     val afterRun1 = seen.size()
     assert(afterRun1 > 0, "run 1 should already close and emit days")
@@ -99,8 +67,8 @@ class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
 
     // —— run 2: a NEW query on the same checkpoint (restart) finishes
     // the stream; flush sentinels close each key's final open day
-    writeChunk("chunk_2.parquet", chunks(2).toSeq)
-    writeChunk("chunk_3_flush.parquet",
+    feed.write("chunk_2.parquet", chunks(2).toSeq)
+    feed.write("chunk_3_flush.parquet",
       users.map(TimeSeriesStreams.gapFlush).toSeq)
     run()
 
@@ -256,5 +224,45 @@ class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
       assert(key1 == Set((1L, 10L, 5.0, false), (1L, 30L, 7.0, false)),
         s"expired carrier must RESTART the grid, not fill 11..29: $key1")
     } finally q.stop()
+  }
+
+  test("a watermark-closed day closes only at its own end, across a " +
+      "restart") {
+    import spark.implicits._
+    val D = 86400L * 1000000L
+    def obs(u: Long, day: Long, eid: Long, v: Double, atMicros: Long = 1000L) =
+      GapObs(u, day * D + atMicros, eid, v)
+    // a two-day delay: the watermark trails the newest observation by two
+    // days, so key 2's day 14 (not key 1's own day 13) moves it past the
+    // end of day 11
+    val feed = new FileFeed[GapObs](spark, "gapfill_wm_restart")
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[DayFill]()
+    def run(): Unit = feed.drain(TimeSeriesStreams.gapFillStreamWatermarked(
+      feed.stream, delay = "2 days")) { d => emitted.add(d); () }
+    def rows() = emitted.toArray(Array.empty[DayFill]).toSeq
+      .sortBy(d => (d.userId, d.day))
+
+    // —— run 1: key 1 opens day 10 (a timer at its end), then day 13,
+    // which closes day 10 by data; key 2 then moves the watermark past
+    // the end of day 11, where day 10's timer stood
+    feed.write("f0.parquet", Seq(obs(1, 10, 1, 5.0)))
+    feed.write("f1.parquet", Seq(obs(1, 13, 2, 7.0)))
+    feed.write("f2.parquet", Seq(obs(2, 14, 3, 9.9)))
+    run()
+    assert(rows() == Seq(DayFill(1, 10, 5.0, false), DayFill(1, 11, 5.0, true),
+      DayFill(1, 12, 5.0, true)),
+      s"day 13 must stay open until the watermark passes its end: ${rows()}")
+
+    // —— run 2 on the same checkpoint: a later day-13 observation is
+    // absorbed, then key 3 moves the watermark past the end of day 14;
+    // key 2's day 14 closes on the timer it armed before the restart
+    feed.write("f3.parquet", Seq(obs(1, 13, 4, 8.0, atMicros = 3600L * 1000000L)))
+    feed.write("f4.parquet", Seq(obs(3, 17, 5, 1.1)))
+    feed.write("f5.parquet", Seq(obs(3, 18, 6, 2.2)))
+    run()
+    assert(rows() == Seq(DayFill(1, 10, 5.0, false), DayFill(1, 11, 5.0, true),
+      DayFill(1, 12, 5.0, true), DayFill(1, 13, 8.0, false),
+      DayFill(2, 14, 9.9, false), DayFill(3, 17, 1.1, false)),
+      s"each day once, day 13 with its later value: ${rows()}")
   }
 }
