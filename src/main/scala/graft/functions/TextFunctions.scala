@@ -7,19 +7,20 @@ import org.apache.spark.sql.functions._
   * (BASELINE.json mandate: language-ID, quality scoring, token counting,
   * document fingerprinting, shingling for dedup).
   *
-  * Everything is built from codegen'd `org.apache.spark.sql.functions`
-  * higher-order functions over arrays — no UDFs — so the whole text
-  * pipeline stays inside WholeStageCodegen and runs per-partition with no
-  * driver involvement (100 TB rule). Every function is deterministic and
-  * cross-engine reproducible: hashes are explicit polynomial folds, not
+  * No UDFs: the per-token work runs in [[TextHashExpressions]] kernels,
+  * each one static call from WholeStageCodegen, per partition with no
+  * driver involvement (100 TB rule). The few higher-order functions
+  * left (the empty-token filter in [[tokens]], [[wordShingles]]'
+  * transform, the classifier's aggregate) are `CodegenFallback`: Spark
+  * interprets their lambdas per element, so a hot path gets a kernel
+  * instead. Every function is deterministic and cross-engine
+  * reproducible: hashes are explicit polynomial folds, not
   * engine-private hash implementations.
   */
 object TextFunctions {
 
-  /** Large prime modulus for all polynomial hashes. */
-  /** ONE modulus for every text-hash family — aliased from TextHash
-    * (the kernels' home) so the two can never drift: a per-file literal
-    * here once claimed to be "shared" while being its own constant.
+  /** The large prime modulus of every polynomial hash — aliased from
+    * TextHash (the kernels' home) so the two can never drift.
     */
   val P: Long = TextHash.P
 
@@ -103,29 +104,29 @@ object TextFunctions {
     "de" -> Seq("window", "group", "merge"),
     "zh" -> Seq("spark", "scan", "hash"))
 
+  /** Tokens listed in `markers`, each counted once; an empty list
+    * scores 0. One kernel pass ([[TextHashExpressions.marker_count]]).
+    */
   def markerScore(toks: Column, markers: Seq[String]): Column =
-    // foldLeft(false), not reduce: an empty marker list (a configurable
-    // surface) scores 0 instead of crashing with a bare
-    // "empty.reduceLeft" at plan time
-    size(filter(toks, t =>
-      markers.map(m => t === m).foldLeft(lit(false))(_ || _)))
+    TextHashExpressions.marker_count(toks, markers)
 
+  /** The language whose markers the most tokens match (as
+    * [[markerScore]] counts them), the first-listed on a tie: one kernel
+    * pass counts every language. A NULL token array matches no marker,
+    * so it ties everywhere and gets the first-listed language.
+    */
   def langId(toks: Column,
       markers: Seq[(String, Seq[String])] = defaultMarkers): Column = {
-    val scored = markers.map { case (lang, ms) => (lang, markerScore(toks, ms)) }
-    // argmax with first-listed language winning ties
-    scored.tail.foldLeft((scored.head._2, lit(scored.head._1))) {
-      case ((bestScore, bestLang), (lang, score)) =>
-        (when(score > bestScore, score).otherwise(bestScore),
-          when(score > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
+    require(markers.nonEmpty, "langId needs at least one language")
+    coalesce(TextHashExpressions.lang_id(toks, markers), lit(markers.head._1))
   }
 
-  /** Quality heuristics: length, mean token length, stopword ratio,
-    * alpha ratio — per-row IEEE doubles (deterministic cross-engine).
+  /** Quality heuristics over a document and its [[tokens]]: mean token
+    * length, stopword ratio and a token-count band — per-row IEEE
+    * doubles (deterministic cross-engine). The caller passes the token
+    * array it already has, so the text is split once.
     */
-  def qualityScore(text: Column): Column = {
-    val toks = tokens(text)
+  def qualityScore(text: Column, toks: Column): Column = {
     val nTok = size(toks).cast("double")
     val stop = markerScore(toks, Seq("the", "a", "of", "and")).cast("double")
     val meanTokLen = (length(text).cast("double") - nTok + 1.0) / nTok

@@ -463,4 +463,59 @@ object TextHash {
     }
     count
   }
+
+  /** Tokens of `toks` equal to one of `markers`. Each token counts at
+    * most once, however often the list repeats it; a NULL token counts
+    * none. ≡ `size(filter(toks, t => t === m1 || t === m2 || …))`.
+    */
+  def markerCount(toks: ArrayData, markers: ArrayData): Int = {
+    val n = toks.numElements()
+    var c = 0
+    var i = 0
+    while (i < n) {
+      if (!toks.isNullAt(i) && listed(markers, toks.getUTF8String(i))) c += 1
+      i += 1
+    }
+    c
+  }
+
+  /** Marker-vote language ID in one pass over the tokens: the language
+    * `langs(k)` whose list `markers(k)` holds the most tokens of `toks`
+    * (each counted as [[markerCount]] counts them), the first-listed
+    * language on a tie. A word listed under two languages votes for
+    * both.
+    */
+  def langId(toks: ArrayData, langs: ArrayData, markers: ArrayData): UTF8String = {
+    val nLang = langs.numElements()
+    val lists = Array.tabulate(nLang)(markers.getArray)
+    val votes = new Array[Int](nLang)
+    val n = toks.numElements()
+    var i = 0
+    while (i < n) {
+      if (!toks.isNullAt(i)) {
+        val t = toks.getUTF8String(i)
+        var k = 0
+        while (k < nLang) {
+          if (listed(lists(k), t)) votes(k) += 1
+          k += 1
+        }
+      }
+      i += 1
+    }
+    var best = 0
+    var k = 1
+    while (k < nLang) { if (votes(k) > votes(best)) best = k; k += 1 }
+    langs.getUTF8String(best)
+  }
+
+  /** Whether `t` (not null) equals an element of `ms`. */
+  private def listed(ms: ArrayData, t: UTF8String): Boolean = {
+    val n = ms.numElements()
+    var j = 0
+    while (j < n) {
+      if (t.equals(ms.getUTF8String(j))) return true
+      j += 1
+    }
+    false
+  }
 }

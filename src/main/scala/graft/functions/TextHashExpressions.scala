@@ -85,6 +85,21 @@ object TextHashExpressions {
   def ws_token_count(col: Column): Column =
     bind("ws_token_count", TextHash, "wsTokenCount", IntegerType)(col -> StringType)
 
+  /** Tokens of array<string> equal to one of `markers` (see
+    * TextHash.markerCount).
+    */
+  def marker_count(toks: Column, markers: Seq[String]): Column =
+    bind("marker_count", TextHash, "markerCount", IntegerType)(
+      toks -> Strings, param(markers.toArray) -> Strings)
+
+  /** The language whose marker list holds the most tokens of
+    * array<string>, first-listed on a tie (see TextHash.langId).
+    */
+  def lang_id(toks: Column, markers: Seq[(String, Seq[String])]): Column =
+    bind("lang_id", TextHash, "langId", StringType)(
+      toks -> Strings, param(markers.map(_._1).toArray) -> Strings,
+      param(markers.map(_._2.toArray).toArray) -> ArrayType(Strings))
+
   /** Winnowing fingerprint selection (see TextHash.winnow). */
   def winnow(col: Column, w: Int): Column =
     bind("winnow", TextHash, "winnow", LongSet)(col -> Longs, param(w) -> IntegerType)

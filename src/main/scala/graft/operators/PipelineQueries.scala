@@ -627,7 +627,7 @@ object PipelineQueries extends GateFamily {
         .withColumn("toks", tokens(col("norm")))
         .withColumn("n_tok", size(col("toks")))
         .withColumn("pred", langId(col("toks")))
-        .withColumn("q", qualityScore(col("norm")))
+        .withColumn("q", qualityScore(col("norm"), col("toks")))
         // Gopher-style repetition stage (same kernels + thresholds as
         // text_rep_filter) — still part of the fused map pass; the
         // n_tok ≥ 20 guard below keeps the integer divisions non-zero

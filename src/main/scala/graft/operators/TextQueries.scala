@@ -78,7 +78,7 @@ object TextQueries extends GateFamily {
       documents(s, dir)
         .select(col("doc_id"),
           tokenCount(col("text")).as("n_tok"),
-          qualityScore(col("text")).as("q"))
+          qualityScore(col("text"), tokens(col("text"))).as("q"))
     }, _ =>
       (toksCte +
       """SELECT doc_id, CAST(len(tk) AS INTEGER) AS n_tok,

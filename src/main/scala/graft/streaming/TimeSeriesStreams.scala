@@ -112,8 +112,13 @@ object TimeSeriesStreams {
     * observation arrives, so the forward-fill of the gap days up to
     * that next observation happens when it arrives (output content is
     * identical — only emission time differs); (b) an observation older
-    * than an already-closed day is LATE DATA past the declared
-    * tolerance — it throws, same as the sentinel variant's guard.
+    * than the watermark (every already-closed day is) is LATE DATA past
+    * the declared tolerance: Spark drops it before the processor sees
+    * it, so it is neither emitted nor thrown, and the query progress
+    * counts it in `stateOperators(0).numRowsDroppedByWatermark`. An
+    * observation inside the tolerance but before the key's open day
+    * still reaches the processor and throws, as the sentinel variant's
+    * guard does.
     *
     * The flush sentinel (`tsMicros == Long.MaxValue`, [[gapFlush]]) is
     * the SENTINEL variant's protocol and is REJECTED here loudly: the
@@ -268,8 +273,8 @@ object TimeSeriesStreams {
             observed
           case Some(p) => throw new IllegalStateException(
             s"$variant: key $user received day $d at or after closed day " +
-              s"${p.day} — " + (if (watermarked) "late data past the " +
-              "declared watermark tolerance" else "sources must deliver " +
+              s"${p.day} — " + (if (watermarked) "out of event-time order " +
+              "for this key within the watermark tolerance" else "sources must deliver " +
               "each key in non-decreasing event time across batches (T3), " +
               "and a flushed day cannot reopen"))
         }

@@ -84,6 +84,8 @@ class KernelBindingSpec extends AnyFunSuite with SharedSpark {
       fingerprint(toks), shingle_hashes(toks, 2), distinct_longs(hs),
       sorted_distinct_longs(hs), max_dup_count(hs), winnow(hs, 3), sum_longs(hs),
       mod_counts(hs, 5), adjacent_pairs(toks), ws_token_count(s),
+      marker_count(toks, Seq("a", "ab", "a")),
+      lang_id(toks, Seq("x" -> Seq("a", "b"), "y" -> Seq("b", "ab"), "z" -> Seq.empty)),
       intersect_count_sorted(sorted_distinct_longs(hs), sorted_distinct_longs(col("hs2"))),
       lev_banded(s, s2, 3),
       q, dotq_native(q, q), lsh_bucket_native(q, 6),

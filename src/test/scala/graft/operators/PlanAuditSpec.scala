@@ -315,6 +315,35 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       s"no cartesian anywhere in the curation pipeline:\n$p"))
   }
 
+  test("pipe_curate: the fused pass runs only the tokens filter and the classifier fold as lambdas") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter,
+      HigherOrderFunction, LambdaFunction, StringSplit}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // lambdas are interpreted per element (CodegenFallback): a per-token
+    // stage belongs in a kernel, not in a lambda
+    val qes = ran(PipelineQueries.curate(spark, dir))
+    val survivors = qes.flatMap(qe => SharedSpark.planNodes(qe.executedPlan)).collectFirst {
+      case (r: InMemoryRelation, _) if r.output.exists(_.name == "digest") => r
+    }.getOrElse(fail("no cache holds the survivors frame"))
+    val exprs = SharedSpark.planNodes(survivors.cachedPlan).flatMap {
+      case (p: org.apache.spark.sql.execution.SparkPlan, _) => p.expressions
+      case _ => Nil
+    }
+    val lambdas = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+    val hofs = exprs.flatMap(_.collect { case h: HigherOrderFunction => h })
+    // tokens' empty-token filter over the split (one lambda; the filter
+    // pushed below the projections repeats it per use of the tokens)
+    // and the classifier's aggregate (a merge and an identity finish)
+    val (tokenFilters, rest) = hofs.partition {
+      case f: ArrayFilter => f.argument.isInstanceOf[StringSplit]
+      case _ => false
+    }
+    assert(rest.size == 1 && rest.head.isInstanceOf[ArrayAggregate] &&
+      lambdas.size == tokenFilters.size + 2,
+      s"${lambdas.size} lambdas, in ${tokenFilters.size} token filters and " +
+        s"${rest.map(_.prettyName).mkString(", ")}:\n${survivors.cachedPlan}")
+  }
+
   test("incremental near-dedup probes the index with equi-joins only") {
     // the delta-vs-corpus claim: the candidate probe is an equi-join on
     // (band, h1, h2) and the verify joins are equi-joins on the ids —

@@ -163,6 +163,41 @@ class StreamingGapFillSpec extends AnyFunSuite with SharedSpark {
     } finally q.stop()
   }
 
+  test("watermarked variant: an observation older than the watermark is " +
+      "dropped before the processor — neither emitted nor thrown, and " +
+      "counted in the query progress") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val D = 86400L * 1000000L
+    def obs(u: Long, day: Long, eid: Long, v: Double) =
+      TimeSeriesStreams.GapObs(u, day * D + 1000L, eid, v)
+
+    val input = MemoryStream[TimeSeriesStreams.GapObs]
+    val q = TimeSeriesStreams.gapFillStreamWatermarked(input.toDS())
+      .writeStream.format("memory").queryName("gapfill_wm_late")
+      .outputMode("append").start()
+    try {
+      input.addData(obs(1, 10, 1, 5.0))
+      q.processAllAvailable()
+      input.addData(obs(2, 20, 2, 9.9))
+      q.processAllAvailable()
+      input.addData(obs(2, 21, 3, 1.1))
+      q.processAllAvailable()
+      // key 1's day 10 closed when the watermark passed it
+      input.addData(obs(1, 10, 4, 6.0))
+      q.processAllAvailable()
+      val got = spark.table("gapfill_wm_late")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getBoolean(3))).toSet
+      assert(got == Set((1L, 10L, 5.0, false), (2L, 20L, 9.9, false)),
+        s"the late observation must not change the output: $got")
+      val dropped = q.recentProgress.flatMap(_.stateOperators)
+        .map(_.numRowsDroppedByWatermark).sum
+      assert(dropped == 1, s"the progress must count the dropped row, got $dropped")
+    } finally q.stop()
+  }
+
   test("watermarked variant REJECTS the flush sentinel loudly — the " +
       "shared GapObs type makes it one switch away, and the day math " +
       "would forward-fill ~10^11 grid rows") {
