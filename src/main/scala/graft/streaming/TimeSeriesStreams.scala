@@ -272,7 +272,7 @@ object TimeSeriesStreams {
               out += DayFill(user, g, p.value, filled = true)
             observed
           case Some(p) => throw new IllegalStateException(
-            s"$variant: key $user received day $d at or after closed day " +
+            s"$variant: key $user received day $d, not after its latest day " +
               s"${p.day} — " + (if (watermarked) "out of event-time order " +
               "for this key within the watermark tolerance" else "sources must deliver " +
               "each key in non-decreasing event time across batches (T3), " +

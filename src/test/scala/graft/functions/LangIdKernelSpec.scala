@@ -103,7 +103,7 @@ class LangIdKernelSpec extends AnyFunSuite with SharedSpark {
       val toks = gen.map(r => Option(r.getSeq[String](0)))
       assert(toks.contains(None) && toks.contains(Some(Seq.empty)))
       assert(toks.flatten.exists(_.contains(null)))
-      assert(toks.flatten.exists(t => t.count(_ == "a") > 0 && t.count(_ == "row") > 0))
+      assert(toks.flatten.exists(t => t.contains("a") && t.contains("row")))
     }
   }
 

@@ -318,6 +318,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   test("pipe_curate: the fused pass runs only the tokens filter and the classifier fold as lambdas") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter,
       HigherOrderFunction, LambdaFunction, StringSplit}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     // lambdas are interpreted per element (CodegenFallback): a per-token
     // stage belongs in a kernel, not in a lambda
@@ -326,7 +327,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       case (r: InMemoryRelation, _) if r.output.exists(_.name == "digest") => r
     }.getOrElse(fail("no cache holds the survivors frame"))
     val exprs = SharedSpark.planNodes(survivors.cachedPlan).flatMap {
-      case (p: org.apache.spark.sql.execution.SparkPlan, _) => p.expressions
+      case (p: SparkPlan, _) => p.expressions
       case _ => Nil
     }
     val lambdas = exprs.flatMap(_.collect { case l: LambdaFunction => l })
